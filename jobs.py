@@ -7,8 +7,8 @@
 
 Stages (north-rule shape):
   read pages table → resume filter (manifest anti-join) →
-  Engine-1 (Catalyst line/regex path) + Engine-2 (Arrow layout kernel) →
-  vacation adjustment → output series tables →
+  Engine-1 (Catalyst line/regex path) + Engine-2 (Arrow layout kernel,
+  vacation adjustment fused) → output series tables →
   fill-if-empty MERGE into the keyed target →
   audit/lineage append → manifest append.
 
@@ -118,20 +118,16 @@ def main() -> None:
     io.append(e1_attention, "e1_attention")
 
     # ---- Engine 2 ------------------------------------------------------
-    # A6 adjustment fused into the kernel (per-document math — saves the
-    # pivot + three joins of the relational form; byte-identical, pinned)
+    # A6 adjustment runs in the kernel's per-document finisher (both
+    # paths; the salted one only changes how pages reach that finisher)
     if args.salted_max_pages:
-        # skew mode: page-range chunk split + exact carry handoff; the
-        # salted kernel has no fused-A6 variant, so apply the pinned
-        # relational form on its values table instead
         from pdf_extractor_spark.engine2.salted import extract_ficha_salted
 
-        long_df = extract_ficha_salted(
-            pages, max_pages=args.salted_max_pages).persist()
-        vals = e2.apply_vacation_adjustments_df(e2.values_table(long_df))
+        long_df = extract_ficha_salted(pages, max_pages=args.salted_max_pages)
     else:
-        long_df = e2.extract_ficha(pages, adjust_vacation=True).persist()
-        vals = e2.values_table(long_df)
+        long_df = e2.extract_ficha(pages, adjust_vacation=True)
+    long_df = long_df.persist()
+    vals = e2.values_table(long_df)
     io.append(e2.default_series_table(vals, "3123-Base", start, end),
               "proventos")
     io.append(e2.default_series_table(vals, "8-Insalubridade", start, end),

@@ -1,6 +1,5 @@
-from .kernel import E2_LONG_SCHEMA, extract_ficha_long  # noqa: F401
+from .kernel import E2_LONG_SCHEMA  # noqa: F401
 from .pipeline import (  # noqa: F401
-    apply_vacation_adjustments_df,
     extract_ficha,
     format_decimal_col,
     month_dim,

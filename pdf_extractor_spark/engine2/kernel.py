@@ -14,9 +14,9 @@ kernel runs under ``mapInPandas`` — embarrassingly parallel, zero
 shuffle. Cross-page state (G2/G5) never crosses documents, so it lives
 entirely inside the per-document call. At 100 TB the only skew risk is
 a single giant document serializing one task; the scan partitioning
-(`maxPartitionBytes`) bounds rows per task and `salt_hint` documents
-above a page threshold can be split into page-range sub-rows with a
-carry-state handoff pass (see ``pipeline.repartition_by_url``).
+(`maxPartitionBytes`) bounds rows per task, and oversized documents
+can be split into page-range sub-rows with a carry-state handoff pass
+(see ``engine2/salted.py``).
 
 Output is a long table ``(url, code, year, month, value, ...)`` plus one
 ``__metrics__`` row per document carrying lineage counters (pages
@@ -35,7 +35,7 @@ import pandas as pd
 import numpy as np
 
 from ..oracle_ref import e2_person_name  # shared scalar; test-parity critical
-from ..payload import MAGIC, decode_layout, decode_layout_columnar
+from ..payload import decode_layout_columnar
 
 # storage-code config (reference TARGET_CODES, ficha_financeira_processor.py:53-71)
 TARGET_CODES = [
@@ -72,6 +72,8 @@ E2_LONG_SCHEMA = (
     "person string"
 )
 
+E2_LONG_COLS = [c.split()[0] for c in E2_LONG_SCHEMA.split(", ")]
+
 METRICS_CODE = "__metrics__"
 
 
@@ -99,33 +101,13 @@ class _Page:
                  "cy", "cx", "is_num", "n", "key_groups", "group_span",
                  "origin_cache")
 
-    def __init__(self, words: list) -> None:
-        n = len(words)
-        self.n = n
-        self.texts = [w[0] for w in words]
-        self.x0 = [w[1] for w in words]
-        self.x1 = [w[2] for w in words]
-        self.top = [w[3] for w in words]
-        self.bottom = [w[4] for w in words]
-        # reference line key: round(doctop*100) (:612-628)
-        self.line_key = [round(w[5] * 100) for w in words]
-        self.cy = [(w[3] + w[4]) / 2.0 for w in words]
-        self.cx = [(w[1] + w[2]) / 2.0 for w in words]
-        self._derive()
-
-    @classmethod
-    def from_cols(cls, texts, x0, x1, top, bottom, line_key, cy, cx):
-        """Columnar-payload constructor (lists pre-materialized from the
-        v2 block decode — no per-word tuple traffic)."""
-        pg = cls.__new__(cls)
-        pg.n = len(texts)
-        pg.texts = texts
-        pg.x0, pg.x1, pg.top, pg.bottom = x0, x1, top, bottom
-        pg.line_key, pg.cy, pg.cx = line_key, cy, cx
-        pg._derive()
-        return pg
-
-    def _derive(self) -> None:
+    def __init__(self, texts, x0, x1, top, bottom, line_key, cy, cx):
+        """Columnar constructor (lists pre-materialized from the block
+        decode in `decode_pages_fast` — no per-word tuple traffic)."""
+        self.n = len(texts)
+        self.texts = texts
+        self.x0, self.x1, self.top, self.bottom = x0, x1, top, bottom
+        self.line_key, self.cy, self.cx = line_key, cy, cx
         self.norm = [_norm_one(t) for t in self.texts]
         self.is_num = [NUMBER_RE.match(t) is not None for t in self.texts]
         groups: dict[int, list[int]] = {}
@@ -294,7 +276,7 @@ class PageRunState:
         return cls(d["comp"], d["valor"], pending)
 
 
-def run_pages(raw_pages: list, page_h: float, state: PageRunState,
+def run_pages(pages: list, page_h: float, state: PageRunState,
               page_offset: int = 0) -> tuple[list, PageRunState, int | None]:
     """Core page loop (G1-G7 + A1 event stream).
 
@@ -302,7 +284,7 @@ def run_pages(raw_pages: list, page_h: float, state: PageRunState,
     value_str, global_page, seq) for every value assignment (the A1
     last-write-wins fold and conflict count happen over this stream) and
     ('x', global_page) for every expired carry — so the salted path can
-    merge chunk streams relationally with exact reference semantics.
+    merge chunk streams and hand them to the same `finish_doc` fold.
 
     Returns (events, end_state, first_full_header): the latter is the
     first local page index carrying BOTH its own Comp. and Valor header
@@ -315,15 +297,9 @@ def run_pages(raw_pages: list, page_h: float, state: PageRunState,
     last_comp, last_valor = state.comp, state.valor
     first_full_header: int | None = None
 
-    for pi, words in enumerate(raw_pages):
-        if isinstance(words, _Page):
-            if words.n == 0:
-                continue
-            pg = words
-        else:
-            if not words:
-                continue
-            pg = _Page(words)
+    for pi, pg in enumerate(pages):
+        if pg.n == 0:
+            continue
         comp, valor = _column_centers(pg)
         if comp and valor and first_full_header is None:
             first_full_header = pi
@@ -424,42 +400,37 @@ def fold_events(events: list) -> tuple[dict, int, int]:
 
 
 def decode_pages_fast(html) -> tuple[float, list]:
-    """Payload → (page_h, pages). v2 payloads decode columnar (block
-    float decode + one text split) straight into `_Page` objects —
-    no per-word tuples; v1 JSON falls back to the tuple view."""
+    """Payload → (page_h, pages): columnar decode (block float decode +
+    one text split) straight into `_Page` objects — no per-word tuples.
+    Raises on anything but an empty or well-formed WBX2 payload."""
     if html is None or len(html) == 0:
         return 0.0, []
-    if bytes(html[:4]) == MAGIC:
-        page_h, counts, texts, cols = decode_layout_columnar(html)
-        x0, x1, top, bottom = (cols[i].tolist() for i in range(4))
-        # same arithmetic as the scalar path: round-half-even of
-        # doctop*100 (np.rint == Python round for binary doubles),
-        # (top+bottom)/2 exact in IEEE either way
-        line_key = np.rint(cols[4] * 100.0).astype(np.int64).tolist()
-        cy = ((cols[2] + cols[3]) / 2.0).tolist()
-        cx = ((cols[0] + cols[1]) / 2.0).tolist()
-        pages = []
-        a = 0
-        for n in counts.tolist():
-            b = a + n
-            pages.append(_Page.from_cols(
-                texts[a:b], x0[a:b], x1[a:b], top[a:b], bottom[a:b],
-                line_key[a:b], cy[a:b], cx[a:b]))
-            a = b
-        return page_h, pages
-    return decode_layout(html)
+    page_h, counts, texts, cols = decode_layout_columnar(html)
+    x0, x1, top, bottom = (cols[i].tolist() for i in range(4))
+    # reference line key round(doctop*100) (:612-628): np.rint is the
+    # same round-half-even as oracle_ref's scalar round for binary
+    # doubles, and (top+bottom)/2 is exact in IEEE either way
+    line_key = np.rint(cols[4] * 100.0).astype(np.int64).tolist()
+    cy = ((cols[2] + cols[3]) / 2.0).tolist()
+    cx = ((cols[0] + cols[1]) / 2.0).tolist()
+    pages = []
+    a = 0
+    for n in counts.tolist():
+        b = a + n
+        pages.append(_Page(
+            texts[a:b], x0[a:b], x1[a:b], top[a:b], bottom[a:b],
+            line_key[a:b], cy[a:b], cx[a:b]))
+        a = b
+    return page_h, pages
 
 
 def apply_vacation_values(values: dict) -> None:
-    """A6 vacation adjustment, fused per-document (in place):
+    """A6 vacation adjustment (in place, reference :935-996):
     3123-Base[key] += 527-Valor / (527-Comp / 100) wherever both 527
-    series exist and comp != 0. Exactly the arithmetic of the relational
-    path (``pipeline.apply_vacation_adjustments_df`` /
-    ``brnum.decimal_div_pct_udf``): default-context Decimal division,
-    canonical-string roundtrip. Per (url, year, month) the adjustment is
-    document-local, so fusing it into the kernel costs zero shuffles —
-    the relational form pays a pivot + three joins. Byte-identical
-    output is pinned by tests/test_engine2.py."""
+    series exist and comp != 0, with default-context Decimal division
+    and a canonical-string roundtrip. The adjustment is local to one
+    document, so it runs in the per-document finisher at zero shuffles.
+    Byte-identity with oracle_ref is pinned by tests/test_engine2.py."""
     comp = values.get("527-INSS-Comp")
     valor = values.get("527-INSS-Valor")
     if not comp or not valor:
@@ -481,30 +452,35 @@ def apply_vacation_values(values: dict) -> None:
             else str(additional)
 
 
-def _extract_doc(url: str, html, text: str,
-                 adjust_vacation: bool = False) -> tuple[list, list]:
-    """One document → (value rows, metrics row-values)."""
-    decode_failures = 0
-    try:
-        page_h, raw_pages = decode_pages_fast(html)
-    except Exception:
-        page_h, raw_pages = 0.0, []
-        decode_failures += 1
-
-    events, _state, _ffh = run_pages(raw_pages, page_h, PageRunState())
+def finish_doc(url: str, events: list, pages: int, decode_failures: int,
+               person: str | None, adjust_vacation: bool) -> tuple[list, tuple]:
+    """Per-document finisher over a complete, ordered event stream:
+    A1 fold, then A6 when `adjust_vacation`, then the value rows and
+    the metrics row. Both the plain kernel and the salted assemble
+    step end here."""
     values, conflicts, carry_expired = fold_events(events)
     if adjust_vacation:
         apply_vacation_values(values)
-
-    rows = []
-    for code in sorted(values):
-        for (y, m), vs in sorted(values[code].items()):
-            rows.append((url, code, y, m, vs,
-                         None, None, None, None, None))
-    metrics = (url, METRICS_CODE, 0, 0, None,
-               len(raw_pages), decode_failures, conflicts, carry_expired,
-               e2_person_name(text or ""))
+    rows = [(url, code, y, m, vs, None, None, None, None, None)
+            for code in sorted(values)
+            for (y, m), vs in sorted(values[code].items())]
+    metrics = (url, METRICS_CODE, 0, 0, None, pages, decode_failures,
+               conflicts, carry_expired, person)
     return rows, metrics
+
+
+def _extract_doc(url: str, html, text: str,
+                 adjust_vacation: bool = False) -> tuple[list, tuple]:
+    """One document → (value rows, metrics row-values)."""
+    decode_failures = 0
+    try:
+        page_h, pages = decode_pages_fast(html)
+    except Exception:
+        page_h, pages = 0.0, []
+        decode_failures = 1
+    events, _state, _ffh = run_pages(pages, page_h, PageRunState())
+    return finish_doc(url, events, len(pages), decode_failures,
+                      e2_person_name(text or ""), adjust_vacation)
 
 
 def _row_values(pg: _Page, anchor: int, block: dict, column: int,
@@ -557,11 +533,7 @@ def _row_values(pg: _Page, anchor: int, block: dict, column: int,
 
 def make_extract_kernel(adjust_vacation: bool = False):
     """mapInPandas kernel factory: pages-table batches → long rows.
-    `adjust_vacation=True` fuses the A6 adjustment into the per-document
-    pass (shuffle-free; see apply_vacation_values)."""
-    cols = ["url", "code", "year", "month", "value",
-            "pages", "decode_failures", "conflicts", "carry_expired",
-            "person"]
+    `adjust_vacation=True` applies A6 in the per-document finisher."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -570,10 +542,7 @@ def make_extract_kernel(adjust_vacation: bool = False):
                 rows, metrics = _extract_doc(url, html, text, adjust_vacation)
                 out_rows.extend(rows)
                 out_rows.append(metrics)
-            yield pd.DataFrame(out_rows, columns=cols)
+            yield pd.DataFrame(out_rows, columns=E2_LONG_COLS)
 
     return kernel
 
-
-# default (unadjusted) kernel — public mapInPandas entry
-extract_ficha_long = make_extract_kernel(False)

@@ -2,9 +2,9 @@
 
 Everything after the Arrow kernel is pure DataFrame ops (Catalyst):
 
-* A1 last-write-wins happens inside the kernel (per-document state);
-* A6 vacation adjustment  = pivot + broadcast-friendly joins
-  (reference ``ficha_financeira_processor.py:935-996``);
+* A1 last-write-wins and the A6 vacation adjustment (reference
+  ``ficha_financeira_processor.py:935-996``) happen inside the kernel's
+  per-document finisher (``kernel.finish_doc``);
 * A7 zero-fill            = month-dimension LEFT JOIN (``:917-933``);
 * C6 minutes mode / C5 formatting = Arrow UDFs over canonical decimal
   strings (scale-preserving — see ``functions/brnum.py``).
@@ -15,10 +15,10 @@ exact, order-independent, and scale-preserving (the minutes rule reads
 
 Scale notes (100 TB story): the kernel stage is shuffle-free
 (one row per document, mapInPandas). The only shuffles are the
-adjustment pivot and the per-code series joins — all keyed on
-(url, year, month), a high-cardinality nearly-uniform key. The month
-dimension is a few hundred rows → broadcast. Oversized documents are
-bounded by pages-per-doc, not rows, so AQE skew handling plus
+per-code series joins — all keyed on (url, year, month), a
+high-cardinality nearly-uniform key. The month dimension is a few
+hundred rows → broadcast. Oversized documents are bounded by
+pages-per-doc, not rows, so AQE skew handling plus
 `spark.sql.files.maxPartitionBytes` keeps tasks even.
 """
 
@@ -27,26 +27,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.brnum import (
-    convert_minutes_udf,
-    decimal_add_udf,
-    decimal_div_pct_udf,
-    format_decimal_udf,
-)
-from .kernel import (
-    E2_LONG_SCHEMA,
-    METRICS_CODE,
-    extract_ficha_long,
-    make_extract_kernel,
-)
-
-FERIAS_CODES = ["167-Ferias", "168-Ferias", "173-Ferias", "174-Ferias"]
-INSS_COMP, INSS_VALOR = "527-INSS-Comp", "527-INSS-Valor"
-BASE_CODE = "3123-Base"
+from ..functions.brnum import convert_minutes_udf, format_decimal_udf
+from .kernel import E2_LONG_SCHEMA, METRICS_CODE, make_extract_kernel
 
 
-def extract_ficha(pages_df: DataFrame, with_layout_only: bool = True,
-                  repartition: bool | None = None,
+def extract_ficha(pages_df: DataFrame, repartition: bool | None = None,
                   adjust_vacation: bool = False) -> DataFrame:
     """pages table → long extraction rows (+ per-doc __metrics__ rows).
 
@@ -59,9 +44,9 @@ def extract_ficha(pages_df: DataFrame, with_layout_only: bool = True,
     engine2.salted.extract_ficha_salted (page-range split + exact
     carry-state handoff).
 
-    `adjust_vacation=True` fuses the A6 adjustment into the kernel
-    (per-document math — zero extra shuffles; byte-identical to
-    `apply_vacation_adjustments_df`, pinned by tests).
+    `adjust_vacation=True` applies the A6 adjustment in the kernel's
+    per-document finisher (zero extra shuffles; byte-identical to
+    oracle_ref, pinned by tests).
     """
     # the only consumer of `text` in this kernel is the person-name
     # scan, which reads the FIRST page only (reference :854-912, and
@@ -70,16 +55,15 @@ def extract_ficha(pages_df: DataFrame, with_layout_only: bool = True,
     # document instead of the whole document
     df = pages_df.select(
         "url", "html",
-        F.substring_index(F.col("text"), "\f", 1).alias("text"))
-    if with_layout_only:
-        df = df.filter(F.length("html") > 0)
+        F.substring_index(F.col("text"), "\f", 1).alias("text"),
+    ).filter(F.length("html") > 0)
     n_part = pages_df.sparkSession.sparkContext.defaultParallelism
     if repartition is None:
         repartition = df.rdd.getNumPartitions() < n_part
     if repartition:
         df = df.repartition(n_part)
-    kernel = make_extract_kernel(True) if adjust_vacation else extract_ficha_long
-    return df.mapInPandas(kernel, schema=E2_LONG_SCHEMA)
+    return df.mapInPandas(make_extract_kernel(adjust_vacation),
+                          schema=E2_LONG_SCHEMA)
 
 
 def values_table(long_df: DataFrame) -> DataFrame:
@@ -92,65 +76,6 @@ def metrics_table(long_df: DataFrame) -> DataFrame:
     return long_df.filter(F.col("code") == METRICS_CODE).select(
         "url", "pages", "decode_failures", "conflicts", "carry_expired", "person"
     )
-
-
-def apply_vacation_adjustments_df(vals: DataFrame) -> DataFrame:
-    """A6: 3123-Base[key] += 527-Valor / (527-Comp/100).
-
-    The reference iterates a 'vacation months' set (férias keys ∪ 527
-    keys), but the additional term is only computable where BOTH 527
-    series exist and comp != 0 — and every such key is in the set by
-    construction, so the férias qualification never changes the result;
-    the pivot below keys directly on computable months.
-    """
-    from pyspark import StorageLevel
-
-    # the adjustment reads `vals` from several branches (pair pivot,
-    # base slices, passthrough) — without a persist each branch re-runs
-    # the upstream extraction kernel
-    vals = vals.persist(StorageLevel.MEMORY_AND_DISK)
-    pair = vals.filter(F.col("code").isin(INSS_COMP, INSS_VALOR))
-    pv = (
-        pair.groupBy("url", "year", "month")
-        .pivot("code", [INSS_COMP, INSS_VALOR])
-        .agg(F.first("value"))
-        .withColumnRenamed(INSS_COMP, "comp")
-        .withColumnRenamed(INSS_VALOR, "valor")
-    )
-    adj = (
-        pv.filter(
-            F.col("comp").isNotNull()
-            & F.col("valor").isNotNull()
-            & (F.col("comp").cast("decimal(38,6)") != 0)
-        )
-        .withColumn("additional", decimal_div_pct_udf("valor", "comp"))
-        .select("url", "year", "month", "additional")
-        .persist(StorageLevel.MEMORY_AND_DISK)  # referenced 3× below
-    )
-
-    base = vals.filter(F.col("code") == BASE_CODE).select(
-        "url", "year", "month", "value"
-    )
-    keys = ["url", "year", "month"]
-    # Vectorized UDFs evaluate on every batch row even under when() —
-    # run the exact-decimal add only on the (small) matched slice and
-    # pass the untouched majority through. No broadcast hint: adj is
-    # one row per (url, year, month) with both 527 series — i.e.
-    # corpus-proportional, not a dimension — so the join strategy is
-    # left to AQE (broadcast at small scale, shuffle-join at 10^9 urls
-    # where a forced broadcast would OOM the driver).
-    adj_b = adj
-    matched = base.join(adj_b, keys, "inner").select(
-        *keys, decimal_add_udf("value", "additional").alias("value"))
-    base_only = base.join(adj_b, keys, "left_anti")
-    adj_only = adj.join(base, keys, "left_anti").select(
-        *keys, F.col("additional").alias("value"))
-    new_base = (
-        matched.unionByName(base_only).unionByName(adj_only)
-        .select("url", F.lit(BASE_CODE).alias("code"), "year", "month",
-                "value")
-    )
-    return vals.filter(F.col("code") != BASE_CODE).unionByName(new_base)
 
 
 def month_dim(spark: SparkSession, start: tuple[int, int],

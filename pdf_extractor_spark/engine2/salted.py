@@ -23,30 +23,28 @@ document and re-runs just the heads (or the whole chunk when it never
 establishes its own headers), whose events REPLACE pass-1 head events.
 At the head boundary the pass-1 and pass-2 states provably coincide
 (prefix blocks are dead by then in both runs), so pass-1 tails are kept
-as-is. The final A1 fold (last-write-wins + conflict transitions +
-expiry counts) runs relationally over the merged, totally-ordered
-event stream.
+as-is. The merged, totally-ordered event stream of each document then
+goes through the plain kernel's own finisher (``kernel.finish_doc``:
+A1 fold, A6 adjustment, value + metrics rows), so there is one fold.
 
 Cost shape at scale: pass 1 = embarrassingly parallel mapInPandas over
 chunk rows (the skew fix); pass 2 = one applyInPandas over only the
-oversized urls, each touching only head pages; the merge = one shuffle
-keyed by (url, code, year, month).
+oversized urls, each touching only head pages; the finish = one
+applyInPandas keyed by url over the (small) event rows.
 """
 
 from __future__ import annotations
 
-import json
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-import numpy as np
-
 from ..oracle_ref import e2_person_name
-from ..payload import _HDR, MAGIC, decode_layout, encode_layout
-from .kernel import MAX_BLOCK_CARRY, METRICS_CODE, PageRunState, run_pages
+from ..payload import split_layout
+from .kernel import (E2_LONG_COLS, E2_LONG_SCHEMA, MAX_BLOCK_CARRY,
+                     PageRunState, decode_pages_fast, finish_doc, run_pages)
 
 CHUNK_SCHEMA = ("url string, salt int, n_chunks int, page_offset int, "
                 "n_pages int, page_h double, chunk_html binary, "
@@ -56,54 +54,11 @@ EVENT_SCHEMA = ("url string, salt int, kind string, code string, "
                 "year int, month int, value string, lpage int, "
                 "gpage int, seq long, state string, ffh int")
 
-REPLACE_SCHEMA = ("url string, salt int, reproc_end int")
-
-
-def _chunk_blobs_v2(html: bytes, max_pages: int):
-    """Chunk a v2 WBX2 blob by pure buffer slicing — no Word-tuple
-    round trip. Output bytes are IDENTICAL to
-    `encode_layout(page_h, pages[k*mp:(k+1)*mp])` (pinned by
-    tests/test_salted.py::test_split_chunks_blob_bit_identical):
-    the chunk head is re-packed, and counts / cols / text-blob are
-    contiguous ranges of the source buffer. ~10x less per-page
-    split cost than decode+re-encode — the split is the serial leg
-    of the salted path, so its cost bounds how much skew salting
-    can recover (measured in BENCH/BASELINE.md)."""
-    buf = bytes(html)
-    page_h, n_pages, total = _HDR.unpack_from(buf, 4)
-    off = 4 + _HDR.size + 4
-    counts = np.frombuffer(buf, np.int32, n_pages, off)
-    off += 4 * n_pages
-    off += (-off) % 8
-    cols = np.frombuffer(buf, np.float64, 5 * total,
-                         off).reshape(5, total)
-    tblob = buf[off + 40 * total:]
-    # word-text boundaries inside the NUL-joined text blob
-    if total > 1:
-        nul = np.flatnonzero(
-            np.frombuffer(tblob, np.uint8) == 0)
-        starts = np.concatenate(([0], nul + 1))
-        ends = np.concatenate((nul, [len(tblob)]))
-    else:
-        starts = np.array([0]); ends = np.array([len(tblob)])
-    cum = np.concatenate(([0], np.cumsum(counts)))
-    out = []
-    for p0 in range(0, n_pages, max_pages):
-        p1 = min(p0 + max_pages, n_pages)
-        w0, w1 = int(cum[p0]), int(cum[p1])
-        head = (MAGIC + _HDR.pack(float(page_h), p1 - p0, w1 - w0)
-                + b"\x00" * 4)
-        body = counts[p0:p1].tobytes()
-        pad = (-(len(head) + len(body))) % 8
-        colb = np.ascontiguousarray(cols[:, w0:w1]).tobytes()
-        tb = (tblob[int(starts[w0]):int(ends[w1 - 1])]
-              if w1 > w0 else b"")
-        out.append((p1 - p0, head + body + b"\x00" * pad + colb + tb))
-    return float(page_h), n_pages, out
-
 
 def split_chunks(pages_df: DataFrame, max_pages: int = 16) -> DataFrame:
-    """Split each document into ≤max_pages page-range chunk rows.
+    """Split each document into ≤max_pages page-range chunk rows
+    (`payload.split_layout`). A payload that does not parse becomes one
+    empty chunk with `decode_failed = 1`, as the plain kernel counts it.
 
     max_pages must exceed MAX_BLOCK_CARRY so a carried-in block can
     never survive a whole chunk (the stitch-horizon containment the
@@ -117,33 +72,14 @@ def split_chunks(pages_df: DataFrame, max_pages: int = 16) -> DataFrame:
             for url, html, text in zip(pdf["url"], pdf["html"], pdf["text"]):
                 failed = 0
                 person = e2_person_name(text or "")
-                if html and bytes(html[:4]) == MAGIC:
-                    try:
-                        page_h, n, blobs = _chunk_blobs_v2(html, max_pages)
-                    except Exception:
-                        page_h, n, blobs = 0.0, 0, []
-                        failed = 1
-                    if not blobs:
-                        blobs = [(0, encode_layout(page_h, []))]
-                    n_chunks = len(blobs)
-                    for k, (c_pages, blob) in enumerate(blobs):
-                        rows.append((url, k, n_chunks, k * max_pages,
-                                     c_pages, page_h, blob,
-                                     person if k == 0 else None,
-                                     failed if k == 0 else 0, n))
-                    continue
-                # v1 JSON / empty blobs: the historical tuple path
                 try:
-                    page_h, pages = decode_layout(html)
+                    page_h, n, blobs = split_layout(html, max_pages)
                 except Exception:
-                    page_h, pages = 0.0, []
+                    page_h, n, blobs = split_layout(None, max_pages)
                     failed = 1
-                n = len(pages)
-                n_chunks = max(1, -(-n // max_pages))
-                for k in range(n_chunks):
-                    chunk = pages[k * max_pages:(k + 1) * max_pages]
-                    rows.append((url, k, n_chunks, k * max_pages, len(chunk),
-                                 page_h, encode_layout(page_h, chunk),
+                for k, (c_pages, blob) in enumerate(blobs):
+                    rows.append((url, k, len(blobs), k * max_pages,
+                                 c_pages, page_h, blob,
                                  person if k == 0 else None,
                                  failed if k == 0 else 0, n))
             yield pd.DataFrame(rows, columns=[
@@ -173,7 +109,7 @@ def pass1_events(chunks: DataFrame) -> DataFrame:
             for url, salt, off, blob, page_h in zip(
                     pdf["url"], pdf["salt"], pdf["page_offset"],
                     pdf["chunk_html"], pdf["page_h"]):
-                _h, pages = decode_layout(blob)
+                _h, pages = decode_pages_fast(blob)
                 events, end_state, ffh = run_pages(
                     pages, float(page_h), PageRunState(), page_offset=int(off))
                 rows.extend(_events_df_rows(url, int(salt), events, int(off)))
@@ -215,7 +151,7 @@ def pass2_stitch(chunks: DataFrame, states: DataFrame) -> tuple[DataFrame, DataF
                 continue
             full_replay = ffh < 0 or (ffh + MAX_BLOCK_CARRY) >= n_pages
             reproc_end = n_pages if full_replay else ffh + MAX_BLOCK_CARRY
-            _h, pages = decode_layout(r.chunk_html)
+            _h, pages = decode_pages_fast(r.chunk_html)
             events, end_state, _ = run_pages(
                 pages[:reproc_end], page_h, state, page_offset=off)
             for (k, c, y, m, v, gp, s) in events:
@@ -238,82 +174,59 @@ def pass2_stitch(chunks: DataFrame, states: DataFrame) -> tuple[DataFrame, DataF
 
 def assemble(chunks: DataFrame, p1: DataFrame, p2_events: DataFrame,
              ranges: DataFrame) -> DataFrame:
-    """Merge event streams → E2_LONG_SCHEMA-compatible output
-    (value rows + one __metrics__ row per url)."""
-    ev1 = (p1.filter(F.col("kind") != "s")
-           .select("url", "salt", "kind", "code", "year", "month",
-                   "value", "lpage", "gpage", "seq"))
-    ev1 = (ev1.join(ranges, ["url", "salt"], "left")
+    """Merge event streams → E2_LONG_SCHEMA rows (value rows + one
+    __metrics__ row per url), A6 applied.
+
+    Pass-1 head events replaced by pass 2 are dropped relationally;
+    the rest of each document's stream, plus one kind='d' row with its
+    chunk-0 lineage, meets in one applyInPandas per url that orders by
+    (gpage, seq) and calls `kernel.finish_doc`."""
+    ev_cols = ["url", "salt", "kind", "code", "year", "month", "value",
+               "lpage", "gpage", "seq"]
+    ev1 = (p1.filter(F.col("kind") != "s").select(*ev_cols)
+           .join(ranges, ["url", "salt"], "left")
            .filter(F.col("reproc_end").isNull()
                    | (F.col("lpage") >= F.col("reproc_end")))
            .drop("reproc_end"))
-    ev2 = p2_events.select("url", "salt", "kind", "code", "year", "month",
-                           "value", "lpage", "gpage", "seq")
-    events = ev1.unionByName(ev2)
+    docs = chunks.filter(F.col("salt") == 0).select(
+        "url", F.lit("d").alias("kind"), "person",
+        F.col("total_pages").alias("pages"),
+        F.col("decode_failed").alias("decode_failures"))
+    merged = (ev1.unionByName(p2_events.select(*ev_cols))
+              .select("url", "kind", "code", "year", "month", "value",
+                      "gpage", "seq")
+              .unionByName(docs, allowMissingColumns=True))
 
-    vals_ev = events.filter(F.col("kind") == "v")
-    key = ["url", "code", "year", "month"]
-    w = Window.partitionBy(*key).orderBy("gpage", "seq")
-    ordered = vals_ev.withColumn("prev", F.lag("value").over(w)) \
-                     .withColumn("rn_desc", F.row_number().over(
-                         Window.partitionBy(*key).orderBy(
-                             F.col("gpage").desc(), F.col("seq").desc())))
-    values = ordered.filter(F.col("rn_desc") == 1).select(
-        "url", "code", "year", "month", "value")
+    def finish(pdf: pd.DataFrame) -> pd.DataFrame:
+        doc = pdf[pdf["kind"] == "d"].iloc[0]
+        ev = pdf[pdf["kind"] != "d"].sort_values(["gpage", "seq"])
+        # year/month arrive as float (nullable ints); only 'v' rows
+        # carry them and fold_events reads nothing else from 'x' rows
+        events = [(k, c, int(y) if k == "v" else None,
+                   int(m) if k == "v" else None, v, None, None)
+                  for k, c, y, m, v in zip(ev["kind"], ev["code"],
+                                           ev["year"], ev["month"],
+                                           ev["value"])]
+        rows, metrics = finish_doc(
+            doc["url"], events, int(doc["pages"]),
+            int(doc["decode_failures"]), doc["person"],
+            adjust_vacation=True)
+        return pd.DataFrame(rows + [metrics], columns=E2_LONG_COLS)
 
-    # conflict = overwrite with a different Decimal value (A1 metric)
-    is_conflict = (
-        F.col("prev").isNotNull()
-        & (F.col("prev") != F.col("value"))
-        & (F.col("prev").cast("decimal(38,6)")
-           != F.col("value").cast("decimal(38,6)"))
-    )
-    conf = ordered.groupBy("url").agg(
-        F.sum(is_conflict.cast("int")).alias("conflicts"))
-    expiries = events.filter(F.col("kind") == "x").groupBy("url").agg(
-        F.count("*").alias("carry_expired"))
-    doc_info = chunks.groupBy("url").agg(
-        F.first("total_pages").alias("pages"),
-        F.sum("decode_failed").alias("decode_failures"),
-        F.max("person").alias("person"))
-
-    metrics = (
-        doc_info.join(conf, "url", "left").join(expiries, "url", "left")
-        .select(
-            "url", F.lit(METRICS_CODE).alias("code"),
-            F.lit(0).alias("year"), F.lit(0).alias("month"),
-            F.lit(None).cast("string").alias("value"),
-            F.col("pages").cast("int"),
-            F.col("decode_failures").cast("int"),
-            F.coalesce("conflicts", F.lit(0)).cast("int").alias("conflicts"),
-            F.coalesce("carry_expired", F.lit(0)).cast("int")
-            .alias("carry_expired"),
-            "person",
-        )
-    )
-    value_rows = values.select(
-        "url", "code", "year", "month", "value",
-        F.lit(None).cast("int").alias("pages"),
-        F.lit(None).cast("int").alias("decode_failures"),
-        F.lit(None).cast("int").alias("conflicts"),
-        F.lit(None).cast("int").alias("carry_expired"),
-        F.lit(None).cast("string").alias("person"),
-    )
-    return value_rows.unionByName(metrics)
+    return merged.groupBy("url").applyInPandas(finish, schema=E2_LONG_SCHEMA)
 
 
-def extract_ficha_salted(pages_df: DataFrame, max_pages: int = 16,
-                         with_layout_only: bool = True) -> DataFrame:
-    """Drop-in replacement for `pipeline.extract_ficha` that splits
-    oversized documents into parallel page-range chunks with an exact
-    carry-state handoff. Output is identical (tests pin it)."""
+def extract_ficha_salted(pages_df: DataFrame, max_pages: int = 16) -> DataFrame:
+    """Drop-in replacement for `pipeline.extract_ficha(pages,
+    adjust_vacation=True)` that splits oversized documents into
+    parallel page-range chunks with an exact carry-state handoff.
+    Output is identical (tests pin it)."""
     # person-name scan reads the first text page only (see
     # pipeline.extract_ficha) — ship one page of text per document
     df = pages_df.select(
         "url", "html",
-        F.substring_index(F.col("text"), "\f", 1).alias("text"))
-    if with_layout_only:
-        df = df.filter(F.length("html") > 0)
+        F.substring_index(F.col("text"), "\f", 1).alias("text"),
+    ).filter(F.length("html") > 0)
     # chunk rows inherit the INPUT row's partition: a single oversized
     # document's chunks all land in one task and pass 1 runs them
     # serially — the straggler salting exists to kill (measured: one

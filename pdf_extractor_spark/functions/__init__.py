@@ -1,7 +1,5 @@
 from .brnum import (  # noqa: F401
     convert_minutes_udf,
-    decimal_add_udf,
-    decimal_div_pct_udf,
     format_decimal_expr,
     format_decimal_udf,
     to_decimal_expr,

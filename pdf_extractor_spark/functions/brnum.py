@@ -8,10 +8,10 @@ Two tiers:
   exact branch order of ``pdf_processor_core.py:384-413``.
 
 * **Arrow-vectorized pandas UDFs** — the byte-parity tier used only in
-  the final formatter/adjustment stages (tiny row counts: one row per
-  output month). Python ``Decimal`` default context + ROUND_HALF_EVEN
+  the final formatter stages (tiny row counts: one row per output
+  month). Python ``Decimal`` default context + ROUND_HALF_EVEN
   quantize exactly matches the reference
-  (``ficha_financeira_processor.py:723-755, 935-996, 1155-1159``);
+  (``ficha_financeira_processor.py:723-755, 1155-1159``);
   Spark's decimal cast rounds HALF_UP, which can diverge on exact .005
   boundaries, so the writers use these UDFs instead.
 """
@@ -167,35 +167,3 @@ def convert_minutes_udf(vals: pd.Series) -> pd.Series:
     scale preserved), never as fixed-scale DecimalType.
     """
     return vals.map(lambda v: None if v is None else _convert_minutes(v))
-
-
-@pandas_udf(StringType())
-def decimal_div_pct_udf(valor: pd.Series, comp: pd.Series) -> pd.Series:
-    """A6 vacation adjustment term: valor / (comp/100) with Python
-    Decimal default-context division (28 significant digits), matching
-    the reference exactly (pinned: 300/(3000/100) == 10)."""
-
-    def div(v, c):
-        if v is None or c is None:
-            return None
-        dc = Decimal(c)
-        if dc == 0:
-            return None
-        divisor = dc / Decimal("100")
-        if divisor == 0:
-            return None
-        return str(Decimal(v) / divisor)
-
-    return pd.Series([div(v, c) for v, c in zip(valor, comp)])
-
-
-@pandas_udf(StringType())
-def decimal_add_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Exact decimal addition over canonical strings (null = 0)."""
-
-    def add(x, y):
-        if x is None and y is None:
-            return None
-        return str(Decimal(x or "0") + Decimal(y or "0"))
-
-    return pd.Series([add(x, y) for x, y in zip(a, b)])

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # one healthy scan split per core; inputs smaller than this per core
 # cannot be relied on to feed every core from file layout alone
@@ -72,15 +73,14 @@ def dim_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
 
     Building the same rows as a projection over `spark.range(n)` keeps
     exact row-count stats, so the estimate stays a few hundred bytes.
-    `schema` is the same DDL string createDataFrame takes; column
-    order must match the tuples."""
-    n = len(rows)
-    names = [c.strip().split()[0] for c in schema.split(",")]
-    types = [c.strip().split(None, 1)[1] for c in schema.split(",")]
+    `schema` is the same DDL string createDataFrame takes (parsed by
+    Spark, so `decimal(10,2)` and nested types work); column order must
+    match the tuples. Empty `rows` give an empty table of that schema."""
+    fields = StructType.fromDDL(schema).fields
     idx = (F.col("id") + 1).cast("int")
     cols = [
-        F.element_at(F.array(*[F.lit(r[i]) for r in rows]), idx)
-        .cast(types[i]).alias(names[i])
-        for i in range(len(names))
+        (F.element_at(F.array(*[F.lit(r[i]) for r in rows]), idx)
+         if rows else F.lit(None)).cast(f.dataType).alias(f.name)
+        for i, f in enumerate(fields)
     ]
-    return spark.range(n).select(*cols)
+    return spark.range(len(rows)).select(*cols)

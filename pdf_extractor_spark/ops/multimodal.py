@@ -13,6 +13,7 @@ exact point a real decoder would plug in.
 from __future__ import annotations
 
 import hashlib
+import math
 from typing import Iterator
 
 import numpy as np
@@ -53,17 +54,24 @@ def synth_media_table(spark, docs: DataFrame, id_col: str = "doc_id",
 
 def feature_fingerprint(vec: list[float]) -> str:
     """Hashable projection of a feature vector (driver correctness
-    checks can't canonicalize array columns): md5 of the 6-dp rendering."""
+    checks can't canonicalize array columns): md5 of the components
+    quantized to integer millionths."""
     return hashlib.md5(
-        ",".join(f"{x:.6f}" for x in vec).encode()).hexdigest()
+        ",".join(str(round(x * 1e6)) for x in vec).encode()).hexdigest()
 
 
 def _fake_feature(payload: bytes, dim: int) -> np.ndarray:
-    # content-addressed deterministic pseudo-embedding
+    """Content-addressed deterministic pseudo-embedding (unit float32).
+
+    The norm is a float64 left fold in index order: a numpy/BLAS
+    reduction reassociates by the CPU's SIMD width, which made the
+    vector (and its fingerprint) depend on the host."""
     seed = int.from_bytes(hashlib.sha256(payload or b"").digest()[:8], "big")
-    rng = np.random.default_rng(seed)
-    v = rng.standard_normal(dim).astype(np.float32)
-    return v / np.linalg.norm(v)
+    v = np.random.default_rng(seed).standard_normal(dim)
+    sq = 0.0
+    for x in v.tolist():
+        sq += x * x
+    return (v / math.sqrt(sq)).astype(np.float32)
 
 
 def extract_features(media: DataFrame, dim: int = 16,

@@ -7,13 +7,13 @@ yields in the reference
 (``processors/ficha_financeira_processor.py:424``): each word is
 ``(text, x0, x1, top, bottom, doctop)``.
 
-Format v2 (``WBX2``) is columnar: one contiguous float64 block for the
+The format (``WBX2``) is columnar: one contiguous float64 block for the
 five geometry columns (decoded zero-copy with ``np.frombuffer``) and one
-NUL-joined UTF-8 text block — measured ~3× faster to decode than the v1
-JSON layout, which mattered because Arrow-batch decode sat directly on
-the Engine-2 kernel's critical path. ``decode_layout`` sniffs the magic
-and still reads v1 JSON payloads. Floats round-trip exactly in both
-formats (binary in v2, repr-fidelity in v1).
+NUL-joined UTF-8 text block, so the Engine-2 kernel's per-batch decode
+is one block read plus one text split. Floats round-trip exactly.
+This module is the only one that knows the layout; every reader goes
+through ``_parse``, which rejects any buffer that is not a complete
+WBX2 payload.
 
 Layout:
     b"WBX2" | <d height> <i n_pages> <i total_words> | 4 pad bytes
@@ -24,7 +24,6 @@ Layout:
 
 from __future__ import annotations
 
-import json
 import struct
 
 import numpy as np
@@ -34,6 +33,14 @@ Word = tuple[str, float, float, float, float, float]
 
 MAGIC = b"WBX2"
 _HDR = struct.Struct("<dii")
+_COUNTS_OFF = len(MAGIC) + _HDR.size + 4
+
+
+def _head(height: float, counts: np.ndarray, total: int) -> bytes:
+    """Header + counts + pad: everything before the float columns."""
+    head = (MAGIC + _HDR.pack(float(height), len(counts), total)
+            + b"\x00" * 4 + counts.tobytes())
+    return head + b"\x00" * ((-len(head)) % 8)
 
 
 def encode_layout(height: float, pages: list[list[Word]]) -> bytes:
@@ -55,43 +62,83 @@ def encode_layout(height: float, pages: list[list[Word]]) -> bytes:
     text_blob = "\x00".join(texts).encode("utf-8")
     if total and any("\x00" in t for t in texts):
         raise ValueError("word text may not contain NUL")
-    head = MAGIC + _HDR.pack(float(height), len(pages), total) + b"\x00" * 4
-    body = counts.tobytes()
-    pad = (-(len(head) + len(body))) % 8
-    return head + body + b"\x00" * pad + cols.tobytes() + text_blob
+    return _head(height, counts, total) + cols.tobytes() + text_blob
+
+
+def _parse(buf: bytes):
+    """Validated WBX2 parse → (height, counts int32[n_pages],
+    cols float64[5, total], text_off, text). Raises ValueError unless
+    the buffer holds the magic, a header, `n_pages` non-negative counts
+    summing to `total`, all five float columns, and a UTF-8 text blob
+    of exactly `total` NUL-separated words."""
+    if buf[:4] != MAGIC or len(buf) < _COUNTS_OFF:
+        raise ValueError("not a WBX2 payload")
+    height, n_pages, total = _HDR.unpack_from(buf, 4)
+    cols_off = _COUNTS_OFF + 4 * n_pages
+    cols_off += (-cols_off) % 8
+    text_off = cols_off + 40 * total
+    if n_pages < 0 or total < 0 or len(buf) < text_off:
+        raise ValueError("truncated WBX2 payload")
+    counts = np.frombuffer(buf, np.int32, n_pages, _COUNTS_OFF)
+    if (counts < 0).any() or int(counts.sum()) != total:
+        raise ValueError("WBX2 page counts do not sum to the word total")
+    text = buf[text_off:].decode("utf-8")
+    if (text.count("\x00") + 1 if total else len(text)) != total:
+        raise ValueError("WBX2 text blob does not hold the word total")
+    cols = np.frombuffer(buf, np.float64, 5 * total, cols_off).reshape(5, total)
+    return float(height), counts, cols, text_off, text
 
 
 def decode_layout_columnar(blob: bytes | bytearray):
-    """v2 fast path → (height, counts int32[n_pages], texts list[str],
+    """Fast path → (height, counts int32[n_pages], texts list[str],
     cols float64[5, total]) with zero-copy float decode."""
+    height, counts, cols, _off, text = _parse(bytes(blob))
+    return height, counts, text.split("\x00") if cols.shape[1] else [], cols
+
+
+def split_layout(blob: bytes | bytearray, max_pages: int):
+    """Page-range slicer → (height, n_pages, [(chunk_pages, chunk_blob)]).
+
+    Pure buffer slicing, no Word-tuple round trip: each chunk blob is
+    IDENTICAL to ``encode_layout(height, pages[p0:p1])`` (pinned by
+    tests/test_salted.py::test_split_chunks_blob_bit_identical) — the
+    header is re-packed and counts / cols / text are contiguous ranges
+    of the source buffer. That is ~10x cheaper per page than decode +
+    re-encode, and the split is the serial leg of the salted path, so
+    its cost bounds how much skew salting can recover. An empty blob
+    is one zero-page chunk."""
+    if not blob:
+        return 0.0, 0, [(0, encode_layout(0.0, []))]
     buf = bytes(blob)
-    height, n_pages, total = _HDR.unpack_from(buf, 4)
-    off = 4 + _HDR.size + 4
-    counts = np.frombuffer(buf, np.int32, n_pages, off)
-    off += 4 * n_pages
-    off += (-off) % 8
-    cols = np.frombuffer(buf, np.float64, 5 * total, off).reshape(5, total)
-    off += 40 * total
-    texts = buf[off:].decode("utf-8").split("\x00") if total else []
-    return float(height), counts, texts, cols
+    height, counts, cols, text_off, _text = _parse(buf)
+    n_pages = len(counts)
+    # word-text boundaries inside the NUL-joined text blob
+    nul = np.flatnonzero(np.frombuffer(buf, np.uint8, offset=text_off) == 0)
+    starts = np.concatenate(([0], nul + 1)) + text_off
+    ends = np.concatenate((nul, [len(buf) - text_off])) + text_off
+    cum = np.concatenate(([0], np.cumsum(counts)))
+    out = []
+    # a zero-page document still yields one (empty) chunk
+    for p0 in range(0, max(n_pages, 1), max_pages):
+        p1 = min(p0 + max_pages, n_pages)
+        w0, w1 = int(cum[p0]), int(cum[p1])
+        tb = buf[int(starts[w0]):int(ends[w1 - 1])] if w1 > w0 else b""
+        out.append((p1 - p0, _head(height, counts[p0:p1], w1 - w0)
+                    + np.ascontiguousarray(cols[:, w0:w1]).tobytes() + tb))
+    return height, n_pages, out
 
 
 def decode_layout(blob: bytes | bytearray | None) -> tuple[float, list[list[Word]]]:
-    """Word-tuple view (oracle/chunking path). Sniffs v2 vs v1 JSON;
-    empty/None blob → no pages."""
+    """Word-tuple view (oracle path); empty/None blob → no pages."""
     if not blob:
         return 0.0, []
-    if bytes(blob[:4]) == MAGIC:
-        height, counts, texts, cols = decode_layout_columnar(blob)
-        x0, x1, top, bottom, doctop = (c.tolist() for c in cols)
-        pages: list[list[Word]] = []
-        a = 0
-        for n in counts.tolist():
-            b = a + n
-            pages.append(list(zip(texts[a:b], x0[a:b], x1[a:b],
-                                  top[a:b], bottom[a:b], doctop[a:b])))
-            a = b
-        return height, pages
-    doc = json.loads(bytes(blob).decode("utf-8"))
-    pages = [[tuple(w) for w in page] for page in doc.get("pages", [])]
-    return float(doc.get("height", 0.0)), pages
+    height, counts, texts, cols = decode_layout_columnar(blob)
+    x0, x1, top, bottom, doctop = (c.tolist() for c in cols)
+    pages: list[list[Word]] = []
+    a = 0
+    for n in counts.tolist():
+        b = a + n
+        pages.append(list(zip(texts[a:b], x0[a:b], x1[a:b],
+                              top[a:b], bottom[a:b], doctop[a:b])))
+        a = b
+    return height, pages

@@ -3,7 +3,9 @@
 Local-mode defaults mirror what the same job needs on a real cluster:
 AQE on (runtime skew-join splitting + partition coalescing), Arrow
 transport for the pandas kernels, shuffle partitions sized to cores
-rather than the 200 default.
+rather than the 200 default. Core count and driver memory are measured
+from the machine (`host_defaults`); `SPARK_GRAFT_CPUS` and
+`SPARK_DRIVER_MEMORY` override them.
 """
 
 from __future__ import annotations
@@ -12,6 +14,29 @@ import os
 
 from pyspark.sql import SparkSession
 
+# share of physical memory given to the driver JVM when
+# SPARK_DRIVER_MEMORY is unset (local mode: driver = executor)
+DRIVER_MEMORY_FRACTION = 0.4
+
+
+def host_defaults(master: str | None = None) -> tuple[str, int, str]:
+    """(master, shuffle partitions, driver memory) for this machine:
+    `local[<cores>]` from `os.cpu_count()`, shuffle partitions matching
+    the master's parallelism (floor 8), and DRIVER_MEMORY_FRACTION of
+    physical memory in MiB."""
+    cores = os.cpu_count() or 1
+    if master is None:
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS') or cores}]"
+    n = master[master.find("[") + 1: master.find("]")] if "[" in master else "*"
+    # match parallelism; on a real cluster this would be 2-3x total
+    # executor cores and AQE coalesces down
+    shuffle_partitions = max(8, cores if n == "*" else int(n))
+    memory = os.environ.get("SPARK_DRIVER_MEMORY")
+    if not memory:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        memory = f"{max(512, int(phys * DRIVER_MEMORY_FRACTION) >> 20)}m"
+    return master, shuffle_partitions, memory
+
 
 def get_spark(
     app_name: str = "pdf_extractor_spark",
@@ -19,14 +44,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+    master, default_partitions, driver_memory = host_defaults(master)
     if shuffle_partitions is None:
-        # match parallelism; on a real cluster this would be
-        # 2-3x total executor cores and AQE coalesces down.
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = 32 if n == "*" else max(8, int(n))
+        shuffle_partitions = default_partitions
 
     builder = (
         SparkSession.builder.master(master)
@@ -45,7 +65,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         # Scan-split sizing. At the 100 TB target with ~128 MiB row
         # groups the default 128 MiB split is right; at local test SF the

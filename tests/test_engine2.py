@@ -26,6 +26,11 @@ def long_df(corpus):
     return e2.extract_ficha(corpus).cache()
 
 
+@pytest.fixture(scope="module")
+def adjusted_df(corpus):
+    return e2.extract_ficha(corpus, adjust_vacation=True).cache()
+
+
 def _oracle_values(n_docs: int) -> dict[str, dict]:
     out = {}
     for i in range(n_docs):
@@ -75,12 +80,12 @@ def test_no_phantom_codes(long_df):
     assert "8-Insalubridade" in codes
 
 
-def test_vacation_adjustment_matches_oracle(long_df):
+def test_vacation_adjustment_matches_oracle(adjusted_df):
     golden = _oracle_values(N_DOCS)
     for g in golden.values():
         orc.apply_vacation_adjustments(g["values"])
 
-    adj = e2.apply_vacation_adjustments_df(e2.values_table(long_df))
+    adj = e2.values_table(adjusted_df)
     base = adj.filter(F.col("code") == "3123-Base").collect()
     got = {}
     for row in base:
@@ -94,7 +99,7 @@ def test_vacation_adjustment_matches_oracle(long_df):
             assert orc.format_decimal(wv) == orc.format_decimal(have[k]), (url, k)
 
 
-def test_proventos_series_byte_identical(long_df, spark):
+def test_proventos_series_byte_identical(adjusted_df, spark):
     """Flagship slice (SURVEY §7.1): zero-filled formatted PROVENTOS
     series matches the oracle byte-for-byte."""
     golden = _oracle_values(N_DOCS)
@@ -102,8 +107,8 @@ def test_proventos_series_byte_identical(long_df, spark):
         orc.apply_vacation_adjustments(g["values"])
     start, end = (2019, 1), (2022, 12)
 
-    adj = e2.apply_vacation_adjustments_df(e2.values_table(long_df))
-    tbl = e2.default_series_table(adj, "3123-Base", start, end)
+    tbl = e2.default_series_table(e2.values_table(adjusted_df), "3123-Base",
+                                  start, end)
     rows = tbl.orderBy("url", "year", "month").collect()
     got_csv: dict[str, list] = {}
     for r in rows:
@@ -149,19 +154,6 @@ def test_pinned_golden_values():
     assert orc.convert_minutes_value(Decimal("9.3")) == Decimal("9.05")
     assert orc.convert_minutes_value(Decimal("-1.30")) == Decimal("-1.5")
     assert orc.convert_minutes_value(Decimal("9.305")) == Decimal("9.305")
-
-
-def test_fused_adjustment_equals_relational(corpus, long_df):
-    """A6 fused in the kernel (adjust_vacation=True) must be
-    byte-identical to the relational pivot+join form."""
-    fused = e2.values_table(
-        e2.extract_ficha(corpus, adjust_vacation=True)).collect()
-    rel = e2.apply_vacation_adjustments_df(
-        e2.values_table(long_df)).collect()
-    key = lambda r: (r.url, r.code, r.year, r.month)  # noqa: E731
-    f = {key(r): r.value for r in fused}
-    g = {key(r): r.value for r in rel}
-    assert f == g
 
 
 def test_cartoes_writer_byte_identical(long_df):

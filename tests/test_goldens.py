@@ -15,6 +15,8 @@ import sys
 from pathlib import Path
 
 import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,7 +25,7 @@ from pdf_extractor_spark import golden_oracle as G
 from pdf_extractor_spark.xxh64 import spark_xxhash64
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-from tools.make_goldens import build_goldens  # noqa: E402
+from tools.make_goldens import SCHEMAS, build_goldens  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 N_CORPUS = 60  # queries._corpus_docs_for(sf0.001)
@@ -103,3 +105,17 @@ def test_committed_goldens_exist_and_load():
                  "extract_audit_metrics"]:
         n = con.execute(entrymod.oracle_sql()[name]).df().shape[0]
         assert n > 0, name
+
+
+def test_committed_goldens_regenerate_identically():
+    """Rebuilding every committed golden where the suite runs reproduces its
+    rows exactly, so no golden depends on the CPU that generated it
+    (SIMD width, core count, memory size)."""
+    gdir = Path(__file__).resolve().parent.parent / "goldens" / "sf0_01"
+    # the committed set: sf0.01 with queries._corpus_docs_for(sf0.01)
+    rebuilt = build_goldens(str(Path(SF_DIR).with_name("sf0.01")), 200)
+    assert {p.stem for p in gdir.glob("*.parquet")} == set(rebuilt)
+    for name, rows in rebuilt.items():
+        want = pq.read_table(gdir / f"{name}.parquet").to_pylist()
+        got = pa.Table.from_pylist(rows, schema=SCHEMAS[name]).to_pylist()
+        assert got == want, name

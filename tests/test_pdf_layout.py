@@ -105,23 +105,35 @@ def test_e2_from_pdf_values_and_metrics_identical(wbx_long, pdf_long):
     assert len(wv) > 1000
 
 
-def test_e2_from_pdf_proventos_byte_identical(wbx_long, pdf_long):
+def test_e2_from_pdf_proventos_byte_identical(pdf_corpus):
     """The flagship zero-filled PROVENTOS CSV rendered from the PDF
-    path equals the WBX2 path byte-for-byte."""
+    path (A6 in the kernel's finisher) equals the oracle's rendering of
+    the source WBX2 documents byte-for-byte."""
     start, end = (2019, 1), (2022, 12)
+    months = list(orc.iterate_months(start, end))
 
-    def render(df):
-        adj = e2.apply_vacation_adjustments_df(e2.values_table(df))
-        tbl = e2.default_series_table(adj, "3123-Base", start, end)
-        out: dict[str, list] = {}
-        for r in tbl.orderBy("url", "year", "month").collect():
-            out.setdefault(r.url, []).append((r.mes_ano, r.valor))
-        return {u: e2.render_default_csv(rows) for u, rows in out.items()}
+    want = {}
+    for doc_id in _ficha_ids(N_DOCS):
+        html, text, _name = gen_e2_doc(42, doc_id)
+        g = orc.e2_extract_doc(html, text)
+        if not any(g["values"].values()):
+            continue  # no value rows → no url in the series table
+        orc.apply_vacation_adjustments(g["values"])
+        series = orc.zero_fill(g["values"].get("3123-Base", {}), months)
+        want[f"synth://ficha/{doc_id:08d}"] = e2.render_default_csv(
+            [(f"{m:02d}/{y:04d}", orc.format_decimal(v))
+             for y, m, v in series])
 
-    want = render(wbx_long)
-    have = render(pdf_long)
-    assert want == have
-    assert len(want) > 20
+    adjusted = e2.extract_ficha(parse_pdf_layout(pdf_corpus),
+                                adjust_vacation=True)
+    tbl = e2.default_series_table(e2.values_table(adjusted), "3123-Base",
+                                  start, end)
+    rows: dict[str, list] = {}
+    for r in tbl.orderBy("url", "year", "month").collect():
+        rows.setdefault(r.url, []).append((r.mes_ano, r.valor))
+    have = {u: e2.render_default_csv(v) for u, v in rows.items()}
+    assert have == want
+    assert len(have) > 20
 
 
 def test_e2_from_pdf_shuffle_free_plan(spark, pdf_corpus):
@@ -265,7 +277,8 @@ def test_decimal_values_survive_as_decimals(pdf_long):
 def test_salted_kernel_on_pdf_bytes(spark):
     """The skew path (engine2/salted: page-range chunk split + exact
     carry handoff) accepts parse_pdf_layout output like any other
-    pages table — oversized REAL-PDF documents split identically."""
+    pages table — oversized REAL-PDF documents split identically, A6
+    included."""
     from pdf_extractor_spark.engine2.pipeline import extract_ficha
     from pdf_extractor_spark.engine2.salted import extract_ficha_salted
     from pdf_extractor_spark.ops.pdfstream import parse_pdf_layout
@@ -275,7 +288,7 @@ def test_salted_kernel_on_pdf_bytes(spark):
     pdfs = spark.createDataFrame(rows, "url string, pdf binary")
     pages = parse_pdf_layout(pdfs).persist()
     plain = {tuple(sorted(r.asDict().items()))
-             for r in extract_ficha(pages).collect()}
+             for r in extract_ficha(pages, adjust_vacation=True).collect()}
     salted = {tuple(sorted(r.asDict().items()))
               for r in extract_ficha_salted(pages, max_pages=4).collect()}
     assert plain == salted and plain

@@ -141,22 +141,19 @@ def test_contamination_no_corpus_exchange_before_join(spark, sf_dir):
 
 
 def test_corpus_proportional_joins_not_hinted(spark):
-    """A6's adjustment table (one row per url/year/month) and A8's
-    include-flag table (one row per url) grow with the corpus — a
-    forced broadcast hint would OOM at 10^9 urls. The strategy must be
-    left to AQE: no ResolvedHint in the optimized logical plan, while
+    """A8's include-flag table (one row per url) grows with the corpus
+    — a forced broadcast hint would OOM at 10^9 urls. The strategy must
+    be left to AQE: no ResolvedHint in the optimized logical plan, while
     at sandbox scale AQE still picks a broadcast join on its own."""
     from pdf_extractor_spark import datagen
 
     pages = spark.createDataFrame(datagen.corpus_pandas(8))
     vals = e2.values_table(e2.extract_ficha(pages))
 
-    adjusted = e2.apply_vacation_adjustments_df(vals)
     cart = e2.cartoes_table(vals, (2019, 1), (2019, 12))
-    for df in (adjusted, cart):
-        logical = df._jdf.queryExecution().optimizedPlan().toString()
-        assert "ResolvedHint" not in logical
-        assert "UnresolvedHint" not in logical
+    logical = cart._jdf.queryExecution().optimizedPlan().toString()
+    assert "ResolvedHint" not in logical
+    assert "UnresolvedHint" not in logical
     # AQE still broadcasts the small side at this scale
     cart.collect()
     plan = _plan(cart)
@@ -199,12 +196,20 @@ def test_dim_df_keeps_union_estimate_honest(spark, sf_dir):
     from pdf_extractor_spark.ops.layout import dim_df
     from pdf_extractor_spark.queries import _planted_curation_corpus
 
-    rows = [(3000000, "1 2 3"), (3000001, "1 2 3 4 5 6")]
-    lit = dim_df(spark, rows, "doc_id long, text string")
+    from decimal import Decimal
+
+    rows = [(3000000, "1 2 3", Decimal("12.50")),
+            (3000001, "1 2 3 4 5 6", Decimal("-0.07"))]
+    lit = dim_df(spark, rows, "doc_id long, text string, amt decimal(10,2)")
+    assert lit.schema.simpleString() == (
+        "struct<doc_id:bigint,text:string,amt:decimal(10,2)>")
     assert [tuple(r) for r in lit.orderBy("doc_id").collect()] == rows
     est = int(str(lit._jdf.queryExecution().optimizedPlan()
                   .stats().sizeInBytes()))
     assert est < 10_000  # honest bytes, not Long.Max
+    empty = dim_df(spark, [], "doc_id long, amt decimal(10,2)")
+    assert empty.schema.simpleString() == "struct<doc_id:bigint,amt:decimal(10,2)>"
+    assert empty.collect() == []
 
     planted = _planted_curation_corpus(spark, sf_dir)
     pest = int(str(planted._jdf.queryExecution().optimizedPlan()

@@ -1,5 +1,7 @@
 """Salted oversized-document path must be bit-identical to the plain
-(oracle-verified) kernel — values, conflicts, expiries, metrics."""
+(oracle-verified) kernel with A6 on — values, conflicts, expiries,
+metrics — including malformed payloads, which both count as one decode
+failure."""
 
 from __future__ import annotations
 
@@ -8,6 +10,8 @@ from pyspark.sql import functions as F
 
 from pdf_extractor_spark import datagen
 from pdf_extractor_spark.engine2 import pipeline as e2
+from pdf_extractor_spark.engine2.kernel import (PageRunState,
+                                                decode_pages_fast, run_pages)
 from pdf_extractor_spark.engine2.salted import extract_ficha_salted
 
 
@@ -26,25 +30,63 @@ def _values_map(rows):
     return out
 
 
-@pytest.mark.parametrize("max_pages", [5, 16])
-def test_salted_equals_plain(spark, corpus, max_pages):
-    plain = e2.extract_ficha(corpus)
-    salted = extract_ficha_salted(corpus, max_pages=max_pages)
-
+def _assert_same_output(plain, salted):
     pv = _values_map(e2.values_table(plain).collect())
     sv = _values_map(e2.values_table(salted).collect())
     assert set(pv) == set(sv)
     for url in pv:
         assert pv[url] == sv[url], url
 
-    pm = {r.url: r for r in e2.metrics_table(plain).collect()}
-    sm = {r.url: r for r in e2.metrics_table(salted).collect()}
-    assert set(pm) == set(sm)
-    for url in pm:
-        a, b = pm[url], sm[url]
-        assert (a.pages, a.decode_failures, a.conflicts, a.carry_expired,
-                a.person) == (b.pages, b.decode_failures, b.conflicts,
-                              b.carry_expired, b.person), url
+    pm = {r.url: tuple(r) for r in e2.metrics_table(plain).collect()}
+    sm = {r.url: tuple(r) for r in e2.metrics_table(salted).collect()}
+    assert pm == sm
+
+
+@pytest.mark.parametrize("max_pages", [5, 16])
+def test_salted_equals_plain(spark, corpus, max_pages):
+    _assert_same_output(
+        e2.extract_ficha(corpus, adjust_vacation=True),
+        extract_ficha_salted(corpus, max_pages=max_pages))
+
+
+def test_corpus_has_vacation_pair_past_first_chunk(corpus):
+    """A6 must be exercised across a chunk boundary: some document has
+    both 527-INSS series for one month on pages outside chunk 0 at
+    max_pages=5, so the salted finisher adjusts from pass-1/pass-2
+    events rather than from the first chunk alone."""
+    def late_pair(html):
+        page_h, pages = decode_pages_fast(html)
+        events, _state, _ffh = run_pages(pages, page_h, PageRunState())
+        late = {}
+        for kind, code, y, m, _v, gpage, _seq in events:
+            if kind == "v" and code.startswith("527-INSS-") and gpage >= 5:
+                late.setdefault((y, m), set()).add(code)
+        return any(len(codes) == 2 for codes in late.values())
+
+    assert any(late_pair(r.html)
+               for r in corpus.select("html").collect() if r.html)
+
+
+def test_malformed_payload_counted_alike(spark):
+    """A truncated WBX2 payload and a JSON payload (an old format the
+    codec no longer reads) are one decode failure with no value rows on
+    both paths, and the metrics rows agree."""
+    import json
+
+    two_page = next(h for h in datagen.corpus_pandas(40)["html"]
+                    if h and len(decode_pages_fast(h)[1]) == 2)
+    bad = spark.createDataFrame(
+        [("synth://bad/truncated", bytes(two_page)[:-9], "x"),
+         ("synth://bad/json", json.dumps({"pages": []}).encode(), "x")],
+        "url string, html binary, text string")
+    plain = e2.extract_ficha(bad, adjust_vacation=True)
+    salted = extract_ficha_salted(bad, max_pages=5)
+    for df in (plain, salted):
+        assert e2.values_table(df).count() == 0
+        assert {r.url: r.decode_failures
+                for r in e2.metrics_table(df).collect()} == {
+            "synth://bad/truncated": 1, "synth://bad/json": 1}
+    _assert_same_output(plain, salted)
 
 
 def test_salted_actually_splits(spark, corpus):
