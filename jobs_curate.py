@@ -84,8 +84,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from pdf_extractor_spark.ops.curate import (  # noqa: E402
-    curate_corpus, curation_stage_counts, extract_main_text,
-    extract_pdf_text, qualified_hashes)
+    curate, extract_main_text, extract_pdf_text)
 from pdf_extractor_spark.ops.dedup import (  # noqa: E402
     band_candidates, cap_megabuckets, jaccard_for_pairs,
     minhash_band_hashes, minhash_lsh_pairs_with_bands,
@@ -242,8 +241,7 @@ def main() -> None:
             # band the NEW batch only; candidates come from collisions
             # within the batch or against the persisted index
             banded = minhash_band_hashes(
-                docs, id_col=id_col, text_col=text_col,
-                dedup_shingles=not scale).persist()
+                docs, id_col=id_col, text_col=text_col).persist()
             all_bands = (old_bands.unionByName(banded)
                          if old_bands is not None else banded)
             # restrict the index to buckets the new batch touches —
@@ -288,7 +286,8 @@ def main() -> None:
         pairs = pairs.persist()
         write_run(pairs, f"{out}/near_dup_pairs")
 
-    gate_kwargs = dict(
+    cur = curate(
+        docs, pairs, seen_hashes=old_hashes,
         id_col=id_col, text_col=text_col,
         min_tokens=args.min_tokens,
         max_digit_ratio=args.max_digit_ratio,
@@ -297,22 +296,26 @@ def main() -> None:
         max_dup_word_frac=args.max_dup_word_frac,
         max_top_word_frac=args.max_top_word_frac,
         max_dup_bigram_frac=args.max_dup_bigram_frac)
-    kept = curate_corpus(docs, near_dup_pairs=pairs,
-                         seen_hashes=old_hashes, **gate_kwargs)
     if extracted:
         # curated output = original columns + the extracted main_text
         curated = raw.join(
-            docs.join(kept.select("doc_id"), "doc_id", "left_semi")
+            docs.join(cur.kept.select("doc_id"), "doc_id", "left_semi")
             .select(F.col("doc_id").alias(orig_id),
                     F.col("text").alias("main_text")),
             orig_id)
     else:
         curated = docs.join(
-            kept.select(F.col("doc_id").alias(id_col)),
+            cur.kept.select(F.col("doc_id").alias(id_col)),
             id_col, "left_semi")
     write_run(curated, f"{out}/curated")
 
-    n_kept = kept.count()
+    # per-stage drop accounting — second audit artifact; collected
+    # once, and the audit row's kept_docs is its `kept` count, so the
+    # two artifacts agree by construction
+    stage_rows = cur.stage_counts.collect()
+    write_run(spark.createDataFrame(stage_rows, cur.stage_counts.schema),
+              f"{out}/stage_counts", keep_other_runs=True)
+    n_kept = sum(r.n_docs for r in stage_rows if r.stage == "kept")
     n_pairs = pairs.count() if pairs is not None else 0
     audit = spark.createDataFrame(
         [(n_in, n_kept, n_pairs, args.near_dup,
@@ -324,17 +327,11 @@ def main() -> None:
     write_run(audit.withColumn("audit_ts", F.current_timestamp()),
               f"{out}/audit", keep_other_runs=True)
 
-    # per-stage drop accounting — second audit artifact; `kept` here
-    # must (and does, by construction + tests) equal kept_docs above
-    stages = curation_stage_counts(docs, near_dup_pairs=pairs,
-                                   seen_hashes=old_hashes, **gate_kwargs)
-    write_run(stages, f"{out}/stage_counts", keep_other_runs=True)
-
     # resume checkpoint — written LAST so a crash anywhere above leaves
     # the run re-runnable (the retry's read_state ignores this run_id's
     # partial partitions and the artifact writes overwrite them)
     ids_delta = raw.select(F.col(orig_id).alias("doc_id"))
-    qh_delta = qualified_hashes(docs, **gate_kwargs)
+    qh_delta = cur.qualified_hashes
     if resuming:
         # Cut lineage BEFORE mutating state: these plans read
         # state/manifest (through `raw`'s anti-join), and the first

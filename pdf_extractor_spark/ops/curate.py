@@ -2,16 +2,23 @@
 (quality gate → language filter → exact dedup → near-dup removal) that
 the individual ops in ``textstats``/``dedup`` exist to serve.
 
+`curate` builds the decision once and reads three outputs off that one
+chain; `curate_corpus`, `curation_stage_counts` and `qualified_hashes`
+are one-line accessors on it.
+
 Stage order and mechanics (the standard web-corpus shape):
 
 1. **Quality gate** — token floor + digit/punct ceilings. One pass of
    codegen'd expressions over the scan; at 100 TB this is the cheapest
-   stage and removes the most bytes, so it runs first (filters push
-   into the parquet scan's output immediately).
+   stage and removes the most bytes, so it runs first.
 2. **Language filter** — stopword-vote lang id, keep an allow-list.
-   Same pass as (1): Catalyst collapses both into one projection.
-3. **Exact dedup** — keep the minimum doc_id per normalized-content
-   md5 group. One uniform-hash shuffle (window over the digest).
+   Same pass as (1): Catalyst collapses both into one projection. The
+   distinct content hashes of the docs passing both ("qualified") are
+   the `qualified_hashes` output.
+3. **Exact dedup** — drop hashes a previous run qualified
+   (`seen_hashes`), then keep the minimum doc_id per normalized-content
+   md5 group (the "firsts"). One uniform-hash shuffle (window over the
+   digest).
 4. **Near-dup removal** — anti-join against the `b` side of a
    near-duplicate pair table (callers supply
    ``dedup.minhash_lsh_pairs``/``simhash_pairs``/
@@ -21,12 +28,21 @@ Stage order and mechanics (the standard web-corpus shape):
    duplicate chain. The pair table is ≪ corpus by construction
    (bucketed + capped candidates); AQE broadcasts the anti-join when
    it is small, and falls back to a shuffled anti-join when it is not.
+   What survives is the `kept` output.
+
+`stage_counts` puts each doc at its first failing stage by counting
+rows along that chain: quality and language from the gate flags,
+exact_dup = qualified − firsts, near_dup = firsts − kept, kept = rows
+of `kept`. The counts sum to the input and `kept` equals the curated
+row count by construction.
 
 Everything is lazy DataFrame composition — no action is triggered
 here, and no stage materializes the corpus.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -74,8 +90,8 @@ def _barrier_filter(df: DataFrame, pred) -> DataFrame:
 
 def _gate_features(docs: DataFrame, id_col: str, text_col: str,
                    with_repetition: bool) -> DataFrame:
-    """The shared single-projection feature pass behind `curate_corpus`
-    and `curation_stage_counts` (everything collapses into the scan)."""
+    """The single-projection feature pass behind `curate` (everything
+    collapses into the scan)."""
     t = F.col(text_col)
     trimmed = F.trim(t)
     n_tokens = (F.when(trimmed == "", 0)
@@ -184,42 +200,25 @@ def extract_pdf_text(pages: DataFrame, pdf_col: str = "pdf",
     return parsed.select(*cols)
 
 
-def qualified_hashes(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text", min_tokens: int = 5,
-                     max_digit_ratio: float = 0.2,
-                     max_punct_ratio: float = 0.3,
-                     keep_langs: tuple[str, ...] = ("pt", "en"),
-                     max_dup_word_frac: float | None = None,
-                     max_top_word_frac: float | None = None,
-                     max_dup_bigram_frac: float | None = None) -> DataFrame:
-    """Distinct (content_hash) of gate-surviving docs — the exact-dedup
-    state a resumable curation job persists: the next increment passes
-    it as `seen_hashes` so cross-run duplicates drop without rescanning
-    old data. Gate-surviving (not kept): the within-batch dedup window
-    counts qualified docs, so batch/incremental equivalence needs every
-    qualified hash, including ones whose doc was later deduped."""
-    rep = any(x is not None for x in
-              (max_dup_word_frac, max_top_word_frac, max_dup_bigram_frac))
-    feat = _gate_features(docs, id_col, text_col, with_repetition=rep)
-    return (_barrier_filter(
-        feat,
-        _quality_pred(min_tokens, max_digit_ratio, max_punct_ratio,
-                      max_dup_word_frac, max_top_word_frac,
-                      max_dup_bigram_frac)
-        & F.col("lang_pred").isin(*keep_langs))
-        .select("content_hash").distinct())
+class Curation(NamedTuple):
+    """The three outputs of one curation chain (see `curate`)."""
+    kept: DataFrame              # (doc_id, lang_pred, n_tokens)
+    stage_counts: DataFrame      # (stage, n_docs), zero stages omitted
+    qualified_hashes: DataFrame  # (content_hash), distinct
 
 
-def curate_corpus(docs: DataFrame, near_dup_pairs: DataFrame | None = None,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  min_tokens: int = 5, max_digit_ratio: float = 0.2,
-                  max_punct_ratio: float = 0.3,
-                  keep_langs: tuple[str, ...] = ("pt", "en"),
-                  max_dup_word_frac: float | None = None,
-                  max_top_word_frac: float | None = None,
-                  max_dup_bigram_frac: float | None = None,
-                  seen_hashes: DataFrame | None = None) -> DataFrame:
-    """Returns the curated corpus as (doc_id, lang_pred, n_tokens).
+def curate(docs: DataFrame, near_dup_pairs: DataFrame | None = None, *,
+           seen_hashes: DataFrame | None = None,
+           id_col: str = "doc_id", text_col: str = "text",
+           min_tokens: int = 5, max_digit_ratio: float = 0.2,
+           max_punct_ratio: float = 0.3,
+           keep_langs: tuple[str, ...] = ("pt", "en"),
+           max_dup_word_frac: float | None = None,
+           max_top_word_frac: float | None = None,
+           max_dup_bigram_frac: float | None = None) -> Curation:
+    """The curation decision, built once: gate → seen-hash anti-join →
+    exact-dedup top-1 → near-dup anti-join, and every output read off
+    that one chain.
 
     `near_dup_pairs`: optional (a, b, …) DataFrame with a < b; every
     doc appearing as `b` is dropped (stage 4). Pass the output of any
@@ -227,8 +226,7 @@ def curate_corpus(docs: DataFrame, near_dup_pairs: DataFrame | None = None,
 
     The three `max_*_frac` ceilings are Gopher-style repetition gates
     (see ``textstats.repetition_cols``); None disables a ceiling. They
-    join stage 1 — same single projection, filters still push to the
-    scan.
+    join stage 1 — same single projection.
 
     `seen_hashes`: optional (content_hash) table of gate-surviving
     docs from PREVIOUS runs (incremental curation): a doc whose hash
@@ -240,20 +238,26 @@ def curate_corpus(docs: DataFrame, near_dup_pairs: DataFrame | None = None,
     rep = any(x is not None for x in
               (max_dup_word_frac, max_top_word_frac, max_dup_bigram_frac))
     feat = _gate_features(docs, id_col, text_col, with_repetition=rep)
-    gated = _barrier_filter(
-        feat,
+    # a null predicate (e.g. null text) fails the filter, so it counts
+    # as failing that gate
+    quality_ok = F.coalesce(
         _quality_pred(min_tokens, max_digit_ratio, max_punct_ratio,
                       max_dup_word_frac, max_top_word_frac,
-                      max_dup_bigram_frac)
-        & F.col("lang_pred").isin(*keep_langs)
-    )
+                      max_dup_bigram_frac), F.lit(False))
+    lang_ok = F.coalesce(F.col("lang_pred").isin(*keep_langs), F.lit(False))
+    gated = _barrier_filter(feat, quality_ok & lang_ok)
+    # every gate-surviving hash, including ones deduped below: the next
+    # increment's window must see the same qualified docs a batch run
+    # over the union would
+    hashes = gated.select("content_hash").distinct()
     if seen_hashes is not None:
         gated = gated.join(seen_hashes.select("content_hash"),
                            "content_hash", "left_anti")
     w = Window.partitionBy("content_hash").orderBy("doc_id")
-    exact_kept = (gated.withColumn("rn", F.row_number().over(w))
-                  .filter(F.col("rn") == 1))
-    out = exact_kept.select("doc_id", "lang_pred", "n_tokens")
+    firsts = (gated.withColumn("rn", F.row_number().over(w))
+              .filter(F.col("rn") == 1)
+              .select("doc_id", "lang_pred", "n_tokens"))
+    kept = firsts
     if near_dup_pairs is not None:
         # join strategy stays with the optimizer: the pair table is
         # usually tiny (bucketed + capped candidate generation) and AQE
@@ -261,83 +265,65 @@ def curate_corpus(docs: DataFrame, near_dup_pairs: DataFrame | None = None,
         # outgrow the driver — forcing a broadcast hint here would turn
         # that into an OOM instead of a (correct) shuffled anti-join.
         drop = near_dup_pairs.select(F.col("b").alias("doc_id")).distinct()
-        out = out.join(drop, "doc_id", "left_anti")
-    return out
+        kept = kept.join(drop, "doc_id", "left_anti")
+
+    # stage counts: rows at each step of the chain above, differenced.
+    # A projection (not a filter) tallies the gates, so nothing pushes
+    # below a rebalance; firsts and kept share the dedup exchange.
+    tally = (feat.select(
+        (~quality_ok).alias("quality"),
+        (quality_ok & ~lang_ok).alias("language"),
+        (quality_ok & lang_ok).alias("qualified"))
+        .unionByName(firsts.select(F.lit(True).alias("firsts")),
+                     allowMissingColumns=True)
+        .unionByName(kept.select(F.lit(True).alias("kept")),
+                     allowMissingColumns=True))
+    n = {c: F.count_if(c) for c in tally.columns}
+    stages = (tally.agg(
+        n["quality"].alias("quality"),
+        n["language"].alias("language"),
+        (n["qualified"] - n["firsts"]).alias("exact_dup"),
+        (n["firsts"] - n["kept"]).alias("near_dup"),
+        n["kept"].alias("kept"))
+        .unpivot([], ["quality", "language", "exact_dup", "near_dup",
+                      "kept"], "stage", "n_docs")
+        .filter(F.col("n_docs") > 0))
+    return Curation(kept, stages, hashes)
+
+
+def qualified_hashes(docs: DataFrame, **gates) -> DataFrame:
+    """Distinct (content_hash) of gate-surviving docs — the exact-dedup
+    state a resumable curation job persists: the next increment passes
+    it as `seen_hashes` so cross-run duplicates drop without rescanning
+    old data. Takes `curate`'s gate keywords."""
+    return curate(docs, **gates).qualified_hashes
+
+
+def curate_corpus(docs: DataFrame, near_dup_pairs: DataFrame | None = None,
+                  **gates) -> DataFrame:
+    """The curated corpus as (doc_id, lang_pred, n_tokens). Takes
+    `curate`'s keywords."""
+    return curate(docs, near_dup_pairs, **gates).kept
 
 
 def curation_stage_counts(docs: DataFrame,
                           near_dup_pairs: DataFrame | None = None,
-                          id_col: str = "doc_id", text_col: str = "text",
-                          min_tokens: int = 5, max_digit_ratio: float = 0.2,
-                          max_punct_ratio: float = 0.3,
-                          keep_langs: tuple[str, ...] = ("pt", "en"),
-                          max_dup_word_frac: float | None = None,
-                          max_top_word_frac: float | None = None,
-                          max_dup_bigram_frac: float | None = None,
-                          seen_hashes: DataFrame | None = None
-                          ) -> DataFrame:
-    """Per-stage drop accounting for the curation pipeline: one row per
-    stage — quality / language / exact_dup / near_dup / kept — with the
-    number of documents whose FIRST failing stage it is. The counts sum
-    to the input count, and `kept` equals ``curate_corpus``'s row count
-    under identical parameters (asserted in tests).
+                          **gates) -> DataFrame:
+    """Per-stage drop accounting: (stage, n_docs), one row per stage
+    that drops (or keeps) at least one document, counting each
+    document at its FIRST failing stage. Read off `curate`'s one
+    chain as count identities:
 
-    Single-pass plan: the same scan-side feature projection, one
-    conditional running count over the content-hash window (the same
-    exchange the dedup stage already pays — a doc's position among the
-    *qualified* members of its hash group), one left join against the
-    pair table's drop side, then a tiny stage aggregation. No second
-    scan of the corpus.
-    """
-    rep = any(x is not None for x in
-              (max_dup_word_frac, max_top_word_frac, max_dup_bigram_frac))
-    feat = _gate_features(docs, id_col, text_col, with_repetition=rep)
-    quality_ok = _quality_pred(min_tokens, max_digit_ratio, max_punct_ratio,
-                               max_dup_word_frac, max_top_word_frac,
-                               max_dup_bigram_frac)
-    lang_ok = F.col("lang_pred").isin(*keep_langs)
-    qualified = (quality_ok & lang_ok).cast("int")
-    # position among qualified docs in the hash group (doc_id order):
-    # qualified doc with pos 1 is the exact-dedup survivor
-    w = (Window.partitionBy("content_hash").orderBy("doc_id")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    # coalesce to false: a null predicate (e.g. null text) drops the
-    # doc in curate_corpus's filter, so it must attribute to the gate
-    # stage here too, not fall through the when-chain
-    staged = feat.select(
-        "doc_id", "content_hash",
-        F.coalesce(quality_ok, F.lit(False)).alias("quality_ok"),
-        F.coalesce(lang_ok, F.lit(False)).alias("lang_ok"),
-        (F.sum(qualified).over(w)).alias("q_pos"),
-    )
-    if seen_hashes is not None:
-        # incremental: a hash already gate-surviving in a previous run
-        # makes every qualified member of the group an exact dup.
-        # distinct: appended state may carry a hash twice; a plain
-        # left join would then fan staged rows out
-        staged = staged.join(
-            seen_hashes.select("content_hash").distinct()
-            .withColumn("seen_before", F.lit(True)),
-            "content_hash", "left")
-    else:
-        staged = staged.withColumn("seen_before",
-                                   F.lit(None).cast("boolean"))
-    if near_dup_pairs is not None:
-        drop = (near_dup_pairs.select(F.col("b").alias("doc_id"))
-                .distinct().withColumn("near_dropped", F.lit(True)))
-        staged = staged.join(drop, "doc_id", "left")
-    else:
-        staged = staged.withColumn("near_dropped", F.lit(None).cast("boolean"))
-    stage = (
-        F.when(~F.col("quality_ok"), "quality")
-        .when(~F.col("lang_ok"), "language")
-        .when((F.col("q_pos") > 1)
-              | F.coalesce("seen_before", F.lit(False)), "exact_dup")
-        .when(F.coalesce("near_dropped", F.lit(False)), "near_dup")
-        .otherwise("kept")
-    )
-    return (staged.groupBy(stage.alias("stage"))
-            .agg(F.count("*").alias("n_docs")))
+    * quality   = docs failing the quality gate (null text included);
+    * language  = quality-passing docs whose language is not kept;
+    * exact_dup = qualified docs − firsts (the top-1 per content hash
+      after the seen-hash anti-join);
+    * near_dup  = firsts − kept;
+    * kept      = rows of `curate_corpus` under the same keywords.
+
+    So the counts sum to the input count and `kept` equals the curated
+    row count by construction. Takes `curate`'s keywords."""
+    return curate(docs, near_dup_pairs, **gates).stage_counts
 
 
 def deterministic_sample(docs: DataFrame, rates: DataFrame,

@@ -173,27 +173,16 @@ def _signatures_from_hashed(sh: DataFrame, n_perm: int,
 
 def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text", k: int = 5,
-                       n_perm: int = 64, seed: int = 42,
-                       dedup_shingles: bool = True) -> DataFrame:
+                       n_perm: int = 64, seed: int = 42) -> DataFrame:
     """doc → n_perm-column MinHash signature over word k-shingles.
 
     One explode + one map-side-combinable groupBy; the per-permutation
-    min is computed from a single base xxhash64 per distinct shingle.
-
-    `dedup_shingles` does not change the result (min is
-    duplicate-insensitive); it changes the plan. True keeps a distinct
-    on the exploded (doc_id, h64) table — an exchange of 16-byte rows
-    that `minhash_lsh_pairs`'s verify stage shares verbatim, so
-    Spark's ReusedExchange computes it once (fastest measured shape at
-    sandbox scale). False skips it: the groupBy's map-side partial min
-    shuffles only 64 longs per doc — the shape to use when signatures
-    are built standalone or the corpus is too large to exchange
-    (10^12-doc scale, where verify touches only candidate docs and
-    shares nothing).
+    min is computed from a single base xxhash64 per shingle. min is
+    duplicate-insensitive, so the exploded shingles are not
+    de-duplicated: the map-side partial min shuffles only 64 longs per
+    doc.
     """
     sh = hashed_shingle_rows(docs, id_col, text_col, k)
-    if dedup_shingles:
-        sh = sh.distinct()
     return _signatures_from_hashed(sh, n_perm, seed)
 
 
@@ -215,15 +204,13 @@ def pick_minhash_shape(n_docs: int) -> bool:
 def minhash_band_hashes(docs: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", k: int = 5,
                         n_perm: int = 64, bands: int = 16,
-                        seed: int = 42,
-                        dedup_shingles: bool = True) -> DataFrame:
+                        seed: int = 42) -> DataFrame:
     """(doc_id, band_idx, band_hash) — the banded LSH index rows for
     each document. This is the state a resumable curation job persists
     between runs: an increment computes band hashes for NEW docs only
     and joins them against the stored index, so near-dup work scales
     with the increment, not the corpus."""
-    sig = minhash_signatures(docs, id_col, text_col, k, n_perm, seed,
-                             dedup_shingles=dedup_shingles)
+    sig = minhash_signatures(docs, id_col, text_col, k, n_perm, seed)
     band_cols = _band_struct_exprs(n_perm, bands)
     return (sig.select("doc_id", F.explode(F.array(*band_cols)).alias("b"))
             .select("doc_id", "b.band_idx", "b.band_hash"))

@@ -548,11 +548,20 @@ def _png_unpredict(data: bytes, columns: int) -> bytes:
     return bytes(out)
 
 
+# FlateDecode output caps: a few-KB bomb stream can inflate to
+# gigabytes inside a Python worker. A stream over the per-stream cap,
+# or a document whose streams together inflate past the per-document
+# cap, raises zlib.error and is counted as a decode failure.
+MAX_INFLATE_STREAM = 64 << 20
+MAX_INFLATE_DOC = 256 << 20
+
+
 class _Doc:
     """Parsed object graph of one PDF byte string."""
 
     def __init__(self, buf: bytes) -> None:
         self.buf = buf
+        self.inflated = 0               # FlateDecode bytes out so far
         self.cache: dict[int, object] = {}
         self.compressed: dict[int, tuple[int, int]] = {}
         self._objstm_cache: dict[int, dict[int, object]] = {}
@@ -805,7 +814,7 @@ class _Doc:
         for f in (filters if isinstance(filters, list)
                   else [filters] if filters is not None else []):
             if str(f) == "FlateDecode":
-                raw = zlib.decompress(raw)
+                raw = self._inflate(raw)
         parms = d.get("DecodeParms")
         if isinstance(parms, list):
             parms = next((p for p in parms if isinstance(p, dict)), {})
@@ -988,6 +997,20 @@ class _Doc:
         return v
 
     # -- streams ----------------------------------------------------------
+    def _inflate(self, raw: bytes) -> bytes:
+        """zlib-decompress one stream within the output caps; like
+        `zlib.decompress`, a truncated stream raises and trailing bytes
+        after the end of the stream are ignored."""
+        limit = min(MAX_INFLATE_STREAM, MAX_INFLATE_DOC - self.inflated)
+        d = zlib.decompressobj()
+        out = d.decompress(raw, limit + 1)
+        if len(out) > limit:
+            raise zlib.error("FlateDecode output over cap")
+        if not d.eof:
+            raise zlib.error("incomplete or truncated stream")
+        self.inflated += len(out)
+        return out
+
     def stream_data(self, v) -> bytes:
         v = self.resolve(v)
         if not (isinstance(v, tuple) and len(v) == 2):
@@ -1001,7 +1024,7 @@ class _Doc:
         for f in filters:                       # chains apply in order
             name = str(f)
             if name == "FlateDecode":
-                raw = zlib.decompress(raw)
+                raw = self._inflate(raw)
             elif name == "ASCIIHexDecode":
                 raw = _ascii_hex_decode(raw)
             elif name == "ASCII85Decode":

@@ -2,9 +2,9 @@
 
 The reference has no streaming surface (SURVEY §2.10) and its only
 cross-input state (G5 block carry) is confined within one document, so
-the correct streaming mapping is micro-batch reuse of the exact batch
-pipeline: `readStream` over the pages location → `foreachBatch` running
-the same Engine-1/Engine-2 dataflows → append sinks. No watermarks or
+the correct streaming mapping is reuse of the exact batch kernels:
+`readStream` over the pages location → the same stateless
+scan→mapInPandas maps → parquet file sinks. No watermarks or
 `transformWithState` are needed — there is no event-time or
 cross-document state by construction.
 
@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from typing import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .datagen import PAGES_SCHEMA
@@ -34,22 +34,22 @@ def stream_extract_ficha(
 ):
     """Incrementally extract newly-arrived page files.
 
-    Exactly-once at document granularity: the file-source (or Iceberg
-    snapshot range) tracks progress in the checkpoint; each micro-batch
-    runs the deterministic batch pipeline and appends.
+    The Engine-2 kernel is a stateless scan→mapInPandas map
+    (`repartition=False`: a streaming plan takes no round-robin
+    exchange), so it runs on the streaming DataFrame directly into the
+    parquet file sink. Exactly-once at file granularity: the source
+    tracks progress in the checkpoint, and the sink's metadata log
+    skips a micro-batch it already committed when a restart replays it.
     """
     stream = (
         spark.readStream.schema(PAGES_SCHEMA)
         .parquet(pages_path)
     )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        long_df = e2.extract_ficha(batch_df)
-        (long_df.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(out_path))
-
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint)
+    writer = (e2.extract_ficha(stream, repartition=False)
+              .writeStream.format("parquet")
+              .outputMode("append")
+              .option("path", out_path)
+              .option("checkpointLocation", checkpoint))
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()

@@ -86,9 +86,12 @@ def test_incremental_stage_counts_sum_to_batch(spark, sf_dir):
         docs, near_dup_pairs=minhash_lsh_pairs(docs, threshold=0.8)))
     c_old = counts(curation_stage_counts(
         old, near_dup_pairs=minhash_lsh_pairs(old, threshold=0.8)))
+    incr_pairs = _incremental_pairs(docs, new)
+    seen = qualified_hashes(old)
     c_new = counts(curation_stage_counts(
-        new, near_dup_pairs=_incremental_pairs(docs, new),
-        seen_hashes=qualified_hashes(old)))
+        new, near_dup_pairs=incr_pairs, seen_hashes=seen))
+    assert c_new["kept"] == curate_corpus(
+        new, near_dup_pairs=incr_pairs, seen_hashes=seen).count()
     summed = {k: c_old.get(k, 0) + c_new.get(k, 0)
               for k in set(c_old) | set(c_new)}
     assert summed == batch

@@ -248,27 +248,36 @@ def test_curate_corpus_stages(spark):
 def test_curation_stage_counts_consistent(spark, sf_dir):
     """Stage counts must sum to the input size, and `kept` must equal
     curate_corpus's row count under identical parameters (both with
-    and without a pair table)."""
+    and without a pair table). A null-text doc counts under `quality`
+    and is never kept."""
     from pdf_extractor_spark.ops.curate import (curate_corpus,
                                                 curation_stage_counts)
     from pdf_extractor_spark.ops.dedup import minhash_lsh_pairs
 
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
             .select("doc_id", "text"))
+    base = {r.stage: r.n_docs
+            for r in curation_stage_counts(docs).collect()}
+    null_id = 10 ** 9
+    docs = docs.unionByName(spark.createDataFrame(
+        [(null_id, None)], "doc_id long, text string"))
     n_in = docs.count()
     for pairs in (None, minhash_lsh_pairs(docs, threshold=0.8)):
         counts = {r.stage: r.n_docs
                   for r in curation_stage_counts(
                       docs, near_dup_pairs=pairs).collect()}
         assert sum(counts.values()) == n_in
-        assert counts["kept"] == curate_corpus(
-            docs, near_dup_pairs=pairs).count()
+        kept = {r.doc_id for r in curate_corpus(
+            docs, near_dup_pairs=pairs).collect()}
+        assert counts["kept"] == len(kept)
+        assert null_id not in kept
+    assert counts["quality"] == base.get("quality", 0) + 1
     assert counts.get("near_dup", 0) > 0  # generator plants near-dups
 
 
 def test_stage_counts_partition_invariant(spark, sf_dir):
     """Stage attribution must not depend on physical partitioning
-    (running count over the content-hash window is keyed, not
+    (the top-1 over the content-hash window is keyed, not
     positional)."""
     from pdf_extractor_spark.ops.curate import curation_stage_counts
 

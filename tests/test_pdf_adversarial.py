@@ -16,6 +16,8 @@ from-scratch parser.
 import hashlib
 import zlib
 
+import pytest
+
 from pdf_extractor_spark.ops.pdfstream import _PDF_PAD, _Doc, _rc4, parse_pdf_doc
 
 
@@ -405,3 +407,30 @@ def test_direct_font_dicts_kept_alive():
     f = d.page_fonts(d.pages()[0])
     assert "F1" in f
     assert f["F1"] in d._font_keepalive
+
+
+@pytest.mark.parametrize("cap", ["MAX_INFLATE_STREAM", "MAX_INFLATE_DOC"])
+def test_flate_bomb_counted_within_caps(monkeypatch, cap):
+    """A FlateDecode stream that inflates past the per-stream cap, or
+    past what is left of the per-document cap, is one counted decode
+    failure on its page; the page before it still extracts and no
+    exception escapes. Caps are lowered so the bomb stays small."""
+    from pdf_extractor_spark.ops import pdfstream
+
+    monkeypatch.setattr(pdfstream, cap, 64 << 10)
+    page1 = b"BT /F1 11 Tf 72 720 Td (kept page) Tj ET\n" + b" " * (40 << 10)
+    bomb = (b" " * (40 << 10) if cap == "MAX_INFLATE_DOC"
+            else b" " * (1 << 20))
+    streams = [zlib.compress(page1), zlib.compress(bomb)]
+    objs = {
+        1: b"<< /Type /Catalog /Pages 2 0 R >>",
+        2: b"<< /Type /Pages /Count 2 /Kids [3 0 R 4 0 R] >>",
+        3: b"<< /Type /Page /Parent 2 0 R /Contents 5 0 R >>",
+        4: b"<< /Type /Page /Parent 2 0 R /Contents 6 0 R >>",
+    }
+    for num, data in zip((5, 6), streams):
+        objs[num] = (b"<< /Filter /FlateDecode /Length %d >>\nstream\n"
+                     % len(data) + data + b"\nendstream")
+    pages = parse_pdf_doc(_classic_pdf(objs))
+    assert [pg["text"] for pg in pages] == ["kept page", ""]
+    assert sum(pg["decode_failures"] for pg in pages) == 1

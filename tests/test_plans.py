@@ -107,23 +107,15 @@ def test_boilerplate_flatten_shuffle_free(spark, sf_dir):
 
 
 def test_minhash_scale_shape_single_exchange(spark, sf_dir):
-    """With dedup_shingles=False the signature aggregation must be the
-    one-exchange shape: map-side partial min, then a single
-    hashpartitioning(doc_id) exchange carrying 64 longs per doc —
-    never a full-width distinct of shingle strings."""
+    """The signature aggregation must be the one-exchange shape:
+    map-side partial min, then a single hashpartitioning(doc_id)
+    exchange carrying 64 longs per doc — never a full-width distinct
+    of shingle strings."""
     from pdf_extractor_spark.ops import dedup
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    lean = dedup.minhash_signatures(docs, dedup_shingles=False)
+    lean = dedup.minhash_signatures(docs)
     assert _plan(lean).count("Exchange hashpartitioning") == 1
-    # dedup_shingles=True compiles to the SAME single-exchange plan
-    # when signatures are built standalone: Spark 4's
-    # RemoveRedundantAggregates drops the distinct beneath the
-    # duplicate-agnostic min. The flag only matters inside
-    # minhash_lsh_pairs, where the distinct subtree is shared with the
-    # verify stage (ReusedExchange) and must not be eliminated.
-    shared = dedup.minhash_signatures(docs, dedup_shingles=True)
-    assert _plan(shared).count("Exchange hashpartitioning") == 1
 
 
 def test_contamination_no_corpus_exchange_before_join(spark, sf_dir):
@@ -232,8 +224,21 @@ def test_curate_gate_filter_not_pushed_below_rebalance(spark, sf_dir):
     df = curate_corpus(_planted_curation_corpus(spark, sf_dir))
     plan = _plan(df)
     assert "SPARK_PARTITION_ID" in plan  # the non-deterministic guard
-    rr = plan.find("Exchange RoundRobinPartitioning")
-    assert rr != -1
-    below = plan[rr:]  # tree printed top-down: below-exchange = after
+    lines = plan.splitlines()
+    rr = next(i for i, ln in enumerate(lines)
+              if "Exchange RoundRobinPartitioning" in ln)
+
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    # the exchange's own subtree: the lines after it printed deeper
+    # than it, up to its next sibling or ancestor
+    below = []
+    for ln in lines[rr + 1:]:
+        if depth(ln) <= depth(lines[rr]):
+            break
+        below.append(ln)
+    assert below
+    below = "\n".join(below)
     assert "regexp_extract_all" not in below
     assert "regexp_replace" not in below

@@ -99,6 +99,28 @@ def test_stream_matches_batch_and_is_incremental(spark, tmp_path):
     assert dups == 0
 
 
+def test_stream_ficha_replayed_batch_not_duplicated(spark, tmp_path):
+    """A crash after the sink write but before the checkpoint commit
+    makes the restart replay that micro-batch; the output must not
+    gain rows (exactly-once, not at-least-once)."""
+    import os
+
+    pages_dir = str(tmp_path / "pages")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    spark.createDataFrame(datagen.corpus_pandas(10)) \
+        .write.mode("append").parquet(pages_dir)
+
+    _await(stream_extract_ficha(spark, pages_dir, out, ckpt))
+    n = spark.read.parquet(out).count()
+    assert n > 0
+    # simulate the crash: batch 0 is written but never committed
+    for name in ("0", ".0.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+    _await(stream_extract_ficha(spark, pages_dir, out, ckpt))
+    assert spark.read.parquet(out).count() == n
+
+
 def test_stream_dedup_exact_suppresses_cross_batch_dups(spark, tmp_path):
     """applyInPandasWithState: first occurrence of each content emitted
     exactly once; duplicates in later micro-batches (and later query
