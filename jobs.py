@@ -10,10 +10,14 @@ Stages (north-rule shape):
   Engine-1 (Catalyst line/regex path) + Engine-2 (Arrow layout kernel,
   vacation adjustment fused) → output series tables →
   fill-if-empty MERGE into the keyed target →
-  audit/lineage append → manifest append.
+  audit/lineage tables → manifest, written last.
 
-Everything is idempotent: re-running with --resume processes only new
-urls; the keyed sink never overwrites non-empty cells.
+Outputs other than the keyed target commit through the run-keyed
+protocol in `sinks/tableio.py`, so a crashed run retried under its own
+run_id, with or without --resume, ends with exactly a clean run's rows;
+--resume processes only urls missing from the manifest, and the keyed
+target never overwrites non-empty cells. A retry under a NEW run_id is
+not covered: the crashed run's partial partitions stay.
 """
 
 from __future__ import annotations
@@ -29,7 +33,8 @@ from pyspark.sql import functions as F  # noqa: E402
 from pdf_extractor_spark.engine1 import pipeline as e1  # noqa: E402
 from pdf_extractor_spark.engine2 import pipeline as e2  # noqa: E402
 from pdf_extractor_spark.session import get_spark  # noqa: E402
-from pdf_extractor_spark.sinks import audit, resume  # noqa: E402
+from pdf_extractor_spark.sinks import audit  # noqa: E402
+from pdf_extractor_spark.sinks.resume import manifest_rows  # noqa: E402
 from pdf_extractor_spark.sinks.tableio import get_table_io  # noqa: E402
 
 
@@ -83,13 +88,15 @@ def main() -> None:
             ap.error("--table-format iceberg requires the Iceberg "
                      "runtime jars + SQL extensions on the classpath")
     io = get_table_io(args.table_format, out)
-    manifest = f"{out}/manifest"
+    run_id = args.run_id
+    done = io.read_state(spark, "manifest", run_id) if args.resume else None
+    resuming = done is not None
 
     pages = spark.read.parquet(args.pages)
-    if args.resume:
+    if resuming:
         # filter on raw input first: already-done documents are never
         # parsed (the front door below is the expensive stage)
-        pages = resume.filter_resumable(pages, manifest)
+        pages = pages.join(done.select("url"), "url", "left_anti")
     if args.pdf_col:
         from pdf_extractor_spark.ops.pdfstream import parse_pdf_layout
 
@@ -99,7 +106,7 @@ def main() -> None:
         pages = parse_pdf_layout(pages, pdf_col=args.pdf_col)
     pages = pages.persist()
     if pages.limit(1).count() == 0:
-        print(f"[{args.run_id}] nothing to process (resume manifest covers input)")
+        print(f"[{run_id}] nothing to process (resume manifest covers input)")
         return
 
     # ---- Engine 1 ------------------------------------------------------
@@ -115,7 +122,7 @@ def main() -> None:
     io.merge_fill_if_empty(
         spark, "e1_target", e1_flat,
         keys=["url", "folha_type", "year", "month", "excel_col"])
-    io.append(e1_attention, "e1_attention")
+    io.write_run(e1_attention, "e1_attention", run_id, resuming)
 
     # ---- Engine 2 ------------------------------------------------------
     # A6 adjustment runs in the kernel's per-document finisher (both
@@ -128,33 +135,43 @@ def main() -> None:
         long_df = e2.extract_ficha(pages, adjust_vacation=True)
     long_df = long_df.persist()
     vals = e2.values_table(long_df)
-    io.append(e2.default_series_table(vals, "3123-Base", start, end),
-              "proventos")
-    io.append(e2.default_series_table(vals, "8-Insalubridade", start, end),
-              "insalubridade")
-    io.append(e2.cartoes_table(vals, start, end,
-                               minutes_mode=args.minutes_mode), "cartoes")
-    io.append(e2.horas_trabalhadas_table(vals, start, end,
-                                         minutes_mode=args.minutes_mode),
-              "horas_trabalhadas")
+    series = {
+        "proventos": e2.default_series_table(vals, "3123-Base", start, end),
+        "insalubridade": e2.default_series_table(vals, "8-Insalubridade",
+                                                 start, end),
+        "cartoes": e2.cartoes_table(vals, start, end,
+                                    minutes_mode=args.minutes_mode),
+        "horas_trabalhadas": e2.horas_trabalhadas_table(
+            vals, start, end, minutes_mode=args.minutes_mode),
+    }
+    for name, df in series.items():
+        io.write_run(df, name, run_id, resuming)
 
     # ---- lineage + resume ----------------------------------------------
     classified = e1.classify_pages(e1.explode_pages(pages))
-    io.append(audit.build_audit(e1.page_metrics(classified), args.run_id),
-              "audit_e1")
-    io.append(audit.build_audit(e2.metrics_table(long_df), args.run_id),
-              "audit_e2")
+    audits = {"audit_e1": e1.page_metrics(classified),
+              "audit_e2": e2.metrics_table(long_df)}
     if args.pdf_col:
         # parse-level lineage (north-star metric triple: pages parsed,
         # decode failures, word/span counts) — straight off the cached
         # front-door output, per document + partition
-        io.append(audit.build_audit(
-            pages.select("url", "n_pages", "n_words", "decode_failures"),
-            args.run_id), "audit_parse")
-    resume.update_manifest(pages.select("url"), manifest, args.run_id)
+        audits["audit_parse"] = pages.select(
+            "url", "n_pages", "n_words", "decode_failures")
+    for name, df in audits.items():
+        io.write_run(audit.build_audit(df, run_id), name, run_id, True)
 
+    # manifest — written LAST, so a crash anywhere above leaves the run
+    # unrecorded and re-runnable under the same run_id
     n = pages.count()
-    print(f"[{args.run_id}] processed {n} documents → {out}")
+    urls = manifest_rows(pages.select("url"))
+    if resuming:
+        # Cut lineage BEFORE writing: `pages` reads the manifest (the
+        # anti-join above), and a plan must not read the table its own
+        # write replaces; the write also invalidates caches over that
+        # path (see the same cut in jobs_curate.py)
+        urls = urls.localCheckpoint()
+    io.write_run(urls, "manifest", run_id, resuming)
+    print(f"[{run_id}] processed {n} documents → {out}")
 
 
 if __name__ == "__main__":

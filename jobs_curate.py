@@ -11,12 +11,13 @@ Stages (the `ops.curate` composition over a documents table):
   generation (MinHash-LSH or SimHash) → near-dup removal →
   curated corpus + pair table + curation audit row.
 
-Outputs under --out (every artifact is partitioned by run_id and
-written with dynamic partition overwrite on resume, so RETRYING a
-crashed run with the same run_id is idempotent — it rewrites exactly
-its own partition instead of appending duplicate rows; batch runs
-clear prior runs; the state/ checkpoint commits last and a retry
-ignores any partial state its crashed attempt left):
+Outputs under --out commit through the run-keyed protocol in
+`sinks/tableio.py`: every artifact is partitioned by run_id and a write
+replaces the run's own partition, so RETRYING a crashed run with the
+same run_id (with or without --resume) does not append duplicate rows;
+batch runs clear prior runs, the state/ checkpoint commits last, and a
+retry ignores any partial state its crashed attempt left. A retry under
+a NEW run_id is not covered: the crashed run's partial partitions stay.
   curated/         kept documents, all input columns preserved
   near_dup_pairs/  (a, b, …) pair evidence (when --near-dup != none)
   audit/           one row per run: input/kept/pair counts + parameters
@@ -90,13 +91,7 @@ from pdf_extractor_spark.ops.dedup import (  # noqa: E402
     minhash_band_hashes, minhash_lsh_pairs_with_bands,
     pick_minhash_shape, simhash_pairs)
 from pdf_extractor_spark.session import get_spark  # noqa: E402
-
-
-def _hdfs_exists(spark, path: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    return p.getFileSystem(conf).exists(p)
+from pdf_extractor_spark.sinks.tableio import get_table_io  # noqa: E402
 
 
 def main() -> None:
@@ -140,7 +135,8 @@ def main() -> None:
 
     spark = get_spark(f"curate-{args.run_id}")
     out = args.out.rstrip("/")
-    state = f"{out}/state"
+    io = get_table_io("parquet", out)
+    run_id = args.run_id
     raw_all = spark.read.parquet(args.documents).persist()
     orig_id = args.id_col
     extracted = args.html_col or args.pdf_col
@@ -160,43 +156,22 @@ def main() -> None:
                                     with_metrics=with_metrics)
         return df
 
-    resuming = args.resume and _hdfs_exists(spark, f"{state}/manifest")
-
-    def write_run(df, path: str, keep_other_runs: bool | None = None):
-        """Crash-idempotent per-run write: every artifact is
-        partitioned by run_id, and a retry of the same run_id
-        OVERWRITES exactly its own partition (dynamic partition
-        overwrite) instead of appending a second copy — the
-        append-mode retry would double every doc of the run
-        (duplicate extracted rows → raw-join fan-out downstream).
-        `keep_other_runs=False` (batch runs) clears prior runs too."""
-        if keep_other_runs is None:
-            keep_other_runs = resuming
-        w = df.withColumn("run_id", F.lit(args.run_id)) \
-              .write.partitionBy("run_id")
-        if keep_other_runs:
-            w = w.option("partitionOverwriteMode", "dynamic")
-        w.mode("overwrite").parquet(path)
-
-    def read_state(path: str):
-        """Resume state EXCLUDING any partial rows a crashed attempt
-        of THIS run_id left behind — the retry regenerates them."""
-        return (spark.read.parquet(path)
-                .filter(F.col("run_id") != args.run_id)
-                .drop("run_id"))
+    # resume state EXCLUDES any partial rows a crashed attempt of THIS
+    # run_id left behind — the retry regenerates them
+    manifest = (io.read_state(spark, "state/manifest", run_id)
+                if args.resume else None)
+    resuming = manifest is not None
 
     old_hashes = old_bands = None
     if resuming:
-        manifest = read_state(f"{state}/manifest")
         raw = raw_all.join(manifest.select(F.col("doc_id").alias(orig_id)),
                            orig_id, "left_anti").persist()
         if raw.limit(1).count() == 0:
-            print(f"[{args.run_id}] nothing to process "
+            print(f"[{run_id}] nothing to process "
                   "(state manifest covers input)")
             return
-        old_hashes = read_state(f"{state}/qualified_hashes")
-        if _hdfs_exists(spark, f"{state}/bands"):
-            old_bands = read_state(f"{state}/bands")
+        old_hashes = io.read_state(spark, "state/qualified_hashes", run_id)
+        old_bands = io.read_state(spark, "state/bands", run_id)
     else:
         raw = raw_all
 
@@ -212,20 +187,20 @@ def main() -> None:
         # 200k-1M docs, identical results. run_id partitioning makes
         # increments append a new directory while batch runs overwrite
         # the table.
-        write_run(docs, f"{out}/extracted")
-        ext_run = (spark.read.parquet(f"{out}/extracted")
-                   .filter(F.col("run_id") == args.run_id))
+        io.write_run(docs, "extracted", run_id, resuming)
+        ext_run = (io.read(spark, "extracted")
+                   .filter(F.col("run_id") == run_id))
         # per-partition extraction lineage + metrics (north rule):
         # docs / node-span / pages-lines-ops / decode-failure totals
         # per extraction task, rolled up from the stored metric columns
         metric_cols = [c for c in ext_run.columns
                        if c not in ("doc_id", "text", "run_id",
                                     "partition_id")]
-        write_run(ext_run.groupBy("partition_id")
-                  .agg(F.count("*").alias("docs"),
-                       *[F.sum(c).alias(c) for c in metric_cols])
-                  .withColumn("audit_ts", F.current_timestamp()),
-                  f"{out}/extract_audit", keep_other_runs=True)
+        io.write_run(ext_run.groupBy("partition_id")
+                     .agg(F.count("*").alias("docs"),
+                          *[F.sum(c).alias(c) for c in metric_cols])
+                     .withColumn("audit_ts", F.current_timestamp()),
+                     "extract_audit", run_id, True)
         docs = ext_run.select("doc_id", "text")
         id_col, text_col = "doc_id", "text"
     else:
@@ -261,7 +236,7 @@ def main() -> None:
                         .unionByName(cand.select(F.col("b").alias(orig_id)))
                         .distinct())
             if extracted:
-                cand_docs = (spark.read.parquet(f"{out}/extracted")
+                cand_docs = (io.read(spark, "extracted")
                              .select("doc_id", "text")
                              .join(cand_ids.select(
                                  F.col(orig_id).alias("doc_id")),
@@ -284,7 +259,7 @@ def main() -> None:
         # materialized once: pair evidence is both an output artifact
         # and the anti-join input of the kept-set below
         pairs = pairs.persist()
-        write_run(pairs, f"{out}/near_dup_pairs")
+        io.write_run(pairs, "near_dup_pairs", run_id, resuming)
 
     cur = curate(
         docs, pairs, seen_hashes=old_hashes,
@@ -307,14 +282,14 @@ def main() -> None:
         curated = docs.join(
             cur.kept.select(F.col("doc_id").alias(id_col)),
             id_col, "left_semi")
-    write_run(curated, f"{out}/curated")
+    io.write_run(curated, "curated", run_id, resuming)
 
     # per-stage drop accounting — second audit artifact; collected
     # once, and the audit row's kept_docs is its `kept` count, so the
     # two artifacts agree by construction
     stage_rows = cur.stage_counts.collect()
-    write_run(spark.createDataFrame(stage_rows, cur.stage_counts.schema),
-              f"{out}/stage_counts", keep_other_runs=True)
+    io.write_run(spark.createDataFrame(stage_rows, cur.stage_counts.schema),
+                 "stage_counts", run_id, True)
     n_kept = sum(r.n_docs for r in stage_rows if r.stage == "kept")
     n_pairs = pairs.count() if pairs is not None else 0
     audit = spark.createDataFrame(
@@ -324,8 +299,8 @@ def main() -> None:
         "input_docs long, kept_docs long, "
         "near_dup_pairs long, near_dup_mode string, min_tokens int, "
         "max_digit_ratio double, max_punct_ratio double, langs string")
-    write_run(audit.withColumn("audit_ts", F.current_timestamp()),
-              f"{out}/audit", keep_other_runs=True)
+    io.write_run(audit.withColumn("audit_ts", F.current_timestamp()),
+                 "audit", run_id, True)
 
     # resume checkpoint — written LAST so a crash anywhere above leaves
     # the run re-runnable (the retry's read_state ignores this run_id's
@@ -341,12 +316,12 @@ def main() -> None:
         ids_delta = ids_delta.localCheckpoint()
         qh_delta = qh_delta.localCheckpoint()
         banded = banded.localCheckpoint() if banded is not None else None
-    write_run(ids_delta, f"{state}/manifest")
-    write_run(qh_delta, f"{state}/qualified_hashes")
+    io.write_run(ids_delta, "state/manifest", run_id, resuming)
+    io.write_run(qh_delta, "state/qualified_hashes", run_id, resuming)
     if banded is not None:
-        write_run(banded, f"{state}/bands")
+        io.write_run(banded, "state/bands", run_id, resuming)
 
-    print(f"[{args.run_id}] curated {n_kept}/{n_in} documents "
+    print(f"[{run_id}] curated {n_kept}/{n_in} documents "
           f"({n_pairs} near-dup pairs) → {out}")
 
 

@@ -3,8 +3,9 @@
 Per-partition + per-document lineage and extraction metrics: pages
 parsed, decode failures, conflict overwrites, expired carries —
 the Spark-side analog of the reference's history.json entries
-(``desktop_app.py:871-939``), written as an append-only table keyed by
-``run_id`` so every job run leaves an auditable trail.
+(``desktop_app.py:871-939``). The jobs write these rows as the run's
+``run_id`` partition (``TableIO.write_run``, other runs kept), so every
+job run leaves an auditable trail and a retried run replaces its own.
 """
 
 from __future__ import annotations
@@ -26,10 +27,6 @@ def build_audit(metrics_df: DataFrame, run_id: str) -> DataFrame:
             "audit_ts": F.current_timestamp(),
         }
     )
-
-
-def write_audit(metrics_df: DataFrame, path: str, run_id: str) -> None:
-    build_audit(metrics_df, run_id).write.mode("append").parquet(path)
 
 
 def partition_summary(audit_df: DataFrame) -> DataFrame:

@@ -7,39 +7,32 @@ snapshot-id incremental reads. On Iceberg the incremental read is:
          .option("start-snapshot-id", last_done)
          .option("end-snapshot-id", current).table("pages")
 
-On plain parquet (sandbox) the same contract is kept with an explicit
-manifest of processed urls: a resumed run anti-joins the input against
-the manifest, processes only the remainder, then appends to the
-manifest. Both are exactly-once at document granularity because the
-extraction itself is deterministic and the sinks are idempotent
-(merge_if_empty) or append-keyed by run_id (audit).
+On plain parquet the same contract is kept with a run-keyed manifest
+of processed urls (the commit protocol in `sinks/tableio.py`): a
+resumed run anti-joins its input against every other run's manifest
+(`TableIO.read_state`), processes the remainder, and writes its urls
+as its own manifest partition after every other output. A crashed run
+retried under its own run_id rewrites its partitions, so each
+document's rows appear once. An unreadable manifest raises.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .tableio import ParquetSnapshotTableIO
 
-def filter_resumable(pages_df: DataFrame, manifest_path: str) -> DataFrame:
-    """Drop documents already recorded in the manifest (anti-join —
-    broadcast when the manifest is small, shuffle-hash otherwise; AQE
-    picks at runtime)."""
-    spark = pages_df.sparkSession
-    try:
-        done = spark.read.parquet(manifest_path).select("url")
-    except Exception:
-        return pages_df  # first run: no manifest yet
-    return pages_df.join(done, "url", "left_anti")
+
+def manifest_rows(urls: DataFrame) -> DataFrame:
+    """The manifest's (url, ts) rows for a run's processed urls."""
+    return urls.select("url").distinct().withColumn("ts", F.current_timestamp())
 
 
 def update_manifest(processed_urls: DataFrame, manifest_path: str,
                     run_id: str) -> None:
-    (processed_urls.select("url").distinct()
-     .withColumn("run_id", F.lit(run_id))
-     .withColumn("ts", F.current_timestamp())
-     .write.mode("append").parquet(manifest_path))
-
-
-def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
-    return spark.read.parquet(manifest_path)
+    """Write `processed_urls` as run `run_id`'s partition of the parquet
+    manifest at `manifest_path`, keeping other runs."""
+    root, name = manifest_path.rstrip("/").rsplit("/", 1)
+    ParquetSnapshotTableIO(root).write_run(
+        manifest_rows(processed_urls), name, run_id, keep_other_runs=True)

@@ -1,9 +1,19 @@
-"""TableIO — storage abstraction behind the sinks (K1 merge target,
-K5 audit, resume manifest).
+"""TableIO — storage abstraction behind the sinks, and the one commit
+protocol both jobs use for their outputs:
 
-The north rule wants Iceberg semantics: ``MERGE INTO`` for the keyed
-fill-if-empty target and snapshot-based incremental reads for resume.
-This module puts those behind one interface with two implementations:
+* ``write_run`` writes a run's rows as the ``run_id`` partition of a
+  table, replacing that partition (and every other run's too unless
+  ``keep_other_runs``), so retrying a crashed run under its own run_id
+  rewrites its partial output instead of adding a second copy;
+* ``read_state`` reads resume state without the caller's own run_id; a
+  missing table is None and any other read error propagates;
+* the jobs write their resume state last.
+
+A crash retried under a NEW run_id is not covered: its partial
+partitions stay (that needs a commit record and an orphan sweep).
+
+The keyed fill-if-empty target (K1, ``merge_fill_if_empty``) is
+replay-safe on its own. Two implementations:
 
 * ``ParquetSnapshotTableIO`` — works everywhere. Read-modify-write
   tables are stored as immutable snapshot directories plus an atomic
@@ -15,7 +25,8 @@ This module puts those behind one interface with two implementations:
 * ``IcebergTableIO`` — native path when the Iceberg runtime jars and
   SQL extensions are on the classpath: ``MERGE INTO`` (reference
   fill-if-empty semantics, ``pdf_processor_core.py:769-772``),
-  ``writeTo().append()``, and ``start-snapshot-id`` incremental reads.
+  ``writeTo().overwritePartitions()``, and ``start-snapshot-id``
+  incremental reads.
   Not runnable in this sandbox (no jars) — `available()` gates it and
   tests cover the parquet implementation; the SQL it emits is the
   public documented Iceberg-Spark API.
@@ -26,21 +37,34 @@ from __future__ import annotations
 from abc import ABC, abstractmethod
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .merge import merge_if_empty
 
 
 class TableIO(ABC):
-    """Minimal table contract the job needs: append-only streams,
-    one read-modify-write keyed target, and a resume marker."""
+    """Minimal table contract the jobs need: run-keyed tables, one
+    read-modify-write keyed target, and resume state."""
 
     @abstractmethod
     def read(self, spark: SparkSession, name: str) -> DataFrame | None:
         """Current contents, or None if the table doesn't exist yet."""
 
     @abstractmethod
-    def append(self, df: DataFrame, name: str) -> None:
-        """Append rows (audit / series / manifest tables)."""
+    def write_run(self, df: DataFrame, name: str, run_id: str,
+                  keep_other_runs: bool) -> None:
+        """Write `df` as the `run_id` partition of `name`, replacing
+        that partition; other runs' partitions survive only when
+        `keep_other_runs`."""
+
+    def read_state(self, spark: SparkSession, name: str,
+                   run_id: str) -> DataFrame | None:
+        """Rows of every run except `run_id` (without the run_id
+        column), or None if the table doesn't exist yet."""
+        df = self.read(spark, name)
+        if df is None:
+            return None
+        return df.filter(F.col("run_id") != run_id).drop("run_id")
 
     @abstractmethod
     def merge_fill_if_empty(self, spark: SparkSession, name: str,
@@ -119,14 +143,23 @@ class ParquetSnapshotTableIO(TableIO):
         v = self._current_version(spark, name)
         if v is not None:
             return spark.read.parquet(self._snap_dir(name, v))
-        # plain append-style table (never snapshotted)
+        # run-keyed table (never snapshotted)
         fs, jvm = self._fs(spark, self.root)
         p = jvm.org.apache.hadoop.fs.Path(f"{self.root}/{name}")
         if not fs.exists(p):
             return None
         return spark.read.parquet(f"{self.root}/{name}")
 
+    def write_run(self, df: DataFrame, name: str, run_id: str,
+                  keep_other_runs: bool) -> None:
+        w = df.withColumn("run_id", F.lit(run_id)).write.partitionBy("run_id")
+        if keep_other_runs:
+            w = w.option("partitionOverwriteMode", "dynamic")
+        w.mode("overwrite").parquet(f"{self.root}/{name}")
+
     def append(self, df: DataFrame, name: str) -> None:
+        """Plain append, outside the run-keyed protocol: a retry
+        duplicates rows. No job writes through it."""
         df.write.mode("append").parquet(f"{self.root}/{name}")
 
     def merge_fill_if_empty(self, spark: SparkSession, name: str,
@@ -192,11 +225,13 @@ class IcebergTableIO(TableIO):
             return None
         return spark.table(self._t(name))
 
-    def append(self, df: DataFrame, name: str) -> None:
-        if self._exists(df.sparkSession, name):
-            df.writeTo(self._t(name)).append()
+    def write_run(self, df: DataFrame, name: str, run_id: str,
+                  keep_other_runs: bool) -> None:
+        w = df.withColumn("run_id", F.lit(run_id)).writeTo(self._t(name))
+        if keep_other_runs and self._exists(df.sparkSession, name):
+            w.overwritePartitions()
         else:
-            df.writeTo(self._t(name)).create()
+            w.partitionedBy(F.col("run_id")).createOrReplace()
 
     def merge_fill_if_empty(self, spark: SparkSession, name: str,
                             updates: DataFrame, keys: list[str],

@@ -25,6 +25,20 @@ from .datagen import PAGES_SCHEMA
 from .engine2 import pipeline as e2
 
 
+def _file_sink(df, out_path: str, checkpoint: str, available_now: bool):
+    """Start `df` into an append-mode parquet file sink. Exactly-once at
+    file granularity: the source tracks progress in the checkpoint, and
+    the sink's metadata log skips a micro-batch it already committed
+    when a restart replays it."""
+    writer = (df.writeStream.format("parquet")
+              .outputMode("append")
+              .option("path", out_path)
+              .option("checkpointLocation", checkpoint))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def stream_extract_ficha(
     spark: SparkSession,
     pages_path: str,
@@ -37,22 +51,11 @@ def stream_extract_ficha(
     The Engine-2 kernel is a stateless scan→mapInPandas map
     (`repartition=False`: a streaming plan takes no round-robin
     exchange), so it runs on the streaming DataFrame directly into the
-    parquet file sink. Exactly-once at file granularity: the source
-    tracks progress in the checkpoint, and the sink's metadata log
-    skips a micro-batch it already committed when a restart replays it.
+    parquet file sink (`_file_sink`).
     """
-    stream = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .parquet(pages_path)
-    )
-    writer = (e2.extract_ficha(stream, repartition=False)
-              .writeStream.format("parquet")
-              .outputMode("append")
-              .option("path", out_path)
-              .option("checkpointLocation", checkpoint))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(pages_path)
+    return _file_sink(e2.extract_ficha(stream, repartition=False),
+                      out_path, checkpoint, available_now)
 
 
 def stream_extract_web(
@@ -79,13 +82,7 @@ def stream_extract_web(
               .schema(f"doc_id bigint, {html_col} string")
               .parquet(pages_path))
     ext = extract_main_text(stream, html_col=html_col, with_metrics=True)
-    writer = (ext.writeStream.format("parquet")
-              .outputMode("append")
-              .option("path", out_path)
-              .option("checkpointLocation", checkpoint))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _file_sink(ext, out_path, checkpoint, available_now)
 
 
 def stream_extract_pdf(
@@ -107,13 +104,7 @@ def stream_extract_pdf(
               .schema(f"doc_id bigint, {pdf_col} binary")
               .parquet(pages_path))
     ext = extract_pdf_text(stream, pdf_col=pdf_col, with_metrics=True)
-    writer = (ext.writeStream.format("parquet")
-              .outputMode("append")
-              .option("path", out_path)
-              .option("checkpointLocation", checkpoint))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _file_sink(ext, out_path, checkpoint, available_now)
 
 
 def stream_extract_pdf_e2(
@@ -131,7 +122,6 @@ def stream_extract_pdf_e2(
     DataFrame directly: newly-crawled PDF files become ficha extraction
     rows incrementally, exactly-once at file granularity via the
     checkpoint (Iceberg: snapshot-id incremental reads, same plan)."""
-    from .engine2 import pipeline as e2
     from .ops.pdfstream import parse_pdf_layout
 
     stream = (spark.readStream
@@ -140,13 +130,7 @@ def stream_extract_pdf_e2(
     long_df = e2.extract_ficha(
         parse_pdf_layout(stream, pdf_col=pdf_col),
         repartition=False, adjust_vacation=True)
-    writer = (long_df.writeStream.format("parquet")
-              .outputMode("append")
-              .option("path", out_path)
-              .option("checkpointLocation", checkpoint))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _file_sink(long_df, out_path, checkpoint, available_now)
 
 
 def stream_audit_rollup(
@@ -185,14 +169,7 @@ def stream_audit_rollup(
     )
     # append-mode file sink: finalized windows land exactly once in the
     # audit parquet (recoverable from the checkpoint, unlike memory sink)
-    return (
-        agg.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _file_sink(agg, out_path, checkpoint, available_now=True)
 
 
 def stream_dedup_exact(
@@ -244,12 +221,4 @@ def stream_dedup_exact(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    writer = (
-        firsts.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _file_sink(firsts, out_path, checkpoint, available_now)

@@ -1,7 +1,6 @@
 from __future__ import annotations
 
-import uuid
-
+import pytest
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark import datagen
@@ -132,22 +131,45 @@ def test_parquet_snapshot_tableio(spark, tmp_path):
 
 
 def test_resume_manifest_roundtrip(spark, tmp_path):
-    pages = spark.createDataFrame(datagen.corpus_pandas(30))
-    mpath = str(tmp_path / f"manifest_{uuid.uuid4().hex}")
+    """The resume filter jobs.py applies: anti-join against every other
+    run's manifest partition."""
+    from pdf_extractor_spark.sinks.tableio import ParquetSnapshotTableIO
 
-    first = resume.filter_resumable(pages, mpath)
+    io = ParquetSnapshotTableIO(str(tmp_path / "out"))
+    pages = spark.createDataFrame(datagen.corpus_pandas(30))
+
+    def remaining(run_id):
+        done = io.read_state(spark, "manifest", run_id)
+        return pages if done is None else pages.join(done, "url", "left_anti")
+
+    first = remaining("r1")
     assert first.count() == 30  # no manifest yet → everything
 
     half = pages.filter(F.xxhash64("url") % 2 == 0)
-    resume.update_manifest(half.select("url"), mpath, run_id="r1")
+    io.write_run(resume.manifest_rows(half), "manifest", "r1", False)
 
-    second = resume.filter_resumable(pages, mpath)
+    second = remaining("r2")
     assert second.count() == 30 - half.count()
     # processed set and remainder are disjoint and cover everything
     assert second.join(half, "url", "inner").count() == 0
 
-    resume.update_manifest(second.select("url"), mpath, run_id="r2")
-    assert resume.filter_resumable(pages, mpath).count() == 0
+    io.write_run(resume.manifest_rows(second), "manifest", "r2", True)
+    assert remaining("r3").count() == 0
+
+
+def test_unreadable_manifest_raises(spark, tmp_path):
+    """A manifest that exists but cannot be read fails the resume read
+    instead of reading as "first run" and returning every url."""
+    from pdf_extractor_spark.sinks.tableio import ParquetSnapshotTableIO
+
+    io = ParquetSnapshotTableIO(str(tmp_path / "out"))
+    (tmp_path / "out" / "manifest").mkdir(parents=True)
+    (tmp_path / "out" / "manifest" / "part-0.parquet").write_bytes(
+        b"not a parquet file")
+    pages = spark.createDataFrame(datagen.corpus_pandas(30))
+    with pytest.raises(Exception, match="(?i)parquet"):
+        done = io.read_state(spark, "manifest", "r2")
+        pages.join(done, "url", "left_anti").count()
 
 
 def test_tableio_recovers_from_missing_hint(spark, tmp_path):
