@@ -8,7 +8,8 @@
 Stages (north-rule shape):
   read pages table → resume filter (manifest anti-join) →
   Engine-1 (Catalyst line/regex path) + Engine-2 (Arrow layout kernel,
-  vacation adjustment fused) → output series tables →
+  vacation adjustment fused) → one grouped pass building the four
+  output series tables →
   fill-if-empty MERGE into the keyed target →
   audit/lineage tables → manifest, written last.
 
@@ -36,6 +37,11 @@ from pdf_extractor_spark.session import get_spark  # noqa: E402
 from pdf_extractor_spark.sinks import audit  # noqa: E402
 from pdf_extractor_spark.sinks.resume import manifest_rows  # noqa: E402
 from pdf_extractor_spark.sinks.tableio import get_table_io  # noqa: E402
+
+
+# output table → Engine-2 series: a K2 value code, or the K3/K4 writer
+SERIES = {"proventos": "3123-Base", "insalubridade": "8-Insalubridade",
+          "cartoes": e2.CARTOES, "horas_trabalhadas": e2.HORAS}
 
 
 def parse_period(s: str) -> tuple[int, int]:
@@ -134,18 +140,12 @@ def main() -> None:
     else:
         long_df = e2.extract_ficha(pages, adjust_vacation=True)
     long_df = long_df.persist()
-    vals = e2.values_table(long_df)
-    series = {
-        "proventos": e2.default_series_table(vals, "3123-Base", start, end),
-        "insalubridade": e2.default_series_table(vals, "8-Insalubridade",
-                                                 start, end),
-        "cartoes": e2.cartoes_table(vals, start, end,
-                                    minutes_mode=args.minutes_mode),
-        "horas_trabalhadas": e2.horas_trabalhadas_table(
-            vals, start, end, minutes_mode=args.minutes_mode),
-    }
-    for name, df in series.items():
-        io.write_run(df, name, run_id, resuming)
+    # the four series tables are projections of one grouped pass
+    built = e2.build_series(e2.values_table(long_df), start, end,
+                            SERIES.values(),
+                            minutes_mode=args.minutes_mode).persist()
+    for name, series in SERIES.items():
+        io.write_run(e2.series_table(built, series), name, run_id, resuming)
 
     # ---- lineage + resume ----------------------------------------------
     classified = e1.classify_pages(e1.explode_pages(pages))

@@ -1,33 +1,37 @@
-"""Engine-2 dataflow: layout kernel → relational rules → output series.
-
-Everything after the Arrow kernel is pure DataFrame ops (Catalyst):
+"""Engine-2 dataflow: layout kernel → per-url writer rules → output series.
 
 * A1 last-write-wins and the A6 vacation adjustment (reference
   ``ficha_financeira_processor.py:935-996``) happen inside the kernel's
   per-document finisher (``kernel.finish_doc``);
-* A7 zero-fill            = month-dimension LEFT JOIN (``:917-933``);
-* C6 minutes mode / C5 formatting = Arrow UDFs over canonical decimal
-  strings (scale-preserving — see ``functions/brnum.py``).
+* the writers (``_write_*_csv``, ``:998-1119``) are one grouped pass,
+  ``build_series``: per url it zero-fills the requested months (A7,
+  ``:917-933``), appends the K3/K4 out-of-range rows, computes the A8
+  flag, applies C6 minutes mode and formats every value (C5) with the
+  Python byte-parity functions in ``functions/brnum.py``. The four
+  output tables are projections of its rows.
 
 Values travel as canonical decimal strings ('1234.56') end-to-end:
 exact, order-independent, and scale-preserving (the minutes rule reads
 '9.3' differently from '9.30').
 
 Scale notes (100 TB story): the kernel stage is shuffle-free
-(one row per document, mapInPandas). The only shuffles are the
-per-code series joins — all keyed on (url, year, month), a
-high-cardinality nearly-uniform key. The month dimension is a few
-hundred rows → broadcast. Oversized documents are bounded by
-pages-per-doc, not rows, so AQE skew handling plus
-`spark.sql.files.maxPartitionBytes` keeps tasks even.
+(one row per document, mapInPandas). The tail is one hash exchange of
+value rows on ``url`` feeding one applyInArrow pass; each group is
+bounded by one document's codes × months, never by corpus size, and
+the url key is high-cardinality and nearly uniform. Oversized
+documents are bounded by pages-per-doc, not rows, so AQE skew handling
+plus `spark.sql.files.maxPartitionBytes` keeps tasks even.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from decimal import Decimal
+
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.brnum import convert_minutes_udf, format_decimal_udf
+from ..functions.brnum import convert_minutes, format_decimal
 from .kernel import E2_LONG_SCHEMA, METRICS_CODE, make_extract_kernel
 
 
@@ -78,65 +82,124 @@ def metrics_table(long_df: DataFrame) -> DataFrame:
     )
 
 
-def month_dim(spark: SparkSession, start: tuple[int, int],
-              end: tuple[int, int]) -> DataFrame:
-    """Generated month dimension [(start..end)] — tiny, broadcastable."""
+# ---------------------------------------------------------------------------
+# Output tables (writers K2/K3/K4): one grouped pass, one projection each
+# ---------------------------------------------------------------------------
+
+CARTOES, HORAS = "cartoes", "horas_trabalhadas"
+SERIES_SCHEMA = ("series string, url string, year int, month int, "
+                 "a string, b string, include_extra_100 boolean, "
+                 "is_extra boolean")
+_SERIES_ARROW = pa.schema([
+    ("series", pa.string()), ("url", pa.string()), ("year", pa.int32()),
+    ("month", pa.int32()), ("a", pa.string()), ("b", pa.string()),
+    ("include_extra_100", pa.bool_()), ("is_extra", pa.bool_()),
+])
+
+
+def _series_kernel(series: tuple[str, ...], start, end, minutes_mode: bool):
+    """applyInArrow function: one url's value rows → its rows of every
+    requested series, values formatted (C5)."""
     (y0, m0), (y1, m1) = start, end
-    return spark.sql(
-        f"""SELECT year(m) AS year, month(m) AS month
-            FROM (SELECT explode(sequence(to_date('{y0:04d}-{m0:02d}-01'),
-                                          to_date('{y1:04d}-{m1:02d}-01'),
-                                          interval 1 month)) AS m)"""
-    )
+    months = [(i // 12, i % 12 + 1)
+              for i in range(y0 * 12 + m0 - 1, y1 * 12 + m1)]
+    in_range = set(months)
+
+    def conv(values: dict) -> dict:
+        # C6 applies to cartões and horas only, before A8 reads them
+        if not minutes_mode:
+            return values
+        return {k: convert_minutes(v) for k, v in values.items()}
+
+    def fmt(v: str | None) -> str | None:
+        return None if v is None else format_decimal(v)
+
+    def per_url(key, t):
+        maps: dict[str, dict] = {}
+        for code, y, m, v in zip(*(t.column(c).to_pylist()
+                                   for c in ("code", "year", "month",
+                                             "value"))):
+            maps.setdefault(code, {})[(y, m)] = v
+        rows = []
+        for s in series:
+            if s == CARTOES:
+                # K3: range months, then missing_months — 100%-keys in
+                # neither the 50%-series nor the range — sorted; A8 reads
+                # every 100%-value, in or out of range, exactly
+                h50 = conv(maps.get("6-Horas", {}))
+                h100 = conv(maps.get("14-Horas100", {}))
+                inc = any(Decimal(v) != 0 for v in h100.values())
+                extra = sorted(k for k in h100
+                               if k not in h50 and k not in in_range)
+                rows += [(s, y, m, h50.get((y, m), "0"),
+                          h100.get((y, m), "0"), inc, ex)
+                         for ex, keys in ((False, months), (True, extra))
+                         for y, m in keys]
+            elif s == HORAS:
+                # K4: range months, then additional_months — keys of
+                # either series outside the range — sorted
+                h = conv(maps.get("1-Salario", {}))
+                f = conv(maps.get("952-FaltaInjustifica", {}))
+                extra = sorted((h.keys() | f.keys()) - in_range)
+                rows += [(s, y, m, h.get((y, m), "0"), f.get((y, m), "0"),
+                          None, ex)
+                         for ex, keys in ((False, months), (True, extra))
+                         for y, m in keys]
+            else:
+                # K2: the code's series zero-filled over the range (A7)
+                vals = maps.get(s, {})
+                rows += [(s, y, m, vals.get((y, m), "0"), None, None, None)
+                         for y, m in months]
+        cols = list(zip(*rows)) or [()] * 7
+        return pa.Table.from_pydict({
+            "series": cols[0], "url": [key[0].as_py()] * len(rows),
+            "year": cols[1], "month": cols[2],
+            "a": [fmt(v) for v in cols[3]], "b": [fmt(v) for v in cols[4]],
+            "include_extra_100": cols[5], "is_extra": cols[6],
+        }, schema=_SERIES_ARROW)
+
+    return per_url
 
 
-def series_for_code(vals: DataFrame, code: str, start: tuple[int, int],
-                    end: tuple[int, int],
-                    urls: DataFrame | None = None) -> DataFrame:
-    """A7 zero-fill: every requested month per url, missing → '0'.
+def build_series(vals: DataFrame, start, end, series,
+                 minutes_mode: bool = False) -> DataFrame:
+    """Every requested output series in one ``groupBy("url")`` pass.
 
-    The dimension side is broadcast (months × 1); urls default to the
-    distinct urls in `vals` (per-document output parity with the
-    reference, which emits one CSV per PDF).
+    `series` names the tables to build: a value code for a K2 series
+    ("3123-Base" = PROVENTOS, "8-Insalubridade"), `CARTOES` (K3) and
+    `HORAS` (K4). Each url with at least one value row, of any code,
+    gets the full month range in every series, as the reference emits
+    one CSV per PDF. `minutes_mode` applies C6 to cartões and horas.
+    Rows carry the SERIES_SCHEMA columns; `series_table` projects one
+    series into its output table.
     """
-    spark = vals.sparkSession
-    dim = month_dim(spark, start, end)
-    if urls is None:
-        urls = vals.select("url").distinct()
-    grid = urls.crossJoin(F.broadcast(dim))
-    ser = vals.filter(F.col("code") == code).select("url", "year", "month", "value")
-    return (
-        grid.join(ser, ["url", "year", "month"], "left")
-        .withColumn("value", F.coalesce(F.col("value"), F.lit("0")))
-    )
+    kernel = _series_kernel(tuple(series), start, end, minutes_mode)
+    return (vals.select("url", "code", "year", "month", "value")
+            .groupBy("url").applyInArrow(kernel, schema=SERIES_SCHEMA))
 
 
-def format_decimal_col(col_name: str):
-    return format_decimal_udf(F.col(col_name))
+def series_table(built: DataFrame, series: str) -> DataFrame:
+    """One output table of `build_series`' rows (rows are unordered)."""
+    rows = built.filter(F.col("series") == series)
+    label = F.format_string("%02d/%04d", "month", "year")
+    if series == CARTOES:
+        return rows.select(
+            "url", "year", "month", label.alias("periodo"),
+            F.col("a").alias("hora_extra_50"),
+            F.col("b").alias("hora_extra_100"),
+            "include_extra_100", "is_extra")
+    if series == HORAS:
+        return rows.select(
+            "url", "year", "month", label.alias("periodo"),
+            F.col("a").alias("horas_trab"), F.col("b").alias("faltas"),
+            "is_extra")
+    return rows.select("url", "year", "month", label.alias("mes_ano"),
+                       F.col("a").alias("valor"))
 
-
-# ---------------------------------------------------------------------------
-# Output tables (writers K2/K3/K4 as DataFrames)
-# ---------------------------------------------------------------------------
 
 def default_series_table(vals: DataFrame, code: str, start, end) -> DataFrame:
     """K2 (PROVENTOS / ADIC. INSALUBRIDADE): zero-filled + formatted."""
-    ser = series_for_code(vals, code, start, end)
-    return ser.select(
-        "url", "year", "month",
-        F.format_string("%02d/%04d", "month", "year").alias("mes_ano"),
-        format_decimal_udf(F.col("value")).alias("valor"),
-    )
-
-
-def _ym(y, m):
-    return y * 12 + m
-
-
-def _out_of_range(start, end):
-    (y0, m0), (y1, m1) = start, end
-    ym = F.col("year") * 12 + F.col("month")
-    return (ym < F.lit(_ym(y0, m0))) | (ym > F.lit(_ym(y1, m1)))
+    return series_table(build_series(vals, start, end, [code]), code)
 
 
 def cartoes_table(vals: DataFrame, start, end, minutes_mode: bool = False) -> DataFrame:
@@ -151,50 +214,8 @@ def cartoes_table(vals: DataFrame, start, end, minutes_mode: bool = False) -> Da
     (``:1049-1051``). ``is_extra`` marks appended rows so renderers can
     reproduce the reference row order (range rows first).
     """
-    h50_raw = vals.filter(F.col("code") == "6-Horas").select(
-        "url", "year", "month", "value")
-    h100_raw = vals.filter(F.col("code") == "14-Horas100").select(
-        "url", "year", "month", "value")
-
-    keys = ["url", "year", "month"]
-    h50 = series_for_code(vals, "6-Horas", start, end).withColumnRenamed("value", "v50")
-    h100 = h100_raw.withColumnRenamed("value", "v100")
-    in_range = (
-        h50.join(h100, keys, "left")
-        .withColumn("v100", F.coalesce("v100", F.lit("0")))
-        .withColumn("is_extra", F.lit(False))
-    )
-    # missing_months: 100%-series keys outside the range that the
-    # 50%-series doesn't cover (keys covered by the 50%-series but out of
-    # range are dropped — exactly the reference's membership test)
-    extra = (
-        h100_raw.filter(_out_of_range(start, end))
-        .join(h50_raw, keys, "left_anti")
-        .select("url", "year", "month", F.lit("0").alias("v50"),
-                F.col("value").alias("v100"), F.lit(True).alias("is_extra"))
-    )
-    df = in_range.unionByName(extra)
-    if minutes_mode:
-        df = df.withColumn("v50", convert_minutes_udf("v50")) \
-               .withColumn("v100", convert_minutes_udf("v100"))
-    # A8: include the 100% column only when the url has any nonzero
-    # extracted value (the writer reads the full horas_100 map)
-    inc = h100_raw.groupBy("url").agg(
-        F.max(F.col("value").cast("decimal(38,6)") != 0).alias("include_extra_100"))
-    # No broadcast hint: inc is one flag per url (corpus-proportional).
-    # AQE broadcasts it at sandbox scale and shuffle-joins at 10^9 urls.
-    return (
-        df.join(inc, "url", "left")
-        .withColumn("include_extra_100",
-                    F.coalesce("include_extra_100", F.lit(False)))
-        .select(
-            "url", "year", "month",
-            F.format_string("%02d/%04d", "month", "year").alias("periodo"),
-            format_decimal_udf(F.col("v50")).alias("hora_extra_50"),
-            format_decimal_udf(F.col("v100")).alias("hora_extra_100"),
-            "include_extra_100", "is_extra",
-        )
-    )
+    return series_table(
+        build_series(vals, start, end, [CARTOES], minutes_mode), CARTOES)
 
 
 def horas_trabalhadas_table(vals: DataFrame, start, end,
@@ -206,39 +227,8 @@ def horas_trabalhadas_table(vals: DataFrame, start, end,
     ``additional_months`` — any month of either series outside the range
     — appended sorted after the range (``:1094-1100``).
     """
-    keys = ["url", "year", "month"]
-    h_raw = vals.filter(F.col("code") == "1-Salario").select(
-        "url", "year", "month", "value")
-    f_raw = vals.filter(F.col("code") == "952-FaltaInjustifica").select(
-        "url", "year", "month", "value")
-
-    horas = series_for_code(vals, "1-Salario", start, end).withColumnRenamed("value", "vh")
-    faltas = f_raw.withColumnRenamed("value", "vf")
-    in_range = (
-        horas.join(faltas, keys, "left")
-        .withColumn("vf", F.coalesce("vf", F.lit("0")))
-        .withColumn("is_extra", F.lit(False))
-    )
-    extra = (
-        h_raw.withColumnRenamed("value", "vh")
-        .join(f_raw.withColumnRenamed("value", "vf"), keys, "full_outer")
-        .filter(_out_of_range(start, end))
-        .select("url", "year", "month",
-                F.coalesce("vh", F.lit("0")).alias("vh"),
-                F.coalesce("vf", F.lit("0")).alias("vf"),
-                F.lit(True).alias("is_extra"))
-    )
-    df = in_range.unionByName(extra)
-    if minutes_mode:
-        df = df.withColumn("vh", convert_minutes_udf("vh")) \
-               .withColumn("vf", convert_minutes_udf("vf"))
-    return df.select(
-        "url", "year", "month",
-        F.format_string("%02d/%04d", "month", "year").alias("periodo"),
-        format_decimal_udf(F.col("vh")).alias("horas_trab"),
-        format_decimal_udf(F.col("vf")).alias("faltas"),
-        "is_extra",
-    )
+    return series_table(
+        build_series(vals, start, end, [HORAS], minutes_mode), HORAS)
 
 
 # ---------------------------------------------------------------------------

@@ -1,7 +1,6 @@
 from .brnum import (  # noqa: F401
-    convert_minutes_udf,
-    format_decimal_expr,
-    format_decimal_udf,
+    convert_minutes,
+    format_decimal,
     to_decimal_expr,
     to_float_robust_struct,
 )

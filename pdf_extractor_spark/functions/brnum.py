@@ -7,24 +7,21 @@ Two tiers:
   exploded lines at full scale. `to_float_robust_struct` reproduces the
   exact branch order of ``pdf_processor_core.py:384-413``.
 
-* **Arrow-vectorized pandas UDFs** — the byte-parity tier used only in
-  the final formatter stages (tiny row counts: one row per output
-  month). Python ``Decimal`` default context + ROUND_HALF_EVEN
-  quantize exactly matches the reference
-  (``ficha_financeira_processor.py:723-755, 1155-1159``);
-  Spark's decimal cast rounds HALF_UP, which can diverge on exact .005
-  boundaries, so the writers use these UDFs instead.
+* **Plain Python over canonical decimal strings** — the byte-parity
+  tier (C5 `format_decimal`, C6 `convert_minutes`), called per value by
+  Engine 2's grouped series pass (``engine2/pipeline.build_series``).
+  Python ``Decimal`` default context + ROUND_HALF_EVEN quantize exactly
+  matches the reference (``ficha_financeira_processor.py:723-755,
+  1155-1159``); Spark's decimal cast rounds HALF_UP, which can diverge
+  on exact .005 boundaries, so C5 has no Catalyst form.
 """
 
 from __future__ import annotations
 
 from decimal import Decimal
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 # ---------------------------------------------------------------------------
 # Expression tier (JVM / codegen)
@@ -114,36 +111,27 @@ def to_float_robust_struct(tok: Column, token_alphabet: bool = False) -> Column:
     )
 
 
-def format_decimal_expr(col: Column) -> Column:
-    """C5 `_format_decimal` as a pure expression (fast path).
-
-    NOTE: uses Spark's HALF_UP decimal cast; byte-parity writers use
-    :func:`format_decimal_udf` (HALF_EVEN) instead.
-    """
-    q = F.format_string("%.2f", col.cast("decimal(38,2)"))
-    s = F.regexp_replace(q, r"\.", ",")
-    s = F.regexp_replace(s, r"(,?0+)$|(,)$", "")
-    return F.when(s == "", F.lit("0")).otherwise(s)
-
-
 # ---------------------------------------------------------------------------
-# Byte-parity tier (Arrow-vectorized pandas UDFs over decimal strings)
+# Byte-parity tier (Python Decimal over canonical decimal strings)
 # ---------------------------------------------------------------------------
 
 
-def _fmt(value: Decimal) -> str:
-    q = value.quantize(Decimal("0.01"))
+def format_decimal(v: str) -> str:
+    """C5 ``_format_decimal`` (ficha_financeira_processor.py:1155-1159)
+    over a canonical decimal string: HALF_EVEN to 2 places, comma
+    decimal separator, trailing zeros stripped."""
+    q = Decimal(v).quantize(Decimal("0.01"))
     s = f"{q:.2f}".replace(".", ",").rstrip("0").rstrip(",")
     return s or "0"
 
 
-@pandas_udf(StringType())
-def format_decimal_udf(vals: pd.Series) -> pd.Series:
-    """C5 byte-parity formatter over canonical decimal strings."""
-    return vals.map(lambda v: None if v is None else _fmt(Decimal(v)))
+def convert_minutes(v: str) -> str:
+    """C6 minutes→centesimal (ficha_financeira_processor.py:723-755).
 
-
-def _convert_minutes(v: str) -> str:
+    Scale-sensitive: '9.3' reads as 3 minutes, '9.30' as 30 — which is
+    why values travel as canonical decimal *strings* (original token
+    scale preserved), never as fixed-scale DecimalType.
+    """
     value = Decimal(v)
     if value == 0:
         return v
@@ -156,14 +144,3 @@ def _convert_minutes(v: str) -> str:
     mins = int(frac)
     conv = Decimal(int(whole or 0) + mins // 60) + Decimal(mins % 60) / Decimal(60)
     return str(conv if value >= 0 else -conv)
-
-
-@pandas_udf(StringType())
-def convert_minutes_udf(vals: pd.Series) -> pd.Series:
-    """C6 minutes→centesimal (ficha_financeira_processor.py:723-755).
-
-    Scale-sensitive: '9.3' reads as 3 minutes, '9.30' as 30 — which is
-    why values travel as canonical decimal *strings* (original token
-    scale preserved), never as fixed-scale DecimalType.
-    """
-    return vals.map(lambda v: None if v is None else _convert_minutes(v))

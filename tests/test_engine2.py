@@ -232,3 +232,22 @@ def test_minutes_mode_spark_matches_oracle(long_df):
             want = (orc.format_decimal(orc.convert_minutes_value(v)),
                     orc.format_decimal(orc.convert_minutes_value(v100)))
             assert got[(url, y, m)] == want, (url, y, m)
+
+
+def test_a8_flag_reads_values_exactly(spark):
+    """A8 compares each 100%-value with zero exactly, as oracle_ref
+    does: a value below any fixed decimal scale still turns the column
+    on, and a url with no 100%-values gets False, never null."""
+    vals = spark.createDataFrame(
+        [("u1", "14-Horas100", 2019, 1, "0.0000001"),
+         ("u2", "6-Horas", 2019, 1, "8")],
+        "url string, code string, year int, month int, value string")
+    start, end = (2019, 1), (2019, 2)
+    months = list(orc.iterate_months(start, end))
+    _, want = orc.cartoes_writer_rows({}, {(2019, 1): Decimal("0.0000001")},
+                                      months)
+    assert want is True
+    got = {}
+    for r in e2.cartoes_table(vals, start, end).collect():
+        got.setdefault(r.url, set()).add(r.include_extra_100)
+    assert got == {"u1": {True}, "u2": {False}}

@@ -6,7 +6,8 @@ making `ParquetSnapshotTableIO.write_run` raise when asked for one
 table, so every table written before it is committed and nothing after
 it is. Retrying under the same run_id must leave every output table
 equal to a clean run's, compared as sorted rows without the columns
-that legitimately differ between runs."""
+that legitimately differ between runs. One more in-process run checks
+`jobs.py --minutes-mode` against the oracle_ref writers."""
 
 from __future__ import annotations
 
@@ -17,7 +18,7 @@ import pytest
 
 import jobs
 import jobs_curate
-from pdf_extractor_spark import datagen
+from pdf_extractor_spark import datagen, oracle_ref as orc
 from pdf_extractor_spark.sinks.tableio import ParquetSnapshotTableIO
 
 VOLATILE = {"run_id", "audit_ts", "ts", "partition_id"}
@@ -141,3 +142,54 @@ def test_curate_increment_retry_equals_clean_increment(spark, run_job,
     curate(crash_out, full, "c2", "--resume", crash_before="state/manifest")
     curate(crash_out, full, "c2", "--resume")
     assert _tables(spark, crash_out, CURATE_TABLES) == clean
+
+
+def test_extract_job_minutes_mode_matches_writer_oracle(spark, run_job,
+                                                        tmp_path):
+    """cartoes and horas_trabalhadas of a --minutes-mode run equal the
+    oracle_ref writer rows with minutes conversion, appended
+    out-of-range rows and the A8 flag included."""
+    n_docs = 30
+    pages = str(tmp_path / "pages")
+    spark.createDataFrame(datagen.corpus_pandas(n_docs),
+                          datagen.PAGES_SCHEMA).write.parquet(pages)
+    out = tmp_path / "out"
+    run_job(jobs, "--pages", pages, "--out", str(out), "--run-id", "m1",
+            "--start", "2019-01", "--end", "2020-12", "--minutes-mode")
+
+    months = list(orc.iterate_months((2019, 1), (2020, 12)))
+    fmt = orc.format_decimal
+    want = {"cartoes": [], "horas_trabalhadas": []}
+    n_converted = 0
+    for i in range(n_docs):
+        r = datagen.gen_row(42, i)
+        if "ficha" not in r["url"]:
+            continue
+        g = orc.e2_extract_doc(r["html"], r["text"])["values"]
+        if not any(g.values()):
+            continue
+        orc.apply_vacation_adjustments(g)
+        h50, h100 = g.get("6-Horas", {}), g.get("14-Horas100", {})
+        rows, inc = orc.cartoes_writer_rows(h50, h100, months,
+                                            minutes_mode=True)
+        want["cartoes"] += [(r["url"], y, m, f"{m:02d}/{y:04d}", fmt(a),
+                             fmt(b), inc, ex) for y, m, a, b, ex in rows]
+        want["horas_trabalhadas"] += [
+            (r["url"], y, m, f"{m:02d}/{y:04d}", fmt(a), fmt(b), ex)
+            for y, m, a, b, ex in orc.horas_writer_rows(
+                g.get("1-Salario", {}), g.get("952-FaltaInjustifica", {}),
+                months, minutes_mode=True)]
+        n_converted += sum(orc.convert_minutes_value(v) != v
+                           for v in [*h50.values(), *h100.values()])
+    assert n_converted > 0, "corpus must exercise the conversion"
+    assert any(row[-1] for row in want["cartoes"]), "and the append path"
+
+    io = ParquetSnapshotTableIO(str(out))
+    cols = {"cartoes": ["url", "year", "month", "periodo", "hora_extra_50",
+                        "hora_extra_100", "include_extra_100", "is_extra"],
+            "horas_trabalhadas": ["url", "year", "month", "periodo",
+                                  "horas_trab", "faltas", "is_extra"]}
+    for name, want_rows in want.items():
+        got = [tuple(row) for row in
+               io.read(spark, name).select(cols[name]).collect()]
+        assert sorted(got) == sorted(want_rows), name

@@ -79,14 +79,35 @@ def test_lsh_plan_build_triggers_no_job(spark, sf_dir):
     assert sc.statusTracker().getJobIdsForGroup("lsh-plan-sanity") != []
 
 
-def test_zero_fill_dim_is_broadcast(spark):
+def test_e2_series_tail_is_one_grouped_pass(spark):
+    """Each Engine-2 series table, and the jobs' build of all four, is
+    one grouped-map Python pass over the value rows: no per-column
+    Python UDF, no join (zero-fill, out-of-range appends and the A8 flag
+    are per-url rules inside the pass), at most one keyed exchange, on
+    url, and no broadcast hint (the url key grows with the corpus)."""
     from pdf_extractor_spark import datagen
 
     pages = spark.createDataFrame(datagen.corpus_pandas(8))
     vals = e2.values_table(e2.extract_ficha(pages))
-    ser = e2.series_for_code(vals, "3123-Base", (2019, 1), (2019, 12))
-    assert "BroadcastNestedLoopJoin" in _plan(ser) or \
-        "BroadcastHashJoin" in _plan(ser)
+    start, end = (2019, 1), (2019, 12)
+    tables = [e2.default_series_table(vals, "3123-Base", start, end),
+              e2.default_series_table(vals, "8-Insalubridade", start, end),
+              e2.cartoes_table(vals, start, end),
+              e2.horas_trabalhadas_table(vals, start, end, minutes_mode=True),
+              e2.build_series(vals, start, end,
+                              ["3123-Base", "8-Insalubridade", e2.CARTOES,
+                               e2.HORAS])]
+    for df in tables:
+        logical = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Hint" not in logical
+        plan = _plan(df)
+        assert "ArrowEvalPython" not in plan
+        assert "Join" not in plan
+        assert plan.count("FlatMapGroupsInArrow") == 1
+        keyed = [ln for ln in plan.splitlines()
+                 if "Exchange hashpartitioning" in ln]
+        assert len(keyed) <= 1
+        assert all("hashpartitioning(url" in ln for ln in keyed)
 
 
 def test_boilerplate_flatten_shuffle_free(spark, sf_dir):
@@ -130,27 +151,6 @@ def test_contamination_no_corpus_exchange_before_join(spark, sf_dir):
     plan = _plan(df)
     assert "BroadcastExchange" in plan      # eval side broadcast
     assert plan.count("Exchange hashpartitioning") <= 2
-
-
-def test_corpus_proportional_joins_not_hinted(spark):
-    """A8's include-flag table (one row per url) grows with the corpus
-    — a forced broadcast hint would OOM at 10^9 urls. The strategy must
-    be left to AQE: no ResolvedHint in the optimized logical plan, while
-    at sandbox scale AQE still picks a broadcast join on its own."""
-    from pdf_extractor_spark import datagen
-
-    pages = spark.createDataFrame(datagen.corpus_pandas(8))
-    vals = e2.values_table(e2.extract_ficha(pages))
-
-    cart = e2.cartoes_table(vals, (2019, 1), (2019, 12))
-    logical = cart._jdf.queryExecution().optimizedPlan().toString()
-    assert "ResolvedHint" not in logical
-    assert "UnresolvedHint" not in logical
-    # AQE still broadcasts the small side at this scale
-    cart.collect()
-    plan = _plan(cart)
-    final = plan.split("Initial Plan")[0]
-    assert "BroadcastHashJoin" in final
 
 
 def test_curate_near_dup_anti_join_broadcasts(spark, sf_dir):

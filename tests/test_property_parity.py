@@ -7,15 +7,13 @@ from __future__ import annotations
 from decimal import Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark import oracle_ref as orc
-from pdf_extractor_spark.functions.brnum import (
-    format_decimal_udf,
-    to_float_robust_struct,
-)
+from pdf_extractor_spark.engine2 import pipeline as e2
+from pdf_extractor_spark.functions.brnum import to_float_robust_struct
 
 # Brazilian-ish numeric tokens, plus adversarial shapes the reference's
 # regex tokenizer can produce. ASCII digits only: hypothesis found that
@@ -89,16 +87,68 @@ dec_st = st.decimals(min_value=Decimal("-99999999"),
                      allow_nan=False, allow_infinity=False, places=None)
 
 
-@settings(max_examples=20, deadline=None,
+# Engine-2 series builder vs the writer oracles. Per-url value maps over
+# the six codes the writers read, plus one code they ignore (a url with
+# only that code still gets every series), months in and out of RANGE.
+SERIES_CODES = ["3123-Base", "8-Insalubridade", "6-Horas", "14-Horas100",
+                "1-Salario", "952-FaltaInjustifica"]
+RANGE = (2019, 11), (2020, 2)
+SEEDED = [
+    str(Decimal(200) / Decimal(2)),   # '1E+2': A6 with no base value
+    "-0", "-0.001",                   # both format as '-0'
+    "0.125", "0.135",                 # HALF_EVEN ties
+    str(Decimal(300) / (Decimal("2999") / Decimal(100))),  # 28-digit A6
+]
+url_maps_st = st.dictionaries(
+    st.sampled_from(SERIES_CODES + ["173-Ferias"]),
+    st.dictionaries(st.tuples(st.integers(2019, 2020), st.integers(1, 12)),
+                    st.one_of(st.sampled_from(SEEDED), dec_st.map(str)),
+                    max_size=4),
+    min_size=1, max_size=4)
+SEEDED_URLS = [{c: {(2019, 12): v, (2020, 5): v} for c in SERIES_CODES}
+               for v in SEEDED]
+
+
+def _writer_oracle(maps: dict, minutes_mode: bool) -> dict:
+    dec = {c: {k: Decimal(v) for k, v in s.items()} for c, s in maps.items()}
+    months = list(orc.iterate_months(*RANGE))
+    fmt = orc.format_decimal
+    want = {code: [(y, m, fmt(v), None, None, None)
+                   for y, m, v in orc.zero_fill(dec.get(code, {}), months)]
+            for code in ("3123-Base", "8-Insalubridade")}
+    rows, inc = orc.cartoes_writer_rows(
+        dec.get("6-Horas", {}), dec.get("14-Horas100", {}), months,
+        minutes_mode)
+    want[e2.CARTOES] = [(y, m, fmt(a), fmt(b), inc, ex)
+                        for y, m, a, b, ex in rows]
+    want[e2.HORAS] = [(y, m, fmt(a), fmt(b), None, ex)
+                      for y, m, a, b, ex in orc.horas_writer_rows(
+                          dec.get("1-Salario", {}),
+                          dec.get("952-FaltaInjustifica", {}), months,
+                          minutes_mode)]
+    return want
+
+
+@settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(st.lists(dec_st, min_size=1, max_size=50))
-def test_format_decimal_parity(spark, values):
-    strs = [str(v) for v in values]
-    df = spark.createDataFrame([(s,) for s in strs], "v string")
-    got = {r.v: r.f for r in
-           df.select("v", format_decimal_udf(F.col("v")).alias("f")).collect()}
-    for s in strs:
-        assert got[s] == orc.format_decimal(Decimal(s)), s
+@given(st.lists(url_maps_st, min_size=1, max_size=5), st.booleans())
+@example(SEEDED_URLS, False)
+@example(SEEDED_URLS, True)
+def test_series_builder_matches_writer_oracle(spark, urls, minutes_mode):
+    rows = [(f"u{i}", code, y, m, v) for i, maps in enumerate(urls)
+            for code, series in maps.items() for (y, m), v in series.items()]
+    vals = spark.createDataFrame(
+        rows, "url string, code string, year int, month int, value string")
+    got: dict = {}
+    for r in e2.build_series(vals, *RANGE, ["3123-Base", "8-Insalubridade",
+                                            e2.CARTOES, e2.HORAS],
+                             minutes_mode).collect():
+        got.setdefault((r.url, r.series), []).append(
+            (r.year, r.month, r.a, r.b, r.include_extra_100, r.is_extra))
+    want = {(f"u{i}", s): sorted(v, key=repr)
+            for i, maps in enumerate(urls) if any(maps.values())
+            for s, v in _writer_oracle(maps, minutes_mode).items()}
+    assert {k: sorted(v, key=repr) for k, v in got.items()} == want
 
 
 @settings(max_examples=200, deadline=None)
