@@ -24,6 +24,7 @@ not covered: the crashed run's partial partitions stay.
 from __future__ import annotations
 
 import argparse
+import re
 import sys
 from pathlib import Path
 
@@ -33,6 +34,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from pdf_extractor_spark.engine1 import pipeline as e1  # noqa: E402
 from pdf_extractor_spark.engine2 import pipeline as e2  # noqa: E402
+from pdf_extractor_spark.engine2.kernel import MAX_BLOCK_CARRY  # noqa: E402
 from pdf_extractor_spark.session import get_spark  # noqa: E402
 from pdf_extractor_spark.sinks import audit  # noqa: E402
 from pdf_extractor_spark.sinks.resume import manifest_rows  # noqa: E402
@@ -45,8 +47,13 @@ SERIES = {"proventos": "3123-Base", "insalubridade": "8-Insalubridade",
 
 
 def parse_period(s: str) -> tuple[int, int]:
-    y, m = s.split("-")
-    return int(y), int(m)
+    """`YYYY-MM` → (year, month); anything else, a month outside 1-12
+    included, is an argparse error (the series month range would roll
+    2019-13 into 2020-01 without a word)."""
+    ym = re.fullmatch(r"(\d{4})-(\d{2})", s)
+    if not ym or not 1 <= int(ym[2]) <= 12:
+        raise argparse.ArgumentTypeError(f"{s!r} is not a YYYY-MM month")
+    return int(ym[1]), int(ym[2])
 
 
 def main() -> None:
@@ -55,12 +62,13 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--start", default="2019-01")
-    ap.add_argument("--end", default="2021-12")
+    ap.add_argument("--start", type=parse_period, default="2019-01")
+    ap.add_argument("--end", type=parse_period, default="2021-12")
     ap.add_argument("--minutes-mode", action="store_true")
     ap.add_argument("--salted-max-pages", type=int, default=None,
                     metavar="N",
-                    help="skew mode: split documents longer than N pages "
+                    help=f"skew mode (N > {MAX_BLOCK_CARRY}): split "
+                         "documents longer than N pages "
                          "into parallel page-range chunks with exact "
                          "carry-state handoff (engine2/salted — output "
                          "pinned identical to the plain kernel); use when "
@@ -79,11 +87,15 @@ def main() -> None:
                          "native MERGE INTO/snapshots (needs runtime jars)")
     args = ap.parse_args()
 
-    start, end = parse_period(args.start), parse_period(args.end)
-    if start > end:
-        # fail fast, before any output is written (reference
-        # ficha_financeira_processor.py:187-188)
-        ap.error(f"--start {args.start} must not be after --end {args.end}")
+    # fail fast, before Spark starts or any output is written
+    if args.start > args.end:
+        # reference ficha_financeira_processor.py:187-188
+        ap.error("--start must not be after --end")
+    if (args.salted_max_pages is not None
+            and args.salted_max_pages <= MAX_BLOCK_CARRY):
+        # a carried-in block must settle inside its chunk for the
+        # salted stitch to be exact (engine2/salted.split_chunks)
+        ap.error(f"--salted-max-pages must exceed {MAX_BLOCK_CARRY}")
 
     spark = get_spark(f"extract-{args.run_id}")
     out = args.out.rstrip("/")
@@ -141,7 +153,7 @@ def main() -> None:
         long_df = e2.extract_ficha(pages, adjust_vacation=True)
     long_df = long_df.persist()
     # the four series tables are projections of one grouped pass
-    built = e2.build_series(e2.values_table(long_df), start, end,
+    built = e2.build_series(e2.values_table(long_df), args.start, args.end,
                             SERIES.values(),
                             minutes_mode=args.minutes_mode).persist()
     for name, series in SERIES.items():

@@ -1237,32 +1237,6 @@ def pdfs_from_documents(docs, id_col: str = "doc_id",
         gen, schema=PDF_PAGES_SCHEMA)
 
 
-EMBEDDINGS_SCHEMA = "vec_id bigint, embedding array<float>"
-
-
-def embeddings_df(spark, n_vecs: int, dim: int = 64, seed: int = 42,
-                  partitions: int | None = None):
-    """Distributed synthetic embeddings table (ANN benchmarks):
-    unit-norm gaussian vectors, pure function of (seed, id)."""
-    import numpy as np
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = batch["id"].to_numpy()
-            out = []
-            for i in ids:
-                rng = np.random.default_rng(seed * 1_000_003 + int(i))
-                v = rng.standard_normal(dim).astype(np.float32)
-                out.append((v / np.linalg.norm(v)).tolist())
-            yield pd.DataFrame({"vec_id": ids, "embedding": out})
-
-    rng_df = spark.range(
-        0, n_vecs, 1,
-        partitions or min(512, max(8, n_vecs // 4096 or 1)))
-    return rng_df.mapInPandas(gen, schema=EMBEDDINGS_SCHEMA)
-
-
 def main() -> None:
     import argparse
 

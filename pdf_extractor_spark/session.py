@@ -21,10 +21,11 @@ DRIVER_MEMORY_FRACTION = 0.4
 
 def host_defaults(master: str | None = None) -> tuple[str, int, str]:
     """(master, shuffle partitions, driver memory) for this machine:
-    `local[<cores>]` from `os.cpu_count()`, shuffle partitions matching
-    the master's parallelism (floor 8), and DRIVER_MEMORY_FRACTION of
-    physical memory in MiB."""
-    cores = os.cpu_count() or 1
+    `local[<cores>]` from the cores this process may run on
+    (`os.sched_getaffinity`, so `taskset` narrows it), shuffle
+    partitions matching the master's parallelism (floor 8), and
+    DRIVER_MEMORY_FRACTION of physical memory in MiB."""
+    cores = len(os.sched_getaffinity(0))
     if master is None:
         master = f"local[{os.environ.get('SPARK_GRAFT_CPUS') or cores}]"
     n = master[master.find("[") + 1: master.find("]")] if "[" in master else "*"
