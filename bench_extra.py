@@ -65,20 +65,16 @@ def main() -> None:
 
     from pdf_extractor_spark.engine1 import pipeline as e1
 
-    sc.setJobDescription("e1 classify (noop)")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     n_docs = {"0.001": 100, "0.01": 1000, "0.1": 16000}.get(sf, 2000)
     from bench import ensure_corpus
 
     pages = spark.read.parquet(ensure_corpus(spark, n_docs))
-    classified = e1.classify_pages(e1.explode_pages(
-        pages.select("url", "text")))
-    out["e1_classify_noop"] = best_of(lambda: noop(classified))
-    sc.setJobDescription("e1 matched_lines (noop)")
-    out["e1_matched_lines_noop"] = best_of(
-        lambda: noop(e1.matched_lines(classified)))
+    sc.setJobDescription("e1 kernel (noop)")
+    out["e1_kernel_noop"] = best_of(lambda: noop(e1.extract_long(pages)))
     sc.setJobDescription("e1 full warm")
     def e1_full():
+        spark.catalog.clearCache()   # extract_folha persists its pass
         v, a = e1.extract_folha(pages)
         return v.count() + a.count()
     out["e1_full_warm"] = best_of(e1_full)

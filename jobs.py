@@ -7,9 +7,9 @@
 
 Stages (north-rule shape):
   read pages table → resume filter (manifest anti-join) →
-  Engine-1 (Catalyst line/regex path) + Engine-2 (Arrow layout kernel,
-  vacation adjustment fused) → one grouped pass building the four
-  output series tables →
+  Engine-1 (per-document Arrow line/regex kernel, persisted once) +
+  Engine-2 (Arrow layout kernel, vacation adjustment fused) → one
+  grouped pass building the four output series tables →
   fill-if-empty MERGE into the keyed target →
   audit/lineage tables → manifest, written last.
 
@@ -128,7 +128,10 @@ def main() -> None:
         return
 
     # ---- Engine 1 ------------------------------------------------------
-    e1_values, e1_attention = e1.extract_folha(pages)
+    # one kernel pass; e1_target, e1_attention and audit_e1 are
+    # projections of its persisted long table
+    e1_long = e1.extract_long(pages).persist()
+    e1_values, e1_attention, e1_metrics = e1.split_long(e1_long)
     e1_flat = e1_values.select(
         "url", "folha_type", "year", "month", "excel_col",
         F.coalesce(F.col("value")["txt"],
@@ -160,8 +163,7 @@ def main() -> None:
         io.write_run(e2.series_table(built, series), name, run_id, resuming)
 
     # ---- lineage + resume ----------------------------------------------
-    classified = e1.classify_pages(e1.explode_pages(pages))
-    audits = {"audit_e1": e1.page_metrics(classified),
+    audits = {"audit_e1": e1_metrics,
               "audit_e2": e2.metrics_table(long_df)}
     if args.pdf_col:
         # parse-level lineage (north-star metric triple: pages parsed,

@@ -1,9 +1,8 @@
 from .pipeline import (  # noqa: F401
-    attention_table,
     classify_pages,
     explode_pages,
     extract_folha,
-    matched_lines,
+    extract_long,
     page_metrics,
+    split_long,
 )
-from .rules import rules_df  # noqa: F401

@@ -1,53 +1,31 @@
-"""Engine-1 mapping-rules dimension (reference pdf_processor_core.py:50-75).
+"""Engine-1 mapping rules (reference pdf_processor_core.py:50-75).
 
-A 13-row broadcast dimension, joined against exploded page lines on
-substring containment. Descriptions/columns/source flags drive the
-A2-A5 aggregation rules.
+The 13 rules the kernel matches against page lines on substring
+containment; descriptions/columns/source flags drive the A2-A5 page
+rules.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-# (rule_key, code, description, excel_col, source, fallback_to_valor,
-#  folha_type, is_fallback)
+# (folha_type, code, description, excel_col, source, fallback_to_valor),
+# in the reference's order
 E1_RULES = [
-    ("01003601", "01003601", "PREMIO PROD. MENSAL", "X", "indice", True,
-     "FOLHA NORMAL", False),
-    ("01003602", "01003602", "PREMIO PROD. MENSAL", "X", "indice", True,
-     "FOLHA NORMAL", False),
-    ("01017101", "01017101", "PREMIO PRO. (R)", "X", "indice", True,
-     "FOLHA NORMAL", False),
-    ("01007301", "01007301", "HORAS EXT.100%-180", "Y", "indice", False,
-     "FOLHA NORMAL", False),
-    ("01007302", "01007302", "HORAS EXT.100%-180", "Y", "indice", False,
-     "FOLHA NORMAL", False),
-    ("01009001", "01009001", "ADIC.NOT.25%-180", "AE", "indice", False,
-     "FOLHA NORMAL", False),
-    ("01022001", "01022001", "ADICIONAL NOTURNO 25% (R)", "AE", "indice", False,
-     "FOLHA NORMAL", False),
-    ("01003501", "01003501", "HORAS EXT.75%-180", "AA", "indice", False,
-     "FOLHA NORMAL", False),
-    ("01007501", "01007501", "HORAS EXT.75%", "AA", "indice", False,
-     "FOLHA NORMAL", False),
-    ("02007501", "02007501", "DIFER.PROV. HORAS EXTRAS 75%", "AC", "indice", False,
-     "FOLHA NORMAL", False),
-    ("09090301_NORMAL", "09090301", "SALARIO CONTRIB INSS", "B", "valor", False,
-     "FOLHA NORMAL", False),
-    ("09090301_13SAL", "09090301", "SALARIO CONTRIB INSS", "B", "valor", False,
-     "13 SALARIO", False),
-    ("09090101_13SAL", "09090101", "REMUNERACAO BRUTA", "B", "valor", False,
-     "13 SALARIO", True),
+    ("FOLHA NORMAL", "01003601", "PREMIO PROD. MENSAL", "X", "indice", True),
+    ("FOLHA NORMAL", "01003602", "PREMIO PROD. MENSAL", "X", "indice", True),
+    ("FOLHA NORMAL", "01017101", "PREMIO PRO. (R)", "X", "indice", True),
+    ("FOLHA NORMAL", "01007301", "HORAS EXT.100%-180", "Y", "indice", False),
+    ("FOLHA NORMAL", "01007302", "HORAS EXT.100%-180", "Y", "indice", False),
+    ("FOLHA NORMAL", "01009001", "ADIC.NOT.25%-180", "AE", "indice", False),
+    ("FOLHA NORMAL", "01022001", "ADICIONAL NOTURNO 25% (R)", "AE", "indice",
+     False),
+    ("FOLHA NORMAL", "01003501", "HORAS EXT.75%-180", "AA", "indice", False),
+    ("FOLHA NORMAL", "01007501", "HORAS EXT.75%", "AA", "indice", False),
+    ("FOLHA NORMAL", "02007501", "DIFER.PROV. HORAS EXTRAS 75%", "AC", "indice",
+     False),
+    ("FOLHA NORMAL", "09090301", "SALARIO CONTRIB INSS", "B", "valor", False),
+    ("13 SALARIO", "09090301", "SALARIO CONTRIB INSS", "B", "valor", False),
+    ("13 SALARIO", "09090101", "REMUNERACAO BRUTA", "B", "valor", False),
 ]
 
 # sum-when-together pairs per column (reference :72-75)
 SUMABLE = {"X": ["01003601", "01003602"], "Y": ["01007301", "01007302"]}
-SUM4 = sorted(SUMABLE["X"] + SUMABLE["Y"])
-
-RULES_SCHEMA = ("rule_key string, code string, description string, "
-                "excel_col string, source string, fallback boolean, "
-                "folha_type string, is_fallback boolean")
-
-
-def rules_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(E1_RULES, schema=RULES_SCHEMA)

@@ -3,9 +3,7 @@
 Two tiers:
 
 * **Column expressions** — pure Catalyst (whole-stage codegen, JVM-side):
-  the hot path for the Engine-1 line parser which runs over billions of
-  exploded lines at full scale. `to_float_robust_struct` reproduces the
-  exact branch order of ``pdf_processor_core.py:384-413``.
+  C4 `to_decimal_expr`.
 
 * **Plain Python over canonical decimal strings** — the byte-parity
   tier (C5 `format_decimal`, C6 `convert_minutes`), called per value by
@@ -34,80 +32,6 @@ def to_decimal_expr(col: Column, precision: int = 38, scale: int = 6) -> Column:
     return F.coalesce(
         cleaned.try_cast(f"decimal({precision},{scale})"),
         F.lit(0).cast(f"decimal({precision},{scale})"),
-    )
-
-
-def to_float_robust_struct(tok: Column, token_alphabet: bool = False) -> Column:
-    """C2 `convert_to_float_robust` (pdf_processor_core.py:384-413).
-
-    Returns struct(num double, txt string, is_time boolean):
-      * HH:MM tokens → txt='HH,MM', is_time=true, num=null (the reference
-        returns the *string* '06,34' — a float|str union type);
-      * otherwise num = parsed float (exact branch order preserved),
-        txt = null;
-      * unparseable → all null.
-
-    ``token_alphabet=True`` is the hot-path variant for inputs already
-    extracted by the numeric-token regex ``[\\d]+(?:[.,:]\\d+)*`` (no
-    whitespace, chars ⊆ [0-9.,:]): every `regexp_replace` collapses to
-    a `translate`, cutting per-token cost several-fold. Semantically
-    identical ON THAT ALPHABET (pinned by a hypothesis test); pass
-    False (default) for arbitrary strings.
-    """
-    if token_alphabet:
-        s = tok
-        cleaned = F.translate(s, ":", "")
-
-        def strip_dots(c):
-            return F.translate(c, ".", "")
-
-        def comma_to_dot(c):
-            return F.translate(c, ",", ".")
-
-        def strip_commas(c):
-            return F.translate(c, ",", "")
-    else:
-        s = F.trim(tok)
-        cleaned = F.regexp_replace(s, r"[^\d.,]", "")
-
-        def strip_dots(c):
-            return F.regexp_replace(c, r"\.", "")
-
-        def comma_to_dot(c):
-            return F.regexp_replace(c, ",", ".")
-
-        def strip_commas(c):
-            return F.regexp_replace(c, ",", "")
-
-    is_time = s.rlike(r"^\d{1,2}:\d{2}$")
-    n_comma = F.length(cleaned) - F.length(strip_commas(cleaned))
-    n_dot = F.length(cleaned) - F.length(strip_dots(cleaned))
-    has_comma = cleaned.contains(",")
-    has_dot = cleaned.contains(".")
-
-    # branch order matters for parity (e.g. '1.234,56' vs '1234.56')
-    num = (
-        F.when(cleaned == "", F.lit(None).cast("double"))
-        .when(
-            has_comma & (n_comma == 1),
-            comma_to_dot(strip_dots(cleaned)).try_cast("double"),
-        )
-        .when(
-            has_dot & (n_dot == 1) & has_comma,
-            strip_commas(cleaned).try_cast("double"),
-        )
-        .when(
-            has_comma & ~has_dot,
-            comma_to_dot(cleaned).try_cast("double"),
-        )
-        .otherwise(cleaned.try_cast("double"))
-    )
-    txt_time = (F.translate(s, ":", ",") if token_alphabet
-                else F.regexp_replace(s, ":", ","))
-    return F.struct(
-        F.when(~is_time, num).alias("num"),
-        F.when(is_time, txt_time).alias("txt"),
-        is_time.alias("is_time"),
     )
 
 

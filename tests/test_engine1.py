@@ -1,11 +1,16 @@
-"""Engine-1 parity: Catalyst pipeline vs pure-Python oracle, plus the
-REGRAS.md rule-matrix pinned cases."""
+"""Engine-1 parity: the per-document kernel pipeline vs the pure-Python
+oracle, the REGRAS.md rule-matrix pinned cases, and per-document time
+bounds on hostile pages."""
 
 from __future__ import annotations
 
+import time
+
+import pyarrow as pa
 import pytest
 
 from pdf_extractor_spark import datagen, oracle_ref as orc
+from pdf_extractor_spark.engine1 import kernel as K
 from pdf_extractor_spark.engine1 import pipeline as e1
 
 N_DOCS = 120
@@ -95,6 +100,67 @@ def test_metrics_match_oracle(corpus):
         assert m.total_pages == gm["total_pages"], url
         assert m.ignored == gm["ignored"], url
         assert m.no_date == gm["no_date"], url
+
+
+def test_kernel_metrics_match_page_metrics(corpus):
+    """The kernel's per-document metrics rows (the jobs' audit_e1 feed)
+    equal the page-level groupBy on every document, noise included."""
+    _, _, metrics = e1.split_long(e1.extract_long(corpus))
+    classified = e1.classify_pages(e1.explode_pages(corpus))
+    assert sorted(map(tuple, metrics.collect())) == \
+        sorted(map(tuple, e1.page_metrics(classified).collect()))
+
+
+def test_sum_with_time_operand():
+    """The reference's A3 sum raises on an 'HH,MM' operand; the kernel
+    sums the numeric operands and still flags the pair."""
+    page = "\n".join([
+        "Tipo da folha: FOLHA NORMAL",
+        "Referência: janeiro/2025",
+        "P 01007301 HORAS EXT.100%-180 06:34 803,20",
+        "P 01007302 HORAS EXT.100%-180 2,50 10,00",
+    ])
+    with pytest.raises(TypeError):
+        orc.e1_extract_page(page, "FOLHA NORMAL")
+    data, attention = K.extract_page(page, "FOLHA NORMAL")
+    assert data == {"Y": 2.5}
+    assert attention == [("soma_automatica", "HORAS EXT.100%-180",
+                          ["01007301", "01007302"], "Y")]
+
+
+# Per-document wall bound for the kernel on the hostile pages below
+# (each takes well under a second on a 4-core x86 host)
+HOSTILE_DOC_S = 5.0
+
+
+def _hostile_docs() -> list[str]:
+    head = "Tipo da folha: FOLHA NORMAL Referência: março/2024 "
+    runs = " ".join(f"{i * 7919 % 10**8:08d}" for i in range(222_000))
+    one_line = head + runs + " 01003601 PREMIO 2,50 300,00"   # ≈2 MB
+    many = "\n".join(
+        ["Tipo da folha: FOLHA NORMAL", "Referência: março/2024"]
+        + [f"P 01009001 ADIC {i % 97},{i % 100:02d} {i},50" if i % 1000 == 0
+           else f"L {i:08d} {i % 97},{i % 100:02d} {i},50"
+           for i in range(200_000)])
+    return [one_line, many]
+
+
+@pytest.mark.parametrize("which", ["one_2mb_line", "200k_lines"])
+def test_hostile_pages_bounded(which):
+    doc = _hostile_docs()[["one_2mb_line", "200k_lines"].index(which)]
+    batch = pa.RecordBatch.from_pydict({"url": ["u"], "text": [doc]})
+    t0 = time.perf_counter()
+    rows = [r for out in K.kernel(iter([batch])) for r in out.to_pylist()]
+    assert time.perf_counter() - t0 < HOSTILE_DOC_S
+    want = orc.e1_extract_doc(doc)
+    (period, res), = want["FOLHA NORMAL"].items()
+    assert {r["excel_col"]: r["num"] for r in rows
+            if r["kind"] == K.VALUE_KIND} == res["data"]
+    assert {(r["kind"], tuple(r["codes"])) for r in rows
+            if r["kind"] not in (K.VALUE_KIND, K.METRICS_KIND)} == \
+        {(a["kind"], tuple(a["codes"])) for a in res["attention"]}
+    assert all((r["year"], r["month"]) == period for r in rows
+               if r["kind"] == K.VALUE_KIND)
 
 
 def test_regras_pinned_cases():

@@ -30,14 +30,26 @@ def test_scan_column_pruning_and_filter_pushdown(spark, sf_dir):
     assert "l_shipdate" in plan.split("PushedFilters")[-1].split("\n")[0]
 
 
-def test_rules_join_is_broadcast(spark, sf_dir):
+def test_e1_kernel_is_shuffle_free(spark):
+    """Engine 1 is scan → (size-gated round-robin) → one Arrow kernel:
+    no keyed exchange, no window, no nested-loop join."""
     from pdf_extractor_spark import datagen
     from pdf_extractor_spark.engine1 import pipeline as e1
 
     pages = spark.createDataFrame(datagen.corpus_pandas(8))
-    ml = e1.matched_lines(e1.classify_pages(e1.explode_pages(pages)))
-    plan = _plan(ml)
-    assert "Broadcast" in plan  # 13-rule dimension broadcast, no shuffle join
+    values, attention = e1.extract_folha(pages)
+    for df in (values, attention):
+        plan = _plan(df)
+        assert "MapInArrow" in plan
+        assert "Window" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        # an executed adaptive plan lists its exchange twice (final and
+        # initial plan), so count distinct exchange lines
+        exchanges = {ln.strip() for ln in plan.splitlines()
+                     if "Exchange" in ln}
+        assert len(exchanges) <= 1, exchanges
+        assert all("RoundRobinPartitioning" in ln for ln in exchanges), exchanges
+    spark.catalog.clearCache()
 
 
 def test_dimension_joins_broadcast(spark, sf_dir):

@@ -1,19 +1,19 @@
-"""Property-based parity: the Spark expression/UDF tiers must agree
-with the pure-Python oracle on arbitrary generated inputs — not just
-the corpus's token shapes (hypothesis drives the generators)."""
+"""Property-based parity: the Spark expression/UDF tiers and the
+Engine-1 kernel must agree with the pure-Python oracle on arbitrary
+generated inputs — not just the corpus's token shapes (hypothesis
+drives the generators)."""
 
 from __future__ import annotations
 
 from decimal import Decimal
 
-import pytest
-from hypothesis import HealthCheck, example, given, settings
+import pyarrow as pa
+from hypothesis import HealthCheck, assume, example, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from pdf_extractor_spark import oracle_ref as orc
+from pdf_extractor_spark.engine1 import kernel as K
 from pdf_extractor_spark.engine2 import pipeline as e2
-from pdf_extractor_spark.functions.brnum import to_float_robust_struct
 
 # Brazilian-ish numeric tokens, plus adversarial shapes the reference's
 # regex tokenizer can produce. ASCII digits only: hypothesis found that
@@ -31,55 +31,114 @@ token_st = st.one_of(
 )
 
 
-@pytest.fixture(scope="module")
-def spark_fn(spark):
-    def run_tokens(tokens: list[str]):
-        df = spark.createDataFrame([(t,) for t in tokens], "tok string")
-        rows = df.select("tok", to_float_robust_struct(F.col("tok")).alias("v")) \
-                 .collect()
-        return {r.tok: (r.v.num, r.v.txt, r.v.is_time) for r in rows}
-
-    return run_tokens
-
-
-@settings(max_examples=20, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@settings(max_examples=200, deadline=None)
 @given(st.lists(token_st, min_size=1, max_size=40, unique=True))
-def test_convert_float_robust_parity(spark_fn, tokens):
-    got = spark_fn(tokens)
+def test_convert_float_robust_parity(tokens):
+    """The Engine-1 kernel's C2 token parser vs the oracle."""
     for t in tokens:
-        want = orc.convert_to_float_robust(t)
-        num, txt, is_time = got[t]
-        if isinstance(want, str):        # HH:MM form
-            assert is_time and txt == want, (t, want, got[t])
-        elif want is None:
-            assert num is None and not is_time, (t, got[t])
-        else:
-            assert not is_time and num == want, (t, want, got[t])
+        assert K.parse_token(t) == orc.convert_to_float_robust(t), t
 
 
-@settings(max_examples=20, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(st.lists(token_st, min_size=1, max_size=40, unique=True))
-def test_token_alphabet_fast_path_parity(spark, tokens):
-    """The translate-based hot path (token_alphabet=True) must agree
-    with the general regex path AND the oracle on every input the
-    numeric-token regex can produce (chars ⊆ [0-9.,:])."""
-    df = spark.createDataFrame([(t,) for t in tokens], "tok string")
-    rows = df.select(
-        "tok",
-        to_float_robust_struct(F.col("tok")).alias("g"),
-        to_float_robust_struct(F.col("tok"), token_alphabet=True).alias("f"),
-    ).collect()
-    for r in rows:
-        assert tuple(r.g) == tuple(r.f), (r.tok, r.g, r.f)
-        want = orc.convert_to_float_robust(r.tok)
-        if isinstance(want, str):
-            assert r.f.is_time and r.f.txt == want
-        elif want is None:
-            assert r.f.num is None and not r.f.is_time
+# ---------------------------------------------------------------------------
+# Engine-1 kernel vs oracle_ref.e1_extract_doc on generated documents
+# ---------------------------------------------------------------------------
+
+_E1_CODES = ["01003601", "01003602", "01017101", "01007301", "01007302",
+             "01009001", "01022001", "01003501", "01007501", "02007501",
+             "09090301", "09090101"]
+_e1_line_st = st.one_of(
+    st.sampled_from([
+        "Tipo da folha: FOLHA NORMAL", "Tipo da folha: 13 SALARIO",
+        "TIPO DA FOLHA: férias", "Tipo da folha: DESCONHECIDA",
+        "Referência: janeiro/2024", "Referencia: 13/2023",
+        "Competência: 03/2022", "Período: xyz/2021", "Data do cálculo: "
+        "05/11/2020", "13 SALÁRIO", "ADIANTAMENTO SALARIAL", "", "  ",
+        "Liquido a receber ==> 1.234,56"]),
+    st.builds(lambda c, toks: " ".join(["P", c, "DESCRICAO", *toks]),
+              st.sampled_from(_E1_CODES),
+              st.lists(st.one_of(token_st, st.just("0,00")), max_size=3)),
+)
+_e1_page_st = st.lists(_e1_line_st, max_size=12).map("\n".join)
+_e1_doc_st = st.builds(lambda pages, tail: "\f".join(pages) + tail,
+                       st.lists(_e1_page_st, min_size=1, max_size=6),
+                       st.sampled_from(["", "\f", "\f\f"]))
+
+
+def _page(*lines: str) -> str:
+    return "\n".join(lines)
+
+
+_FN = ("Tipo da folha: FOLHA NORMAL", "Referência: janeiro/2024")
+_S13 = ("Tipo da folha: 13 SALARIO", "Referência: dezembro/2023")
+E1_SEEDED = [
+    # HH:MM on índice: a plain code, a lone sumable code, an índice rule
+    _page(*_FN, "P 01009001 ADIC 07:15 10,00", "P 01007301 HORAS 06:34 9,00",
+          "P 01003601 PREMIO 05:30 100,00"),
+    # two tipo lines, the first unmatched; an unmatched tipo line alone
+    _page("Tipo da folha: OUTRA", "Tipo da folha: FOLHA NORMAL",
+          "Referência: março/2024", "P 01003501 HORAS 1,5 10,00") + "\f"
+    + _page("Tipo da folha: OUTRA", "Referência: abril/2024",
+            "P 01003501 HORAS 1,5 10,00"),
+    # 13º with 09090301 = 0 and 09090101 != 0
+    _page(*_S13, "F 09090301 SALARIO 0,00", "F 09090101 REMUNERACAO 1.234,56"),
+    # trailing form feed and blank pages
+    _page(*_FN, "F 09090301 SALARIO 2.000,00") + "\f\f  \f",
+    # a rule code on a line with no other number
+    _page(*_FN, "P 01017101 PREMIO PRO", "P 01003501 HORAS EXT"),
+]
+
+
+def _kernel_rows(docs: list[str]) -> list[dict]:
+    batch = pa.RecordBatch.from_pydict(
+        {"url": [f"u{i}" for i in range(len(docs))], "text": docs})
+    return [r for out in K.kernel(iter([batch])) for r in out.to_pylist()]
+
+
+def _oracle_view(i: int, doc: str) -> tuple:
+    got = orc.e1_extract_doc(doc)
+    vals, atts = {}, set()
+    for ft in (K.FOLHA_NORMAL, K.SALARIO_13):
+        for (y, m), res in got[ft].items():
+            vals.update({(f"u{i}", ft, y, m, c): v
+                         for c, v in res["data"].items()})
+            atts.update((f"u{i}", ft, y, m, a["kind"], tuple(a["codes"]),
+                         a.get("col") or a.get("desc"))
+                        for a in res["attention"])
+    # an empty document has no pages, so no metrics row
+    met = got["metrics"]
+    return vals, atts, {f"u{i}": (met["total_pages"], met["ignored"],
+                                  met["no_date"])} if doc else {}
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_e1_doc_st, min_size=1, max_size=4))
+@example(E1_SEEDED)
+def test_e1_kernel_matches_oracle(docs):
+    want_v, want_a, want_m = {}, set(), {}
+    for i, doc in enumerate(docs):
+        try:
+            v, a, m = _oracle_view(i, doc)
+        except TypeError:
+            # the reference's A3 sum raises on an 'HH,MM' operand
+            # (pinned separately in test_engine1); nothing to compare
+            assume(False)
+        want_v.update(v)
+        want_a |= a
+        want_m.update(m)
+    have_v, have_a, have_m = {}, set(), {}
+    for r in _kernel_rows(docs):
+        key = (r["url"], r["folha_type"], r["year"], r["month"])
+        if r["kind"] == K.VALUE_KIND:
+            have_v[(*key, r["excel_col"])] = r["txt"] if r["is_time"] else r["num"]
+        elif r["kind"] == K.METRICS_KIND:
+            have_m[r["url"]] = (r["total_pages"], r["ignored"], r["no_date"])
         else:
-            assert not r.f.is_time and r.f.num == want
+            have_a.add((*key, r["kind"], tuple(r["codes"]),
+                        r["excel_col"] if r["kind"] == "soma_automatica"
+                        else r["description"]))
+    assert have_v == want_v
+    assert have_a == want_a
+    assert have_m == want_m
 
 
 dec_st = st.decimals(min_value=Decimal("-99999999"),
