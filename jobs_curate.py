@@ -50,15 +50,18 @@ the PDF object-stream parse (ops.pdfstream) the same way.
 Resume (--resume): incremental curation over an APPEND-ONLY input
 table (the Common-Crawl shape: new snapshots append pages). Only docs
 missing from state/manifest are extracted and gated; exact dedup
-anti-joins their hashes against state/qualified_hashes; near-dup bands
-are computed for the new batch only and joined against the persisted
-band index, so per-increment work scales with the increment — the
-corpus is never re-banded. Jaccard verification re-reads just the
-candidate docs from the input (extraction re-runs only for those).
-Assumes crawl-ordered ids (new ids > already-processed ids); under
-that ordering an incremental run keeps exactly the docs a batch run
-over the union would keep (pytest-pinned). Requires
---near-dup minhash or none.
+anti-joins their hashes against state/qualified_hashes; near-dup pairs
+come from the batch MinHash plan run over the new batch plus the
+persisted band index (restricted to the buckets the batch touches), so
+per-increment work scales with the increment — the corpus is never
+re-banded. Jaccard verification re-shingles just the old candidate
+docs, read back from extracted/ (front-door modes, so extraction never
+re-runs) or from the input. Requires crawl-ordered ids (new ids >
+already-processed ids): the job checks that the smallest new id is
+above the largest id in state/manifest and otherwise exits non-zero
+before writing anything. Under that ordering an incremental run keeps
+exactly the docs a batch run over the union would keep
+(pytest-pinned). Requires --near-dup minhash or none.
 
 Cap-drift caveat (near_dup_pairs only): the megabucket cap drops LSH
 buckets larger than max_bucket. If a bucket crosses the cap BETWEEN
@@ -70,8 +73,9 @@ removes near-dups the batch cap would have let through. This is a
 documented, deliberate asymmetry: max_bucket exists to bound the
 quadratic verify cost, not to define dedup semantics, and dropping a
 real near-dup the cap would have spared is the conservative side.
-The batch≡incremental pins in tests/test_curate_resume.py exercise
-buckets under the cap — the operating regime.
+The batch≡incremental pins in tests/test_curate_resume.py and
+tests/test_jobs_commit.py exercise buckets under the cap — the
+operating regime.
 """
 
 from __future__ import annotations
@@ -87,9 +91,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from pdf_extractor_spark.ops.curate import (  # noqa: E402
     curate, extract_main_text, extract_pdf_text)
 from pdf_extractor_spark.ops.dedup import (  # noqa: E402
-    band_candidates, cap_megabuckets, jaccard_for_pairs,
-    minhash_band_hashes, minhash_lsh_pairs_with_bands,
-    pick_minhash_shape, simhash_pairs)
+    minhash_lsh_pairs_with_bands, simhash_pairs)
 from pdf_extractor_spark.session import get_spark  # noqa: E402
 from pdf_extractor_spark.sinks.tableio import get_table_io  # noqa: E402
 
@@ -166,10 +168,15 @@ def main() -> None:
     if resuming:
         raw = raw_all.join(manifest.select(F.col("doc_id").alias(orig_id)),
                            orig_id, "left_anti").persist()
-        if raw.limit(1).count() == 0:
+        first_new = raw.agg(F.min(orig_id)).first()[0]
+        if first_new is None:
             print(f"[{run_id}] nothing to process "
                   "(state manifest covers input)")
             return
+        last_done = manifest.agg(F.max("doc_id")).first()[0]
+        if last_done is not None and first_new <= last_done:
+            sys.exit(f"[{run_id}] --resume needs crawl-ordered ids: new id "
+                     f"{first_new} is not above processed id {last_done}")
         old_hashes = io.read_state(spark, "state/qualified_hashes", run_id)
         old_bands = io.read_state(spark, "state/bands", run_id)
     else:
@@ -209,47 +216,19 @@ def main() -> None:
 
     banded = None
     if args.near_dup == "minhash":
-        # the scale-safe single-exchange plan becomes the default once
-        # the corpus outgrows the shared-distinct shingle exchange
-        scale = pick_minhash_shape(n_in)
+        # an increment is the batch plan over the new docs plus the
+        # persisted band index; old candidates are verified from
+        # extracted/ when a front door ran (no re-parse of html/pdf:
+        # every doc is extracted exactly once), else from the input
+        old_docs = None
         if resuming:
-            # band the NEW batch only; candidates come from collisions
-            # within the batch or against the persisted index
-            banded = minhash_band_hashes(
-                docs, id_col=id_col, text_col=text_col).persist()
-            all_bands = (old_bands.unionByName(banded)
-                         if old_bands is not None else banded)
-            # restrict the index to buckets the new batch touches —
-            # untouched buckets cannot yield new candidates, and this
-            # keeps the cap stage proportional to the increment
-            capped = cap_megabuckets(all_bands, touching=banded)
-            new_ids = docs.select(F.col(id_col).alias("doc_id"))
-            capped_new = capped.join(new_ids, "doc_id", "left_semi")
-            cand = band_candidates(capped, right_banded=capped_new)
-            cand = cand.persist()
-            # verify touches candidate docs only. With a front door the
-            # candidates' extracted text is already on disk (this run's
-            # partition + prior runs' — input is append-only and every
-            # doc is extracted exactly once), so read it back instead
-            # of re-parsing html/pdf for the old side.
-            cand_ids = (cand.select(F.col("a").alias(orig_id))
-                        .unionByName(cand.select(F.col("b").alias(orig_id)))
-                        .distinct())
-            if extracted:
-                cand_docs = (io.read(spark, "extracted")
-                             .select("doc_id", "text")
-                             .join(cand_ids.select(
-                                 F.col(orig_id).alias("doc_id")),
-                                 "doc_id", "left_semi"))
-            else:
-                cand_docs = raw_all.join(cand_ids, orig_id, "left_semi")
-            pairs = jaccard_for_pairs(cand_docs, cand, id_col, text_col) \
-                .filter(F.col("jaccard") >= args.threshold)
-        else:
-            pairs, banded = minhash_lsh_pairs_with_bands(
-                docs, id_col=id_col, text_col=text_col,
-                threshold=args.threshold, scale_shape=scale)
-            banded = banded.persist()
+            old_docs = (io.read(spark, "extracted").select("doc_id", "text")
+                        if extracted else raw_all)
+        pairs, banded = minhash_lsh_pairs_with_bands(
+            docs, id_col=id_col, text_col=text_col,
+            threshold=args.threshold, prior_bands=old_bands,
+            prior_docs=old_docs)
+        banded = banded.persist()
     elif args.near_dup == "simhash":
         pairs = simhash_pairs(docs, id_col=id_col, text_col=text_col,
                               max_hamming=args.max_hamming)

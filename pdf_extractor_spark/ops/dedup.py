@@ -8,12 +8,15 @@ SimHash shapes used on Common-Crawl-scale corpora.
 Scale notes:
 * exact dedup — one shuffle on the content hash; skew-free (hashes are
   uniform).
-* MinHash-LSH — shuffles: shingle explode → groupBy(doc) signature
-  (map-side combined), band explode → groupBy(band bucket). The band
-  join is self-equi-join on (band_idx, band_hash): bucket sizes are the
-  skew risk at 10^12 docs (boilerplate shingles) → cap bucket size
-  before pairing (`max_bucket` guard) exactly like production dedup
-  pipelines drop megabuckets.
+* MinHash-LSH — one plan for batch and increment: shingle-hash explode
+  → ONE doc_id exchange feeding both the signature mins and the verify
+  hash sets → band explode → one (band_idx, band_hash) exchange that
+  pairs each bucket → array_intersect verify. Bucket sizes are the skew risk at
+  10^12 docs (boilerplate shingles): a count window drops buckets over
+  `max_bucket` before they are collected, exactly like production
+  dedup pipelines drop megabuckets, so none becomes one array row. An
+  increment is the same plan over the new docs plus the persisted band
+  index restricted to the buckets they touch.
 * SimHash — one groupBy(doc) for the bit-vote signature, then a
   16-bit-chunk bucket join; hamming verify via bit_count(xor).
 """
@@ -22,7 +25,7 @@ from __future__ import annotations
 
 from functools import lru_cache
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # 31-bit Mersenne prime: with h, a, b < 2^31, a*h + b < 2^63 (no ANSI
@@ -163,78 +166,20 @@ def _band_struct_exprs(n_perm: int, bands: int) -> tuple:
     )
 
 
-def _signatures_from_hashed(sh: DataFrame, n_perm: int,
-                            seed: int) -> DataFrame:
-    """(doc_id, h64) rows → n_perm-column signature (one map-side-
-    combinable groupBy; min is duplicate-insensitive so the input may
-    be distinct or raw)."""
-    return sh.groupBy("doc_id").agg(*_signature_agg_exprs(n_perm, seed))
-
-
-def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", k: int = 5,
-                       n_perm: int = 64, seed: int = 42) -> DataFrame:
-    """doc → n_perm-column MinHash signature over word k-shingles.
-
-    One explode + one map-side-combinable groupBy; the per-permutation
-    min is computed from a single base xxhash64 per shingle. min is
-    duplicate-insensitive, so the exploded shingles are not
-    de-duplicated: the map-side partial min shuffles only 64 longs per
-    doc.
-    """
-    sh = hashed_shingle_rows(docs, id_col, text_col, k)
-    return _signatures_from_hashed(sh, n_perm, seed)
-
-
-# Above this corpus size the shared-distinct subtree's corpus-wide
-# (doc_id, shingle) string exchange stops being a good trade (it is
-# faster while the exchange fits — sf0.1: 6.5 s vs 8.9 s — because the
-# verify stage reuses it verbatim via ReusedExchange); past it the
-# single-exchange scale shape is the only plan that survives. Callers
-# that know their corpus size (jobs_curate.py) route through this.
+# Kept for perfbench/compose.py, which passes pick_minhash_shape(n_in)
+# as scale_shape; minhash_lsh_pairs has one plan and picks no shape.
 SCALE_SHAPE_MIN_DOCS = 5_000_000
 
 
 def pick_minhash_shape(n_docs: int) -> bool:
-    """scale_shape selector for `minhash_lsh_pairs`: True once the
-    corpus is too large to exchange its exploded shingle strings."""
+    """Kept for perfbench/compose.py: True above SCALE_SHAPE_MIN_DOCS."""
     return n_docs > SCALE_SHAPE_MIN_DOCS
 
 
-def minhash_band_hashes(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", k: int = 5,
-                        n_perm: int = 64, bands: int = 16,
-                        seed: int = 42) -> DataFrame:
-    """(doc_id, band_idx, band_hash) — the banded LSH index rows for
-    each document. This is the state a resumable curation job persists
-    between runs: an increment computes band hashes for NEW docs only
-    and joins them against the stored index, so near-dup work scales
-    with the increment, not the corpus."""
-    sig = minhash_signatures(docs, id_col, text_col, k, n_perm, seed)
-    band_cols = _band_struct_exprs(n_perm, bands)
-    return (sig.select("doc_id", F.explode(F.array(*band_cols)).alias("b"))
-            .select("doc_id", "b.band_idx", "b.band_hash"))
-
-
-def cap_megabuckets(banded: DataFrame, max_bucket: int = 1000,
-                    touching: DataFrame | None = None) -> DataFrame:
-    """Megabucket guard: identical boilerplate can put millions of docs
-    in one bucket → quadratic pair blowup; cap like production
-    pipelines.
-
-    `touching` (incremental runs): restrict to buckets that contain at
-    least one row of `touching` BEFORE counting. An increment only
-    cares about buckets its new batch collides into — every other
-    bucket of the persisted index can produce no new candidate — so
-    this keeps the cap stage's group-count proportional to the
-    increment's bucket footprint instead of the whole corpus index.
-    Bucket counts are unchanged for surviving buckets (the semi-join
-    keeps every member of a touched bucket), so results are identical
-    to capping the full index and then restricting."""
-    if touching is not None:
-        banded = banded.join(
-            touching.select("band_idx", "band_hash").distinct(),
-            ["band_idx", "band_hash"], "left_semi")
+def cap_megabuckets(banded: DataFrame, max_bucket: int = 1000) -> DataFrame:
+    """Kept for perfbench/compose.py (its candidate-count ratio): the
+    band rows whose (band_idx, band_hash) bucket holds ≤ max_bucket
+    docs."""
     bucket_sizes = banded.groupBy("band_idx", "band_hash").count()
     return banded.join(
         bucket_sizes.filter(F.col("count") <= max_bucket)
@@ -242,13 +187,10 @@ def cap_megabuckets(banded: DataFrame, max_bucket: int = 1000,
         ["band_idx", "band_hash"], "left_semi")
 
 
-def band_candidates(banded: DataFrame,
-                    right_banded: DataFrame | None = None) -> DataFrame:
-    """Distinct (a, b) candidate pairs colliding in some band, a < b.
-    With `right_banded`, pairs are restricted to one side from each
-    input (the incremental old-index × new-batch join)."""
-    left = banded.alias("l")
-    right = (banded if right_banded is None else right_banded).alias("r")
+def band_candidates(banded: DataFrame) -> DataFrame:
+    """Kept for perfbench/compose.py: distinct (a, b) pairs, a < b,
+    colliding in some band."""
+    left, right = banded.alias("l"), banded.alias("r")
     return (
         left.join(right,
                   (F.col("l.band_idx") == F.col("r.band_idx"))
@@ -262,58 +204,38 @@ def band_candidates(banded: DataFrame,
 def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", k: int = 5, n_perm: int = 64,
                       bands: int = 16, threshold: float = 0.8,
-                      seed: int = 42, max_bucket: int = 1000,
-                      scale_shape: bool = False) -> DataFrame:
+                      seed: int = 42, max_bucket: int = 1000) -> DataFrame:
     """MinHash + banded LSH near-duplicate pairs, verified with exact
     shingle-set Jaccard ≥ threshold.
 
-    Returns (a, b, jaccard) with a < b.
-
-    Two plan shapes, identical results:
-
-    * scale_shape=False (default): signature and verify share one
-      distinct-explode subtree → ReusedExchange computes the shingle
-      table once. Fastest measured at sandbox scale (sf0.1: 8.5 s vs
-      11.8 s without the shared distinct, vs 14.3 s for the semi-join
-      verify — candidates here are a large corpus fraction).
-    * scale_shape=True: the 10^12-doc shape. Signatures aggregate the
-      RAW exploded shingles (map-side partial min → the only full
-      exchange carries 64 longs per doc, never shingle strings);
-      verify first semi-joins the corpus down to candidate docs and
-      explodes only those. Correct whenever candidates ≪ corpus —
-      exactly the regime a corpus-wide distinct cannot survive.
-
-    Callers that know the corpus size should pass
-    `scale_shape=pick_minhash_shape(n_docs)` (jobs_curate.py does) so
-    the scale-safe plan is the default above SCALE_SHAPE_MIN_DOCS.
-    """
+    Returns (a, b, jaccard) with a < b. Buckets holding more than
+    `max_bucket` docs yield no pairs. The plan is the one described in
+    `minhash_lsh_pairs_with_bands`."""
     pairs, _ = minhash_lsh_pairs_with_bands(
         docs, id_col, text_col, k, n_perm, bands, threshold, seed,
-        max_bucket, scale_shape)
+        max_bucket)
     return pairs
 
 
 def _bucket_pairs(keyed: DataFrame, key_cols: list[str],
                   max_bucket: int) -> DataFrame:
     """Distinct ordered (a, b) pairs of doc_ids sharing a key, buckets
-    larger than `max_bucket` dropped — ONE keyed exchange: groupBy key
-    → sorted collect_list → size cap → nested-transform pair explode.
-    Replaces the bucket-count + semi-join + self-equi-join shape (three
-    evaluations of the keyed table, two extra exchanges and two sorts)
-    with plain per-bucket array work (guide §2.4: remove shuffles
-    outright). Identical output: every unordered pair within a
-    surviving bucket, a < b, distinct across buckets.
+    larger than `max_bucket` dropped — ONE keyed exchange: a count
+    window over the key drops singleton and oversized buckets row by
+    row, then groupBy key → sorted collect_list → nested-transform pair
+    explode in the window's partitioning. Identical output to the
+    bucket-count + semi-join + self-equi-join shape (every unordered
+    pair within a surviving bucket, a < b, distinct across buckets)
+    without its two extra exchanges and sorts.
 
-    Caveat: the cap filters AFTER collect_list, so an uncapped bucket
-    is materialized as one array row. Right whenever bucket sizes are
-    input-bounded (sandbox corpora, k-gram inverted index with small
-    caps); the extreme-scale LSH path (`scale_shape=True`) keeps the
-    count-then-semi-join capping instead, where a boilerplate
-    megabucket never becomes a single row."""
-    buckets = (keyed.groupBy(*key_cols)
-               .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-               .filter(F.size("ids") <= max_bucket)
-               .filter(F.size("ids") >= 2))
+    The size filter runs BELOW the collect, so an oversized bucket
+    (identical boilerplate putting millions of docs under one key)
+    never becomes one array row."""
+    n = F.count("*").over(Window.partitionBy(*key_cols))
+    buckets = (keyed.withColumn("__n", n)
+               .filter(F.col("__n").between(2, max_bucket))
+               .groupBy(*key_cols)
+               .agg(F.sort_array(F.collect_list("doc_id")).alias("ids")))
     ids = F.col("ids")
     pair_arr = F.flatten(F.transform(
         ids,
@@ -328,47 +250,75 @@ def minhash_lsh_pairs_with_bands(
         docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
         k: int = 5, n_perm: int = 64, bands: int = 16,
         threshold: float = 0.8, seed: int = 42, max_bucket: int = 1000,
-        scale_shape: bool = False) -> tuple[DataFrame, DataFrame]:
-    """`minhash_lsh_pairs` that also returns the uncapped band table —
-    the LSH index rows a resumable job persists as state so the next
-    increment joins new docs against them instead of re-banding the
-    corpus."""
-    sh = hashed_shingle_rows(docs, id_col, text_col, k)
-    band_cols = _band_struct_exprs(n_perm, bands)
-    if not scale_shape:
-        # ONE groupBy(doc_id) computes the 64 signature mins AND the
-        # verify hash set — a single exchange feeds signature, banding
-        # and Jaccard (the old shape paid a distinct exchange plus two
-        # downstream groupBys; measured 5.5 → 4.8 s at sf1.0). min is
-        # duplicate-insensitive and |set| comes from collect_set, so
-        # skipping the pre-distinct changes nothing.
-        doc_tbl = sh.groupBy("doc_id").agg(
-            F.collect_set("h64").alias("hs"),
-            *_signature_agg_exprs(n_perm, seed))
-        sig = doc_tbl.drop("hs")
-        sets = doc_tbl.select("doc_id", "hs", F.size("hs").alias("n"))
-        banded = (sig.select("doc_id",
-                             F.explode(F.array(*band_cols)).alias("b"))
-                  .select("doc_id", "b.band_idx", "b.band_hash"))
-        cand = _bucket_pairs(banded, ["band_idx", "band_hash"], max_bucket)
-        jac = _jaccard_from_sets(sets, cand)
-        return jac.filter(F.col("jaccard") >= threshold), banded
-    # the 10^12-doc shape: the only corpus-wide exchange carries the 64
-    # partial mins per doc (never per-shingle rows); verify re-explodes
-    # candidate docs only (candidates ≪ corpus in this regime). Bucket
-    # capping stays count-then-semi-join here: _bucket_pairs would
-    # materialize each UNCAPPED bucket as one collect_list array, and a
-    # boilerplate megabucket at this scale is a multi-GB row.
-    sig = _signatures_from_hashed(sh, n_perm, seed)
-    banded = (sig.select("doc_id", F.explode(F.array(*band_cols)).alias("b"))
+        scale_shape: bool = False, prior_bands: DataFrame | None = None,
+        prior_docs: DataFrame | None = None) -> tuple[DataFrame, DataFrame]:
+    """`minhash_lsh_pairs` that also returns `docs`' uncapped band rows
+    (doc_id, band_idx, band_hash) — the LSH index a resumable job
+    persists as state.
+
+    The one plan: ONE doc_id exchange of the hashed shingles feeds the
+    n_perm signature mins AND the verify hash sets, `_bucket_pairs`
+    pairs the (band_idx, band_hash) buckets under the `max_bucket`
+    window cap, and `_jaccard_from_sets` verifies candidates.
+
+    Increment: pass the persisted band index as `prior_bands` and a
+    (id_col, text_col) table holding the already-processed docs as
+    `prior_docs`. The index is restricted to the buckets `docs` touch
+    and bucketed together with `docs`' bands; only pairs whose `b` is
+    in `docs` are kept (with crawl-ordered ids these are exactly the
+    pairs a batch run over old ∪ new adds), and only old candidate
+    docs are re-shingled from `prior_docs` for the verify.
+
+    `scale_shape` is kept for perfbench/compose.py, which passes False;
+    True raises ValueError (the scale shape was removed)."""
+    if scale_shape:
+        raise ValueError("minhash_lsh_pairs has one plan; scale_shape "
+                         "must be False")
+    if prior_bands is not None and prior_docs is None:
+        raise ValueError("prior_bands needs prior_docs to verify old "
+                         "candidate docs")
+    # ONE hashpartitioning(doc_id) exchange of the raw shingle-hash rows
+    # feeds both per-doc aggregates: the signature mins (banding) and
+    # the verify hash set. A single groupBy with both would not share
+    # it — column pruning splits it into one aggregate per consumer,
+    # each re-shingling every doc behind its own exchange — so the
+    # exchange is a repartition below both aggregates, which reuse it.
+    # min is duplicate-insensitive and |set| comes from collect_set, so
+    # the rows need no pre-distinct. The explicit non-null id filter is
+    # the one the verify joins infer: without it the subtrees differ
+    # and the exchange is not reused.
+    sh = hashed_shingle_rows(docs.filter(F.col(id_col).isNotNull()),
+                             id_col, text_col, k).repartition("doc_id")
+    sets = _hash_sets(sh)
+    banded = (sh.groupBy("doc_id").agg(*_signature_agg_exprs(n_perm, seed))
+              .select("doc_id", F.explode(
+                  F.array(*_band_struct_exprs(n_perm, bands))).alias("b"))
               .select("doc_id", "b.band_idx", "b.band_hash"))
-    cand = band_candidates(cap_megabuckets(banded, max_bucket))
-    cand_ids = (cand.select(F.col("a").alias("doc_id"))
-                .unionByName(cand.select(F.col("b").alias("doc_id")))
-                .distinct())
-    verify_sh = sh.join(cand_ids, "doc_id", "left_semi").distinct()
-    jac = _jaccard_from_hashed(verify_sh, cand)
+    key = ["band_idx", "band_hash"]
+    if prior_bands is None:
+        cand = _bucket_pairs(banded, key, max_bucket)
+    else:
+        touched = prior_bands.join(banded.select(*key).distinct(), key,
+                                   "left_semi")
+        cand = (_bucket_pairs(touched.unionByName(banded), key, max_bucket)
+                .join(sets.select(F.col("doc_id").alias("b")), "b",
+                      "left_semi"))
+        old_ids = (cand.select(F.col("a").alias("doc_id")).distinct()
+                   .join(sets, "doc_id", "left_anti"))
+        old_docs = prior_docs.join(
+            old_ids.select(F.col("doc_id").alias(id_col)), id_col,
+            "left_semi")
+        sets = sets.unionByName(_hash_sets(
+            hashed_shingle_rows(old_docs, id_col, text_col, k)))
+    jac = _jaccard_from_sets(sets, cand)
     return jac.filter(F.col("jaccard") >= threshold), banded
+
+
+def _hash_sets(sh: DataFrame) -> DataFrame:
+    """(doc_id, h64) rows → (doc_id, hs, n): each doc's shingle-hash
+    set and its size."""
+    return (sh.groupBy("doc_id").agg(F.collect_set("h64").alias("hs"))
+            .withColumn("n", F.size("hs")))
 
 
 def _jaccard_from_hashed(sh: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -397,14 +347,6 @@ def _jaccard_from_sets(sets: DataFrame, pairs: DataFrame) -> DataFrame:
                 "jaccard",
                 F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")))
             .select("a", "b", "jaccard"))
-
-
-def jaccard_for_pairs(docs: DataFrame, pairs: DataFrame,
-                      id_col: str = "doc_id", text_col: str = "text",
-                      k: int = 5) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate (a, b) pairs."""
-    sh = hashed_shingle_rows(docs, id_col, text_col, k).distinct()
-    return _jaccard_from_hashed(sh, pairs)
 
 
 def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",

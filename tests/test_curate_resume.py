@@ -5,41 +5,18 @@ Invariant: over an append-only input with crawl-ordered ids (new ids >
 already-processed ids), run₁(old) + increment(new | state) keeps
 exactly the docs batch(old ∪ new) keeps — gates are per-doc, exact
 dedup anti-joins the increment against the persisted gate-surviving
-hashes, and near-dup candidates come from the persisted LSH band index
-joined with the new batch's bands."""
+hashes, and near-dup pairs come from the batch MinHash plan run over
+the new batch plus the persisted LSH band index."""
 
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.ops.curate import (curate_corpus,
                                             curation_stage_counts,
                                             qualified_hashes)
-from pdf_extractor_spark.ops.dedup import (band_candidates,
-                                           cap_megabuckets,
-                                           jaccard_for_pairs,
-                                           minhash_band_hashes,
-                                           minhash_lsh_pairs)
+from pdf_extractor_spark.ops.dedup import (minhash_lsh_pairs,
+                                           minhash_lsh_pairs_with_bands)
 
 SPLIT = 300
-
-
-def _incremental_pairs(docs_all, docs_new, threshold=0.8):
-    """The increment's near-dup pair plan: old index ∪ new bands,
-    megabucket cap over the union, candidates restricted to new-batch
-    collisions, Jaccard verify over candidate docs only."""
-    old_bands = minhash_band_hashes(
-        docs_all.filter(F.col("doc_id") < SPLIT))   # "persisted" state
-    new_bands = minhash_band_hashes(docs_new)
-    capped = cap_megabuckets(old_bands.unionByName(new_bands),
-                             touching=new_bands)
-    capped_new = capped.join(docs_new.select("doc_id"),
-                             "doc_id", "left_semi")
-    cand = band_candidates(capped, right_banded=capped_new)
-    cand_ids = (cand.select(F.col("a").alias("doc_id"))
-                .unionByName(cand.select(F.col("b").alias("doc_id")))
-                .distinct())
-    cand_docs = docs_all.join(cand_ids, "doc_id", "left_semi")
-    return (jaccard_for_pairs(cand_docs, cand)
-            .filter(F.col("jaccard") >= threshold))
 
 
 def test_incremental_equals_batch(spark, sf_dir):
@@ -53,12 +30,13 @@ def test_incremental_equals_batch(spark, sf_dir):
                   curate_corpus(docs, near_dup_pairs=batch_pairs)
                   .collect()}
 
-    old_pairs = minhash_lsh_pairs(old, threshold=0.8)
+    old_pairs, old_bands = minhash_lsh_pairs_with_bands(old, threshold=0.8)
     kept_old = {r.doc_id for r in
                 curate_corpus(old, near_dup_pairs=old_pairs).collect()}
 
     seen = qualified_hashes(old)
-    incr_pairs = _incremental_pairs(docs, new)
+    incr_pairs, _ = minhash_lsh_pairs_with_bands(
+        new, threshold=0.8, prior_bands=old_bands, prior_docs=docs)
     kept_new = {r.doc_id for r in
                 curate_corpus(new, near_dup_pairs=incr_pairs,
                               seen_hashes=seen).collect()}
@@ -84,9 +62,10 @@ def test_incremental_stage_counts_sum_to_batch(spark, sf_dir):
 
     batch = counts(curation_stage_counts(
         docs, near_dup_pairs=minhash_lsh_pairs(docs, threshold=0.8)))
-    c_old = counts(curation_stage_counts(
-        old, near_dup_pairs=minhash_lsh_pairs(old, threshold=0.8)))
-    incr_pairs = _incremental_pairs(docs, new)
+    old_pairs, old_bands = minhash_lsh_pairs_with_bands(old, threshold=0.8)
+    c_old = counts(curation_stage_counts(old, near_dup_pairs=old_pairs))
+    incr_pairs, _ = minhash_lsh_pairs_with_bands(
+        new, threshold=0.8, prior_bands=old_bands, prior_docs=docs)
     seen = qualified_hashes(old)
     c_new = counts(curation_stage_counts(
         new, near_dup_pairs=incr_pairs, seen_hashes=seen))

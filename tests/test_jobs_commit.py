@@ -25,8 +25,8 @@ VOLATILE = {"run_id", "audit_ts", "ts", "partition_id"}
 EXTRACT_TABLES = ["proventos", "insalubridade", "cartoes",
                   "horas_trabalhadas", "e1_target", "e1_attention",
                   "audit_e1", "audit_e2", "manifest"]
-CURATE_TABLES = ["curated", "stage_counts", "audit", "state/manifest",
-                 "state/qualified_hashes"]
+CURATE_TABLES = ["curated", "near_dup_pairs", "stage_counts", "audit",
+                 "state/manifest", "state/qualified_hashes", "state/bands"]
 
 
 class Crash(RuntimeError):
@@ -125,11 +125,8 @@ def test_curate_increment_retry_equals_clean_increment(spark, run_job,
     docs.write.parquet(full)
 
     def curate(out, documents, run_id, *flags, crash_before=None):
-        # no near-dup stage: a MinHash increment takes ~25 s at 4 cores,
-        # and the commit protocol is the same for every table
         run_job(jobs_curate, "--documents", documents, "--out", str(out),
-                "--run-id", run_id, "--near-dup", "none", *flags,
-                crash_before=crash_before)
+                "--run-id", run_id, *flags, crash_before=crash_before)
 
     clean_out, crash_out = tmp_path / "clean", tmp_path / "crash"
     curate(clean_out, first, "c1")
@@ -138,10 +135,38 @@ def test_curate_increment_retry_equals_clean_increment(spark, run_job,
     clean = _tables(spark, clean_out, CURATE_TABLES)
     assert all(clean.values()), "every table holds rows"
 
+    # the first run's pairs plus the increment's are a batch run's pairs
+    batch_out = tmp_path / "batch"
+    curate(batch_out, full, "b1")
+    pairs = ["near_dup_pairs"]
+    assert _tables(spark, batch_out, pairs) == _tables(spark, clean_out, pairs)
+
     # crash after curated/ (and the audit tables), before state/ commits
     curate(crash_out, full, "c2", "--resume", crash_before="state/manifest")
     curate(crash_out, full, "c2", "--resume")
     assert _tables(spark, crash_out, CURATE_TABLES) == clean
+
+
+def test_curate_resume_rejects_ids_below_the_manifest(spark, run_job,
+                                                     tmp_path):
+    """--resume assumes crawl-ordered ids; new ids at or below the
+    manifest's largest id exit non-zero before anything is written."""
+    docs = datagen.documents_df(spark, 300, partitions=2)
+    late, full = str(tmp_path / "docs_late"), str(tmp_path / "docs_full")
+    docs.filter("doc_id >= 200").write.parquet(late)
+    docs.write.parquet(full)
+    out = tmp_path / "out"
+
+    def curate(documents, run_id, *flags):
+        run_job(jobs_curate, "--documents", documents, "--out", str(out),
+                "--run-id", run_id, "--near-dup", "none", *flags)
+
+    curate(late, "c1")
+    with pytest.raises(SystemExit) as exc:
+        curate(full, "c2", "--resume")
+    assert exc.value.code not in (0, None)
+    assert list(out.glob("**/run_id=c1"))
+    assert not list(out.glob("**/run_id=c2"))
 
 
 def test_extract_job_minutes_mode_matches_writer_oracle(spark, run_job,

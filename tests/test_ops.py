@@ -48,29 +48,49 @@ def test_minhash_lsh_finds_planted_near_dups(docs):
     assert all(p.jaccard > 0.6 for p in near_hits)
 
 
-def test_minhash_scale_shape_identical_results(docs):
-    """scale_shape only changes the plan (raw-explode signatures +
-    semi-join verify) — pairs and jaccard values must be identical."""
-    base = {(p.a, p.b): p.jaccard
-            for p in dedup.minhash_lsh_pairs(docs, threshold=0.6).collect()}
-    scaled = {(p.a, p.b): p.jaccard
-              for p in dedup.minhash_lsh_pairs(
-                  docs, threshold=0.6, scale_shape=True).collect()}
-    assert base == scaled
-
-
 def test_minhash_shape_picker():
-    """jobs_curate selects the plan shape from corpus size: the shared
-    shingle-distinct exchange is a win only while it fits; past the
-    bound the single-exchange scale shape must be the default."""
+    """pick_minhash_shape (kept for perfbench/compose.py) is True only
+    above SCALE_SHAPE_MIN_DOCS."""
     assert dedup.pick_minhash_shape(500) is False
     assert dedup.pick_minhash_shape(dedup.SCALE_SHAPE_MIN_DOCS) is False
     assert dedup.pick_minhash_shape(dedup.SCALE_SHAPE_MIN_DOCS + 1) is True
     assert dedup.pick_minhash_shape(10**12) is True
-    # and jobs_curate.py actually routes through the picker
-    import pathlib
-    src = pathlib.Path("jobs_curate.py").read_text()
-    assert "pick_minhash_shape(n_in)" in src
+
+
+def test_bucket_cap_drops_whole_oversized_buckets(spark):
+    """k identical docs share every bucket: a cap of k-1 drops it (no
+    pairs), a cap of k keeps all k(k-1)/2 pairs — for a batch call, for
+    an increment whose old side holds part of the bucket, and for the
+    n-gram inverted index (its cap is 100)."""
+    from itertools import combinations
+
+    text = "the same boilerplate sentence repeated on every page of the site"
+
+    def same_docs(ids):
+        return spark.createDataFrame([(i, text) for i in ids],
+                                     "doc_id long, text string")
+
+    def pairs(df):
+        return {(r.a, r.b) for r in df.collect()}
+
+    k = 6
+    docs = same_docs(range(k))
+    assert pairs(dedup.minhash_lsh_pairs(docs, max_bucket=k - 1)) == set()
+    assert pairs(dedup.minhash_lsh_pairs(docs, max_bucket=k)) == \
+        set(combinations(range(k), 2))
+
+    _, old_bands = dedup.minhash_lsh_pairs_with_bands(same_docs(range(3)))
+    for cap, want in [(k - 1, set()),
+                      (k, {(a, b) for a, b in combinations(range(k), 2)
+                           if b >= 3})]:
+        incr, _ = dedup.minhash_lsh_pairs_with_bands(
+            same_docs(range(3, k)), max_bucket=cap, prior_bands=old_bands,
+            prior_docs=docs)
+        assert pairs(incr) == want, cap
+
+    assert pairs(dedup.ngram_jaccard_pairs(same_docs(range(101)))) == set()
+    assert pairs(dedup.ngram_jaccard_pairs(same_docs(range(100)))) == \
+        set(combinations(range(100), 2))
 
 
 def test_simhash_finds_planted_near_dups(docs):

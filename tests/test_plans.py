@@ -139,16 +139,36 @@ def test_boilerplate_flatten_shuffle_free(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_minhash_scale_shape_single_exchange(spark, sf_dir):
-    """The signature aggregation must be the one-exchange shape:
-    map-side partial min, then a single hashpartitioning(doc_id)
-    exchange carrying 64 longs per doc — never a full-width distinct
-    of shingle strings."""
+def test_minhash_one_pair_plan(spark, sf_dir):
+    """The MinHash pair plan: exactly one hashpartitioning(doc_id)
+    exchange of the shingle hashes, feeding both the signature mins and
+    the verify hash sets (reused, never re-shingled); the bucket step
+    is keyed on (band_idx, band_hash) and its size filter sits below
+    the collect aggregate, so an oversized bucket is never one row."""
     from pdf_extractor_spark.ops import dedup
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    lean = dedup.minhash_signatures(docs)
-    assert _plan(lean).count("Exchange hashpartitioning") == 1
+    df = dedup.minhash_lsh_pairs(docs)
+    df.collect()
+    final = _plan(df).split("Initial Plan")[0]
+    lines = final.splitlines()
+    doc_ex = [ln for ln in lines if "Exchange hashpartitioning(doc_id" in ln]
+    assert len([ln for ln in doc_ex if "ReusedExchange" not in ln]) == 1
+    assert any("ReusedExchange" in ln for ln in doc_ex)
+    assert any("collect_set(h64" in ln for ln in lines)
+    assert any("min(" in ln and "keys=[doc_id" in ln for ln in lines)
+
+    def at(pred):
+        return next(i for i, ln in enumerate(lines) if pred(ln))
+
+    collect = at(lambda ln: "functions=[collect_list(doc_id" in ln
+                 and "keys=[band_idx" in ln and "band_hash" in ln)
+    window = at(lambda ln: "Window [count(1)" in ln
+                and "band_idx" in ln and "band_hash" in ln)
+    size_filter = at(lambda ln: "Filter" in ln and "__n" in ln)
+    # a child prints below its parent: filter and window are under the
+    # collect
+    assert collect < size_filter < window
 
 
 def test_contamination_no_corpus_exchange_before_join(spark, sf_dir):
