@@ -6,12 +6,14 @@
         [--minutes-mode]
 
 Stages (north-rule shape):
-  read pages table → resume filter (manifest anti-join) →
-  Engine-1 (per-document Arrow line/regex kernel, persisted once) +
-  Engine-2 (Arrow layout kernel, vacation adjustment fused) → one
-  grouped pass building the four output series tables →
-  fill-if-empty MERGE into the keyed target →
-  audit/lineage tables → manifest, written last.
+  read pages table (or raw PDF bytes) → resume filter (manifest
+  anti-join) → one per-document Arrow pass (`pdf_extractor_spark/
+  docpass.py`: the PDF front door with --pdf-col, Engine 1's
+  line/regex kernel and Engine 2's layout kernel with the vacation
+  adjustment fused), persisted once → one grouped pass building the
+  four output series tables → fill-if-empty MERGE into the keyed
+  target → audit/lineage tables → manifest, written last. Every
+  table is a projection of those two persisted frames.
 
 Outputs other than the keyed target commit through the run-keyed
 protocol in `sinks/tableio.py`, so a crashed run retried under its own
@@ -32,6 +34,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from pdf_extractor_spark import docpass  # noqa: E402
 from pdf_extractor_spark.engine1 import pipeline as e1  # noqa: E402
 from pdf_extractor_spark.engine2 import pipeline as e2  # noqa: E402
 from pdf_extractor_spark.engine2.kernel import MAX_BLOCK_CARRY  # noqa: E402
@@ -76,10 +79,11 @@ def main() -> None:
     ap.add_argument("--pdf-col", default=None,
                     help="treat --pages as (url, <col> binary) of raw PDF "
                          "bytes: the from-scratch object-stream parser "
-                         "(ops/pdfstream.parse_pdf_layout) extracts word "
-                         "boxes + page text into the pages-table contract "
-                         "before both engines run — the reference's "
-                         "headline path, end-to-end from bytes")
+                         "(ops/pdfstream) extracts word boxes + page text "
+                         "in the same per-document pass that runs both "
+                         "engines, and audit_parse records its counters — "
+                         "the reference's headline path, end-to-end from "
+                         "bytes")
     ap.add_argument("--table-format", choices=["parquet", "iceberg"],
                     default="parquet",
                     help="parquet = snapshot dirs + version-hint pointer "
@@ -110,28 +114,26 @@ def main() -> None:
     done = io.read_state(spark, "manifest", run_id) if args.resume else None
     resuming = done is not None
 
-    pages = spark.read.parquet(args.pages)
+    raw = spark.read.parquet(args.pages)
     if resuming:
         # filter on raw input first: already-done documents are never
-        # parsed (the front door below is the expensive stage)
-        pages = pages.join(done.select("url"), "url", "left_anti")
-    if args.pdf_col:
-        from pdf_extractor_spark.ops.pdfstream import parse_pdf_layout
-
-        # bytes front door: scan → mapInPandas, zero exchanges; emits
-        # the same (url, html=WBX2 word boxes, text) contract the
-        # synthetic pages table carries, so both engines are unchanged
-        pages = parse_pdf_layout(pages, pdf_col=args.pdf_col)
-    pages = pages.persist()
-    if pages.limit(1).count() == 0:
+        # parsed (the document pass below is the expensive stage)
+        raw = raw.join(done.select("url"), "url", "left_anti")
+    # front door + Engine 1 + Engine 2 in one Python pass per document;
+    # every table below except the salted path's is a projection of its
+    # persisted long table
+    long_all = docpass.extract(raw, pdf_col=args.pdf_col,
+                               engine2=not args.salted_max_pages).persist()
+    docs = docpass.doc_rows(long_all)
+    # one count materialises the pass and answers "anything to do?"
+    n = docs.count()
+    if n == 0:
         print(f"[{run_id}] nothing to process (resume manifest covers input)")
         return
 
     # ---- Engine 1 ------------------------------------------------------
-    # one kernel pass; e1_target, e1_attention and audit_e1 are
-    # projections of its persisted long table
-    e1_long = e1.extract_long(pages).persist()
-    e1_values, e1_attention, e1_metrics = e1.split_long(e1_long)
+    e1_values, e1_attention, e1_metrics = e1.split_long(
+        docpass.e1_long(long_all))
     e1_flat = e1_values.select(
         "url", "folha_type", "year", "month", "excel_col",
         F.coalesce(F.col("value")["txt"],
@@ -151,10 +153,15 @@ def main() -> None:
     if args.salted_max_pages:
         from pdf_extractor_spark.engine2.salted import extract_ficha_salted
 
-        long_df = extract_ficha_salted(pages, max_pages=args.salted_max_pages)
+        pages = raw
+        if args.pdf_col:
+            from pdf_extractor_spark.ops.pdfstream import parse_pdf_layout
+
+            pages = parse_pdf_layout(raw, pdf_col=args.pdf_col)
+        long_df = extract_ficha_salted(
+            pages, max_pages=args.salted_max_pages).persist()
     else:
-        long_df = e2.extract_ficha(pages, adjust_vacation=True)
-    long_df = long_df.persist()
+        long_df = docpass.e2_long(long_all)
     # the four series tables are projections of one grouped pass
     built = e2.build_series(e2.values_table(long_df), args.start, args.end,
                             SERIES.values(),
@@ -167,22 +174,19 @@ def main() -> None:
               "audit_e2": e2.metrics_table(long_df)}
     if args.pdf_col:
         # parse-level lineage (north-star metric triple: pages parsed,
-        # decode failures, word/span counts) — straight off the cached
-        # front-door output, per document + partition
-        audits["audit_parse"] = pages.select(
-            "url", "n_pages", "n_words", "decode_failures")
+        # decode failures, word counts), one row per input document
+        audits["audit_parse"] = docs
     for name, df in audits.items():
         io.write_run(audit.build_audit(df, run_id), name, run_id, True)
 
     # manifest — written LAST, so a crash anywhere above leaves the run
     # unrecorded and re-runnable under the same run_id
-    n = pages.count()
-    urls = manifest_rows(pages.select("url"))
+    urls = manifest_rows(docs.select("url"))
     if resuming:
-        # Cut lineage BEFORE writing: `pages` reads the manifest (the
-        # anti-join above), and a plan must not read the table its own
-        # write replaces; the write also invalidates caches over that
-        # path (see the same cut in jobs_curate.py)
+        # Cut lineage BEFORE writing: the document pass reads the
+        # manifest (the anti-join above), and a plan must not read the
+        # table its own write replaces; the write also invalidates
+        # caches over that path (see the same cut in jobs_curate.py)
         urls = urls.localCheckpoint()
     io.write_run(urls, "manifest", run_id, resuming)
     print(f"[{run_id}] processed {n} documents → {out}")

@@ -39,7 +39,7 @@ VALUE_KIND = "value"
 METRICS_KIND = "__metrics__"
 
 # (name, Spark type, Arrow type) of every kernel output column
-_FIELDS = [
+E1_FIELDS = [
     ("url", "string", pa.string()),
     ("kind", "string", pa.string()),
     ("folha_type", "string", pa.string()),
@@ -57,8 +57,8 @@ _FIELDS = [
     ("folha_normal_pages", "bigint", pa.int64()),
     ("salario13_pages", "bigint", pa.int64()),
 ]
-E1_LONG_SCHEMA = ", ".join(f"{n} {t}" for n, t, _ in _FIELDS)
-_ARROW_SCHEMA = pa.schema([(n, t) for n, _, t in _FIELDS])
+E1_LONG_SCHEMA = ", ".join(f"{n} {t}" for n, t, _ in E1_FIELDS)
+_ARROW_SCHEMA = pa.schema([(n, t) for n, _, t in E1_FIELDS])
 
 # a parsed token: float, 'HH,MM' string, or None (reference C2)
 Value = Optional[Union[float, str]]
@@ -268,7 +268,7 @@ def extract_page(page: str, folha_type: str) -> tuple[dict, list]:
 # ---------------------------------------------------------------------------
 
 def extract_doc(url: str, text: str) -> list[tuple]:
-    """One document → its long rows (``_FIELDS`` order): the winning
+    """One document → its long rows (``E1_FIELDS`` order): the winning
     page's values and attention per (folha_type, year, month), then the
     metrics row."""
     pages = text.split("\f")
@@ -307,7 +307,7 @@ def extract_doc(url: str, text: str) -> list[tuple]:
 
 
 def _batch(rows: list[tuple]) -> pa.RecordBatch:
-    cols = list(zip(*rows)) if rows else [()] * len(_FIELDS)
+    cols = list(zip(*rows)) if rows else [()] * len(E1_FIELDS)
     return pa.RecordBatch.from_arrays(
         [pa.array(c, type=t) for c, t in zip(cols, _ARROW_SCHEMA.types)],
         schema=_ARROW_SCHEMA)

@@ -10,9 +10,11 @@ Inner loops are deliberately scalar Python over ~10-word line groups
 numpy is used only where whole-page vector math wins.
 
 Execution shape: the pages table holds ONE ROW PER DOCUMENT, so the
-kernel runs under ``mapInPandas`` — embarrassingly parallel, zero
-shuffle. Cross-page state (G2/G5) never crosses documents, so it lives
-entirely inside the per-document call. At 100 TB the only skew risk is
+kernel runs per document — under ``mapInPandas`` in
+``pipeline.extract_ficha``, or inside the extraction job's document pass
+(``docpass.py``) — embarrassingly parallel, zero shuffle. Cross-page
+state (G2/G5) never crosses documents, so it lives entirely inside the
+per-document call. At 100 TB the only skew risk is
 a single giant document serializing one task; the scan partitioning
 (`maxPartitionBytes`) bounds rows per task, and oversized documents
 can be split into page-range sub-rows with a carry-state handoff pass
@@ -30,9 +32,9 @@ import re
 from decimal import Decimal
 from typing import Iterator
 
-import pandas as pd
-
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 
 from ..oracle_ref import e2_person_name  # shared scalar; test-parity critical
 from ..payload import decode_layout_columnar
@@ -66,13 +68,21 @@ MONTH_MAP = {
     "outubro": 10, "novembro": 11, "dezembro": 12,
 }
 
-E2_LONG_SCHEMA = (
-    "url string, code string, year int, month int, value string, "
-    "pages int, decode_failures int, conflicts int, carry_expired int, "
-    "person string"
-)
-
-E2_LONG_COLS = [c.split()[0] for c in E2_LONG_SCHEMA.split(", ")]
+# (name, Spark type, Arrow type) of every kernel output column
+E2_FIELDS = [
+    ("url", "string", pa.string()),
+    ("code", "string", pa.string()),
+    ("year", "int", pa.int32()),
+    ("month", "int", pa.int32()),
+    ("value", "string", pa.string()),
+    ("pages", "int", pa.int32()),
+    ("decode_failures", "int", pa.int32()),
+    ("conflicts", "int", pa.int32()),
+    ("carry_expired", "int", pa.int32()),
+    ("person", "string", pa.string()),
+]
+E2_LONG_SCHEMA = ", ".join(f"{n} {t}" for n, t, _ in E2_FIELDS)
+E2_LONG_COLS = [n for n, _, _ in E2_FIELDS]
 
 METRICS_CODE = "__metrics__"
 
@@ -469,9 +479,11 @@ def finish_doc(url: str, events: list, pages: int, decode_failures: int,
     return rows, metrics
 
 
-def _extract_doc(url: str, html, text: str,
-                 adjust_vacation: bool = False) -> tuple[list, tuple]:
-    """One document → (value rows, metrics row-values)."""
+def extract_doc(url: str, html, text: str,
+                adjust_vacation: bool = False) -> tuple[list, tuple]:
+    """One document's layout payload and text → (value rows, metrics
+    row), both in ``E2_FIELDS`` order. Only the first page of `text`
+    is read (the person-name scan)."""
     decode_failures = 0
     try:
         page_h, pages = decode_pages_fast(html)
@@ -539,7 +551,7 @@ def make_extract_kernel(adjust_vacation: bool = False):
         for pdf in batches:
             out_rows: list = []
             for url, html, text in zip(pdf["url"], pdf["html"], pdf["text"]):
-                rows, metrics = _extract_doc(url, html, text, adjust_vacation)
+                rows, metrics = extract_doc(url, html, text, adjust_vacation)
                 out_rows.extend(rows)
                 out_rows.append(metrics)
             yield pd.DataFrame(out_rows, columns=E2_LONG_COLS)

@@ -32,21 +32,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.brnum import convert_minutes, format_decimal
+from ..ops.layout import rebalance_narrow
 from .kernel import E2_LONG_SCHEMA, METRICS_CODE, make_extract_kernel
 
 
-def extract_ficha(pages_df: DataFrame, repartition: bool | None = None,
+def extract_ficha(pages_df: DataFrame, repartition: bool = True,
                   adjust_vacation: bool = False) -> DataFrame:
     """pages table → long extraction rows (+ per-doc __metrics__ rows).
 
-    Shuffle-free in the normal case: one input row per document, straight
-    scan → mapInPandas kernel (the 100 TB plan shape — payload bytes
-    never shuffle). `repartition=None` auto-inserts one round-robin
-    exchange only when the scan yields fewer partitions than cores
-    (tiny local corpora); it also evens long-tail document-size skew.
-    For truly oversized single documents use
-    engine2.salted.extract_ficha_salted (page-range split + exact
-    carry-state handoff).
+    Shuffle-free in the normal case: one input row per document, scan →
+    mapInPandas kernel (the 100 TB plan shape — payload bytes never
+    shuffle). The input goes through ``ops.layout.rebalance_narrow``,
+    the narrow-input policy Engine 1 uses: one round-robin exchange
+    only for an input the optimizer proves small, so a tiny local
+    corpus still feeds every core. `repartition=False` skips it (a
+    streaming plan takes no round-robin exchange). For truly oversized
+    single documents use engine2.salted.extract_ficha_salted (page-range
+    split + exact carry-state handoff).
 
     `adjust_vacation=True` applies the A6 adjustment in the kernel's
     per-document finisher (zero extra shuffles; byte-identical to
@@ -61,11 +63,8 @@ def extract_ficha(pages_df: DataFrame, repartition: bool | None = None,
         "url", "html",
         F.substring_index(F.col("text"), "\f", 1).alias("text"),
     ).filter(F.length("html") > 0)
-    n_part = pages_df.sparkSession.sparkContext.defaultParallelism
-    if repartition is None:
-        repartition = df.rdd.getNumPartitions() < n_part
     if repartition:
-        df = df.repartition(n_part)
+        df = rebalance_narrow(df)
     return df.mapInPandas(make_extract_kernel(adjust_vacation),
                           schema=E2_LONG_SCHEMA)
 

@@ -139,9 +139,9 @@ def _parse_literal_string(buf: bytes, i: int) -> tuple[bytes, int]:
             if e in _STR_ESC:
                 out += _STR_ESC[e]
                 j += 2
-            elif e.isdigit():                   # octal, up to 3 digits
+            elif e and e in b"01234567":        # octal, up to 3 digits
                 k = j + 1
-                while k < min(j + 4, n) and buf[k:k + 1].isdigit():
+                while k < min(j + 4, n) and buf[k:k + 1] in b"01234567":
                     k += 1
                 out.append(int(buf[j + 1:k], 8) & 0xFF)
                 j = k
@@ -1330,7 +1330,10 @@ def _tokenize_content(buf: bytes):
                 else:
                     yield ("arr", arr)
         elif lg == "dict":                      # inline dict (e.g. BDC)
-            _, i = _parse_value(buf, m.end() - 2)
+            try:
+                _, i = _parse_value(buf, m.end() - 2)
+            except ValueError:                  # malformed: skip the '<<'
+                i = m.end()
         elif lg == "hex":
             s, i = _parse_hex_string(buf, m.end() - 1)
             if arr_stack:
@@ -1827,25 +1830,27 @@ def parse_pdf_layout(df: DataFrame, pdf_col: str = "pdf",
     runs the reference's headline Ficha Financeira extraction directly
     from PDF bytes. Plan shape: scan → mapInPandas, zero exchanges —
     same scale contract as the text front door."""
-    from ..payload import encode_layout
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            cols: dict[str, list] = {f.name: []
-                                     for f in LAYOUT_SCHEMA.fields}
-            for key, raw in zip(pdf[key_col], pdf[pdf_col]):
-                parsed = parse_pdf_layout_doc(
-                    bytes(raw) if raw is not None else b"")
-                pages = parsed["pages"]
-                words_pages = [p[0] for p in pages]
-                cols["url"].append(key)
-                cols["html"].append(
-                    encode_layout(parsed["height"], words_pages)
-                    if pages else b"")
-                cols["text"].append("\f".join(p[1] for p in pages))
-                cols["n_pages"].append(len(pages))
-                cols["n_words"].append(sum(len(w) for w in words_pages))
-                cols["decode_failures"].append(parsed["decode_failures"])
-            yield pd.DataFrame(cols)
+            yield pd.DataFrame(
+                [(key, *layout_row(raw))
+                 for key, raw in zip(pdf[key_col], pdf[pdf_col])],
+                columns=LAYOUT_SCHEMA.names)
 
     return df.select(key_col, pdf_col).mapInPandas(run, LAYOUT_SCHEMA)
+
+
+def layout_row(raw: bytes | None) -> tuple[bytes, str, int, int, int]:
+    """One document's raw PDF bytes (None reads as empty) → its
+    pages-table row after the url: (html = WBX2 payload, b"" when no
+    page parsed; text = page texts joined with form-feeds; n_pages;
+    n_words; decode_failures). `parse_pdf_layout` and the extraction
+    job's document pass (`docpass.py`) both build rows here."""
+    from ..payload import encode_layout
+
+    parsed = parse_pdf_layout_doc(bytes(raw) if raw is not None else b"")
+    pages = parsed["pages"]
+    words_pages = [p[0] for p in pages]
+    html = encode_layout(parsed["height"], words_pages) if pages else b""
+    return (html, "\f".join(p[1] for p in pages), len(pages),
+            sum(len(w) for w in words_pages), parsed["decode_failures"])

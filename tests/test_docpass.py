@@ -1,0 +1,83 @@
+"""The extraction job's document pass (`docpass.extract`) equals the
+staged path it replaces: front door (`parse_pdf_layout`) → Engine 1
+(`e1.extract_long`) and Engine 2 (`e2.extract_ficha(adjust_vacation=
+True)`), row for row, over PDF bytes and over a pages table, hostile
+rows included."""
+
+from __future__ import annotations
+
+import pytest
+
+from pdf_extractor_spark import datagen, docpass
+from pdf_extractor_spark.engine1 import pipeline as e1
+from pdf_extractor_spark.engine2 import pipeline as e2
+from pdf_extractor_spark.ops.pdfstream import parse_pdf_layout
+
+
+def _rows(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _assert_equal(staged_e1, staged_e2, long_all):
+    got_e1, got_e2 = docpass.e1_long(long_all), docpass.e2_long(long_all)
+    assert got_e1.columns == staged_e1.columns
+    assert got_e2.columns == staged_e2.columns
+    want_e1, want_e2 = _rows(staged_e1), _rows(staged_e2)
+    assert want_e1 and want_e2
+    assert _rows(got_e1) == want_e1
+    assert _rows(got_e2) == want_e2
+
+
+@pytest.fixture(scope="module")
+def pdfs(spark):
+    rows = []
+    for i in range(40):
+        r = datagen.gen_row(42, i)
+        if "ficha" in r["url"]:
+            rows.append((r["url"], datagen.gen_e2_pdf_bytes(42, i)))
+        elif "folha" in r["url"] and len(rows) % 3 == 0:
+            # folha text rendered as PDF: Engine 1 reads parsed text
+            rows.append((r["url"], datagen.gen_pdf_bytes(i, r["text"])))
+    whole = rows[0][1]
+    rows += [("synth://bad/truncated", whole[:len(whole) // 2]),
+             ("synth://bad/empty", b""), ("synth://bad/null", None)]
+    return spark.createDataFrame(rows, "url string, pdf binary").cache()
+
+
+def test_docpass_from_pdf_bytes_equals_staged_path(pdfs):
+    pages = parse_pdf_layout(pdfs).cache()
+    long_all = docpass.extract(pdfs, pdf_col="pdf").cache()
+    _assert_equal(e1.extract_long(pages),
+                  e2.extract_ficha(pages, adjust_vacation=True), long_all)
+
+    counters = _rows(docpass.doc_rows(long_all))
+    assert counters == _rows(pages.select(docpass.DOC_COLS))
+    assert len(counters) == pdfs.count()
+    by_url = {r[0]: r[1:] for r in counters}
+    assert by_url["synth://bad/empty"] == by_url["synth://bad/null"] \
+        == (0, 0, 0)
+    assert by_url["synth://bad/truncated"][2] > 0
+
+
+def test_docpass_from_pages_table_equals_staged_path(spark):
+    corpus = datagen.corpus_pandas(40)
+    ficha = corpus[corpus["url"].str.contains("ficha")].index
+    folha = corpus[corpus["url"].str.contains("folha")].index
+    corpus.loc[ficha[0], "text"] = ""          # payload, no text
+    corpus.loc[ficha[1], "text"] = None
+    corpus.loc[ficha[2], "html"] = None        # text, null payload
+    corpus.loc[folha[0], "text"] = None        # neither
+    pages = spark.createDataFrame(corpus, datagen.PAGES_SCHEMA).cache()
+    long_all = docpass.extract(pages).cache()
+    _assert_equal(e1.extract_long(pages),
+                  e2.extract_ficha(pages, adjust_vacation=True), long_all)
+
+    docs = _rows(docpass.doc_rows(long_all))
+    assert sorted(r[0] for r in docs) == sorted(corpus["url"])
+    assert {r[1:] for r in docs} == {(None, None, None)}
+
+
+def test_docpass_engine2_off_emits_no_engine2_rows(pdfs):
+    long_all = docpass.extract(pdfs, pdf_col="pdf", engine2=False)
+    assert docpass.e2_long(long_all).count() == 0
+    assert docpass.doc_rows(long_all).count() == pdfs.count()

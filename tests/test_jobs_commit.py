@@ -6,11 +6,13 @@ making `ParquetSnapshotTableIO.write_run` raise when asked for one
 table, so every table written before it is committed and nothing after
 it is. Retrying under the same run_id must leave every output table
 equal to a clean run's, compared as sorted rows without the columns
-that legitimately differ between runs. One more in-process run checks
-`jobs.py --minutes-mode` against the oracle_ref writers."""
+that legitimately differ between runs. More in-process runs check
+`jobs.py --minutes-mode` and `jobs.py --pdf-col` against the oracle_ref
+writers, and `--salted-max-pages` against a plain run."""
 
 from __future__ import annotations
 
+import functools
 import shutil
 import sys
 
@@ -25,6 +27,19 @@ VOLATILE = {"run_id", "audit_ts", "ts", "partition_id"}
 EXTRACT_TABLES = ["proventos", "insalubridade", "cartoes",
                   "horas_trabalhadas", "e1_target", "e1_attention",
                   "audit_e1", "audit_e2", "manifest"]
+# --pdf-col adds the front door's per-document counters; a fichas-only
+# corpus has no Engine-1 values or attention rows (and a zero-row
+# run-keyed write leaves no file to read)
+PDF_TABLES = [t for t in EXTRACT_TABLES if not t.startswith("e1_")] + [
+    "audit_parse"]
+SERIES_COLS = {
+    "proventos": ["url", "year", "month", "mes_ano", "valor"],
+    "insalubridade": ["url", "year", "month", "mes_ano", "valor"],
+    "cartoes": ["url", "year", "month", "periodo", "hora_extra_50",
+                "hora_extra_100", "include_extra_100", "is_extra"],
+    "horas_trabalhadas": ["url", "year", "month", "periodo", "horas_trab",
+                          "faltas", "is_extra"],
+}
 CURATE_TABLES = ["curated", "near_dup_pairs", "stage_counts", "audit",
                  "state/manifest", "state/qualified_hashes", "state/bands"]
 
@@ -33,31 +48,34 @@ class Crash(RuntimeError):
     pass
 
 
-@pytest.fixture
-def run_job(spark, monkeypatch):
-    """run_job(module, *argv, crash_before=None): call module.main()
-    with argv; with `crash_before`, the write of that table raises."""
+def _run(spark, module, *argv, crash_before=None):
+    """Call module.main() with argv; with `crash_before`, the write of
+    that table raises."""
     write_run = ParquetSnapshotTableIO.write_run
 
-    def run(module, *argv, crash_before=None):
-        def crashing(self, df, name, run_id, keep_other_runs):
-            if name == crash_before:
-                raise Crash(name)
-            write_run(self, df, name, run_id, keep_other_runs)
+    def crashing(self, df, name, run_id, keep_other_runs):
+        if name == crash_before:
+            raise Crash(name)
+        write_run(self, df, name, run_id, keep_other_runs)
 
-        with monkeypatch.context() as m:
-            m.setattr(module, "get_spark", lambda *a, **k: spark)
-            m.setattr(sys, "argv", [module.__name__ + ".py", *argv])
-            m.setattr(ParquetSnapshotTableIO, "write_run", crashing)
-            try:
-                if crash_before is None:
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(module, "get_spark", lambda *a, **k: spark)
+        m.setattr(sys, "argv", [module.__name__ + ".py", *argv])
+        m.setattr(ParquetSnapshotTableIO, "write_run", crashing)
+        try:
+            if crash_before is None:
+                module.main()
+            else:
+                with pytest.raises(Crash):
                     module.main()
-                else:
-                    with pytest.raises(Crash):
-                        module.main()
-            finally:
-                spark.catalog.clearCache()
-    return run
+        finally:
+            spark.catalog.clearCache()
+
+
+@pytest.fixture
+def run_job(spark):
+    """run_job(module, *argv, crash_before=None): see `_run`."""
+    return functools.partial(_run, spark)
 
 
 def _tables(spark, out, names):
@@ -169,6 +187,48 @@ def test_curate_resume_rejects_ids_below_the_manifest(spark, run_job,
     assert not list(out.glob("**/run_id=c2"))
 
 
+def _writer_oracle(n_docs, start, end, minutes_mode=False):
+    """The four series tables' rows (`SERIES_COLS` order) for the ficha
+    documents among datagen ids [0, n_docs): oracle_ref values with A6,
+    zero-filled range months, the K3/K4 out-of-range appends and the
+    A8 flag, through `format_decimal`."""
+    months = list(orc.iterate_months(start, end))
+    fmt = orc.format_decimal
+    want = {name: [] for name in SERIES_COLS}
+    for i in range(n_docs):
+        r = datagen.gen_row(42, i)
+        if "ficha" not in r["url"]:
+            continue
+        g = orc.e2_extract_doc(r["html"], r["text"])["values"]
+        if not any(g.values()):
+            continue            # no value rows: the job emits no series
+        orc.apply_vacation_adjustments(g)
+        url = r["url"]
+        for name in ("proventos", "insalubridade"):
+            want[name] += [
+                (url, y, m, f"{m:02d}/{y:04d}", fmt(v)) for y, m, v in
+                orc.zero_fill(g.get(jobs.SERIES[name], {}), months)]
+        rows, inc = orc.cartoes_writer_rows(
+            g.get("6-Horas", {}), g.get("14-Horas100", {}), months,
+            minutes_mode=minutes_mode)
+        want["cartoes"] += [(url, y, m, f"{m:02d}/{y:04d}", fmt(a),
+                             fmt(b), inc, ex) for y, m, a, b, ex in rows]
+        want["horas_trabalhadas"] += [
+            (url, y, m, f"{m:02d}/{y:04d}", fmt(a), fmt(b), ex)
+            for y, m, a, b, ex in orc.horas_writer_rows(
+                g.get("1-Salario", {}), g.get("952-FaltaInjustifica", {}),
+                months, minutes_mode=minutes_mode)]
+    return want
+
+
+def _series_rows(spark, out, names=SERIES_COLS):
+    io = ParquetSnapshotTableIO(str(out))
+    return {name: sorted(tuple(row) for row in
+                         io.read(spark, name).select(SERIES_COLS[name])
+                         .collect())
+            for name in names}
+
+
 def test_extract_job_minutes_mode_matches_writer_oracle(spark, run_job,
                                                         tmp_path):
     """cartoes and horas_trabalhadas of a --minutes-mode run equal the
@@ -182,39 +242,80 @@ def test_extract_job_minutes_mode_matches_writer_oracle(spark, run_job,
     run_job(jobs, "--pages", pages, "--out", str(out), "--run-id", "m1",
             "--start", "2019-01", "--end", "2020-12", "--minutes-mode")
 
-    months = list(orc.iterate_months((2019, 1), (2020, 12)))
-    fmt = orc.format_decimal
-    want = {"cartoes": [], "horas_trabalhadas": []}
-    n_converted = 0
-    for i in range(n_docs):
-        r = datagen.gen_row(42, i)
-        if "ficha" not in r["url"]:
-            continue
-        g = orc.e2_extract_doc(r["html"], r["text"])["values"]
-        if not any(g.values()):
-            continue
-        orc.apply_vacation_adjustments(g)
-        h50, h100 = g.get("6-Horas", {}), g.get("14-Horas100", {})
-        rows, inc = orc.cartoes_writer_rows(h50, h100, months,
-                                            minutes_mode=True)
-        want["cartoes"] += [(r["url"], y, m, f"{m:02d}/{y:04d}", fmt(a),
-                             fmt(b), inc, ex) for y, m, a, b, ex in rows]
-        want["horas_trabalhadas"] += [
-            (r["url"], y, m, f"{m:02d}/{y:04d}", fmt(a), fmt(b), ex)
-            for y, m, a, b, ex in orc.horas_writer_rows(
-                g.get("1-Salario", {}), g.get("952-FaltaInjustifica", {}),
-                months, minutes_mode=True)]
-        n_converted += sum(orc.convert_minutes_value(v) != v
-                           for v in [*h50.values(), *h100.values()])
-    assert n_converted > 0, "corpus must exercise the conversion"
+    period = (2019, 1), (2020, 12)
+    want = _writer_oracle(n_docs, *period, minutes_mode=True)
+    plain = _writer_oracle(n_docs, *period)
+    names = ["cartoes", "horas_trabalhadas"]
+    assert want["cartoes"] != plain["cartoes"], \
+        "corpus must exercise the conversion"
     assert any(row[-1] for row in want["cartoes"]), "and the append path"
+    assert _series_rows(spark, out, names) == {
+        name: sorted(want[name]) for name in names}
+
+
+@pytest.fixture(scope="module")
+def pdf_job(spark, tmp_path_factory):
+    """A clean `jobs.py --pdf-col pdf` run over the ficha PDFs of
+    datagen ids [0, 30), a truncated copy of one, and an empty and a
+    null `pdf` value → (input dir, out dir, input urls, broken urls)."""
+    root = tmp_path_factory.mktemp("pdf_job")
+    rows = [(r["url"], datagen.gen_e2_pdf_bytes(42, i))
+            for i, r in ((i, datagen.gen_row(42, i)) for i in range(30))
+            if "ficha" in r["url"]]
+    whole = rows[0][1]
+    broken = [("synth://bad/truncated", whole[:len(whole) // 2]),
+              ("synth://bad/empty", b""), ("synth://bad/null", None)]
+    pdfs = str(root / "pdfs")
+    spark.createDataFrame(rows + broken, "url string, pdf binary") \
+        .write.parquet(pdfs)
+    out = root / "clean"
+    _run(spark, jobs, "--pages", pdfs, "--pdf-col", "pdf", "--out", str(out),
+         "--run-id", "p1")
+    return (pdfs, out, sorted(u for u, _ in rows + broken),
+            [u for u, _ in broken])
+
+
+def test_extract_job_from_pdf_bytes(spark, pdf_job):
+    """`--pdf-col`: the series tables equal the oracle for the ficha
+    urls, audit_parse holds one row per input document with the
+    truncated one counted as failed, and the manifest holds exactly the
+    input urls."""
+    _pdfs, out, urls, broken = pdf_job
+    assert _series_rows(spark, out) == {
+        name: sorted(rows) for name, rows in
+        _writer_oracle(30, (2019, 1), (2021, 12)).items()}
 
     io = ParquetSnapshotTableIO(str(out))
-    cols = {"cartoes": ["url", "year", "month", "periodo", "hora_extra_50",
-                        "hora_extra_100", "include_extra_100", "is_extra"],
-            "horas_trabalhadas": ["url", "year", "month", "periodo",
-                                  "horas_trab", "faltas", "is_extra"]}
-    for name, want_rows in want.items():
-        got = [tuple(row) for row in
-               io.read(spark, name).select(cols[name]).collect()]
-        assert sorted(got) == sorted(want_rows), name
+    parse = {r.url: r for r in io.read(spark, "audit_parse").collect()}
+    assert sorted(parse) == urls
+    failed = {u for u, r in parse.items() if r.decode_failures > 0}
+    assert failed == {"synth://bad/truncated"}
+    assert all(parse[u].n_pages == 0 for u in broken)
+    assert all(r.n_pages > 0 and r.n_words > 0 for u, r in parse.items()
+               if u not in broken)
+    manifest = [r.url for r in io.read(spark, "manifest").collect()]
+    assert sorted(manifest) == urls
+
+
+def test_extract_job_from_pdf_bytes_retry_equals_clean_run(spark, run_job,
+                                                           pdf_job):
+    pdfs, clean_out, _urls, _broken = pdf_job
+    clean = _tables(spark, clean_out, PDF_TABLES)
+    assert all(clean.values()), "every table holds rows"
+    argv = ["--pages", pdfs, "--pdf-col", "pdf", "--run-id", "p1",
+            "--out", str(clean_out.parent / "crash")]
+    run_job(jobs, *argv, crash_before="audit_parse")
+    run_job(jobs, *argv)
+    assert _tables(spark, clean_out.parent / "crash", PDF_TABLES) == clean
+
+
+def test_extract_job_salted_equals_plain(spark, run_job, pdf_job):
+    """`--salted-max-pages 4` builds Engine 2 through the front door and
+    the salted kernel instead of the document pass: the four series
+    tables and audit_e2 equal the plain run's."""
+    pdfs, clean_out, _urls, _broken = pdf_job
+    out = clean_out.parent / "salted"
+    run_job(jobs, "--pages", pdfs, "--pdf-col", "pdf", "--out", str(out),
+            "--run-id", "p1", "--salted-max-pages", "4")
+    names = [*SERIES_COLS, "audit_e2"]
+    assert _tables(spark, out, names) == _tables(spark, clean_out, names)

@@ -13,7 +13,7 @@ PDF bytes."""
 import re
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from pdf_extractor_spark.datagen import (PDF_LINES_PER_PAGE,
@@ -755,6 +755,8 @@ def test_text_fast_path_matches_glyph_walk():
 
 @settings(max_examples=150, deadline=None)
 @given(st.binary(min_size=0, max_size=400))
+@example(b"<<\x01")                     # unterminated inline dict
+@example(b"(\\93)Tj")                   # '\9' is no octal escape
 def test_content_lexer_never_raises(blob):
     """The one-pass content lexer must terminate and never raise on
     arbitrary byte soup (content streams of crawled PDFs contain

@@ -274,3 +274,56 @@ def test_curate_gate_filter_not_pushed_below_rebalance(spark, sf_dir):
     below = "\n".join(below)
     assert "regexp_extract_all" not in below
     assert "regexp_replace" not in below
+
+
+def _python_nodes(df) -> list[str]:
+    """Names of the Python exec nodes in `df`'s initial physical plan.
+    A cached input is one InMemoryTableScan leaf there, so a node of an
+    upstream persisted frame is not counted again."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.inputPlan()
+    names, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        if any(k in node.nodeName() for k in ("Python", "Arrow", "Pandas")):
+            names.append(node.nodeName())
+        children = node.children().iterator()
+        while children.hasNext():
+            todo.append(children.next())
+    return names
+
+
+def test_pdf_job_runs_two_python_passes(spark, tmp_path, monkeypatch):
+    """`jobs.py --pdf-col` crosses into Python twice: the document pass
+    (front door + both engines, one MapInArrow) and the series pass
+    (one FlatMapGroupsInArrow). Every output table is a projection of
+    the frames the job persists, so their plans hold every Python node
+    of the job."""
+    import sys
+
+    import jobs
+    from pdf_extractor_spark import datagen
+
+    pdfs = str(tmp_path / "pdfs")
+    spark.createDataFrame(
+        [(f"synth://ficha/{i:08d}", datagen.gen_e2_pdf_bytes(42, i))
+         for i in (1, 2, 5)], "url string, pdf binary").write.parquet(pdfs)
+    persisted = []
+    frame_cls = type(spark.range(1))    # the classic DataFrame subclass
+    persist = frame_cls.persist
+
+    def recording(self, *a, **k):
+        persisted.extend(_python_nodes(self.select("*")))
+        return persist(self, *a, **k)
+
+    monkeypatch.setattr(frame_cls, "persist", recording)
+    monkeypatch.setattr(jobs, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(sys, "argv", [
+        "jobs.py", "--pages", pdfs, "--pdf-col", "pdf", "--run-id", "p1",
+        "--out", str(tmp_path / "out")])
+    try:
+        jobs.main()
+    finally:
+        spark.catalog.clearCache()
+    assert sorted(persisted) == ["FlatMapGroupsInArrow", "MapInArrow"]
