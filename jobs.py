@@ -12,8 +12,9 @@ Stages (north-rule shape):
   line/regex kernel and Engine 2's layout kernel with the vacation
   adjustment fused), persisted once → one grouped pass building the
   four output series tables → fill-if-empty MERGE into the keyed
-  target → audit/lineage tables → manifest, written last. Every
-  table is a projection of those two persisted frames.
+  target → audit/lineage tables (`audit_parse`: one row per input
+  document) → manifest, written last. Every table is a projection of
+  those two persisted frames.
 
 Outputs other than the keyed target commit through the run-keyed
 protocol in `sinks/tableio.py`, so a crashed run retried under its own
@@ -37,7 +38,6 @@ from pyspark.sql import functions as F  # noqa: E402
 from pdf_extractor_spark import docpass  # noqa: E402
 from pdf_extractor_spark.engine1 import pipeline as e1  # noqa: E402
 from pdf_extractor_spark.engine2 import pipeline as e2  # noqa: E402
-from pdf_extractor_spark.engine2.kernel import MAX_BLOCK_CARRY  # noqa: E402
 from pdf_extractor_spark.session import get_spark  # noqa: E402
 from pdf_extractor_spark.sinks import audit  # noqa: E402
 from pdf_extractor_spark.sinks.resume import manifest_rows  # noqa: E402
@@ -68,14 +68,6 @@ def main() -> None:
     ap.add_argument("--start", type=parse_period, default="2019-01")
     ap.add_argument("--end", type=parse_period, default="2021-12")
     ap.add_argument("--minutes-mode", action="store_true")
-    ap.add_argument("--salted-max-pages", type=int, default=None,
-                    metavar="N",
-                    help=f"skew mode (N > {MAX_BLOCK_CARRY}): split "
-                         "documents longer than N pages "
-                         "into parallel page-range chunks with exact "
-                         "carry-state handoff (engine2/salted — output "
-                         "pinned identical to the plain kernel); use when "
-                         "single oversized documents dominate task time")
     ap.add_argument("--pdf-col", default=None,
                     help="treat --pages as (url, <col> binary) of raw PDF "
                          "bytes: the from-scratch object-stream parser "
@@ -95,11 +87,6 @@ def main() -> None:
     if args.start > args.end:
         # reference ficha_financeira_processor.py:187-188
         ap.error("--start must not be after --end")
-    if (args.salted_max_pages is not None
-            and args.salted_max_pages <= MAX_BLOCK_CARRY):
-        # a carried-in block must settle inside its chunk for the
-        # salted stitch to be exact (engine2/salted.split_chunks)
-        ap.error(f"--salted-max-pages must exceed {MAX_BLOCK_CARRY}")
 
     spark = get_spark(f"extract-{args.run_id}")
     out = args.out.rstrip("/")
@@ -120,10 +107,8 @@ def main() -> None:
         # parsed (the document pass below is the expensive stage)
         raw = raw.join(done.select("url"), "url", "left_anti")
     # front door + Engine 1 + Engine 2 in one Python pass per document;
-    # every table below except the salted path's is a projection of its
-    # persisted long table
-    long_all = docpass.extract(raw, pdf_col=args.pdf_col,
-                               engine2=not args.salted_max_pages).persist()
+    # every table below is a projection of its persisted long table
+    long_all = docpass.extract(raw, pdf_col=args.pdf_col).persist()
     docs = docpass.doc_rows(long_all)
     # one count materialises the pass and answers "anything to do?"
     n = docs.count()
@@ -148,20 +133,8 @@ def main() -> None:
     io.write_run(e1_attention, "e1_attention", run_id, resuming)
 
     # ---- Engine 2 ------------------------------------------------------
-    # A6 adjustment runs in the kernel's per-document finisher (both
-    # paths; the salted one only changes how pages reach that finisher)
-    if args.salted_max_pages:
-        from pdf_extractor_spark.engine2.salted import extract_ficha_salted
-
-        pages = raw
-        if args.pdf_col:
-            from pdf_extractor_spark.ops.pdfstream import parse_pdf_layout
-
-            pages = parse_pdf_layout(raw, pdf_col=args.pdf_col)
-        long_df = extract_ficha_salted(
-            pages, max_pages=args.salted_max_pages).persist()
-    else:
-        long_df = docpass.e2_long(long_all)
+    # the A6 adjustment already ran per document in the pass above
+    long_df = docpass.e2_long(long_all)
     # the four series tables are projections of one grouped pass
     built = e2.build_series(e2.values_table(long_df), args.start, args.end,
                             SERIES.values(),
@@ -170,12 +143,12 @@ def main() -> None:
         io.write_run(e2.series_table(built, series), name, run_id, resuming)
 
     # ---- lineage + resume ----------------------------------------------
+    # audit_parse holds one row per input document in both modes: the
+    # front door's counters (pages parsed, words, decode failures) with
+    # --pdf-col, nulls for a pages-table row
     audits = {"audit_e1": e1_metrics,
-              "audit_e2": e2.metrics_table(long_df)}
-    if args.pdf_col:
-        # parse-level lineage (north-star metric triple: pages parsed,
-        # decode failures, word counts), one row per input document
-        audits["audit_parse"] = docs
+              "audit_e2": e2.metrics_table(long_df),
+              "audit_parse": docs}
     for name, df in audits.items():
         io.write_run(audit.build_audit(df, run_id), name, run_id, True)
 

@@ -9,8 +9,7 @@ after ``ops.layout.rebalance_narrow``: per input row it
   (``ops.pdfstream.layout_row``: WBX2 word-box payload + form-feed
   joined page text), or a pages-table row's ``html`` and ``text``;
 * runs Engine 1 (``engine1.kernel.extract_doc``) on the text;
-* runs Engine 2 (``engine2.kernel.extract_doc``, A6 on) on the payload,
-  unless `engine2` is off;
+* runs Engine 2 (``engine2.kernel.extract_doc``, A6 on) on the payload;
 * emits one per-document row with the front door's counters
   (``n_pages``, ``n_words``, ``decode_failures``; null for a
   pages-table row).
@@ -64,7 +63,7 @@ def _part(src: str, names: list[str], rows: list[tuple]) -> pa.RecordBatch:
         schema=_ARROW_SCHEMA)
 
 
-def _kernel(from_pdf: bool, engine2: bool):
+def _kernel(from_pdf: bool):
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             urls = batch.column("url").to_pylist()
@@ -84,7 +83,7 @@ def _kernel(from_pdf: bool, engine2: bool):
             for url, html, text, *_counters in docs:
                 if text:
                     e1_rows += k1.extract_doc(url, text)
-                if engine2 and html:
+                if html:
                     rows, metrics = k2.extract_doc(url, html, text,
                                                    adjust_vacation=True)
                     e2_rows += rows
@@ -97,15 +96,13 @@ def _kernel(from_pdf: bool, engine2: bool):
     return run
 
 
-def extract(df: DataFrame, pdf_col: str | None = None,
-            engine2: bool = True) -> DataFrame:
+def extract(df: DataFrame, pdf_col: str | None = None) -> DataFrame:
     """(url, <pdf_col> binary) rows, or pages-table rows (url, html,
     text) when `pdf_col` is None → the tagged long table
-    (``DOCPASS_SCHEMA``). `engine2=False` leaves out the Engine-2 rows
-    (the job's salted path builds them itself)."""
+    (``DOCPASS_SCHEMA``)."""
     cols = [F.col(pdf_col).alias("pdf")] if pdf_col else ["html", "text"]
     return rebalance_narrow(df.select("url", *cols)).mapInArrow(
-        _kernel(pdf_col is not None, engine2), DOCPASS_SCHEMA)
+        _kernel(pdf_col is not None), DOCPASS_SCHEMA)
 
 
 def _rows(long_df: DataFrame, src: str, cols: list[str]) -> DataFrame:

@@ -16,9 +16,10 @@ kernel runs per document — under ``mapInPandas`` in
 state (G2/G5) never crosses documents, so it lives entirely inside the
 per-document call. At 100 TB the only skew risk is
 a single giant document serializing one task; the scan partitioning
-(`maxPartitionBytes`) bounds rows per task, and oversized documents
-can be split into page-range sub-rows with a carry-state handoff pass
-(see ``engine2/salted.py``).
+(`maxPartitionBytes`) bounds rows per task. A page-range split with a
+carry-state handoff was measured and deleted: at 4 cores it ran
+1.3-1.9× slower than this one call on 6,000- and 18,000-page documents
+(``BENCH/BASELINE.md``, "Skew mode").
 
 Output is a long table ``(url, code, year, month, value, ...)`` plus one
 ``__metrics__`` row per document carrying lineage counters (pages
@@ -245,74 +246,24 @@ def _norm_prefix(prefix: str) -> str:
     return got
 
 
-class PageRunState:
-    """Cross-page carry state (G2 centers + G5 pending blocks).
+def run_pages(pages: list, page_h: float) -> list:
+    """Core page loop (G1-G7 + A1 event stream) over one document.
 
-    Serializable (to_json/from_json) so the salted oversized-document
-    path can hand state across chunk boundaries (engine2/salted.py)."""
-
-    __slots__ = ("comp", "valor", "pending")
-
-    def __init__(self, comp=None, valor=None, pending=None):
-        self.comp = list(comp or [])
-        self.valor = list(valor or [])
-        self.pending = list(pending or [])
-
-    def to_json(self) -> str:
-        import json
-
-        return json.dumps({
-            "comp": self.comp, "valor": self.valor,
-            "pending": [
-                {"year": st["block"]["year"],
-                 "months": [list(m) for m in st["block"]["months"]],
-                 "carry": st["carry"]}
-                for st in self.pending
-            ],
-        })
-
-    @classmethod
-    def from_json(cls, s: str) -> "PageRunState":
-        import json
-
-        d = json.loads(s)
-        pending = [
-            {"block": dict(year=p["year"],
-                           months=[tuple(m) for m in p["months"]],
-                           y_start=0.0, y_end=0.0),
-             "carry": p["carry"]}
-            for p in d["pending"]
-        ]
-        return cls(d["comp"], d["valor"], pending)
-
-
-def run_pages(pages: list, page_h: float, state: PageRunState,
-              page_offset: int = 0) -> tuple[list, PageRunState, int | None]:
-    """Core page loop (G1-G7 + A1 event stream).
-
-    Emits an ordered event list — ('v', storage_code, year, month,
-    value_str, global_page, seq) for every value assignment (the A1
-    last-write-wins fold and conflict count happen over this stream) and
-    ('x', global_page) for every expired carry — so the salted path can
-    merge chunk streams and hand them to the same `finish_doc` fold.
-
-    Returns (events, end_state, first_full_header): the latter is the
-    first local page index carrying BOTH its own Comp. and Valor header
-    words — pages before it depend on carried-in centers (the stitch
-    horizon used by engine2/salted.py).
+    Returns the ordered event list: ('v', storage_code, year, month,
+    value_str) for every value assignment (the A1 last-write-wins fold
+    and conflict count happen over this stream) and ('x', None, None,
+    None, None) for every expired carry. The cross-page state (G2
+    column centers, G5 pending blocks) lives in this one call.
     """
     events: list = []
-    seq = 0
-    pending = state.pending
-    last_comp, last_valor = state.comp, state.valor
-    first_full_header: int | None = None
+    pending: list[dict] = []
+    last_comp: list[float] = []
+    last_valor: list[float] = []
 
-    for pi, pg in enumerate(pages):
+    for pg in pages:
         if pg.n == 0:
             continue
         comp, valor = _column_centers(pg)
-        if comp and valor and first_full_header is None:
-            first_full_header = pi
         if comp:
             last_comp = comp
         else:
@@ -373,21 +324,17 @@ def run_pages(pages: list, page_h: float, state: PageRunState,
                     has_vals = True
                     storage = alias or code
                     for (y, m), vs in got:
-                        events.append(("v", storage, y, m, vs,
-                                       page_offset + pi, seq))
-                        seq += 1
+                        events.append(("v", storage, y, m, vs))
 
             if not has_vals:
                 nc = st["carry"] + 1
                 if nc <= MAX_BLOCK_CARRY:
                     nxt_pending.append(dict(block=st["block"], carry=nc))
                 else:
-                    events.append(("x", None, None, None, None,
-                                   page_offset + pi, seq))
-                    seq += 1
+                    events.append(("x", None, None, None, None))
         pending = nxt_pending
 
-    return events, PageRunState(last_comp, last_valor, pending), first_full_header
+    return events
 
 
 def fold_events(events: list) -> tuple[dict, int, int]:
@@ -397,7 +344,7 @@ def fold_events(events: list) -> tuple[dict, int, int]:
     values: dict[str, dict[tuple[int, int], str]] = {}
     conflicts = 0
     carry_expired = 0
-    for kind, code, y, m, vs, _gpage, _seq in events:
+    for kind, code, y, m, vs in events:
         if kind == "x":
             carry_expired += 1
             continue
@@ -462,37 +409,27 @@ def apply_vacation_values(values: dict) -> None:
             else str(additional)
 
 
-def finish_doc(url: str, events: list, pages: int, decode_failures: int,
-               person: str | None, adjust_vacation: bool) -> tuple[list, tuple]:
-    """Per-document finisher over a complete, ordered event stream:
-    A1 fold, then A6 when `adjust_vacation`, then the value rows and
-    the metrics row. Both the plain kernel and the salted assemble
-    step end here."""
-    values, conflicts, carry_expired = fold_events(events)
-    if adjust_vacation:
-        apply_vacation_values(values)
-    rows = [(url, code, y, m, vs, None, None, None, None, None)
-            for code in sorted(values)
-            for (y, m), vs in sorted(values[code].items())]
-    metrics = (url, METRICS_CODE, 0, 0, None, pages, decode_failures,
-               conflicts, carry_expired, person)
-    return rows, metrics
-
-
 def extract_doc(url: str, html, text: str,
                 adjust_vacation: bool = False) -> tuple[list, tuple]:
     """One document's layout payload and text → (value rows, metrics
-    row), both in ``E2_FIELDS`` order. Only the first page of `text`
-    is read (the person-name scan)."""
+    row), both in ``E2_FIELDS`` order: the page loop, the A1 fold, then
+    A6 when `adjust_vacation`. Only the first page of `text` is read
+    (the person-name scan)."""
     decode_failures = 0
     try:
         page_h, pages = decode_pages_fast(html)
     except Exception:
         page_h, pages = 0.0, []
         decode_failures = 1
-    events, _state, _ffh = run_pages(pages, page_h, PageRunState())
-    return finish_doc(url, events, len(pages), decode_failures,
-                      e2_person_name(text or ""), adjust_vacation)
+    values, conflicts, carry_expired = fold_events(run_pages(pages, page_h))
+    if adjust_vacation:
+        apply_vacation_values(values)
+    rows = [(url, code, y, m, vs, None, None, None, None, None)
+            for code in sorted(values)
+            for (y, m), vs in sorted(values[code].items())]
+    metrics = (url, METRICS_CODE, 0, 0, None, len(pages), decode_failures,
+               conflicts, carry_expired, e2_person_name(text or ""))
+    return rows, metrics
 
 
 def _row_values(pg: _Page, anchor: int, block: dict, column: int,

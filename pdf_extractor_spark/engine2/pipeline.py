@@ -2,7 +2,7 @@
 
 * A1 last-write-wins and the A6 vacation adjustment (reference
   ``ficha_financeira_processor.py:935-996``) happen inside the kernel's
-  per-document finisher (``kernel.finish_doc``);
+  per-document call (``kernel.extract_doc``);
 * the writers (``_write_*_csv``, ``:998-1119``) are one grouped pass,
   ``build_series``: per url it zero-fills the requested months (A7,
   ``:917-933``), appends the K3/K4 out-of-range rows, computes the A8
@@ -46,12 +46,11 @@ def extract_ficha(pages_df: DataFrame, repartition: bool = True,
     the narrow-input policy Engine 1 uses: one round-robin exchange
     only for an input the optimizer proves small, so a tiny local
     corpus still feeds every core. `repartition=False` skips it (a
-    streaming plan takes no round-robin exchange). For truly oversized
-    single documents use engine2.salted.extract_ficha_salted (page-range
-    split + exact carry-state handoff).
+    streaming plan takes no round-robin exchange). An oversized
+    document runs in one task, as in the job's document pass.
 
     `adjust_vacation=True` applies the A6 adjustment in the kernel's
-    per-document finisher (zero extra shuffles; byte-identical to
+    per-document call (zero extra shuffles; byte-identical to
     oracle_ref, pinned by tests).
     """
     # the only consumer of `text` in this kernel is the person-name

@@ -25,8 +25,7 @@ Split of labor (the scale-critical property):
 At 10^12 documents the flatten pass is embarrassingly parallel
 (scan → mapInArrow, no shuffle — same plan shape as the Engine-2
 WBX2 kernel, `engine2/pipeline.py`), and the per-doc node arrays are
-bounded by document size, so no skew beyond document length (the
-salted oversized-doc path applies unchanged if needed).
+bounded by document size, so no skew beyond document length.
 """
 
 from __future__ import annotations

@@ -12,8 +12,8 @@ five geometry columns (decoded zero-copy with ``np.frombuffer``) and one
 NUL-joined UTF-8 text block, so the Engine-2 kernel's per-batch decode
 is one block read plus one text split. Floats round-trip exactly.
 This module is the only one that knows the layout; every reader goes
-through ``_parse``, which rejects any buffer that is not a complete
-WBX2 payload.
+through ``decode_layout_columnar``, which rejects any buffer that is
+not a complete WBX2 payload.
 
 Layout:
     b"WBX2" | <d height> <i n_pages> <i total_words> | 4 pad bytes
@@ -36,13 +36,6 @@ _HDR = struct.Struct("<dii")
 _COUNTS_OFF = len(MAGIC) + _HDR.size + 4
 
 
-def _head(height: float, counts: np.ndarray, total: int) -> bytes:
-    """Header + counts + pad: everything before the float columns."""
-    head = (MAGIC + _HDR.pack(float(height), len(counts), total)
-            + b"\x00" * 4 + counts.tobytes())
-    return head + b"\x00" * ((-len(head)) % 8)
-
-
 def encode_layout(height: float, pages: list[list[Word]]) -> bytes:
     """Serialize per-page word-box arrays into the html:binary payload."""
     counts = np.array([len(p) for p in pages], dtype=np.int32)
@@ -62,15 +55,20 @@ def encode_layout(height: float, pages: list[list[Word]]) -> bytes:
     text_blob = "\x00".join(texts).encode("utf-8")
     if total and any("\x00" in t for t in texts):
         raise ValueError("word text may not contain NUL")
-    return _head(height, counts, total) + cols.tobytes() + text_blob
+    head = (MAGIC + _HDR.pack(float(height), len(counts), total)
+            + b"\x00" * 4 + counts.tobytes())
+    head += b"\x00" * ((-len(head)) % 8)
+    return head + cols.tobytes() + text_blob
 
 
-def _parse(buf: bytes):
-    """Validated WBX2 parse → (height, counts int32[n_pages],
-    cols float64[5, total], text_off, text). Raises ValueError unless
-    the buffer holds the magic, a header, `n_pages` non-negative counts
-    summing to `total`, all five float columns, and a UTF-8 text blob
-    of exactly `total` NUL-separated words."""
+def decode_layout_columnar(blob: bytes | bytearray):
+    """Validated WBX2 decode → (height, counts int32[n_pages],
+    texts list[str], cols float64[5, total]) with zero-copy float
+    decode. Raises ValueError unless the buffer holds the magic, a
+    header, `n_pages` non-negative counts summing to `total`, all five
+    float columns, and a UTF-8 text blob of exactly `total`
+    NUL-separated words."""
+    buf = bytes(blob)
     if buf[:4] != MAGIC or len(buf) < _COUNTS_OFF:
         raise ValueError("not a WBX2 payload")
     height, n_pages, total = _HDR.unpack_from(buf, 4)
@@ -86,46 +84,7 @@ def _parse(buf: bytes):
     if (text.count("\x00") + 1 if total else len(text)) != total:
         raise ValueError("WBX2 text blob does not hold the word total")
     cols = np.frombuffer(buf, np.float64, 5 * total, cols_off).reshape(5, total)
-    return float(height), counts, cols, text_off, text
-
-
-def decode_layout_columnar(blob: bytes | bytearray):
-    """Fast path → (height, counts int32[n_pages], texts list[str],
-    cols float64[5, total]) with zero-copy float decode."""
-    height, counts, cols, _off, text = _parse(bytes(blob))
-    return height, counts, text.split("\x00") if cols.shape[1] else [], cols
-
-
-def split_layout(blob: bytes | bytearray, max_pages: int):
-    """Page-range slicer → (height, n_pages, [(chunk_pages, chunk_blob)]).
-
-    Pure buffer slicing, no Word-tuple round trip: each chunk blob is
-    IDENTICAL to ``encode_layout(height, pages[p0:p1])`` (pinned by
-    tests/test_salted.py::test_split_chunks_blob_bit_identical) — the
-    header is re-packed and counts / cols / text are contiguous ranges
-    of the source buffer. That is ~10x cheaper per page than decode +
-    re-encode, and the split is the serial leg of the salted path, so
-    its cost bounds how much skew salting can recover. An empty blob
-    is one zero-page chunk."""
-    if not blob:
-        return 0.0, 0, [(0, encode_layout(0.0, []))]
-    buf = bytes(blob)
-    height, counts, cols, text_off, _text = _parse(buf)
-    n_pages = len(counts)
-    # word-text boundaries inside the NUL-joined text blob
-    nul = np.flatnonzero(np.frombuffer(buf, np.uint8, offset=text_off) == 0)
-    starts = np.concatenate(([0], nul + 1)) + text_off
-    ends = np.concatenate((nul, [len(buf) - text_off])) + text_off
-    cum = np.concatenate(([0], np.cumsum(counts)))
-    out = []
-    # a zero-page document still yields one (empty) chunk
-    for p0 in range(0, max(n_pages, 1), max_pages):
-        p1 = min(p0 + max_pages, n_pages)
-        w0, w1 = int(cum[p0]), int(cum[p1])
-        tb = buf[int(starts[w0]):int(ends[w1 - 1])] if w1 > w0 else b""
-        out.append((p1 - p0, _head(height, counts[p0:p1], w1 - w0)
-                    + np.ascontiguousarray(cols[:, w0:w1]).tobytes() + tb))
-    return height, n_pages, out
+    return float(height), counts, text.split("\x00") if total else [], cols
 
 
 def decode_layout(blob: bytes | bytearray | None) -> tuple[float, list[list[Word]]]:

@@ -76,8 +76,3 @@ def test_docpass_from_pages_table_equals_staged_path(spark):
     assert sorted(r[0] for r in docs) == sorted(corpus["url"])
     assert {r[1:] for r in docs} == {(None, None, None)}
 
-
-def test_docpass_engine2_off_emits_no_engine2_rows(pdfs):
-    long_all = docpass.extract(pdfs, pdf_col="pdf", engine2=False)
-    assert docpass.e2_long(long_all).count() == 0
-    assert docpass.doc_rows(long_all).count() == pdfs.count()

@@ -8,8 +8,9 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import functions as F
 
-from pdf_extractor_spark import datagen, oracle_ref as orc
+from pdf_extractor_spark import datagen, docpass, oracle_ref as orc
 from pdf_extractor_spark.engine2 import pipeline as e2
+from pdf_extractor_spark.payload import decode_layout
 
 
 N_DOCS = 120  # covers carry, conflict, expired, NBSP, alias, totais variants
@@ -251,3 +252,26 @@ def test_a8_flag_reads_values_exactly(spark):
     for r in e2.cartoes_table(vals, start, end).collect():
         got.setdefault(r.url, set()).add(r.include_extra_100)
     assert got == {"u1": {True}, "u2": {False}}
+
+
+@pytest.mark.parametrize("entry", [
+    lambda df: e2.extract_ficha(df, adjust_vacation=True),
+    lambda df: docpass.e2_long(docpass.extract(df)),
+], ids=["extract_ficha", "docpass"])
+def test_malformed_payload_is_one_decode_failure(spark, entry):
+    """A truncated WBX2 payload and a JSON payload (an old format the
+    codec no longer reads) each give one decode failure and no value
+    rows, through both Spark entries to the kernel."""
+    import json
+
+    two_page = next(h for h in datagen.corpus_pandas(40)["html"]
+                    if h and len(decode_layout(h)[1]) == 2)
+    bad = spark.createDataFrame(
+        [("synth://bad/truncated", bytes(two_page)[:-9], "x"),
+         ("synth://bad/json", json.dumps({"pages": []}).encode(), "x")],
+        "url string, html binary, text string")
+    long_df = entry(bad)
+    assert e2.values_table(long_df).count() == 0
+    assert {r.url: r.decode_failures
+            for r in e2.metrics_table(long_df).collect()} == {
+        "synth://bad/truncated": 1, "synth://bad/json": 1}

@@ -13,8 +13,6 @@ import jobs
 @pytest.mark.parametrize("bad", [
     ["--start", "2019-13"], ["--start", "2019-00"], ["--end", "2021-1"],
     ["--end", "2021/12"], ["--start", "19-01"],
-    ["--salted-max-pages", "0"], ["--salted-max-pages", "3"],
-    ["--salted-max-pages", "-2"],
 ])
 def test_bad_argument_exits_before_spark(tmp_path, monkeypatch, bad):
     def no_spark(*a, **k):

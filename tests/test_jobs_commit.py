@@ -8,7 +8,7 @@ it is. Retrying under the same run_id must leave every output table
 equal to a clean run's, compared as sorted rows without the columns
 that legitimately differ between runs. More in-process runs check
 `jobs.py --minutes-mode` and `jobs.py --pdf-col` against the oracle_ref
-writers, and `--salted-max-pages` against a plain run."""
+writers, and that `audit_parse` accounts for every input document."""
 
 from __future__ import annotations
 
@@ -16,6 +16,7 @@ import functools
 import shutil
 import sys
 
+import pandas as pd
 import pytest
 
 import jobs
@@ -26,12 +27,10 @@ from pdf_extractor_spark.sinks.tableio import ParquetSnapshotTableIO
 VOLATILE = {"run_id", "audit_ts", "ts", "partition_id"}
 EXTRACT_TABLES = ["proventos", "insalubridade", "cartoes",
                   "horas_trabalhadas", "e1_target", "e1_attention",
-                  "audit_e1", "audit_e2", "manifest"]
-# --pdf-col adds the front door's per-document counters; a fichas-only
-# corpus has no Engine-1 values or attention rows (and a zero-row
-# run-keyed write leaves no file to read)
-PDF_TABLES = [t for t in EXTRACT_TABLES if not t.startswith("e1_")] + [
-    "audit_parse"]
+                  "audit_e1", "audit_e2", "audit_parse", "manifest"]
+# a fichas-only corpus has no Engine-1 values or attention rows (and a
+# zero-row run-keyed write leaves no file to read)
+PDF_TABLES = [t for t in EXTRACT_TABLES if not t.startswith("e1_")]
 SERIES_COLS = {
     "proventos": ["url", "year", "month", "mes_ano", "valor"],
     "insalubridade": ["url", "year", "month", "mes_ano", "valor"],
@@ -309,13 +308,26 @@ def test_extract_job_from_pdf_bytes_retry_equals_clean_run(spark, run_job,
     assert _tables(spark, clean_out.parent / "crash", PDF_TABLES) == clean
 
 
-def test_extract_job_salted_equals_plain(spark, run_job, pdf_job):
-    """`--salted-max-pages 4` builds Engine 2 through the front door and
-    the salted kernel instead of the document pass: the four series
-    tables and audit_e2 equal the plain run's."""
-    pdfs, clean_out, _urls, _broken = pdf_job
-    out = clean_out.parent / "salted"
-    run_job(jobs, "--pages", pdfs, "--pdf-col", "pdf", "--out", str(out),
-            "--run-id", "p1", "--salted-max-pages", "4")
-    names = [*SERIES_COLS, "audit_e2"]
-    assert _tables(spark, out, names) == _tables(spark, clean_out, names)
+
+def test_extract_job_audits_every_pages_table_document(spark, run_job,
+                                                       tmp_path):
+    """A pages-mode run writes one `audit_parse` row per input
+    document, a noise document and one with empty `text` and `html`
+    included, so every manifest url has an audit row; the front door's
+    counters are null there."""
+    corpus = datagen.corpus_pandas(30)
+    assert corpus["url"].str.contains("noise").any()
+    blank = corpus.iloc[:1].assign(url="synth://bad/blank", html=b"", text="")
+    corpus = pd.concat([corpus, blank], ignore_index=True)
+    pages = str(tmp_path / "pages")
+    spark.createDataFrame(corpus, datagen.PAGES_SCHEMA).write.parquet(pages)
+    out = tmp_path / "out"
+    run_job(jobs, "--pages", pages, "--out", str(out), "--run-id", "a1")
+
+    io = ParquetSnapshotTableIO(str(out))
+    parse = io.read(spark, "audit_parse").collect()
+    manifest = [r.url for r in io.read(spark, "manifest").collect()]
+    assert sorted(r.url for r in parse) == sorted(manifest) \
+        == sorted(corpus["url"])
+    assert {(r.n_pages, r.n_words, r.decode_failures) for r in parse} == {
+        (None, None, None)}

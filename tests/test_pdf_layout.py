@@ -272,23 +272,3 @@ def test_decimal_values_survive_as_decimals(pdf_long):
     vals = e2.values_table(pdf_long).limit(50).collect()
     for r in vals:
         Decimal(r.value)  # must parse exactly; raises on drift
-
-
-def test_salted_kernel_on_pdf_bytes(spark):
-    """The skew path (engine2/salted: page-range chunk split + exact
-    carry handoff) accepts parse_pdf_layout output like any other
-    pages table — oversized REAL-PDF documents split identically, A6
-    included."""
-    from pdf_extractor_spark.engine2.pipeline import extract_ficha
-    from pdf_extractor_spark.engine2.salted import extract_ficha_salted
-    from pdf_extractor_spark.ops.pdfstream import parse_pdf_layout
-
-    rows = [{"url": f"synth://ficha/{i:08d}",
-             "pdf": gen_e2_pdf_bytes(42, i)} for i in _ficha_ids(80)]
-    pdfs = spark.createDataFrame(rows, "url string, pdf binary")
-    pages = parse_pdf_layout(pdfs).persist()
-    plain = {tuple(sorted(r.asDict().items()))
-             for r in extract_ficha(pages, adjust_vacation=True).collect()}
-    salted = {tuple(sorted(r.asDict().items()))
-              for r in extract_ficha_salted(pages, max_pages=4).collect()}
-    assert plain == salted and plain

@@ -4,6 +4,7 @@ on small sides, no stray shuffles in the kernels."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark import queries as Q
@@ -294,8 +295,10 @@ def _python_nodes(df) -> list[str]:
     return names
 
 
-def test_pdf_job_runs_two_python_passes(spark, tmp_path, monkeypatch):
-    """`jobs.py --pdf-col` crosses into Python twice: the document pass
+@pytest.mark.parametrize("mode", ["pdf_col", "pages"])
+def test_pdf_job_runs_two_python_passes(spark, tmp_path, monkeypatch, mode):
+    """`jobs.py` crosses into Python twice, from raw PDF bytes
+    (`--pdf-col`) and from a pages table alike: the document pass
     (front door + both engines, one MapInArrow) and the series pass
     (one FlatMapGroupsInArrow). Every output table is a projection of
     the frames the job persists, so their plans hold every Python node
@@ -305,10 +308,16 @@ def test_pdf_job_runs_two_python_passes(spark, tmp_path, monkeypatch):
     import jobs
     from pdf_extractor_spark import datagen
 
-    pdfs = str(tmp_path / "pdfs")
-    spark.createDataFrame(
-        [(f"synth://ficha/{i:08d}", datagen.gen_e2_pdf_bytes(42, i))
-         for i in (1, 2, 5)], "url string, pdf binary").write.parquet(pdfs)
+    src = str(tmp_path / "src")
+    if mode == "pdf_col":
+        spark.createDataFrame(
+            [(f"synth://ficha/{i:08d}", datagen.gen_e2_pdf_bytes(42, i))
+             for i in (1, 2, 5)], "url string, pdf binary").write.parquet(src)
+        flags = ["--pdf-col", "pdf"]
+    else:
+        spark.createDataFrame(datagen.corpus_pandas(8),
+                              datagen.PAGES_SCHEMA).write.parquet(src)
+        flags = []
     persisted = []
     frame_cls = type(spark.range(1))    # the classic DataFrame subclass
     persist = frame_cls.persist
@@ -320,7 +329,7 @@ def test_pdf_job_runs_two_python_passes(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(frame_cls, "persist", recording)
     monkeypatch.setattr(jobs, "get_spark", lambda *a, **k: spark)
     monkeypatch.setattr(sys, "argv", [
-        "jobs.py", "--pages", pdfs, "--pdf-col", "pdf", "--run-id", "p1",
+        "jobs.py", "--pages", src, *flags, "--run-id", "p1",
         "--out", str(tmp_path / "out")])
     try:
         jobs.main()
