@@ -8,20 +8,27 @@
 Stages (north-rule shape):
   read pages table (or raw PDF bytes) → resume filter (manifest
   anti-join) → one per-document Arrow pass (`pdf_extractor_spark/
-  docpass.py`: the PDF front door with --pdf-col, Engine 1's
-  line/regex kernel and Engine 2's layout kernel with the vacation
-  adjustment fused), persisted once → one grouped pass building the
-  four output series tables → fill-if-empty MERGE into the keyed
-  target → audit/lineage tables (`audit_parse`: one row per input
-  document) → manifest, written last. Every table is a projection of
-  those two persisted frames.
+  docpass.py`) behind one explicit url-hash exchange, persisted once:
+  per url the earliest capture (by `warc_ts`, then a content hash; by
+  the hash alone when the input has no `warc_ts`) is extracted and
+  later captures are skipped; the pass runs the PDF front door with
+  --pdf-col, Engine 1's line/regex kernel, Engine 2's layout kernel
+  with the vacation adjustment fused and the writers of the four
+  output series → fill-if-empty MERGE into the keyed target
+  → audit/lineage tables (`audit_parse`: one row per input row, that
+  is per capture) → manifest, written last. Every table is a
+  projection of the one persisted frame.
 
 Outputs other than the keyed target commit through the run-keyed
 protocol in `sinks/tableio.py`, so a crashed run retried under its own
 run_id, with or without --resume, ends with exactly a clean run's rows;
---resume processes only urls missing from the manifest, and the keyed
-target never overwrites non-empty cells. A retry under a NEW run_id is
-not covered: the crashed run's partial partitions stay.
+--resume processes only urls missing from the manifest, so a recrawl
+of a url an earlier run processed is never read: its earlier capture
+stays the answer, as in a batch run over both inputs when they carry
+`warc_ts` (without it a batch run keeps the lower content hash, which
+may be the later capture), and the keyed target never overwrites
+non-empty cells. A retry under a NEW run_id is not covered: the
+crashed run's partial partitions stay.
 """
 
 from __future__ import annotations
@@ -36,17 +43,13 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from pdf_extractor_spark import docpass  # noqa: E402
+from pdf_extractor_spark.docpass import SERIES  # noqa: E402
 from pdf_extractor_spark.engine1 import pipeline as e1  # noqa: E402
 from pdf_extractor_spark.engine2 import pipeline as e2  # noqa: E402
 from pdf_extractor_spark.session import get_spark  # noqa: E402
 from pdf_extractor_spark.sinks import audit  # noqa: E402
 from pdf_extractor_spark.sinks.resume import manifest_rows  # noqa: E402
 from pdf_extractor_spark.sinks.tableio import get_table_io  # noqa: E402
-
-
-# output table → Engine-2 series: a K2 value code, or the K3/K4 writer
-SERIES = {"proventos": "3123-Base", "insalubridade": "8-Insalubridade",
-          "cartoes": e2.CARTOES, "horas_trabalhadas": e2.HORAS}
 
 
 def parse_period(s: str) -> tuple[int, int]:
@@ -106,9 +109,12 @@ def main() -> None:
         # filter on raw input first: already-done documents are never
         # parsed (the document pass below is the expensive stage)
         raw = raw.join(done.select("url"), "url", "left_anti")
-    # front door + Engine 1 + Engine 2 in one Python pass per document;
-    # every table below is a projection of its persisted long table
-    long_all = docpass.extract(raw, pdf_col=args.pdf_col).persist()
+    # front door + Engine 1 + Engine 2 + series writers in one Python
+    # pass per url; every table below is a projection of its persisted
+    # long table
+    long_all = docpass.extract(
+        raw, pdf_col=args.pdf_col, start=args.start, end=args.end,
+        minutes_mode=args.minutes_mode).persist()
     docs = docpass.doc_rows(long_all)
     # one count materialises the pass and answers "anything to do?"
     n = docs.count()
@@ -133,21 +139,18 @@ def main() -> None:
     io.write_run(e1_attention, "e1_attention", run_id, resuming)
 
     # ---- Engine 2 ------------------------------------------------------
-    # the A6 adjustment already ran per document in the pass above
-    long_df = docpass.e2_long(long_all)
-    # the four series tables are projections of one grouped pass
-    built = e2.build_series(e2.values_table(long_df), args.start, args.end,
-                            SERIES.values(),
-                            minutes_mode=args.minutes_mode).persist()
+    # the A6 adjustment and the series writers already ran per document
+    # in the pass above
     for name, series in SERIES.items():
-        io.write_run(e2.series_table(built, series), name, run_id, resuming)
+        io.write_run(e2.series_table(docpass.series_long(long_all), series),
+                     name, run_id, resuming)
 
     # ---- lineage + resume ----------------------------------------------
-    # audit_parse holds one row per input document in both modes: the
-    # front door's counters (pages parsed, words, decode failures) with
-    # --pdf-col, nulls for a pages-table row
+    # audit_parse holds one row per input row (capture) in both modes:
+    # the front door's counters (pages parsed, words, decode failures)
+    # with --pdf-col, nulls for a pages-table row or a later capture
     audits = {"audit_e1": e1_metrics,
-              "audit_e2": e2.metrics_table(long_df),
+              "audit_e2": e2.metrics_table(docpass.e2_long(long_all)),
               "audit_parse": docs}
     for name, df in audits.items():
         io.write_run(audit.build_audit(df, run_id), name, run_id, True)

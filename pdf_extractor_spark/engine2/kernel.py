@@ -12,7 +12,8 @@ numpy is used only where whole-page vector math wins.
 Execution shape: the pages table holds ONE ROW PER DOCUMENT, so the
 kernel runs per document — under ``mapInPandas`` in
 ``pipeline.extract_ficha``, or inside the extraction job's document pass
-(``docpass.py``) — embarrassingly parallel, zero shuffle. Cross-page
+(``docpass.py``, whose one url exchange only brings a url's captures
+together) — embarrassingly parallel. Cross-page
 state (G2/G5) never crosses documents, so it lives entirely inside the
 per-document call. At 100 TB the only skew risk is
 a single giant document serializing one task; the scan partitioning

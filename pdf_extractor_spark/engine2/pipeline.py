@@ -3,24 +3,27 @@
 * A1 last-write-wins and the A6 vacation adjustment (reference
   ``ficha_financeira_processor.py:935-996``) happen inside the kernel's
   per-document call (``kernel.extract_doc``);
-* the writers (``_write_*_csv``, ``:998-1119``) are one grouped pass,
-  ``build_series``: per url it zero-fills the requested months (A7,
+* the writers (``_write_*_csv``, ``:998-1119``) are one plain function,
+  ``writer_rows``: per url it zero-fills the requested months (A7,
   ``:917-933``), appends the K3/K4 out-of-range rows, computes the A8
   flag, applies C6 minutes mode and formats every value (C5) with the
-  Python byte-parity functions in ``functions/brnum.py``. The four
-  output tables are projections of its rows.
+  Python byte-parity functions in ``functions/brnum.py``. The
+  extraction job calls it per document in its one document pass
+  (``docpass.py``), after picking each url's earliest capture there;
+  ``build_series`` calls it per url group for stand-alone callers
+  (``queries.py``, ``bench.py``). The four output tables are
+  projections of its rows (``series_table``).
 
 Values travel as canonical decimal strings ('1234.56') end-to-end:
 exact, order-independent, and scale-preserving (the minutes rule reads
 '9.3' differently from '9.30').
 
-Scale notes (100 TB story): the kernel stage is shuffle-free
-(one row per document, mapInPandas). The tail is one hash exchange of
+Scale notes (100 TB story): the kernel stage is shuffle-free (one row
+per document, mapInPandas). ``build_series`` is one hash exchange of
 value rows on ``url`` feeding one applyInArrow pass; each group is
-bounded by one document's codes × months, never by corpus size, and
-the url key is high-cardinality and nearly uniform. Oversized
-documents are bounded by pages-per-doc, not rows, so AQE skew handling
-plus `spark.sql.files.maxPartitionBytes` keeps tasks even.
+every value row of one url, so a url must carry one document's rows
+(the job's document pass resolves recrawls before the writers run).
+The url key is high-cardinality and nearly uniform.
 """
 
 from __future__ import annotations
@@ -85,19 +88,24 @@ def metrics_table(long_df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 CARTOES, HORAS = "cartoes", "horas_trabalhadas"
-SERIES_SCHEMA = ("series string, url string, year int, month int, "
-                 "a string, b string, include_extra_100 boolean, "
-                 "is_extra boolean")
-_SERIES_ARROW = pa.schema([
-    ("series", pa.string()), ("url", pa.string()), ("year", pa.int32()),
-    ("month", pa.int32()), ("a", pa.string()), ("b", pa.string()),
-    ("include_extra_100", pa.bool_()), ("is_extra", pa.bool_()),
-])
+# (name, Spark type, Arrow type) of every series row column
+SERIES_FIELDS = [
+    ("series", "string", pa.string()), ("url", "string", pa.string()),
+    ("year", "int", pa.int32()), ("month", "int", pa.int32()),
+    ("a", "string", pa.string()), ("b", "string", pa.string()),
+    ("include_extra_100", "boolean", pa.bool_()),
+    ("is_extra", "boolean", pa.bool_()),
+]
+SERIES_SCHEMA = ", ".join(f"{n} {t}" for n, t, _ in SERIES_FIELDS)
+SERIES_COLS = [n for n, _, _ in SERIES_FIELDS]
+_SERIES_ARROW = pa.schema([(n, t) for n, _, t in SERIES_FIELDS])
 
 
-def _series_kernel(series: tuple[str, ...], start, end, minutes_mode: bool):
-    """applyInArrow function: one url's value rows → its rows of every
-    requested series, values formatted (C5)."""
+def writer_rows(url: str, values, series, start, end,
+                minutes_mode: bool = False) -> list[tuple]:
+    """One url's value rows, (code, year, month, value) tuples → its
+    rows of every requested series over the (year, month) range
+    `start`..`end`, in ``SERIES_COLS`` order, values formatted (C5)."""
     (y0, m0), (y1, m1) = start, end
     months = [(i // 12, i % 12 + 1)
               for i in range(y0 * 12 + m0 - 1, y1 * 12 + m1)]
@@ -112,51 +120,41 @@ def _series_kernel(series: tuple[str, ...], start, end, minutes_mode: bool):
     def fmt(v: str | None) -> str | None:
         return None if v is None else format_decimal(v)
 
-    def per_url(key, t):
-        maps: dict[str, dict] = {}
-        for code, y, m, v in zip(*(t.column(c).to_pylist()
-                                   for c in ("code", "year", "month",
-                                             "value"))):
-            maps.setdefault(code, {})[(y, m)] = v
-        rows = []
-        for s in series:
-            if s == CARTOES:
-                # K3: range months, then missing_months — 100%-keys in
-                # neither the 50%-series nor the range — sorted; A8 reads
-                # every 100%-value, in or out of range, exactly
-                h50 = conv(maps.get("6-Horas", {}))
-                h100 = conv(maps.get("14-Horas100", {}))
-                inc = any(Decimal(v) != 0 for v in h100.values())
-                extra = sorted(k for k in h100
-                               if k not in h50 and k not in in_range)
-                rows += [(s, y, m, h50.get((y, m), "0"),
-                          h100.get((y, m), "0"), inc, ex)
-                         for ex, keys in ((False, months), (True, extra))
-                         for y, m in keys]
-            elif s == HORAS:
-                # K4: range months, then additional_months — keys of
-                # either series outside the range — sorted
-                h = conv(maps.get("1-Salario", {}))
-                f = conv(maps.get("952-FaltaInjustifica", {}))
-                extra = sorted((h.keys() | f.keys()) - in_range)
-                rows += [(s, y, m, h.get((y, m), "0"), f.get((y, m), "0"),
-                          None, ex)
-                         for ex, keys in ((False, months), (True, extra))
-                         for y, m in keys]
-            else:
-                # K2: the code's series zero-filled over the range (A7)
-                vals = maps.get(s, {})
-                rows += [(s, y, m, vals.get((y, m), "0"), None, None, None)
-                         for y, m in months]
-        cols = list(zip(*rows)) or [()] * 7
-        return pa.Table.from_pydict({
-            "series": cols[0], "url": [key[0].as_py()] * len(rows),
-            "year": cols[1], "month": cols[2],
-            "a": [fmt(v) for v in cols[3]], "b": [fmt(v) for v in cols[4]],
-            "include_extra_100": cols[5], "is_extra": cols[6],
-        }, schema=_SERIES_ARROW)
-
-    return per_url
+    maps: dict[str, dict] = {}
+    for code, y, m, v in values:
+        maps.setdefault(code, {})[(y, m)] = v
+    rows = []
+    for s in series:
+        if s == CARTOES:
+            # K3: range months, then missing_months — 100%-keys in
+            # neither the 50%-series nor the range — sorted; A8 reads
+            # every 100%-value, in or out of range, exactly
+            h50 = conv(maps.get("6-Horas", {}))
+            h100 = conv(maps.get("14-Horas100", {}))
+            inc = any(Decimal(v) != 0 for v in h100.values())
+            extra = sorted(k for k in h100
+                           if k not in h50 and k not in in_range)
+            rows += [(s, url, y, m, fmt(h50.get((y, m), "0")),
+                      fmt(h100.get((y, m), "0")), inc, ex)
+                     for ex, keys in ((False, months), (True, extra))
+                     for y, m in keys]
+        elif s == HORAS:
+            # K4: range months, then additional_months — keys of
+            # either series outside the range — sorted
+            h = conv(maps.get("1-Salario", {}))
+            f = conv(maps.get("952-FaltaInjustifica", {}))
+            extra = sorted((h.keys() | f.keys()) - in_range)
+            rows += [(s, url, y, m, fmt(h.get((y, m), "0")),
+                      fmt(f.get((y, m), "0")), None, ex)
+                     for ex, keys in ((False, months), (True, extra))
+                     for y, m in keys]
+        else:
+            # K2: the code's series zero-filled over the range (A7)
+            vals = maps.get(s, {})
+            rows += [(s, url, y, m, fmt(vals.get((y, m), "0")), None,
+                      None, None)
+                     for y, m in months]
+    return rows
 
 
 def build_series(vals: DataFrame, start, end, series,
@@ -169,11 +167,24 @@ def build_series(vals: DataFrame, start, end, series,
     gets the full month range in every series, as the reference emits
     one CSV per PDF. `minutes_mode` applies C6 to cartões and horas.
     Rows carry the SERIES_SCHEMA columns; `series_table` projects one
-    series into its output table.
+    series into its output table. The group is every value row of the
+    url, so the input must hold one document per url; the extraction
+    job builds the same rows in its document pass (``docpass.py``).
     """
-    kernel = _series_kernel(tuple(series), start, end, minutes_mode)
+    series = tuple(series)
+
+    def per_url(key, t):
+        values = zip(*(t.column(c).to_pylist()
+                       for c in ("code", "year", "month", "value")))
+        rows = writer_rows(key[0].as_py(), values, series, start, end,
+                           minutes_mode)
+        cols = list(zip(*rows)) or [()] * len(SERIES_COLS)
+        return pa.Table.from_arrays(
+            [pa.array(c, type=t) for c, t in zip(cols, _SERIES_ARROW.types)],
+            schema=_SERIES_ARROW)
+
     return (vals.select("url", "code", "year", "month", "value")
-            .groupBy("url").applyInArrow(kernel, schema=SERIES_SCHEMA))
+            .groupBy("url").applyInArrow(per_url, schema=SERIES_SCHEMA))
 
 
 def series_table(built: DataFrame, series: str) -> DataFrame:

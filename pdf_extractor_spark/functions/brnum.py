@@ -1,43 +1,18 @@
 """Brazilian-number scalar functions (reference C1-C6 semantics).
 
-Two tiers:
-
-* **Column expressions** — pure Catalyst (whole-stage codegen, JVM-side):
-  C4 `to_decimal_expr`.
-
-* **Plain Python over canonical decimal strings** — the byte-parity
-  tier (C5 `format_decimal`, C6 `convert_minutes`), called per value by
-  Engine 2's grouped series pass (``engine2/pipeline.build_series``).
-  Python ``Decimal`` default context + ROUND_HALF_EVEN quantize exactly
-  matches the reference (``ficha_financeira_processor.py:723-755,
-  1155-1159``); Spark's decimal cast rounds HALF_UP, which can diverge
-  on exact .005 boundaries, so C5 has no Catalyst form.
+Plain Python over canonical decimal strings, the byte-parity tier
+(C5 `format_decimal`, C6 `convert_minutes`), called per value by
+Engine 2's series writer (``engine2/pipeline.writer_rows``). Python
+``Decimal`` default context + ROUND_HALF_EVEN quantize exactly matches
+the reference (``ficha_financeira_processor.py:723-755, 1155-1159``);
+Spark's decimal cast rounds HALF_UP, which can diverge on exact .005
+boundaries, so C5 has no Catalyst form. C4 (``_to_decimal``) is Engine 2's
+in-kernel string canonicalization (``kernel._row_values``).
 """
 
 from __future__ import annotations
 
 from decimal import Decimal
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-# ---------------------------------------------------------------------------
-# Expression tier (JVM / codegen)
-# ---------------------------------------------------------------------------
-
-
-def to_decimal_expr(col: Column, precision: int = 38, scale: int = 6) -> Column:
-    """C4 `_to_decimal`: '1.234,56' → 1234.56 (invalid → 0)."""
-    cleaned = F.regexp_replace(F.regexp_replace(col, r"\.", ""), ",", ".")
-    return F.coalesce(
-        cleaned.try_cast(f"decimal({precision},{scale})"),
-        F.lit(0).cast(f"decimal({precision},{scale})"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Byte-parity tier (Python Decimal over canonical decimal strings)
-# ---------------------------------------------------------------------------
 
 
 def format_decimal(v: str) -> str:

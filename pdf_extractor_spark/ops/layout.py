@@ -59,6 +59,23 @@ def rebalance_narrow(df: DataFrame, bytes_per_core: int = _BYTES_PER_CORE
     return df
 
 
+def exchange_width(df: DataFrame) -> int:
+    """Partition count for an explicit hash exchange of `df`: one
+    partition per scan split's worth of estimated input bytes
+    (``spark.sql.files.maxPartitionBytes``), never fewer than
+    ``spark.sql.shuffle.partitions``. An explicit count is not coalesced
+    by AQE, so a small input keeps every core busy, and a large one
+    keeps the parallelism its scan had. An input the optimizer cannot
+    size (no stats, or the ``Long.MaxValue`` default) gets the floor."""
+    spark = df.sparkSession
+    floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    est = _estimated_bytes(df)
+    if est is None or est >= (1 << 63) - 1:
+        return floor
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return max(floor, -(-est // split))
+
+
 def dim_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     """Literal dimension table with an HONEST size estimate.
 

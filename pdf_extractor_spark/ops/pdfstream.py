@@ -1048,13 +1048,18 @@ class _Doc:
         if not isinstance(root, dict):
             return []
         out: list[dict] = []
+        # resolved nodes are cached per object number, so identity keys
+        # a node: a /Kids cycle or a repeated kid is walked once
+        visited: set[int] = set()
 
         def walk(node, inherited: dict, depth: int = 0) -> None:
             node = self.resolve(node)
             if isinstance(node, tuple):
                 node = node[0]
-            if not isinstance(node, dict) or depth > 64:
+            if (not isinstance(node, dict) or depth > 64
+                    or id(node) in visited):
                 return
+            visited.add(id(node))
             # /Resources and /MediaBox are inheritable page attributes
             # (§7.7.3.4) — carry them down the /Kids chain
             inh = inherited

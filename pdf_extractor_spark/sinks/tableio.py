@@ -25,8 +25,7 @@ replay-safe on its own. Two implementations:
 * ``IcebergTableIO`` — native path when the Iceberg runtime jars and
   SQL extensions are on the classpath: ``MERGE INTO`` (reference
   fill-if-empty semantics, ``pdf_processor_core.py:769-772``),
-  ``writeTo().overwritePartitions()``, and ``start-snapshot-id``
-  incremental reads.
+  and ``writeTo().overwritePartitions()``.
   Not runnable in this sandbox (no jars) — `available()` gates it and
   tests cover the parquet implementation; the SQL it emits is the
   public documented Iceberg-Spark API.
@@ -195,7 +194,7 @@ class ParquetSnapshotTableIO(TableIO):
 # ---------------------------------------------------------------------------
 
 class IcebergTableIO(TableIO):
-    """MERGE INTO / snapshot-incremental implementation against an
+    """MERGE INTO / partition-overwrite implementation against an
     Iceberg catalog. Emits only the public Iceberg-Spark SQL/DataFrame
     API; gated by `available()` since this sandbox has no Iceberg jars.
     """
@@ -249,22 +248,6 @@ class IcebergTableIO(TableIO):
                  THEN UPDATE SET t.{value_col} = u.{value_col}
             WHEN NOT MATCHED THEN INSERT *
         """)
-
-    def current_snapshot_id(self, spark: SparkSession, name: str) -> int | None:
-        if not self._exists(spark, name):
-            return None
-        row = spark.sql(
-            f"SELECT snapshot_id FROM {self._t(name)}.snapshots "
-            "ORDER BY committed_at DESC LIMIT 1").first()
-        return row.snapshot_id if row else None
-
-    def read_since(self, spark: SparkSession, name: str,
-                   start_snapshot_id: int) -> DataFrame:
-        """Snapshot-incremental read — the Iceberg-native resume: only
-        rows appended after `start_snapshot_id` are returned."""
-        return (spark.read.format("iceberg")
-                .option("start-snapshot-id", str(start_snapshot_id))
-                .load(self._t(name)))
 
 
 def get_table_io(kind: str, root_or_db: str) -> TableIO:

@@ -1,8 +1,9 @@
 """The extraction job's document pass (`docpass.extract`) equals the
 staged path it replaces: front door (`parse_pdf_layout`) → Engine 1
 (`e1.extract_long`) and Engine 2 (`e2.extract_ficha(adjust_vacation=
-True)`), row for row, over PDF bytes and over a pages table, hostile
-rows included."""
+True)`) → the series pass (`e2.build_series` over the pass's own
+Engine-2 rows), row for row, over PDF bytes and over a pages table,
+hostile rows included."""
 
 from __future__ import annotations
 
@@ -18,14 +19,26 @@ def _rows(df) -> list[tuple]:
     return sorted((tuple(r) for r in df.collect()), key=repr)
 
 
-def _assert_equal(staged_e1, staged_e2, long_all):
+# the job's default --start / --end
+PERIOD = dict(start=(2019, 1), end=(2021, 12))
+
+
+def _assert_equal(staged_e1, staged_e2, long_all, start, end,
+                  minutes_mode=False):
     got_e1, got_e2 = docpass.e1_long(long_all), docpass.e2_long(long_all)
+    got_series = docpass.series_long(long_all)
+    staged_series = e2.build_series(
+        e2.values_table(got_e2), start, end, docpass.SERIES.values(),
+        minutes_mode=minutes_mode)
     assert got_e1.columns == staged_e1.columns
     assert got_e2.columns == staged_e2.columns
+    assert got_series.columns == staged_series.columns
     want_e1, want_e2 = _rows(staged_e1), _rows(staged_e2)
-    assert want_e1 and want_e2
+    want_series = _rows(staged_series)
+    assert want_e1 and want_e2 and want_series
     assert _rows(got_e1) == want_e1
     assert _rows(got_e2) == want_e2
+    assert _rows(got_series) == want_series
 
 
 @pytest.fixture(scope="module")
@@ -46,9 +59,10 @@ def pdfs(spark):
 
 def test_docpass_from_pdf_bytes_equals_staged_path(pdfs):
     pages = parse_pdf_layout(pdfs).cache()
-    long_all = docpass.extract(pdfs, pdf_col="pdf").cache()
+    long_all = docpass.extract(pdfs, pdf_col="pdf", **PERIOD).cache()
     _assert_equal(e1.extract_long(pages),
-                  e2.extract_ficha(pages, adjust_vacation=True), long_all)
+                  e2.extract_ficha(pages, adjust_vacation=True), long_all,
+                  **PERIOD)
 
     counters = _rows(docpass.doc_rows(long_all))
     assert counters == _rows(pages.select(docpass.DOC_COLS))
@@ -68,9 +82,13 @@ def test_docpass_from_pages_table_equals_staged_path(spark):
     corpus.loc[ficha[2], "html"] = None        # text, null payload
     corpus.loc[folha[0], "text"] = None        # neither
     pages = spark.createDataFrame(corpus, datagen.PAGES_SCHEMA).cache()
-    long_all = docpass.extract(pages).cache()
+    # a shorter range and minutes mode: the job's --start, --end and
+    # --minutes-mode reach the series writers
+    period = dict(start=(2020, 1), end=(2020, 12), minutes_mode=True)
+    long_all = docpass.extract(pages, **period).cache()
     _assert_equal(e1.extract_long(pages),
-                  e2.extract_ficha(pages, adjust_vacation=True), long_all)
+                  e2.extract_ficha(pages, adjust_vacation=True), long_all,
+                  **period)
 
     docs = _rows(docpass.doc_rows(long_all))
     assert sorted(r[0] for r in docs) == sorted(corpus["url"])

@@ -256,7 +256,7 @@ def test_a8_flag_reads_values_exactly(spark):
 
 @pytest.mark.parametrize("entry", [
     lambda df: e2.extract_ficha(df, adjust_vacation=True),
-    lambda df: docpass.e2_long(docpass.extract(df)),
+    lambda df: docpass.e2_long(docpass.extract(df, (2019, 1), (2021, 12))),
 ], ids=["extract_ficha", "docpass"])
 def test_malformed_payload_is_one_decode_failure(spark, entry):
     """A truncated WBX2 payload and a JSON payload (an old format the

@@ -8,16 +8,22 @@ it is. Retrying under the same run_id must leave every output table
 equal to a clean run's, compared as sorted rows without the columns
 that legitimately differ between runs. More in-process runs check
 `jobs.py --minutes-mode` and `jobs.py --pdf-col` against the oracle_ref
-writers, and that `audit_parse` accounts for every input document."""
+writers, that `audit_parse` accounts for every input document, and
+that a recrawled url's answer is its earliest capture whatever the row
+order, the core count or the run that sees the later capture."""
 
 from __future__ import annotations
 
 import functools
+import os
 import shutil
+import subprocess
 import sys
+from pathlib import Path
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 import jobs
 import jobs_curate
@@ -331,3 +337,112 @@ def test_extract_job_audits_every_pages_table_document(spark, run_job,
         == sorted(corpus["url"])
     assert {(r.n_pages, r.n_words, r.decode_failures) for r in parse} == {
         (None, None, None)}
+
+
+# runs jobs.main() once per (pages, out) argument pair in a fresh
+# local[1] process (one SparkContext per process)
+_LOCAL1_RUNS = """
+import sys
+import jobs
+for pages, out in zip(sys.argv[1::2], sys.argv[2::2]):
+    sys.argv = ["jobs.py", "--pages", pages, "--out", out, "--run-id", "r1"]
+    jobs.main()
+"""
+
+
+@pytest.fixture(scope="module")
+def recrawl(spark, tmp_path_factory):
+    """A 40-doc pages table plus a later second capture (`warc_ts` + 30
+    days, another document's content) of one ficha and one folha url,
+    written as one file in two row orders → (root, [dir per order],
+    {kind: recrawled url}, the 40 first captures as pandas)."""
+    root = tmp_path_factory.mktemp("recrawl")
+    corpus = datagen.corpus_pandas(40)
+    later, urls = [], {}
+    for kind in ("ficha", "folha"):
+        first = corpus[corpus["url"].str.contains(kind)].iloc[0]
+        other = next(r for r in map(functools.partial(datagen.gen_row, 42),
+                                    range(40, 400)) if kind in r["url"])
+        later.append({**other, "url": first["url"],
+                      "warc_ts": first["warc_ts"] + pd.Timedelta(days=30)})
+        urls[kind] = first["url"]
+    rows = pd.concat([corpus, pd.DataFrame(later)], ignore_index=True)
+    dirs = []
+    for order, df in (("crawl", rows), ("reversed", rows[::-1])):
+        dirs.append(str(root / order))
+        spark.createDataFrame(df.reset_index(drop=True),
+                              datagen.PAGES_SCHEMA) \
+            .coalesce(1).write.parquet(dirs[-1])
+    return root, dirs, urls, corpus
+
+
+def test_extract_job_recrawl_independent_of_row_order_and_cores(
+        spark, run_job, recrawl):
+    """A recrawled url's answer is its earliest capture's, whatever the
+    input row order and core count: two file orders × local[4] (this
+    session) and local[1] (a fresh process) give equal tables, and the
+    two urls' series and `e1_target` cells equal oracle_ref on the
+    first capture's document."""
+    root, dirs, urls, corpus = recrawl
+    outs = []
+    for i, pages in enumerate(dirs):
+        outs.append(root / f"local4_{i}")
+        run_job(jobs, "--pages", pages, "--out", str(outs[-1]),
+                "--run-id", "r1")
+    local1 = [root / f"local1_{i}" for i in range(len(dirs))]
+    repo = Path(jobs.__file__).resolve().parent
+    subprocess.run(
+        [sys.executable, "-c", _LOCAL1_RUNS,
+         *(str(p) for pair in zip(dirs, local1) for p in pair)],
+        cwd=repo, check=True, capture_output=True,
+        env={**os.environ, "SPARK_GRAFT_CPUS": "1",
+             "SPARK_DRIVER_MEMORY": "1g", "PYTHONPATH": str(repo)})
+    want = _tables(spark, outs[0], EXTRACT_TABLES)
+    for out in outs[1:] + local1:
+        assert _tables(spark, out, EXTRACT_TABLES) == want, out
+
+    # the series equal the oracle over the 40 first captures, and the
+    # audit has one row per capture
+    assert _series_rows(spark, outs[0]) == {
+        name: sorted(rows) for name, rows in
+        _writer_oracle(40, (2019, 1), (2021, 12)).items()}
+    assert [r[-1] for r in want["audit_parse"]].count(urls["ficha"]) == 2
+
+    text = corpus.set_index("url").loc[urls["folha"], "text"]
+    oracle = orc.e1_extract_doc(text)
+    cells = {(ft, y, m, col): v
+             for ft in ("FOLHA NORMAL", "13 SALARIO")
+             for (y, m), res in oracle[ft].items()
+             for col, v in res["data"].items()}
+    io = ParquetSnapshotTableIO(str(outs[0]))
+    got = {(r.folha_type, r.year, r.month, r.excel_col): r.value
+           for r in io.read(spark, "e1_target")
+           .filter(F.col("url") == urls["folha"]).collect()}
+    assert cells and got.keys() == cells.keys()
+    assert all(got[k] == v if isinstance(v, str) else float(got[k]) == v
+               for k, v in cells.items())
+
+
+def test_extract_job_resume_recrawl_equals_batch(spark, run_job, recrawl,
+                                                 capsys):
+    """The second captures arrive in run 2 (`--resume`): the manifest
+    anti-join skips them, so every table equals a batch run over both
+    captures, except that the resumed run never audits the skipped
+    captures."""
+    root, (both, _), _urls, corpus = recrawl
+    first = str(root / "first")
+    spark.createDataFrame(corpus, datagen.PAGES_SCHEMA).write.parquet(first)
+    batch, inc = root / "resume_batch", root / "resume_inc"
+    run_job(jobs, "--pages", both, "--out", str(batch), "--run-id", "b1")
+    run_job(jobs, "--pages", first, "--out", str(inc), "--run-id", "r1")
+    capsys.readouterr()
+    run_job(jobs, "--pages", both, "--out", str(inc), "--run-id", "r2",
+            "--resume")
+    assert "nothing to process" in capsys.readouterr().out
+
+    want = _tables(spark, batch, EXTRACT_TABLES)
+    got = _tables(spark, inc, EXTRACT_TABLES)
+    audit_want, audit_got = want.pop("audit_parse"), got.pop("audit_parse")
+    assert got == want
+    assert len(audit_want) == len(audit_got) + 2
+    assert sorted(set(audit_want), key=repr) == audit_got

@@ -622,3 +622,22 @@ def test_rebalance_narrow_size_gate(spark, sf_dir):
     # large estimated input -> identity (range stats: 8 bytes/row)
     big = spark.range(0, 1 << 30)
     assert rebalance_narrow(big) is big
+
+
+def test_exchange_width_follows_the_input_size(spark, sf_dir):
+    """ops.layout.exchange_width: the shuffle-partitions floor for a
+    small input and for one the optimizer cannot size, and one
+    partition per scan split of estimated bytes above it."""
+    from pdf_extractor_spark.ops.layout import exchange_width
+
+    floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    split = spark._jsparkSession.sessionState().conf() \
+        .filesMaxPartitionBytes()
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    assert exchange_width(docs) == floor
+    # a literal table's estimate is Long.MaxValue: unknown, not huge
+    lit = spark.createDataFrame([("u", "x")], "url string, text string")
+    assert exchange_width(lit) == floor
+    big = spark.range(0, 1 << 30)       # range stats: 8 bytes/row
+    assert exchange_width(big) == max(floor, -(-(8 << 30) // split))
+    assert exchange_width(big) > floor

@@ -14,11 +14,14 @@ from-scratch parser.
 """
 
 import hashlib
+import signal
+import time
 import zlib
 
 import pytest
 
-from pdf_extractor_spark.ops.pdfstream import _PDF_PAD, _Doc, _rc4, parse_pdf_doc
+from pdf_extractor_spark.ops.pdfstream import (
+    _PDF_PAD, _Doc, _rc4, layout_row, parse_pdf_doc)
 
 
 def _xref_stream_pdf(type1: dict[int, bytes], type2: dict[int, bytes],
@@ -434,3 +437,39 @@ def test_flate_bomb_counted_within_caps(monkeypatch, cap):
     pages = parse_pdf_doc(_classic_pdf(objs))
     assert [pg["text"] for pg in pages] == ["kept page", ""]
     assert sum(pg["decode_failures"] for pg in pages) == 1
+
+
+def _within(seconds: float, fn, *args):
+    """fn(*args), failing the test if it runs longer than `seconds`; a
+    SIGALRM interrupts a runaway pure-Python walk instead of hanging
+    the suite."""
+    def expire(*_):
+        raise TimeoutError(f"no return within {seconds} s")
+
+    old = signal.signal(signal.SIGALRM, expire)
+    signal.setitimer(signal.ITIMER_REAL, seconds)
+    t0 = time.perf_counter()
+    try:
+        out = fn(*args)
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, old)
+    assert time.perf_counter() - t0 < seconds
+    return out
+
+
+@pytest.mark.parametrize("kids", [b"[2 0 R 2 0 R 3 0 R]", b"[2 0 R 3 0 R]"],
+                         ids=["self_twice", "self_once"])
+def test_cyclic_page_tree_walks_each_node_once(kids):
+    """A /Pages node listing itself in /Kids is walked once: listed
+    twice, the walk used to double per level down to its depth cap
+    (2^64 calls); listed once, it returned the one page 64 times. The
+    job's front door (`layout_row`) walks the same tree."""
+    objs = dict(_SIMPLE_OBJS)
+    objs[2] = b"<< /Type /Pages /Count 1 /Kids %s >>" % kids
+    pdf = _classic_pdf(objs)
+    parsed = _within(1.0, parse_pdf_doc, pdf)
+    assert [pg["text"] for pg in parsed] == ["offset drift"]
+    assert parsed[0]["decode_failures"] == 0
+    _html, text, n_pages, _n_words, failures = _within(1.0, layout_row, pdf)
+    assert (text, n_pages, failures) == ("offset drift", 1, 0)

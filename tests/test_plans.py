@@ -296,13 +296,14 @@ def _python_nodes(df) -> list[str]:
 
 
 @pytest.mark.parametrize("mode", ["pdf_col", "pages"])
-def test_pdf_job_runs_two_python_passes(spark, tmp_path, monkeypatch, mode):
-    """`jobs.py` crosses into Python twice, from raw PDF bytes
+def test_pdf_job_runs_one_python_pass(spark, tmp_path, monkeypatch, mode):
+    """`jobs.py` crosses into Python once, from raw PDF bytes
     (`--pdf-col`) and from a pages table alike: the document pass
-    (front door + both engines, one MapInArrow) and the series pass
-    (one FlatMapGroupsInArrow). Every output table is a projection of
-    the frames the job persists, so their plans hold every Python node
-    of the job."""
+    (front door, both engines and the series writers, one MapInArrow)
+    behind one explicit url-hash exchange (`ops.layout.exchange_width`
+    partitions: on this small input, `spark.sql.shuffle.partitions`).
+    Every output table is a projection of the one frame the job
+    persists, so its plan holds every Python node of the job."""
     import sys
 
     import jobs
@@ -318,12 +319,13 @@ def test_pdf_job_runs_two_python_passes(spark, tmp_path, monkeypatch, mode):
         spark.createDataFrame(datagen.corpus_pandas(8),
                               datagen.PAGES_SCHEMA).write.parquet(src)
         flags = []
-    persisted = []
+    persisted, plans = [], []
     frame_cls = type(spark.range(1))    # the classic DataFrame subclass
     persist = frame_cls.persist
 
     def recording(self, *a, **k):
         persisted.extend(_python_nodes(self.select("*")))
+        plans.append(_plan(self))
         return persist(self, *a, **k)
 
     monkeypatch.setattr(frame_cls, "persist", recording)
@@ -335,4 +337,9 @@ def test_pdf_job_runs_two_python_passes(spark, tmp_path, monkeypatch, mode):
         jobs.main()
     finally:
         spark.catalog.clearCache()
-    assert sorted(persisted) == ["FlatMapGroupsInArrow", "MapInArrow"]
+    assert persisted == ["MapInArrow"]
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    exchanges = [ln for ln in plans[0].splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1
+    assert "hashpartitioning(url#" in exchanges[0]
+    assert f", {n}), REPARTITION_BY_NUM" in exchanges[0]
