@@ -6,8 +6,8 @@ Engine 2's series writer (``engine2/pipeline.writer_rows``). Python
 ``Decimal`` default context + ROUND_HALF_EVEN quantize exactly matches
 the reference (``ficha_financeira_processor.py:723-755, 1155-1159``);
 Spark's decimal cast rounds HALF_UP, which can diverge on exact .005
-boundaries, so C5 has no Catalyst form. C4 (``_to_decimal``) is Engine 2's
-in-kernel string canonicalization (``kernel._row_values``).
+boundaries, so C5 has no Catalyst form. C4 (the decimal parse) is the
+in-kernel string canonicalization in ``engine2/kernel._row_values``.
 """
 
 from __future__ import annotations

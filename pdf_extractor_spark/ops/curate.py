@@ -176,19 +176,13 @@ def extract_pdf_text(pages: DataFrame, pdf_col: str = "pdf",
                      with_metrics: bool = False) -> DataFrame:
     """PDF-tier front door: parse each document's PDF bytes
     (``ops.pdfstream.parse_pdf_docs``) into the (doc_id, text) shape
-    the curation stack consumes.
+    the curation stack consumes, with zero exchanges like the HTML front
+    door (and stream-safe for the same reason).
 
-    The input contract carries WHOLE PDFs per row, so every page of a
-    document comes out of one kernel call and the page → document
-    reassembly is kernel-local: the whole tier is scan → mapInPandas
-    with zero exchanges, the same plan shape as the HTML front door
-    (and stream-safe for the same reason). `parse_pdf_pages` + a keyed
-    aggregation remains available for inputs where pages genuinely
-    arrive as separate rows.
-
-    `with_metrics` adds pages parsed / line / operator / decode-failure
-    counts per document plus the parse task's partition id (captured
-    in the same shuffle-free stage)."""
+    `with_metrics` adds pages parsed (0 for bytes with no page tree, as
+    in the extraction job's `audit_parse`) / line / operator /
+    decode-failure counts per document plus the parse task's partition
+    id (captured in the same shuffle-free stage)."""
     from .pdfstream import parse_pdf_docs
 
     parsed = parse_pdf_docs(pages, pdf_col=pdf_col, id_col=id_col)

@@ -38,11 +38,10 @@ def _estimated_bytes(df: DataFrame) -> int | None:
         return None
 
 
-def rebalance_narrow(df: DataFrame, bytes_per_core: int = _BYTES_PER_CORE
-                     ) -> DataFrame:
+def rebalance_narrow(df: DataFrame) -> DataFrame:
     """Round-robin repartition of a provably-small input to full core
     width before an expensive per-row stage; identity for anything the
-    optimizer estimates above cores × bytes_per_core, and for inputs
+    optimizer estimates above cores × `_BYTES_PER_CORE`, and for inputs
     the caller already repartitioned (no double exchange when a query
     rebalances once and feeds several ops that each guard themselves)."""
     sc = df.sparkSession.sparkContext
@@ -54,7 +53,7 @@ def rebalance_narrow(df: DataFrame, bytes_per_core: int = _BYTES_PER_CORE
     except Exception:
         pass
     est = _estimated_bytes(df)
-    if est is not None and est < cores * bytes_per_core:
+    if est is not None and est < cores * _BYTES_PER_CORE:
         return df.repartition(cores)
     return df
 

@@ -47,7 +47,7 @@ from __future__ import annotations
 import re
 import zlib
 from itertools import accumulate
-from typing import Iterator
+from typing import Callable, Iterator, NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -554,6 +554,9 @@ def _png_unpredict(data: bytes, columns: int) -> bytes:
 # cap, raises zlib.error and is counted as a decode failure.
 MAX_INFLATE_STREAM = 64 << 20
 MAX_INFLATE_DOC = 256 << 20
+
+# page height in points when a page's /MediaBox gives none
+_LETTER_HEIGHT = 792.0
 
 
 class _Doc:
@@ -1080,14 +1083,16 @@ class _Doc:
         return out
 
     def page_height(self, page: dict) -> float:
-        """MediaBox height in points (default US-Letter 792)."""
-        mb = self.resolve(page.get("MediaBox"))
-        if isinstance(mb, list) and len(mb) == 4:
-            try:
+        """MediaBox height in points; US-Letter 792 for a box that is
+        missing, malformed, unresolvable (a dangling or truncated
+        reference) or not convertible (a coordinate past float range)."""
+        try:
+            mb = self.resolve(page.get("MediaBox"))
+            if isinstance(mb, list) and len(mb) == 4:
                 return float(mb[3]) - float(mb[1])
-            except (TypeError, ValueError):
-                pass
-        return 792.0
+        except Exception:
+            pass
+        return _LETTER_HEIGHT
 
     def page_content(self, page: dict) -> bytes:
         cont = self.resolve(page.get("Contents"))
@@ -1099,24 +1104,6 @@ class _Doc:
             parts.append(self.stream_data(cont))
         # streams concatenate with whitespace between (§7.8.2)
         return b"\n".join(parts)
-
-    def page_encoding(self, page: dict) -> list[str] | dict[int, str]:
-        """Decoder for the page's (single) font: a byte → unicode table
-        for simple fonts, or a CID → unicode map (dict) for composite
-        /Type0 fonts. Legacy merged view of `page_fonts` — the word-box
-        path uses the per-font objects directly (Tf switches fonts)."""
-        fonts = self.page_fonts(page)
-        table = list(_WINANSI)
-        for f in fonts.values():
-            if f.cid:
-                if f.cmap:
-                    return f.cmap
-                continue
-            if f.table is not _WINANSI:
-                for code in range(256):
-                    if f.table[code] != _WINANSI[code]:
-                        table[code] = f.table[code]
-        return table
 
     def page_fonts(self, page: dict) -> dict[str, "_Font"]:
         """Resource-name → _Font map for a page: the byte/CID → unicode
@@ -1258,7 +1245,6 @@ class _Doc:
 
 # --- content-stream tokenizer -------------------------------------------
 
-_OPER_RE = re.compile(rb"[A-Za-z'\"*]+")
 _INLINE_IMG_END = re.compile(rb"[\x00\t\n\x0c\r ]EI(?=[\x00\t\n\x0c\r ]|$)")
 
 # one-pass content lexer: leading whitespace/comments folded into the
@@ -1366,8 +1352,7 @@ _Seg = tuple[float, list[str], list[float], list[float], float, float,
 _X_TOL = 3.0
 
 
-def _extract_page(content: bytes, fonts: dict[str, _Font],
-                  tables: dict | None = None
+def _extract_page(content: bytes, fonts: dict[str, _Font], tables: dict
                   ) -> tuple[list[_Seg], int, int]:
     """Run the text-state machine over one page's content.
 
@@ -1395,9 +1380,7 @@ def _extract_page(content: bytes, fonts: dict[str, _Font],
     scale = 1.0
     # per-byte advance tables for the current simple-font state
     # (memoized — Tf/Tz per show is common and the rebuild is 256 ops;
-    # callers pass one dict per DOCUMENT so repeated pages share it)
-    _tables: dict[tuple, tuple[list[float], list[float]]] = (
-        {} if tables is None else tables)
+    # `tables` is one dict per DOCUMENT so repeated pages share it)
     gend_cache: list[float] = [0.0] * 256
     adv_cache: list[float] = [0.0] * 256
 
@@ -1407,7 +1390,7 @@ def _extract_page(content: bytes, fonts: dict[str, _Font],
         if font.cid:
             return
         key = (id(font), size, tz, tc, tw)
-        hit = _tables.get(key)
+        hit = tables.get(key)
         if hit is None:
             # listcomp form of the historical per-code loop — same
             # expression order per element, so every double is
@@ -1431,7 +1414,7 @@ def _extract_page(content: bytes, fonts: dict[str, _Font],
                 gend = [g * scale for g in gws]
                 adv = [(g + tc + 0.0) * scale for g in gws]
                 adv[32] = (gws[32] + tc + tw) * scale
-            hit = _tables[key] = (gend, adv)
+            hit = tables[key] = (gend, adv)
         gend_cache, adv_cache = hit
 
     rebuild()
@@ -1555,9 +1538,8 @@ def _extract_page(content: bytes, fonts: dict[str, _Font],
     return segs, n_ops, failures
 
 
-def _assemble_page(segs: list[_Seg], height: float = 0.0,
-                   doctop0: float = 0.0, want_words: bool = False
-                   ) -> tuple[list[str], list[tuple]]:
+def _assemble_page(segs: list[_Seg], height: float, doctop0: float,
+                   want_words: bool) -> tuple[list[str], list[tuple]]:
     """Segments → (line texts top-to-bottom, word boxes).
 
     Lines group by baseline y rounded to 0.1 pt; within a line glyph
@@ -1653,89 +1635,77 @@ def _assemble_page(segs: list[_Seg], height: float = 0.0,
     return texts, words
 
 
+class _Page(NamedTuple):
+    """One walked page (words stay empty unless the walk wants them)."""
+    lines: list[str]
+    words: list[tuple]
+    n_ops: int
+    decode_failures: int
+    height: float
+
+
+def _walk(pdf: bytes, want_words: bool) -> tuple[list[_Page], int]:
+    """The one per-document walk every PDF front door projects. Each
+    page's height → content → fonts → text-state machine → assembly
+    runs inside one guard: any exception makes that page empty with one
+    decode failure. `doctop` runs over preceding page heights and one
+    font-table cache serves every page. → (pages, the document's decode
+    failures: 1 for non-empty bytes with no parseable page tree)."""
+    if not pdf:
+        return [], 0
+    try:
+        doc = _Doc(pdf)
+        tree = doc.pages()
+    except Exception:
+        tree = []
+    if not tree:
+        return [], 1
+    pages: list[_Page] = []
+    tables: dict = {}
+    doctop = 0.0
+    for page in tree:
+        height = _LETTER_HEIGHT
+        try:
+            height = doc.page_height(page)
+            segs, n_ops, failures = _extract_page(
+                doc.page_content(page), doc.page_fonts(page), tables)
+            lines, words = _assemble_page(segs, height, doctop, want_words)
+            pages.append(_Page(lines, words, n_ops, failures, height))
+        except Exception:
+            pages.append(_Page([], [], 0, 1, height))
+        doctop += height
+    return pages, sum(p.decode_failures for p in pages)
+
+
 def parse_pdf_doc(pdf: bytes) -> list[dict]:
     """One document → list of page dicts
     (page_idx, text, n_lines, n_ops, decode_failures).
     Lines = glyph runs grouped by baseline y (rounded to 0.1 pt),
     top-to-bottom; within a line glyphs order by x position."""
-    if not pdf:
-        return []
-    try:
-        doc = _Doc(pdf)
-        pages = doc.pages()
-    except Exception:
-        pages = []
-    if not pages:
+    pages, failures = _walk(pdf, want_words=False)
+    if failures and not pages:
         # nonempty bytes with no parseable page tree: surface one
-        # failure row so audit metrics can count hard decode failures
+        # failure row so per-page audit metrics count hard failures
         return [dict(page_idx=0, text="", n_lines=0, n_ops=0,
                      decode_failures=1)]
-    out = []
-    tables: dict = {}                   # font tables shared across pages
-    for idx, page in enumerate(pages):
-        try:
-            content = doc.page_content(page)
-            fonts = doc.page_fonts(page)
-            segs, n_ops, failures = _extract_page(content, fonts, tables)
-            texts, _ = _assemble_page(segs)
-        except Exception:
-            out.append(dict(page_idx=idx, text="", n_lines=0, n_ops=0,
-                            decode_failures=1))
-            continue
-        out.append(dict(
-            page_idx=idx,
-            text="\n".join(texts),
-            n_lines=len(texts),
-            n_ops=n_ops,
-            decode_failures=failures,
-        ))
-    return out
+    return [dict(page_idx=idx, text="\n".join(p.lines),
+                 n_lines=len(p.lines), n_ops=p.n_ops,
+                 decode_failures=p.decode_failures)
+            for idx, p in enumerate(pages)]
 
 
 def parse_pdf_layout_doc(pdf: bytes) -> dict:
-    """One document → word boxes + page texts — the real-bytes front
-    door for the Engine-2 layout kernel.
-
-    Returns {pages: [(words, text)], height, n_ops, decode_failures}
-    where words are `extract_words`-shaped tuples
+    """One document → {pages: [(words, text)], height, n_ops,
+    decode_failures}: the real-bytes front door for the Engine-2 layout
+    kernel. Words are `extract_words`-shaped tuples
     (text, x0, x1, top, bottom, doctop) per page — the exact input
     contract of the reference's layout engine
-    (processors/ficha_financeira_processor.py:424) — and doctop is
-    cumulative over preceding page heights, as pdfplumber defines it."""
-    empty = dict(pages=[], height=0.0, n_ops=0, decode_failures=0)
-    if not pdf:
-        return empty
-    try:
-        doc = _Doc(pdf)
-        pages = doc.pages()
-    except Exception:
-        pages = []
-    if not pages:
-        return dict(pages=[], height=0.0, n_ops=0, decode_failures=1)
-    out_pages: list[tuple[list[tuple], str]] = []
-    doctop0 = 0.0
-    height0 = 0.0
-    n_ops_total = failures_total = 0
-    tables: dict = {}                   # font tables shared across pages
-    for idx, page in enumerate(pages):
-        h = doc.page_height(page)
-        if idx == 0:
-            height0 = h
-        try:
-            content = doc.page_content(page)
-            fonts = doc.page_fonts(page)
-            segs, n_ops, failures = _extract_page(content, fonts, tables)
-            texts, words = _assemble_page(segs, height=h,
-                                          doctop0=doctop0,
-                                          want_words=True)
-        except Exception:
-            texts, words, n_ops, failures = [], [], 0, 1
-        out_pages.append((words, "\n".join(texts)))
-        n_ops_total += n_ops
-        failures_total += failures
-        doctop0 += h
-    return dict(pages=out_pages, height=height0, n_ops=n_ops_total,
-                decode_failures=failures_total)
+    (processors/ficha_financeira_processor.py:424); height is the
+    first page's."""
+    pages, failures = _walk(pdf, want_words=True)
+    return dict(pages=[(p.words, "\n".join(p.lines)) for p in pages],
+                height=pages[0].height if pages else 0.0,
+                n_ops=sum(p.n_ops for p in pages), decode_failures=failures)
 
 
 PARSED_SCHEMA = T.StructType([
@@ -1758,61 +1728,6 @@ DOC_SCHEMA = T.StructType([
 ])
 
 
-def parse_pdf_docs(df: DataFrame, pdf_col: str = "pdf",
-                   id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, text, n_pages, n_lines, n_ops, decode_failures) — one
-    row per DOCUMENT, pages reassembled inside the kernel.
-
-    When the input carries whole PDFs per row (the pages-table
-    contract), every page of a document comes out of one
-    `parse_pdf_doc` call, so the page→document reassembly is
-    kernel-local and the whole tier stays scan → mapInPandas with ZERO
-    exchanges — same plan shape as the HTML front door. Use
-    `parse_pdf_pages` + a keyed aggregation only when pages genuinely
-    arrive as separate rows."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # flat column lists, not per-row dicts (allocator pressure;
-            # same treatment as the HTML flatten's _NodeBuf)
-            cols: dict[str, list] = {f.name: [] for f in DOC_SCHEMA.fields}
-            for i, raw in zip(pdf[id_col], pdf[pdf_col]):
-                pages = parse_pdf_doc(bytes(raw) if raw is not None
-                                      else b"")
-                cols["doc_id"].append(int(i))
-                cols["text"].append("\n".join(p["text"] for p in pages))
-                cols["n_pages"].append(len(pages))
-                cols["n_lines"].append(sum(p["n_lines"] for p in pages))
-                cols["n_ops"].append(sum(p["n_ops"] for p in pages))
-                cols["decode_failures"].append(
-                    sum(p["decode_failures"] for p in pages))
-            yield pd.DataFrame(cols)
-
-    return df.select(id_col, pdf_col).mapInPandas(run, DOC_SCHEMA)
-
-
-def parse_pdf_pages(df: DataFrame, pdf_col: str = "pdf",
-                    id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, page_idx, text, n_lines, n_ops, decode_failures) —
-    one row per parsed page. Scan → mapInPandas, shuffle-free; the
-    page fan-out happens inside the kernel."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {f.name: []
-                                     for f in PARSED_SCHEMA.fields}
-            for i, raw in zip(pdf[id_col], pdf[pdf_col]):
-                for page in parse_pdf_doc(bytes(raw) if raw is not None
-                                          else b""):
-                    cols["doc_id"].append(int(i))
-                    for k in ("page_idx", "text", "n_lines", "n_ops",
-                              "decode_failures"):
-                        cols[k].append(page[k])
-            yield pd.DataFrame(cols)
-
-    return df.select(id_col, pdf_col).mapInPandas(run, PARSED_SCHEMA)
-
-
 LAYOUT_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
     T.StructField("html", T.BinaryType()),
@@ -1823,34 +1738,65 @@ LAYOUT_SCHEMA = T.StructType([
 ])
 
 
+def _map_pdfs(df: DataFrame, key_col: str, pdf_col: str,
+              schema: T.StructType,
+              rows: Callable[[bytes], list[tuple]]) -> DataFrame:
+    """The one Spark batch loop of the PDF tier (scan → mapInPandas,
+    shuffle-free): `rows(pdf)` turns one document's bytes (None reads
+    as empty) into its output rows, each written after the key."""
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            yield pd.DataFrame(
+                [(key, *row)
+                 for key, raw in zip(batch[key_col], batch[pdf_col])
+                 for row in rows(bytes(raw) if raw is not None else b"")],
+                columns=schema.names)
+
+    return df.select(key_col, pdf_col).mapInPandas(run, schema)
+
+
+def parse_pdf_docs(df: DataFrame, pdf_col: str = "pdf",
+                   id_col: str = "doc_id") -> DataFrame:
+    """(doc_id, text, n_pages, n_lines, n_ops, decode_failures) — one
+    row per DOCUMENT, page texts joined by newlines. Whole PDFs arrive
+    one per row (the pages-table contract), so reassembly is
+    kernel-local and the tier has zero exchanges; use `parse_pdf_pages`
+    + a keyed aggregation only when pages arrive as separate rows."""
+    def doc_row(pdf: bytes) -> list[tuple]:
+        pages, failures = _walk(pdf, want_words=False)
+        return [("\n".join("\n".join(p.lines) for p in pages), len(pages),
+                 sum(len(p.lines) for p in pages),
+                 sum(p.n_ops for p in pages), failures)]
+
+    return _map_pdfs(df, id_col, pdf_col, DOC_SCHEMA, doc_row)
+
+
+def parse_pdf_pages(df: DataFrame, pdf_col: str = "pdf",
+                    id_col: str = "doc_id") -> DataFrame:
+    """(doc_id, page_idx, text, n_lines, n_ops, decode_failures) — one
+    row per `parse_pdf_doc` page dict, whose keys are in schema order."""
+    return _map_pdfs(df, id_col, pdf_col, PARSED_SCHEMA,
+                     lambda pdf: [tuple(p.values())
+                                  for p in parse_pdf_doc(pdf)])
+
+
 def parse_pdf_layout(df: DataFrame, pdf_col: str = "pdf",
                      key_col: str = "url") -> DataFrame:
-    """(url, html, text, n_pages, n_words, decode_failures) — parse raw
-    PDF bytes into the PAGES-TABLE CONTRACT the Engine-2 layout kernel
-    consumes: `html` is the WBX2 columnar word-box payload (per-page
-    `extract_words` arrays), `text` is the per-page extracted text
-    joined with form-feeds (page 1 feeds the person-name scan).
-
-    This closes the bytes→layout gap: `engine2.extract_ficha(result)`
-    runs the reference's headline Ficha Financeira extraction directly
-    from PDF bytes. Plan shape: scan → mapInPandas, zero exchanges —
-    same scale contract as the text front door."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [(key, *layout_row(raw))
-                 for key, raw in zip(pdf[key_col], pdf[pdf_col])],
-                columns=LAYOUT_SCHEMA.names)
-
-    return df.select(key_col, pdf_col).mapInPandas(run, LAYOUT_SCHEMA)
+    """(url, html, text, n_pages, n_words, decode_failures) — raw PDF
+    bytes as the PAGES-TABLE CONTRACT (`layout_row`) the Engine-2
+    layout kernel consumes, so `engine2.extract_ficha(result)` runs the
+    reference's Ficha Financeira extraction directly from PDF bytes."""
+    return _map_pdfs(df, key_col, pdf_col, LAYOUT_SCHEMA,
+                     lambda pdf: [layout_row(pdf)])
 
 
 def layout_row(raw: bytes | None) -> tuple[bytes, str, int, int, int]:
     """One document's raw PDF bytes (None reads as empty) → its
-    pages-table row after the url: (html = WBX2 payload, b"" when no
-    page parsed; text = page texts joined with form-feeds; n_pages;
-    n_words; decode_failures). `parse_pdf_layout` and the extraction
-    job's document pass (`docpass.py`) both build rows here."""
+    pages-table row after the url: (html = WBX2 payload of the per-page
+    word boxes, b"" when no page parsed; text = page texts joined with
+    form-feeds; n_pages; n_words; decode_failures). `parse_pdf_layout`
+    and the extraction job's document pass (`docpass.py`) both build
+    rows here."""
     from ..payload import encode_layout
 
     parsed = parse_pdf_layout_doc(bytes(raw) if raw is not None else b"")

@@ -29,6 +29,7 @@ import jobs
 import jobs_curate
 from pdf_extractor_spark import datagen, oracle_ref as orc
 from pdf_extractor_spark.sinks.tableio import ParquetSnapshotTableIO
+from tests.test_pdf_adversarial import hostile_mediabox_pdf
 
 VOLATILE = {"run_id", "audit_ts", "ts", "partition_id"}
 EXTRACT_TABLES = ["proventos", "insalubridade", "cartoes",
@@ -258,16 +259,22 @@ def test_extract_job_minutes_mode_matches_writer_oracle(spark, run_job,
         name: sorted(want[name]) for name in names}
 
 
+_HOSTILE_MEDIABOX = "synth://hostile/mediabox-in-truncated-tail"
+
+
 @pytest.fixture(scope="module")
 def pdf_job(spark, tmp_path_factory):
     """A clean `jobs.py --pdf-col pdf` run over the ficha PDFs of
-    datagen ids [0, 30), a truncated copy of one, and an empty and a
+    datagen ids [0, 30), a one-page PDF whose /MediaBox object the
+    truncation cut off, a truncated copy of a ficha, and an empty and a
     null `pdf` value → (input dir, out dir, input urls, broken urls)."""
     root = tmp_path_factory.mktemp("pdf_job")
     rows = [(r["url"], datagen.gen_e2_pdf_bytes(42, i))
             for i, r in ((i, datagen.gen_row(42, i)) for i in range(30))
             if "ficha" in r["url"]]
     whole = rows[0][1]
+    rows.append((_HOSTILE_MEDIABOX,
+                 hostile_mediabox_pdf("truncated_tail")))
     broken = [("synth://bad/truncated", whole[:len(whole) // 2]),
               ("synth://bad/empty", b""), ("synth://bad/null", None)]
     pdfs = str(root / "pdfs")
@@ -283,8 +290,8 @@ def pdf_job(spark, tmp_path_factory):
 def test_extract_job_from_pdf_bytes(spark, pdf_job):
     """`--pdf-col`: the series tables equal the oracle for the ficha
     urls, audit_parse holds one row per input document with the
-    truncated one counted as failed, and the manifest holds exactly the
-    input urls."""
+    truncated one counted as failed, the one whose /MediaBox object was
+    cut off parsed, and the manifest holds exactly the input urls."""
     _pdfs, out, urls, broken = pdf_job
     assert _series_rows(spark, out) == {
         name: sorted(rows) for name, rows in
@@ -295,6 +302,8 @@ def test_extract_job_from_pdf_bytes(spark, pdf_job):
     assert sorted(parse) == urls
     failed = {u for u, r in parse.items() if r.decode_failures > 0}
     assert failed == {"synth://bad/truncated"}
+    hostile = parse[_HOSTILE_MEDIABOX]
+    assert (hostile.n_pages, hostile.decode_failures) == (1, 0)
     assert all(parse[u].n_pages == 0 for u in broken)
     assert all(r.n_pages > 0 and r.n_words > 0 for u, r in parse.items()
                if u not in broken)

@@ -602,6 +602,17 @@ def test_front_door_metrics(spark, sf_dir):
         assert r.n_pages == -(-n_lines // 4)     # 4 lines/page
         assert r.decode_failures == 0
         assert r.partition_id >= 0
+    # bytes with no page tree: no page parsed, one decode failure — the
+    # same counters the extraction job's front door reports
+    from pdf_extractor_spark.ops.pdfstream import layout_row
+    garbage = spark.createDataFrame([(1, b"this is not a pdf")],
+                                    "doc_id long, pdf binary")
+    [g] = extract_pdf_text(garbage, with_metrics=True).collect()
+    assert (g.text, g.n_pages, g.n_lines, g.n_ops, g.decode_failures) \
+        == ("", 0, 0, 0, 1)
+    _html, _text, n_pages, _n_words, failures = layout_row(
+        b"this is not a pdf")
+    assert (n_pages, failures) == (0, 1)
 
 
 def test_rebalance_narrow_size_gate(spark, sf_dir):

@@ -21,7 +21,7 @@ import zlib
 import pytest
 
 from pdf_extractor_spark.ops.pdfstream import (
-    _PDF_PAD, _Doc, _rc4, layout_row, parse_pdf_doc)
+    _PDF_PAD, _Doc, _rc4, layout_row, parse_pdf_doc, parse_pdf_layout_doc)
 
 
 def _xref_stream_pdf(type1: dict[int, bytes], type2: dict[int, bytes],
@@ -75,17 +75,23 @@ def _xref_stream_pdf(type1: dict[int, bytes], type2: dict[int, bytes],
 
 def _never_raises(pdf: bytes) -> None:
     """Corruption sweep: truncations and byte flips must yield rows
-    (possibly failure rows), never an escaping exception."""
-    for cut in (0, 7, len(pdf) // 4, len(pdf) // 2, len(pdf) - 9):
-        out = parse_pdf_doc(pdf[:cut])
-        assert isinstance(out, list)
+    (possibly failure rows), never an escaping exception, from both
+    projections of the document walk: the text tier (`parse_pdf_doc`)
+    and the extraction job's front door (`layout_row`)."""
+    cuts = [pdf[:cut] for cut in
+            (0, 7, len(pdf) // 4, len(pdf) // 2, len(pdf) - 9)]
+    flips = []
     for pos in (len(pdf) // 3, 2 * len(pdf) // 3, len(pdf) - 20):
         mut = bytearray(pdf)
         mut[pos] ^= 0xFF
-        out = parse_pdf_doc(bytes(mut))
+        flips.append(bytes(mut))
+    for bad in cuts + flips:
+        out = parse_pdf_doc(bad)
         assert isinstance(out, list)
         assert all(isinstance(p, dict) and "decode_failures" in p
                    for p in out)
+        row = layout_row(bad)
+        assert isinstance(row, tuple) and len(row) == 5
 
 
 def test_encrypted_objstm_cid_composition():
@@ -473,3 +479,47 @@ def test_cyclic_page_tree_walks_each_node_once(kids):
     assert parsed[0]["decode_failures"] == 0
     _html, text, n_pages, _n_words, failures = _within(1.0, layout_row, pdf)
     assert (text, n_pages, failures) == ("offset drift", 1, 0)
+
+
+_HELLO = b"BT /F1 11 Tf 72 720 Td (Hello world) Tj ET"
+
+
+def hostile_mediabox_pdf(case: str) -> bytes:
+    """One-page "Hello world" PDF whose /MediaBox the parser cannot
+    use: a `dangling` reference to an object the file lacks, an
+    indirect box in the `truncated_tail` (the file is cut right before
+    the box's object, so the object scan never sees it), or a
+    `huge_coordinate` of 400 digits (past float range)."""
+    box = {"dangling": b"9 0 R", "truncated_tail": b"5 0 R",
+           "huge_coordinate": b"[0 0 612 " + b"9" * 400 + b"]"}[case]
+    pdf = _classic_pdf({
+        1: b"<< /Type /Catalog /Pages 2 0 R >>",
+        2: b"<< /Type /Pages /Count 1 /Kids [3 0 R] >>",
+        3: (b"<< /Type /Page /Parent 2 0 R /MediaBox " + box
+            + b" /Contents 4 0 R >>"),
+        4: (b"<< /Length %d >>\nstream\n" % len(_HELLO) + _HELLO
+            + b"\nendstream"),
+        5: b"[0 0 612 792]",
+    })
+    if case == "truncated_tail":
+        pdf = pdf[:pdf.index(b"5 0 obj")]
+    return pdf
+
+
+@pytest.mark.parametrize("case", ["dangling", "truncated_tail",
+                                  "huge_coordinate"])
+def test_hostile_mediabox_reads_as_letter(case):
+    """A /MediaBox that cannot be resolved or converted reads as the
+    792 pt default: both projections of the walk extract the page's
+    text with no decode failure and agree on it. The extraction job's
+    front door used to raise here (KeyError / OverflowError) and abort
+    the whole `jobs.py --pdf-col` run."""
+    pdf = hostile_mediabox_pdf(case)
+    parsed = _within(1.0, parse_pdf_doc, pdf)
+    assert [(pg["text"], pg["decode_failures"]) for pg in parsed] \
+        == [("Hello world", 0)]
+    html, text, n_pages, n_words, failures = _within(1.0, layout_row, pdf)
+    assert (text, n_pages, n_words, failures) == ("Hello world", 1, 2, 0)
+    assert html
+    assert parse_pdf_layout_doc(pdf)["height"] == 792.0
+    _never_raises(pdf)

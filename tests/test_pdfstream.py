@@ -393,7 +393,8 @@ def test_type0_cid_font_tounicode_cmap():
         text = doc_row(42, doc_id)["text"]
         pdf = gen_pdf_bytes(doc_id, text)
         d = _Doc(pdf)
-        enc = d.page_encoding(d.pages()[0])
+        enc = next(f.cmap for f in d.page_fonts(d.pages()[0]).values()
+                   if f.cid)
         assert isinstance(enc, dict) and enc        # CMap decoder
         # CIDs are charset ranks, not code points
         assert any(cid != ord(ch) for cid, ch in enc.items())
