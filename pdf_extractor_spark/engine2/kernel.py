@@ -89,13 +89,16 @@ E2_LONG_COLS = [n for n, _, _ in E2_FIELDS]
 METRICS_CODE = "__metrics__"
 
 
-def _norm_one(t: str) -> str:
-    """Code-text normalization (reference :630-633): NFKD, NBSP→space,
-    U+2011/U+2013→'-', strip all whitespace. ASCII fast path — pages are
-    overwhelmingly ASCII tokens and full NFKD per word dominated the
-    kernel profile."""
+def _norm_code(t: str) -> str:
+    """Code-text normalization (reference :630-633, `oracle_ref._norm_code`):
+    NFKD, NBSP→space, U+2011/U+2013→'-', strip all whitespace. ASCII
+    fast path — pages are overwhelmingly ASCII tokens and full NFKD per
+    word dominated the kernel profile. NFKD leaves ASCII unchanged, and
+    every ASCII whitespace character but the space is a non-printable
+    control, so a printable ASCII word without a space is its own
+    normal form."""
     if t.isascii():
-        return WS_RE.sub("", t) if " " in t or "\t" in t else t
+        return t if t.isprintable() and " " not in t else WS_RE.sub("", t)
     import unicodedata
 
     s = unicodedata.normalize("NFKD", t).replace("\xa0", " ")
@@ -120,7 +123,7 @@ class _Page:
         self.texts = texts
         self.x0, self.x1, self.top, self.bottom = x0, x1, top, bottom
         self.line_key, self.cy, self.cx = line_key, cy, cx
-        self.norm = [_norm_one(t) for t in self.texts]
+        self.norm = [_norm_code(t) for t in self.texts]
         self.is_num = [NUMBER_RE.match(t) is not None for t in self.texts]
         groups: dict[int, list[int]] = {}
         for i, k in enumerate(self.line_key):
@@ -191,6 +194,10 @@ def _month_blocks(pg: _Page, page_h: float, comp: list[float],
 
 _BOUNDARY = set("0123456789.,")
 
+# TARGET_CODES with each search prefix in `_norm_code` form
+_TARGETS = [(code, column, _norm_code(prefix), alias)
+            for code, column, prefix, alias in TARGET_CODES]
+
 
 def _build_prefix_dispatch() -> dict[str, list[tuple[str, bool, int]]]:
     """First-character dispatch table over the distinct normalized
@@ -198,8 +205,7 @@ def _build_prefix_dispatch() -> dict[str, list[tuple[str, bool, int]]]:
     (same match + numeric-boundary semantics, reference :564-567)."""
     seen: set[str] = set()
     by_char: dict[str, list[tuple[str, bool, int]]] = {}
-    for _code, _col, prefix, _alias in TARGET_CODES:
-        npfx = _norm_prefix(prefix)
+    for _code, _col, npfx, _alias in _TARGETS:
         if npfx in seen:
             continue
         seen.add(npfx)
@@ -208,14 +214,11 @@ def _build_prefix_dispatch() -> dict[str, list[tuple[str, bool, int]]]:
     return by_char
 
 
-_PFX_DISPATCH: dict | None = None  # built lazily (_norm_prefix defined below)
+_PFX_DISPATCH = _build_prefix_dispatch()
 
 
 def _prefix_masks(pg: _Page) -> dict[str, list[int]]:
     """Per-page candidate word indices for every target prefix."""
-    global _PFX_DISPATCH
-    if _PFX_DISPATCH is None:
-        _PFX_DISPATCH = _build_prefix_dispatch()
     masks: dict[str, list[int]] = {}
     dispatch = _PFX_DISPATCH
     for i, t in enumerate(pg.norm):
@@ -230,21 +233,6 @@ def _prefix_masks(pg: _Page) -> dict[str, list[int]]:
                 continue
             masks.setdefault(npfx, []).append(i)
     return masks
-
-
-_PFX_CACHE: dict[str, str] = {}
-
-
-def _norm_prefix(prefix: str) -> str:
-    got = _PFX_CACHE.get(prefix)
-    if got is None:
-        import unicodedata
-
-        s = unicodedata.normalize("NFKD", prefix).replace("\xa0", " ")
-        s = s.replace("‑", "-").replace("–", "-")
-        got = WS_RE.sub("", s)
-        _PFX_CACHE[prefix] = got
-    return got
 
 
 def run_pages(pages: list, page_h: float) -> list:
@@ -294,8 +282,8 @@ def run_pages(pages: list, page_h: float) -> list:
                       for c in (cc, vc) if c is not None]
             code_max_x = max(0.0, min(bounds) - 12.0) if bounds else None
 
-            for code, column, prefix, alias in TARGET_CODES:
-                cand = pfx_masks.get(_norm_prefix(prefix))
+            for code, column, npfx, alias in _TARGETS:
+                cand = pfx_masks.get(npfx)
                 if not cand:
                     continue
                 if code_max_x is not None:

@@ -47,13 +47,9 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import normalize_text
-
-# parity-safe stopword alternations (ASCII \b semantics identical in
-# Java regex and DuckDB's RE2 — single-letter and prefix-ambiguous
-# words excluded): the same lists the oracled lang-id query pins.
-PT_WORDS = "de|da|do|que|em|para|com|uma|os|as|dos|das|no|na|por|se"
-EN_WORDS = "the|of|and|to|in|is|that|it|for|on|was|with|as|at|by|be|this"
+from .dedup import content_hash
+from .textstats import (digit_ratio, lang_cols, punct_ratio, repetition_cols,
+                        token_count)
 
 
 def _barrier_filter(df: DataFrame, pred) -> DataFrame:
@@ -91,33 +87,18 @@ def _barrier_filter(df: DataFrame, pred) -> DataFrame:
 def _gate_features(docs: DataFrame, id_col: str, text_col: str,
                    with_repetition: bool) -> DataFrame:
     """The single-projection feature pass behind `curate` (everything
-    collapses into the scan)."""
+    collapses into the scan); each feature is the `textstats` / `dedup`
+    builder of the same name."""
     t = F.col(text_col)
-    trimmed = F.trim(t)
-    n_tokens = (F.when(trimmed == "", 0)
-                .otherwise(F.size(F.split(trimmed, r"\s+"))))
-    n_chars = F.length(t)
-    safe_chars = F.greatest(n_chars, F.lit(1))
-    digit_ratio = F.length(F.regexp_replace(t, r"[^0-9]", "")) / safe_chars
-    punct_ratio = F.length(F.regexp_replace(t, r"[^.,;:!?]", "")) / safe_chars
-    pt = F.size(F.regexp_extract_all(
-        t, F.lit(rf"(?i)\b({PT_WORDS})\b"), F.lit(0)))
-    en = F.size(F.regexp_extract_all(
-        t, F.lit(rf"(?i)\b({EN_WORDS})\b"), F.lit(0)))
-    lang_pred = (F.when((pt == 0) & (en == 0), "und")
-                 .when(pt >= en, "pt").otherwise("en"))
-
     cols = [
         F.col(id_col).alias("doc_id"),
-        n_tokens.cast("bigint").alias("n_tokens"),
-        digit_ratio.alias("digit_ratio"),
-        punct_ratio.alias("punct_ratio"),
-        lang_pred.alias("lang_pred"),
-        F.md5(normalize_text(t)).alias("content_hash"),
+        token_count(t).alias("n_tokens"),
+        digit_ratio(t).alias("digit_ratio"),
+        punct_ratio(t).alias("punct_ratio"),
+        lang_cols(t)["lang_pred"].alias("lang_pred"),
+        content_hash(t).alias("content_hash"),
     ]
     if with_repetition:
-        from .textstats import repetition_cols
-
         cols += [c.alias(name) for name, c in repetition_cols(t).items()]
     return docs.select(*cols)
 

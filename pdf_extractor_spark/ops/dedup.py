@@ -38,6 +38,13 @@ def normalize_text(col: Column) -> Column:
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
+def content_hash(text: Column) -> Column:
+    """md5 of the normalized text: the one exact-duplicate key (the
+    curation gate, `exact_duplicates`, `textstats.fingerprint` and
+    `streaming.stream_dedup_exact` all read it from here)."""
+    return F.md5(normalize_text(text))
+
+
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
                      text_col: str = "text") -> DataFrame:
     """Hash-groupBy exact dedup: groups with >1 member, with the
@@ -46,7 +53,7 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
 
     h = rebalance_narrow(docs).select(
         F.col(id_col).alias("doc_id"),
-        F.md5(normalize_text(F.col(text_col))).alias("content_hash"),
+        content_hash(F.col(text_col)).alias("content_hash"),
     )
     return (
         h.groupBy("content_hash")
@@ -57,20 +64,6 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
         )
         .filter(F.col("n_dups") > 1)
     )
-
-
-def shingles(col: Column, k: int = 5) -> Column:
-    """Word k-shingles of the normalized text (array<string>).
-
-    NOTE: when `col` is a raw text column this inlines the
-    normalize+split into every slice of the transform lambda, which
-    Catalyst re-evaluates per shingle — O(n_words²) regexp+split work
-    per document (measured 10× the whole explode stage at sf1.0). Use
-    `shingle_rows` (which materializes the split in its own projection)
-    for any corpus-side pipeline; this Column form is kept for
-    callers that already pass a cheap column."""
-    words = F.split(normalize_text(col), " ")
-    return _shingles_of_words(words, k)
 
 
 def _shingles_of_words(words: Column, k: int) -> Column:
@@ -436,7 +429,7 @@ def contamination_flags(docs: DataFrame, eval_docs: DataFrame,
     no shuffle of corpus data; output is one row per contaminated
     (doc, eval) pair with the collision count. Corpus docs shorter
     than k words produce their whole-text shingle (same fallback as
-    `shingles`), so short-text exact matches still flag.
+    `shingle_rows`), so short-text exact matches still flag.
     """
     # eval side is tiny by contract — no rebalance (it would break the
     # single-partition shortcut that lets its distinct skip an exchange)

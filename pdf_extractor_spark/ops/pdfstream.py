@@ -242,13 +242,20 @@ def _parse_value(buf: bytes, i: int):
 
 # --- encoding ------------------------------------------------------------
 
+# A glyph that decodes to U+0000 reads as U+FFFD and counts one decode
+# failure, like a WinAnsi-undefined byte: NUL is the word separator of
+# the layout payload. The decode tables (WinAnsi, /Differences,
+# /ToUnicode) turn a NUL entry into an undefined one when they are
+# built, and the per-glyph loops already count undefined entries.
+
 def _winansi_table() -> list[str]:
     out = []
     for b in range(256):
         try:
-            out.append(bytes([b]).decode("cp1252"))
+            ch = bytes([b]).decode("cp1252")
         except UnicodeDecodeError:
-            out.append("�")               # WinAnsi-undefined byte
+            ch = "�"                      # WinAnsi-undefined byte
+        out.append("�" if ch == "\x00" else ch)
     return out
 
 
@@ -1169,7 +1176,8 @@ class _Doc:
                     elif isinstance(item, _Name):
                         u = _glyph_to_unicode(str(item))
                         if 0 <= code < 256:
-                            table[code] = u if u is not None else "�"
+                            table[code] = ("�" if u is None or "\x00" in u
+                                           else u)
                         code += 1
                 f.table = table
             # name encodings: WinAnsiEncoding is the base table already;
@@ -1240,6 +1248,8 @@ class _Doc:
                     for k, d in enumerate(dsts):
                         if lo + k <= hi:
                             cmap[lo + k] = u16(d)
+        # an unmapped CID is the CID loop's decode failure
+        cmap = {c: u for c, u in cmap.items() if "\x00" not in u}
         return cmap if cmap else None
 
 

@@ -8,12 +8,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import normalize_text
+from .dedup import content_hash, normalize_text
 
-PT_STOPWORDS = ["de", "da", "do", "que", "e", "o", "a", "em", "para", "com",
-                "um", "uma", "os", "as", "dos", "das", "no", "na", "por", "se"]
-EN_STOPWORDS = ["the", "of", "and", "to", "in", "a", "is", "that", "it",
-                "for", "on", "was", "with", "as", "at", "by", "be", "this"]
+# Stopword lists as regex alternations. The vote lists are parity-safe:
+# ASCII \b semantics agree in Java regex and DuckDB's RE2 once the
+# single-letter and prefix-ambiguous words (e, o, a, um) are left out.
+# The full lists feed only `quality_features`' stopword ratio.
+PT_WORDS = "de|da|do|que|em|para|com|uma|os|as|dos|das|no|na|por|se"
+EN_WORDS = "the|of|and|to|in|is|that|it|for|on|was|with|as|at|by|be|this"
+PT_WORDS_FULL = ("de|da|do|que|e|o|a|em|para|com|um|uma|os|as|dos|das|no|"
+                 "na|por|se")
+EN_WORDS_FULL = ("the|of|and|to|in|a|is|that|it|for|on|was|with|as|at|by|"
+                 "be|this")
 
 
 def token_count(col: Column) -> Column:
@@ -30,9 +36,36 @@ def bpe_ish_token_count(col: Column) -> Column:
         col, F.lit(r"(?U)\w+|[^\w\s]"), F.lit(0))).cast("bigint")
 
 
-def _word_ratio(col: Column, words: list[str]) -> Column:
-    pat = r"(?i)\b(" + "|".join(words) + r")\b"
-    return F.size(F.regexp_extract_all(col, F.lit(pat), F.lit(0)))
+def _char_share(col: Column, drop: str) -> Column:
+    return (F.length(F.regexp_replace(col, drop, ""))
+            / F.greatest(F.length(col), F.lit(1)))
+
+
+def digit_ratio(col: Column) -> Column:
+    """Share of characters that are ASCII digits (unrounded)."""
+    return _char_share(col, r"[^0-9]")
+
+
+def punct_ratio(col: Column) -> Column:
+    """Share of characters in `.,;:!?` (unrounded)."""
+    return _char_share(col, r"[^.,;:!?]")
+
+
+def _word_hits(col: Column, words: str) -> Column:
+    return F.size(F.regexp_extract_all(
+        col, F.lit(rf"(?i)\b({words})\b"), F.lit(0)))
+
+
+def lang_cols(text: Column) -> dict[str, Column]:
+    """The stopword language vote: PT and EN hit counts and the label
+    ('und' when neither list hits, a tie goes to 'pt'). `lang_id`, the
+    curation gate and the `text_lang_id` query all read it here."""
+    pt = _word_hits(text, PT_WORDS)
+    en = _word_hits(text, EN_WORDS)
+    pred = (F.when((pt == 0) & (en == 0), "und")
+            .when(pt >= en, "pt").otherwise("en"))
+    return {"pt_hits": pt.cast("bigint"), "en_hits": en.cast("bigint"),
+            "lang_pred": pred}
 
 
 def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -42,16 +75,13 @@ def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
     t = F.col(text_col)
     n_chars = F.length(t)
     n_tokens = token_count(t)
-    n_punct = F.length(F.regexp_replace(t, r"[^.,;:!?]", ""))
-    n_digit = F.length(F.regexp_replace(t, r"[^0-9]", ""))
-    n_stop = _word_ratio(t, PT_STOPWORDS + EN_STOPWORDS)
+    n_stop = _word_hits(t, f"{PT_WORDS_FULL}|{EN_WORDS_FULL}")
     safe_tokens = F.greatest(n_tokens, F.lit(1))
-    safe_chars = F.greatest(n_chars, F.lit(1))
     feat = docs.withColumns({
         "n_chars_calc": n_chars.cast("bigint"),
         "n_tokens": n_tokens,
-        "punct_ratio": F.round(n_punct / safe_chars, 6),
-        "digit_ratio": F.round(n_digit / safe_chars, 6),
+        "punct_ratio": F.round(punct_ratio(t), 6),
+        "digit_ratio": F.round(digit_ratio(t), 6),
         "stopword_ratio": F.round(n_stop / safe_tokens, 6),
         "mean_word_len": F.round(n_chars / safe_tokens, 6),
     })
@@ -69,19 +99,9 @@ def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Stopword-vote language ID (pt vs en vs unknown) — the n-gram
-    heuristic tier used before a real model at scale."""
-    t = F.col(text_col)
-    pt = _word_ratio(t, PT_STOPWORDS)
-    en = _word_ratio(t, EN_STOPWORDS)
-    pred = (
-        F.when((pt == 0) & (en == 0), "und")
-        .when(pt >= en, "pt")
-        .otherwise("en")
-    )
-    return docs.withColumns({
-        "pt_hits": pt.cast("bigint"), "en_hits": en.cast("bigint"),
-        "lang_pred": pred,
-    })
+    heuristic tier used before a real model at scale. Adds `pt_hits`,
+    `en_hits` and `lang_pred` (see `lang_cols`)."""
+    return docs.withColumns(lang_cols(F.col(text_col)))
 
 
 def fingerprint(docs: DataFrame, id_col: str = "doc_id",
@@ -98,7 +118,7 @@ def fingerprint(docs: DataFrame, id_col: str = "doc_id",
     )).otherwise(F.array(F.xxhash64(norm)))
     return docs.select(
         F.col(id_col).alias("doc_id"),
-        F.md5(norm).alias("exact_fp"),
+        content_hash(F.col(text_col)).alias("exact_fp"),
         F.array_min(grams).alias("rolling_fp"),
     )
 

@@ -23,6 +23,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .ops.textstats import EN_WORDS, EN_WORDS_FULL, PT_WORDS, PT_WORDS_FULL
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -649,17 +651,14 @@ FROM aug GROUP BY 1 HAVING COUNT(*) > 1
 def dedup_exact_hash(spark, sf_dir):
     """Exact dedup over the documents table + deterministically planted
     duplicate copies of doc_id<5 (so the check is non-vacuous)."""
+    from .ops.dedup import exact_duplicates
+
     d = T(spark, sf_dir, "documents").select("doc_id", "text")
     aug = d.unionByName(
         d.filter(F.col("doc_id") < 5)
         .withColumn("doc_id", F.col("doc_id") + 1000000))
-    norm = F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")
-    return (
-        aug.select(F.md5(norm).alias("content_hash"), "doc_id")
-        .groupBy("content_hash")
-        .agg(F.count("*").alias("n_dups"), F.min("doc_id").alias("canonical_id"))
-        .filter(F.col("n_dups") > 1)
-    )
+    return exact_duplicates(aug).select("content_hash", "n_dups",
+                                        "canonical_id")
 
 
 @q("text_token_count", """
@@ -678,47 +677,31 @@ def text_token_count(spark, sf_dir):
     (?U) Unicode flag of the Java pattern and RE2's ASCII \\w agree on
     this corpus (ASCII text); planted non-ASCII controls live in the
     pytest layer where Java is the reference semantics."""
-    from .ops.textstats import bpe_ish_token_count
+    from .ops.textstats import bpe_ish_token_count, token_count
 
     d = T(spark, sf_dir, "documents")
-    t = F.trim("text")
-    n = (F.when(t == "", 0).otherwise(F.size(F.split(t, r"\s+"))))
-    return d.select("doc_id", n.cast("bigint").alias("n_tokens"),
+    return d.select("doc_id", token_count(F.col("text")).alias("n_tokens"),
                     F.length("text").cast("bigint").alias("n_chars_len"),
                     bpe_ish_token_count(F.col("text")).alias("bpe_tokens"))
 
 
-_PT = "de|da|do|que|em|para|com|uma|os|as|dos|das|no|na|por|se"
-_EN = "the|of|and|to|in|is|that|it|for|on|was|with|as|at|by|be|this"
-
-
 @q("text_lang_id", f"""
 SELECT doc_id,
-       len(regexp_extract_all(text, '(?i)\\b({_PT})\\b')) AS pt_hits,
-       len(regexp_extract_all(text, '(?i)\\b({_EN})\\b')) AS en_hits,
-       CASE WHEN len(regexp_extract_all(text, '(?i)\\b({_PT})\\b')) = 0
-                 AND len(regexp_extract_all(text, '(?i)\\b({_EN})\\b')) = 0
+       len(regexp_extract_all(text, '(?i)\\b({PT_WORDS})\\b')) AS pt_hits,
+       len(regexp_extract_all(text, '(?i)\\b({EN_WORDS})\\b')) AS en_hits,
+       CASE WHEN len(regexp_extract_all(text, '(?i)\\b({PT_WORDS})\\b')) = 0
+                 AND len(regexp_extract_all(text, '(?i)\\b({EN_WORDS})\\b')) = 0
             THEN 'und'
-            WHEN len(regexp_extract_all(text, '(?i)\\b({_PT})\\b'))
-                 >= len(regexp_extract_all(text, '(?i)\\b({_EN})\\b'))
+            WHEN len(regexp_extract_all(text, '(?i)\\b({PT_WORDS})\\b'))
+                 >= len(regexp_extract_all(text, '(?i)\\b({EN_WORDS})\\b'))
             THEN 'pt' ELSE 'en' END AS lang_pred
 FROM documents
 """)
 def text_lang_id(spark, sf_dir):
-    d = T(spark, sf_dir, "documents")
-    pt = F.size(F.regexp_extract_all("text", F.lit(f"(?i)\\b({_PT})\\b"), F.lit(0)))
-    en = F.size(F.regexp_extract_all("text", F.lit(f"(?i)\\b({_EN})\\b"), F.lit(0)))
-    pred = (F.when((pt == 0) & (en == 0), "und")
-            .when(pt >= en, "pt").otherwise("en"))
-    return d.select("doc_id", pt.cast("bigint").alias("pt_hits"),
-                    en.cast("bigint").alias("en_hits"),
-                    pred.alias("lang_pred"))
+    from .ops.textstats import lang_id
 
-
-_PT_FULL = ("de|da|do|que|e|o|a|em|para|com|um|uma|os|as|dos|das|no|na|"
-            "por|se")
-_EN_FULL = ("the|of|and|to|in|a|is|that|it|for|on|was|with|as|at|by|be|"
-            "this")
+    return lang_id(T(spark, sf_dir, "documents")).select(
+        "doc_id", "pt_hits", "en_hits", "lang_pred")
 
 
 @q("text_quality", f"""
@@ -738,7 +721,7 @@ WITH ratios AS (
     CASE WHEN trim(text) = '' THEN 0
          ELSE len(regexp_split_to_array(trim(text), '\\s+'))
     END AS n_tokens,
-    ROUND(len(regexp_extract_all(text, '(?i)\\b({_PT_FULL}|{_EN_FULL})\\b'))
+    ROUND(len(regexp_extract_all(text, '(?i)\\b({PT_WORDS_FULL}|{EN_WORDS_FULL})\\b'))
           / GREATEST(CASE WHEN trim(text) = '' THEN 0
                      ELSE len(regexp_split_to_array(trim(text), '\\s+'))
                      END, 1), 6) AS stopword_ratio,
@@ -760,28 +743,23 @@ SELECT 'composite', doc_id, CAST(n_tokens AS DOUBLE), stopword_ratio,
 FROM f
 """)
 def text_quality(spark, sf_dir):
-    """Quality metrics, merged pair (registry capped at 50): branch
-    'ratios' = the raw punct/digit/mean-word-length ratios; branch
-    'composite' = the full quality_features op (stopword ratio over
-    the complete PT+EN lists + the composite [0,1] score). Every
-    original value stays independently hash-checked under generic
-    m1–m3 names."""
+    """Quality metrics, merged pair (registry capped at 50), both
+    branches read off one `quality_features` call: branch 'ratios' =
+    the rounded punct/digit/mean-word-length ratios; branch
+    'composite' = token count, the stopword ratio over the complete
+    PT+EN lists and the composite [0,1] score. Every original value
+    stays independently hash-checked under generic m1–m3 names."""
     from .ops.textstats import quality_features
 
-    d = T(spark, sf_dir, "documents")
-    n_chars = F.length("text")
-    t = F.trim("text")
-    n_tokens = F.when(t == "", 0).otherwise(F.size(F.split(t, r"\s+")))
-    n_punct = F.length(F.regexp_replace("text", r"[^.,;:!?]", ""))
-    n_digit = F.length(F.regexp_replace("text", r"[^0-9]", ""))
-    ratios = d.select(
+    feat = quality_features(T(spark, sf_dir, "documents"))
+    ratios = feat.select(
         F.lit("ratios").alias("src"),
         "doc_id",
-        F.round(n_punct / F.greatest(n_chars, F.lit(1)), 6).alias("m1"),
-        F.round(n_digit / F.greatest(n_chars, F.lit(1)), 6).alias("m2"),
-        F.round(n_chars / F.greatest(n_tokens, F.lit(1)), 6).alias("m3"),
+        F.col("punct_ratio").alias("m1"),
+        F.col("digit_ratio").alias("m2"),
+        F.col("mean_word_len").alias("m3"),
     )
-    comp = quality_features(d).select(
+    comp = feat.select(
         F.lit("composite").alias("src"),
         "doc_id",
         F.col("n_tokens").cast("double").alias("m1"),
@@ -833,9 +811,10 @@ SELECT doc_id,
 FROM documents
 """)
 def text_fingerprint(spark, sf_dir):
-    d = T(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")
-    return d.select("doc_id", F.md5(norm).alias("exact_fp"))
+    from .ops.textstats import fingerprint
+
+    return fingerprint(T(spark, sf_dir, "documents")).select(
+        "doc_id", "exact_fp")
 
 
 @q("sim_cosine_topk", """
@@ -1126,8 +1105,8 @@ WITH planted AS (
            / GREATEST(length(text), 1) AS digit_ratio,
          length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
            / GREATEST(length(text), 1) AS punct_ratio,
-         len(regexp_extract_all(text, '(?i)\\b({_PT})\\b')) AS pt,
-         len(regexp_extract_all(text, '(?i)\\b({_EN})\\b')) AS en,
+         len(regexp_extract_all(text, '(?i)\\b({PT_WORDS})\\b')) AS pt,
+         len(regexp_extract_all(text, '(?i)\\b({EN_WORDS})\\b')) AS en,
          md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS h
   FROM planted
 )"""
@@ -1147,8 +1126,8 @@ WITH src AS ({source_sql}), feat AS (
            / GREATEST(length(text), 1) AS digit_ratio,
          length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
            / GREATEST(length(text), 1) AS punct_ratio,
-         len(regexp_extract_all(text, '(?i)\\b({_PT})\\b')) AS pt,
-         len(regexp_extract_all(text, '(?i)\\b({_EN})\\b')) AS en,
+         len(regexp_extract_all(text, '(?i)\\b({PT_WORDS})\\b')) AS pt,
+         len(regexp_extract_all(text, '(?i)\\b({EN_WORDS})\\b')) AS en,
          md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS h
   FROM src
 ), gated AS (

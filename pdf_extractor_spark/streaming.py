@@ -196,13 +196,13 @@ def stream_dedup_exact(
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from .ops.dedup import normalize_text
+    from .ops.dedup import content_hash
 
     reader = spark.readStream.schema(PAGES_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     pages = reader.parquet(pages_path).withColumn(
-        "content_hash", F.md5(normalize_text(F.col("text"))))
+        "content_hash", content_hash(F.col("text")))
 
     def dedup(key, pdfs, state) -> Iterator["pd.DataFrame"]:
         import pandas as pd

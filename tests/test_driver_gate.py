@@ -7,6 +7,8 @@ driver's value hash."""
 from __future__ import annotations
 
 import datetime
+import hashlib
+import json
 import math
 
 import duckdb
@@ -47,6 +49,21 @@ def _rows_canonical(cols, rows):
 
 
 ORACLE_NAMES = sorted(entrymod.oracle_sql().keys())
+
+# sha256 of every oracle's SQL text: a change that moves a query's
+# Spark side and its oracle together would still pass the value
+# compare below, so the oracle text itself is pinned. The checkout-
+# dependent golden directory is replaced by a placeholder first.
+ORACLE_SQL_SHA256 = (
+    "762e15fb765fc5614d0a9ba06f27da8dafb93b54e1b7a2cdb238dc2d40721747")
+
+
+def test_oracle_sql_text_is_pinned():
+    from pdf_extractor_spark.queries import GOLDEN_DIR
+
+    text = json.dumps(entrymod.oracle_sql(), sort_keys=True)
+    text = text.replace(GOLDEN_DIR, "<GOLDEN_DIR>")
+    assert hashlib.sha256(text.encode()).hexdigest() == ORACLE_SQL_SHA256
 
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)

@@ -9,8 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark import datagen, docpass, oracle_ref as orc
-from pdf_extractor_spark.engine2 import pipeline as e2
-from pdf_extractor_spark.payload import decode_layout
+from pdf_extractor_spark.engine2 import kernel as e2k, pipeline as e2
+from pdf_extractor_spark.payload import decode_layout, encode_layout
 
 
 N_DOCS = 120  # covers carry, conflict, expired, NBSP, alias, totais variants
@@ -125,6 +125,37 @@ def test_proventos_series_byte_identical(adjusted_df, spark):
         assert want == have, url
         n_checked += 1
     assert n_checked > 20
+
+
+@pytest.mark.parametrize(
+    "ws", ["\n", "\r", "\x0b", "\x0c", "\x1c", "\x1d", "\x1e", "\x1f"],
+    ids=lambda c: f"U+{ord(c):04X}")
+def test_code_normalization_strips_all_whitespace(ws):
+    """Code matching strips every whitespace character, as
+    `oracle_ref._norm_code` does, not only spaces and tabs: with `ws`
+    put before each code word (a WinAnsi show string such as
+    `(\\013952) Tj` puts one inside a word), the kernel extracts what
+    the oracle extracts."""
+    prefixes = tuple(orc._norm_code(p) for _c, _col, p, _a in e2k.TARGET_CODES)
+    n_docs = n_values = 0
+    for i in range(60):
+        r = datagen.gen_row(42, i)
+        if "ficha" not in r["url"]:
+            continue
+        page_h, pages = decode_layout(r["html"])
+        pages = [[(ws + w[0], *w[1:])
+                  if orc._norm_code(w[0]).startswith(prefixes) else w
+                  for w in words] for words in pages]
+        html = encode_layout(page_h, pages)
+        want = orc.e2_extract_doc(html, r["text"])["values"]
+        rows, _metrics = e2k.extract_doc(r["url"], html, r["text"])
+        got: dict = {}
+        for _u, code, y, m, vs, *_ in rows:
+            got.setdefault(code, {})[(y, m)] = Decimal(vs)
+        assert got == {c: s for c, s in want.items() if s}, r["url"]
+        n_docs += 1
+        n_values += sum(len(s) for s in want.values())
+    assert n_docs == 25 and n_values > 0
 
 
 def test_pinned_golden_values():

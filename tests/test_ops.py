@@ -217,6 +217,22 @@ def test_textstats(docs):
         assert r.btc >= r.tc
 
 
+def test_lang_id_agrees_with_the_curation_gate(spark):
+    """`lang_id` and the curation gate run one stopword vote: a text
+    whose only stopwords are the parity-unsafe single letters (e, o, a)
+    is 'und' for both, so the gate drops it at the language stage."""
+    from pdf_extractor_spark.ops import curate
+
+    one = spark.createDataFrame([(1, "o gato e a casa")],
+                                "doc_id long, text string")
+    assert textstats.lang_id(one).first().lang_pred == "und"
+    gate = curate._gate_features(one, "doc_id", "text",
+                                 with_repetition=False)
+    assert gate.first().lang_pred == "und"
+    assert {r.stage: r.n_docs for r in
+            curate.curation_stage_counts(one).collect()} == {"language": 1}
+
+
 def test_multimodal_plumbing(docs, spark):
     media = multimodal.synth_media_table(spark, docs.limit(60))
     feats = multimodal.extract_features(media, dim=8)

@@ -22,6 +22,7 @@ import pytest
 
 from pdf_extractor_spark.ops.pdfstream import (
     _PDF_PAD, _Doc, _rc4, layout_row, parse_pdf_doc, parse_pdf_layout_doc)
+from pdf_extractor_spark.payload import decode_layout
 
 
 def _xref_stream_pdf(type1: dict[int, bytes], type2: dict[int, bytes],
@@ -522,4 +523,51 @@ def test_hostile_mediabox_reads_as_letter(case):
     assert (text, n_pages, n_words, failures) == ("Hello world", 1, 2, 0)
     assert html
     assert parse_pdf_layout_doc(pdf)["height"] == 792.0
+    _never_raises(pdf)
+
+
+def nul_glyph_pdf(source: str) -> bytes:
+    """One-page PDF showing "a", a glyph that decodes to U+0000, "b":
+    byte 0 through the `winansi` table, byte 65 through a
+    `differences` entry naming uni0000, or CID 0 of a Type0 font whose
+    `to_unicode` CMap maps it to <0000>."""
+    font = {
+        "winansi": b"<< /Type /Font /Subtype /Type1 >>",
+        "differences": (b"<< /Type /Font /Subtype /Type1 /Encoding"
+                        b" << /Differences [65 /uni0000] >> >>"),
+        "to_unicode": (b"<< /Type /Font /Subtype /Type0"
+                       b" /Encoding /Identity-H /ToUnicode 6 0 R >>"),
+    }[source]
+    show = {"winansi": b"(a\\000b)", "differences": b"(aAb)",
+            "to_unicode": b"<006100000062>"}[source]
+    body = b"BT /F1 11 Tf 72 720 Td " + show + b" Tj ET"
+    cmap = (b"begincmap\n3 beginbfchar\n<0061> <0061>\n<0000> <0000>\n"
+            b"<0062> <0062>\nendbfchar\nendcmap")
+    return _classic_pdf({
+        1: b"<< /Type /Catalog /Pages 2 0 R >>",
+        2: b"<< /Type /Pages /Count 1 /Kids [3 0 R] >>",
+        3: (b"<< /Type /Page /Parent 2 0 R /Resources"
+            b" << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>"),
+        4: b"<< /Length %d >>\nstream\n" % len(body) + body
+           + b"\nendstream",
+        5: font,
+        6: b"<< /Length %d >>\nstream\n" % len(cmap) + cmap
+           + b"\nendstream",
+    })
+
+
+@pytest.mark.parametrize("source", ["winansi", "differences",
+                                    "to_unicode"])
+def test_nul_glyph_reads_as_replacement(source):
+    """A glyph that decodes to U+0000 reads as U+FFFD and counts one
+    decode failure in both projections of the walk. NUL separates the
+    layout payload's words, so such a glyph used to make `layout_row`
+    raise and abort `jobs.py --pdf-col`."""
+    pdf = nul_glyph_pdf(source)
+    parsed = parse_pdf_doc(pdf)
+    assert [(pg["text"], pg["decode_failures"]) for pg in parsed] \
+        == [("a�b", 1)]
+    html, text, n_pages, n_words, failures = layout_row(pdf)
+    assert (text, n_pages, n_words, failures) == ("a�b", 1, 1, 1)
+    assert [w[0] for w in decode_layout(html)[1][0]] == ["a�b"]
     _never_raises(pdf)
