@@ -2,14 +2,20 @@
 
     spark-submit --py-files dist/pdf_extractor_spark.zip jobs_curate.py \
         --documents /path/to/documents_parquet --out /path/to/out \
-        --run-id c1 [--near-dup minhash|simhash|none] \
+        --run-id c1 [--near-dup minhash|none] [--threshold 0.8] \
         [--min-tokens 5 --max-digit-ratio 0.2 --max-punct-ratio 0.3] \
-        [--langs pt,en] [--threshold 0.8] [--resume]
+        [--langs pt,en] [--id-col doc_id --text-col text] \
+        [--html-col <col> | --pdf-col <col>] [--resume]
 
-Stages (the `ops.curate` composition over a documents table):
+Stages (the `ops.curate` composition over a (doc_id, text) table):
   quality gate → language filter → exact dedup → near-dup pair
-  generation (MinHash-LSH or SimHash) → near-dup removal →
+  generation (MinHash-LSH) → near-dup removal →
   curated corpus + pair table + curation audit row.
+
+--id-col / --text-col name the input's id and text columns (a front
+door makes the text, so --text-col is read in plain mode only). The
+job renames them to doc_id / text once, on read, so every stage reads
+(doc_id, text); curated/ is written back under the input's names.
 
 Outputs under --out commit through the run-keyed protocol in
 `sinks/tableio.py`: every artifact is partitioned by run_id and a write
@@ -21,6 +27,7 @@ a NEW run_id is not covered: the crashed run's partial partitions stay.
   curated/         kept documents, all input columns preserved
   near_dup_pairs/  (a, b, …) pair evidence (when --near-dup != none)
   audit/           one row per run: input/kept/pair counts + parameters
+                   (input_docs is the sum of stage_counts)
   stage_counts/    per-stage drop accounting (stage, n_docs): each
                    document's first failing gate — quality / language /
                    exact_dup / near_dup / kept; sums to input_docs
@@ -36,7 +43,9 @@ a NEW run_id is not covered: the crashed run's partial partitions stay.
   extract_audit/   (front-door modes) per-partition extraction lineage
                    + metrics per run: docs and node/kept/span counts
                    (html) or pages/lines/ops/decode-failure counts
-                   (pdf) per extraction task
+                   (pdf) per extraction task; a narrow input is
+                   round-robined to core width before either front
+                   door (`ops.layout.rebalance_narrow`)
 
 Optional Gopher-style repetition ceilings (--max-dup-word-frac /
 --max-top-word-frac / --max-dup-bigram-frac) join the quality gate.
@@ -61,7 +70,7 @@ already-processed ids): the job checks that the smallest new id is
 above the largest id in state/manifest and otherwise exits non-zero
 before writing anything. Under that ordering an incremental run keeps
 exactly the docs a batch run over the union would keep
-(pytest-pinned). Requires --near-dup minhash or none.
+(pytest-pinned).
 
 Cap-drift caveat (near_dup_pairs only): the megabucket cap drops LSH
 buckets larger than max_bucket. If a bucket crosses the cap BETWEEN
@@ -91,7 +100,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from pdf_extractor_spark.ops.curate import (  # noqa: E402
     curate, extract_main_text, extract_pdf_text)
 from pdf_extractor_spark.ops.dedup import (  # noqa: E402
-    minhash_lsh_pairs_with_bands, simhash_pairs)
+    minhash_lsh_pairs_with_bands)
 from pdf_extractor_spark.session import get_spark  # noqa: E402
 from pdf_extractor_spark.sinks.tableio import get_table_io  # noqa: E402
 
@@ -103,12 +112,10 @@ def main() -> None:
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--id-col", default="doc_id")
     ap.add_argument("--text-col", default="text")
-    ap.add_argument("--near-dup", choices=["minhash", "simhash", "none"],
+    ap.add_argument("--near-dup", choices=["minhash", "none"],
                     default="minhash")
     ap.add_argument("--threshold", type=float, default=0.8,
-                    help="MinHash Jaccard threshold (minhash mode)")
-    ap.add_argument("--max-hamming", type=int, default=3,
-                    help="SimHash hamming radius (simhash mode)")
+                    help="MinHash Jaccard threshold")
     ap.add_argument("--min-tokens", type=int, default=5)
     ap.add_argument("--max-digit-ratio", type=float, default=0.2)
     ap.add_argument("--max-punct-ratio", type=float, default=0.3)
@@ -128,35 +135,21 @@ def main() -> None:
                     help="incremental run over an append-only input: "
                          "process only docs missing from state/manifest "
                          "and dedup them against the persisted state "
-                         "(assumes crawl-ordered ids; minhash or none)")
+                         "(assumes crawl-ordered ids)")
     args = ap.parse_args()
     if args.html_col and args.pdf_col:
         ap.error("--html-col and --pdf-col are mutually exclusive")
-    if args.resume and args.near_dup == "simhash":
-        ap.error("--resume supports --near-dup minhash or none")
 
     spark = get_spark(f"curate-{args.run_id}")
     out = args.out.rstrip("/")
     io = get_table_io("parquet", out)
     run_id = args.run_id
-    raw_all = spark.read.parquet(args.documents).persist()
-    orig_id = args.id_col
     extracted = args.html_col or args.pdf_col
-
-    def front_door(df, with_metrics=False):
-        """input rows → the (doc_id, text) shape the stages consume"""
-        if args.html_col:
-            # composed web tier: scan → mapInPandas boilerplate strip
-            return extract_main_text(df, html_col=args.html_col,
-                                     id_col=orig_id,
-                                     with_metrics=with_metrics)
-        if args.pdf_col:
-            # composed pdf tier: scan → mapInPandas object-stream
-            # parse, page reassembly kernel-local (zero exchanges)
-            return extract_pdf_text(df, pdf_col=args.pdf_col,
-                                    id_col=orig_id,
-                                    with_metrics=with_metrics)
-        return df
+    names = {args.id_col: "doc_id"}
+    if not extracted:
+        names[args.text_col] = "text"
+    raw_all = (spark.read.parquet(args.documents)
+               .withColumnsRenamed(names).persist())
 
     # resume state EXCLUDES any partial rows a crashed attempt of THIS
     # run_id left behind — the retry regenerates them
@@ -166,9 +159,9 @@ def main() -> None:
 
     old_hashes = old_bands = None
     if resuming:
-        raw = raw_all.join(manifest.select(F.col("doc_id").alias(orig_id)),
-                           orig_id, "left_anti").persist()
-        first_new = raw.agg(F.min(orig_id)).first()[0]
+        raw = raw_all.join(manifest.select("doc_id"), "doc_id",
+                           "left_anti").persist()
+        first_new = raw.agg(F.min("doc_id")).first()[0]
         if first_new is None:
             print(f"[{run_id}] nothing to process "
                   "(state manifest covers input)")
@@ -182,8 +175,16 @@ def main() -> None:
     else:
         raw = raw_all
 
-    docs = front_door(raw, with_metrics=extracted)
+    docs = raw
     if extracted:
+        # composed web / pdf tier: scan → (round-robin when narrow) →
+        # mapInPandas boilerplate strip or object-stream parse
+        if args.html_col:
+            docs = extract_main_text(raw, html_col=args.html_col,
+                                     with_metrics=True)
+        else:
+            docs = extract_pdf_text(raw, pdf_col=args.pdf_col,
+                                    with_metrics=True)
         # Materialize the extraction ONCE to a parquet artifact and
         # feed every downstream stage from that scan. Two reasons:
         # (1) pairs + curate + stage counts all read it — the kernel
@@ -209,12 +210,8 @@ def main() -> None:
                      .withColumn("audit_ts", F.current_timestamp()),
                      "extract_audit", run_id, True)
         docs = ext_run.select("doc_id", "text")
-        id_col, text_col = "doc_id", "text"
-    else:
-        id_col, text_col = args.id_col, args.text_col
-    n_in = docs.count()          # also the audit row
 
-    banded = None
+    pairs = banded = None
     if args.near_dup == "minhash":
         # an increment is the batch plan over the new docs plus the
         # persisted band index; old candidates are verified from
@@ -225,16 +222,9 @@ def main() -> None:
             old_docs = (io.read(spark, "extracted").select("doc_id", "text")
                         if extracted else raw_all)
         pairs, banded = minhash_lsh_pairs_with_bands(
-            docs, id_col=id_col, text_col=text_col,
-            threshold=args.threshold, prior_bands=old_bands,
+            docs, threshold=args.threshold, prior_bands=old_bands,
             prior_docs=old_docs)
         banded = banded.persist()
-    elif args.near_dup == "simhash":
-        pairs = simhash_pairs(docs, id_col=id_col, text_col=text_col,
-                              max_hamming=args.max_hamming)
-    else:
-        pairs = None
-    if pairs is not None:
         # materialized once: pair evidence is both an output artifact
         # and the anti-join input of the kept-set below
         pairs = pairs.persist()
@@ -242,7 +232,6 @@ def main() -> None:
 
     cur = curate(
         docs, pairs, seen_hashes=old_hashes,
-        id_col=id_col, text_col=text_col,
         min_tokens=args.min_tokens,
         max_digit_ratio=args.max_digit_ratio,
         max_punct_ratio=args.max_punct_ratio,
@@ -250,25 +239,24 @@ def main() -> None:
         max_dup_word_frac=args.max_dup_word_frac,
         max_top_word_frac=args.max_top_word_frac,
         max_dup_bigram_frac=args.max_dup_bigram_frac)
+    # curated output = the kept input rows (+ the extracted main_text),
+    # under the input's own column names
+    curated = raw.join(cur.kept.select("doc_id"), "doc_id", "left_semi")
     if extracted:
-        # curated output = original columns + the extracted main_text
-        curated = raw.join(
-            docs.join(cur.kept.select("doc_id"), "doc_id", "left_semi")
-            .select(F.col("doc_id").alias(orig_id),
-                    F.col("text").alias("main_text")),
-            orig_id)
-    else:
-        curated = docs.join(
-            cur.kept.select(F.col("doc_id").alias(id_col)),
-            id_col, "left_semi")
-    io.write_run(curated, "curated", run_id, resuming)
+        curated = curated.join(
+            docs.select("doc_id", F.col("text").alias("main_text")),
+            "doc_id")
+    io.write_run(curated.withColumnsRenamed(
+                     {new: old for old, new in names.items()}),
+                 "curated", run_id, resuming)
 
     # per-stage drop accounting — second audit artifact; collected
-    # once, and the audit row's kept_docs is its `kept` count, so the
-    # two artifacts agree by construction
+    # once, and the audit row's counts are read off it: every input
+    # doc lands in exactly one stage, so the stages sum to input_docs
     stage_rows = cur.stage_counts.collect()
     io.write_run(spark.createDataFrame(stage_rows, cur.stage_counts.schema),
                  "stage_counts", run_id, True)
+    n_in = sum(r.n_docs for r in stage_rows)
     n_kept = sum(r.n_docs for r in stage_rows if r.stage == "kept")
     n_pairs = pairs.count() if pairs is not None else 0
     audit = spark.createDataFrame(
@@ -284,7 +272,7 @@ def main() -> None:
     # resume checkpoint — written LAST so a crash anywhere above leaves
     # the run re-runnable (the retry's read_state ignores this run_id's
     # partial partitions and the artifact writes overwrite them)
-    ids_delta = raw.select(F.col(orig_id).alias("doc_id"))
+    ids_delta = raw.select("doc_id")
     qh_delta = cur.qualified_hashes
     if resuming:
         # Cut lineage BEFORE mutating state: these plans read

@@ -1207,23 +1207,23 @@ PDF_PAGES_SCHEMA = "doc_id bigint, pdf binary"
 
 
 def pdfs_from_documents(docs, id_col: str = "doc_id",
-                        text_col: str = "text", rebalance: bool = True):
+                        text_col: str = "text"):
     """(doc_id, pdf) — render each document's text as PDF bytes.
     Arrow-batched mapInPandas, pure function of the input row; at scale
     this is the synthetic stand-in for reading `html:binary` payloads
     of content-type application/pdf from the pages table.
 
-    `rebalance` (size-gated, see ops.layout): the render kernel is the
-    expensive stage, and the testdata documents table is a single
-    parquet row group — without a round-robin rebalance the whole
-    render+parse tier runs on one core. At production input sizes the
-    gate never fires and the tier keeps its zero-exchange plan."""
+    The render kernel is the expensive stage, and the testdata
+    documents table is a single parquet row group, so the input goes
+    through the size-gated ``ops.layout.rebalance_narrow`` first —
+    without it the whole render+parse tier runs on one core. At
+    production input sizes the gate never fires and the tier keeps its
+    zero-exchange plan."""
     import pandas as pd
 
-    if rebalance:
-        from .ops.layout import rebalance_narrow
+    from .ops.layout import rebalance_narrow
 
-        docs = rebalance_narrow(docs)
+    docs = rebalance_narrow(docs)
 
     def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:

@@ -39,7 +39,7 @@ from ..ops.layout import rebalance_narrow
 from .kernel import E2_LONG_SCHEMA, METRICS_CODE, make_extract_kernel
 
 
-def extract_ficha(pages_df: DataFrame, repartition: bool = True,
+def extract_ficha(pages_df: DataFrame,
                   adjust_vacation: bool = False) -> DataFrame:
     """pages table → long extraction rows (+ per-doc __metrics__ rows).
 
@@ -48,9 +48,9 @@ def extract_ficha(pages_df: DataFrame, repartition: bool = True,
     shuffle). The input goes through ``ops.layout.rebalance_narrow``,
     the narrow-input policy Engine 1 uses: one round-robin exchange
     only for an input the optimizer proves small, so a tiny local
-    corpus still feeds every core. `repartition=False` skips it (a
-    streaming plan takes no round-robin exchange). An oversized
-    document runs in one task, as in the job's document pass.
+    corpus still feeds every core (a streaming input passes through
+    unchanged). An oversized document runs in one task, as in the
+    job's document pass.
 
     `adjust_vacation=True` applies the A6 adjustment in the kernel's
     per-document call (zero extra shuffles; byte-identical to
@@ -65,10 +65,8 @@ def extract_ficha(pages_df: DataFrame, repartition: bool = True,
         "url", "html",
         F.substring_index(F.col("text"), "\f", 1).alias("text"),
     ).filter(F.length("html") > 0)
-    if repartition:
-        df = rebalance_narrow(df)
-    return df.mapInPandas(make_extract_kernel(adjust_vacation),
-                          schema=E2_LONG_SCHEMA)
+    return rebalance_narrow(df).mapInPandas(
+        make_extract_kernel(adjust_vacation), schema=E2_LONG_SCHEMA)
 
 
 def values_table(long_df: DataFrame) -> DataFrame:

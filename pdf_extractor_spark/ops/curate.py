@@ -157,16 +157,20 @@ def extract_pdf_text(pages: DataFrame, pdf_col: str = "pdf",
                      with_metrics: bool = False) -> DataFrame:
     """PDF-tier front door: parse each document's PDF bytes
     (``ops.pdfstream.parse_pdf_docs``) into the (doc_id, text) shape
-    the curation stack consumes, with zero exchanges like the HTML front
-    door (and stream-safe for the same reason).
+    the curation stack consumes. The input width rule is the HTML front
+    door's: a narrow input (one parquet row group) is round-robined to
+    core width first (``ops.layout.rebalance_narrow``), a wide or
+    streaming one keeps its zero-exchange scan → parse plan.
 
     `with_metrics` adds pages parsed (0 for bytes with no page tree, as
     in the extraction job's `audit_parse`) / line / operator /
     decode-failure counts per document plus the parse task's partition
-    id (captured in the same shuffle-free stage)."""
+    id (captured in the parse stage, after any rebalance)."""
+    from .layout import rebalance_narrow
     from .pdfstream import parse_pdf_docs
 
-    parsed = parse_pdf_docs(pages, pdf_col=pdf_col, id_col=id_col)
+    parsed = parse_pdf_docs(rebalance_narrow(pages), pdf_col=pdf_col,
+                            id_col=id_col)
     cols = ["doc_id", "text"]
     if with_metrics:
         parsed = parsed.withColumn("partition_id", F.spark_partition_id())

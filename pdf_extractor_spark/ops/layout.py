@@ -16,7 +16,7 @@ smaller than one healthy scan split per core, so the round-robin
 shuffle it introduces is bounded by that same budget (a few MB here).
 At 100 TB the estimate is far above the gate, no exchange is added,
 and the plans keep their shuffle-free scan→kernel shape (the plan
-tests pin both regimes).
+tests pin both regimes, the wide one by zeroing `_BYTES_PER_CORE`).
 """
 
 from __future__ import annotations
@@ -41,9 +41,14 @@ def _estimated_bytes(df: DataFrame) -> int | None:
 def rebalance_narrow(df: DataFrame) -> DataFrame:
     """Round-robin repartition of a provably-small input to full core
     width before an expensive per-row stage; identity for anything the
-    optimizer estimates above cores × `_BYTES_PER_CORE`, and for inputs
-    the caller already repartitioned (no double exchange when a query
-    rebalances once and feeds several ops that each guard themselves)."""
+    optimizer estimates above cores × `_BYTES_PER_CORE`, for a streaming
+    input (a micro-batch plan takes no round-robin exchange), and for
+    inputs the caller already repartitioned (no double exchange when a
+    query rebalances once and feeds several ops that each guard
+    themselves). The rule reads only the input, so callers take no
+    switch."""
+    if df.isStreaming:
+        return df
     sc = df.sparkSession.sparkContext
     cores = sc.defaultParallelism
     try:

@@ -3,11 +3,10 @@ metadata, with decode / feature-extract / frame-sample as Arrow-batched
 mapInPandas kernels.
 
 The decode libraries (PIL/ffmpeg/librosa) are not in this container, so
-the *decode step* is stubbed: `deterministic_fake=True` produces a
-seeded, content-hash-derived feature vector so the Spark-side plumbing
+the *decode step* is stubbed: `_fake_feature` produces a seeded,
+content-hash-derived feature vector so the Spark-side plumbing
 (schema, batch shape, partitioning, UDF signature) is fully real and
-tested; `deterministic_fake=False` raises NotImplementedError at the
-exact point a real decoder would plug in.
+tested; a real decoder would replace that one call.
 """
 
 from __future__ import annotations
@@ -74,8 +73,7 @@ def _fake_feature(payload: bytes, dim: int) -> np.ndarray:
     return (v / math.sqrt(sq)).astype(np.float32)
 
 
-def extract_features(media: DataFrame, dim: int = 16,
-                     deterministic_fake: bool = True) -> DataFrame:
+def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
     """Decode + feature-extract kernel over Arrow batches.
 
     Real decoders would replace `_fake_feature` per media_type
@@ -93,10 +91,6 @@ def extract_features(media: DataFrame, dim: int = 16,
         for pdf in batches:
             feats, fps, oks = [], [], []
             for payload in pdf["payload"]:
-                if not deterministic_fake:
-                    raise NotImplementedError(
-                        "real media decoders are not available in this "
-                        "environment; pass deterministic_fake=True")
                 try:
                     vec = _fake_feature(bytes(payload or b""), dim).tolist()
                     feats.append(vec)

@@ -74,8 +74,7 @@ def get_spark(
         # scan into a handful of partitions, capping parallelism below
         # the core count — so size splits small here. (Measured: Engine-1
         # throughput stopped scaling past ~8 cores until this change.)
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8388608"))
+        .config("spark.sql.files.maxPartitionBytes", "8388608")
         .config("spark.sql.files.openCostInBytes", "262144")
     )
     for k, v in (extra_conf or {}).items():

@@ -48,14 +48,14 @@ def stream_extract_ficha(
 ):
     """Incrementally extract newly-arrived page files.
 
-    The Engine-2 kernel is a stateless scan→mapInPandas map
-    (`repartition=False`: a streaming plan takes no round-robin
-    exchange), so it runs on the streaming DataFrame directly into the
-    parquet file sink (`_file_sink`).
+    The Engine-2 kernel is a stateless scan→mapInPandas map (the
+    narrow-input rebalance passes a streaming input through), so it
+    runs on the streaming DataFrame directly into the parquet file sink
+    (`_file_sink`).
     """
     stream = spark.readStream.schema(PAGES_SCHEMA).parquet(pages_path)
-    return _file_sink(e2.extract_ficha(stream, repartition=False),
-                      out_path, checkpoint, available_now)
+    return _file_sink(e2.extract_ficha(stream), out_path, checkpoint,
+                      available_now)
 
 
 def stream_extract_web(
@@ -127,9 +127,8 @@ def stream_extract_pdf_e2(
     stream = (spark.readStream
               .schema(f"url string, {pdf_col} binary")
               .parquet(pages_path))
-    long_df = e2.extract_ficha(
-        parse_pdf_layout(stream, pdf_col=pdf_col),
-        repartition=False, adjust_vacation=True)
+    long_df = e2.extract_ficha(parse_pdf_layout(stream, pdf_col=pdf_col),
+                               adjust_vacation=True)
     return _file_sink(long_df, out_path, checkpoint, available_now)
 
 

@@ -136,12 +136,14 @@ def test_e2_from_pdf_proventos_byte_identical(pdf_corpus):
     assert len(have) > 20
 
 
-def test_e2_from_pdf_shuffle_free_plan(spark, pdf_corpus):
+def test_e2_from_pdf_shuffle_free_plan(spark, pdf_corpus, monkeypatch):
     """bytes → word boxes → layout kernel stays scan → mapInPandas →
     mapInPandas with zero exchanges (same 100 TB shape as the text
-    front door)."""
-    df = e2.extract_ficha(parse_pdf_layout(pdf_corpus),
-                          repartition=False)
+    front door). The size gate is zeroed so the input reads as wide."""
+    from pdf_extractor_spark.ops import layout
+
+    monkeypatch.setattr(layout, "_BYTES_PER_CORE", 0)
+    df = e2.extract_ficha(parse_pdf_layout(pdf_corpus))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 2
     assert "Exchange" not in plan

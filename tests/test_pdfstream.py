@@ -249,14 +249,15 @@ def test_nested_page_tree():
     assert [p["text"] for p in parsed] == ["first", "second"]
 
 
-def test_pdf_parse_shuffle_free_plan(spark, sf_dir):
+def test_pdf_parse_shuffle_free_plan(spark, sf_dir, monkeypatch):
     """render → parse is scan → mapInPandas → mapInPandas with no
     KEYED exchange anywhere — the tier is embarrassingly parallel. At
-    production input sizes the plan has no exchange at all (pinned via
-    rebalance=False, the shape the size gate picks for wide inputs);
-    on the single-row-group testdata a round-robin rebalance of the
-    small scan is allowed so the kernels run at full width."""
+    production input sizes the plan has no exchange at all (pinned by
+    zeroing the size gate, so the input reads as wide); on the
+    single-row-group testdata a round-robin rebalance of the small
+    scan is allowed so the kernels run at full width."""
     from pdf_extractor_spark.datagen import pdfs_from_documents
+    from pdf_extractor_spark.ops import layout
     from pdf_extractor_spark.ops.pdfstream import parse_pdf_pages
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -264,7 +265,8 @@ def test_pdf_parse_shuffle_free_plan(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 2
     assert "Exchange hashpartitioning" not in plan
-    wide = parse_pdf_pages(pdfs_from_documents(docs, rebalance=False))
+    monkeypatch.setattr(layout, "_BYTES_PER_CORE", 0)
+    wide = parse_pdf_pages(pdfs_from_documents(docs))
     plan_wide = wide._jdf.queryExecution().executedPlan().toString()
     assert plan_wide.count("MapInPandas") == 2
     assert "Exchange" not in plan_wide
@@ -429,14 +431,15 @@ def test_bfrange_array_form():
     assert parsed[0]["decode_failures"] == 0
 
 
-def test_pdf_front_door_shuffle_free(spark, sf_dir):
+def test_pdf_front_door_shuffle_free(spark, sf_dir, monkeypatch):
     """The document-level front door (parse_pdf_docs) must keep the
     whole tier scan → mapInPandas with zero KEYED exchanges —
     reassembly is kernel-local because whole PDFs arrive one per row.
-    Zero exchanges of any kind with rebalance=False (the wide-input
-    shape); the testdata scan itself may carry one round-robin
+    Zero exchanges of any kind for a wide input (pinned by zeroing the
+    size gate); the testdata scan itself may carry a round-robin
     rebalance (ops.layout)."""
     from pdf_extractor_spark.datagen import pdfs_from_documents
+    from pdf_extractor_spark.ops import layout
     from pdf_extractor_spark.ops.curate import extract_pdf_text
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -444,11 +447,35 @@ def test_pdf_front_door_shuffle_free(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 2   # render + parse kernels
     assert "Exchange hashpartitioning" not in plan
-    wide = extract_pdf_text(pdfs_from_documents(docs, rebalance=False),
-                            with_metrics=True)
+    monkeypatch.setattr(layout, "_BYTES_PER_CORE", 0)
+    wide = extract_pdf_text(pdfs_from_documents(docs), with_metrics=True)
     plan_wide = wide._jdf.queryExecution().executedPlan().toString()
     assert plan_wide.count("MapInPandas") == 2
     assert "Exchange" not in plan_wide
+
+
+def test_pdf_front_door_spreads_a_narrow_input(spark, tmp_path):
+    """A one-row-group (doc_id, pdf) parquet is one scan task; the PDF
+    front door round-robins it to core width before the parse, as the
+    HTML front door does before its flatten, so more than one task
+    parses it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pdf_extractor_spark.ops.curate import extract_pdf_text
+
+    ids = list(range(64))
+    table = pa.table({
+        "doc_id": pa.array(ids, pa.int64()),
+        "pdf": [gen_pdf_bytes(i, doc_row(42, i)["text"]) for i in ids]})
+    path = str(tmp_path / "pdfs.parquet")
+    pq.write_table(table, path, row_group_size=len(ids))
+    assert pq.ParquetFile(path).num_row_groups == 1
+
+    ext = extract_pdf_text(spark.read.parquet(path), with_metrics=True)
+    rows = ext.select("doc_id", "partition_id").collect()
+    assert sorted(r.doc_id for r in rows) == ids
+    assert len({r.partition_id for r in rows}) > 1
 
 
 def test_hybrid_xrefstm_takes_precedence_over_stale_classic():

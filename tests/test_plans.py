@@ -186,14 +186,18 @@ def test_contamination_no_corpus_exchange_before_join(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") <= 2
 
 
-def test_curate_near_dup_anti_join_broadcasts(spark, sf_dir):
+def test_curate_near_dup_anti_join_broadcasts(spark, sf_dir, tmp_path):
     """The near-dup removal must be a broadcast LEFT ANTI join (pairs
     ≪ corpus by construction) and the quality+lang feature pass must
-    collapse into the scan-side projection, not extra exchanges."""
+    collapse into the scan-side projection, not extra exchanges. The
+    pair table reaches `curate` as it does in jobs_curate.py: persisted
+    and written (so materialized, with a known size) before the
+    kept-set is planned."""
     from pdf_extractor_spark.ops.curate import curate_corpus
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pairs = spark.createDataFrame([(1, 2)], "a long, b long")
+    pairs = spark.createDataFrame([(1, 2)], "a long, b long").persist()
+    pairs.write.parquet(str(tmp_path / "near_dup_pairs"))
     df = curate_corpus(docs, near_dup_pairs=pairs)
     # strategy is left to AQE (a forced hint would OOM on huge pair
     # sets): execute, then assert the FINAL adaptive plan broadcast the
@@ -209,6 +213,7 @@ def test_curate_near_dup_anti_join_broadcasts(spark, sf_dir):
     # the gates (fused into the scan-side Filter/Project) or anti-join
     assert final.count("Exchange hashpartitioning") <= 2
     assert "WindowGroupLimit" in final  # partial top-1 before the exchange
+    pairs.unpersist()
 
 
 def test_dim_df_keeps_union_estimate_honest(spark, sf_dir):
