@@ -5,10 +5,11 @@ The reference parses and extracts each PDF in one pass (one file is one
 person's record). ``extract`` does the same under one ``mapInArrow``
 behind one explicit url-hash exchange, ``repartition(n, "url")`` with
 n from ``ops.layout.exchange_width`` (one partition per scan split's
-worth of input bytes, at least ``spark.sql.shuffle.partitions``; AQE
-would coalesce a bare ``repartition("url")`` of a small input below
-the core count), sorted within partitions by url, ``warc_ts`` when the
-input has it (nulls last) and ``xxhash64`` of the content columns.
+worth of input bytes, rounded up to whole waves of the job's cores, so
+a small input runs one task per core; AQE would coalesce a bare
+``repartition("url")`` of a small input below the core count), sorted
+within partitions by url, ``warc_ts`` when the input has it (nulls
+last) and ``xxhash64`` of the content columns.
 Every capture of a url then sits in one run of rows, and **the
 earliest capture wins**: the kernel extracts the first row of each run
 (a run may span Arrow batches) and skips the rest. The job's other two

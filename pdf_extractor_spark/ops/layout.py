@@ -29,6 +29,9 @@ from pyspark.sql.types import StructType
 # cannot be relied on to feed every core from file layout alone
 _BYTES_PER_CORE = 32 << 20
 
+# unary logical nodes that keep their child's partition count
+_NARROW = ("Project", "Filter", "SubqueryAlias", "MapInPandas", "MapInArrow")
+
 
 def _estimated_bytes(df: DataFrame) -> int | None:
     try:
@@ -38,25 +41,37 @@ def _estimated_bytes(df: DataFrame) -> int | None:
         return None
 
 
+def _repartitioned(df: DataFrame) -> bool:
+    """True when the analyzed plan reaches a `Repartition` or
+    `RepartitionByExpression` through narrow unary nodes only (a
+    rebalance below a projection, filter or map kernel still spreads
+    the rows that reach `df`); any other node stops the walk."""
+    try:
+        node = df._jdf.queryExecution().analyzed()
+        while True:
+            name = node.getClass().getSimpleName()
+            if name in ("Repartition", "RepartitionByExpression"):
+                return True
+            if name not in _NARROW:
+                return False
+            node = node.child()
+    except Exception:
+        return False
+
+
 def rebalance_narrow(df: DataFrame) -> DataFrame:
     """Round-robin repartition of a provably-small input to full core
     width before an expensive per-row stage; identity for anything the
     optimizer estimates above cores × `_BYTES_PER_CORE`, for a streaming
     input (a micro-batch plan takes no round-robin exchange), and for
-    inputs the caller already repartitioned (no double exchange when a
-    query rebalances once and feeds several ops that each guard
-    themselves). The rule reads only the input, so callers take no
+    inputs the caller already repartitioned, even below narrow nodes
+    (no double exchange when a query rebalances once and feeds several
+    ops that each guard themselves, or feeds one kernel's output to
+    another's). The rule reads only the input, so callers take no
     switch."""
-    if df.isStreaming:
+    if df.isStreaming or _repartitioned(df):
         return df
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
-    try:
-        top = df._jdf.queryExecution().analyzed().getClass().getSimpleName()
-        if top in ("Repartition", "RepartitionByExpression"):
-            return df
-    except Exception:
-        pass
+    cores = df.sparkSession.sparkContext.defaultParallelism
     est = _estimated_bytes(df)
     if est is not None and est < cores * _BYTES_PER_CORE:
         return df.repartition(cores)
@@ -64,20 +79,25 @@ def rebalance_narrow(df: DataFrame) -> DataFrame:
 
 
 def exchange_width(df: DataFrame) -> int:
-    """Partition count for an explicit hash exchange of `df`: one
+    """Partition count for an explicit hash exchange of `df`, in whole
+    waves of the cores the job runs on (``defaultParallelism``): one
     partition per scan split's worth of estimated input bytes
-    (``spark.sql.files.maxPartitionBytes``), never fewer than
-    ``spark.sql.shuffle.partitions``. An explicit count is not coalesced
-    by AQE, so a small input keeps every core busy, and a large one
-    keeps the parallelism its scan had. An input the optimizer cannot
-    size (no stats, or the ``Long.MaxValue`` default) gets the floor."""
+    (``spark.sql.files.maxPartitionBytes``), at least one, rounded up
+    to a multiple of the cores. An explicit count is not coalesced by
+    AQE, so a small input runs one task per core and no second wave of
+    near-empty tasks, and a large one keeps the parallelism its scan
+    had without a last wave holding a few tasks. An input the optimizer
+    cannot size (no stats, or the ``Long.MaxValue`` default) gets one
+    wave. ``spark.sql.shuffle.partitions`` is a floor for AQE-coalesced
+    shuffles and does not apply here."""
     spark = df.sparkSession
-    floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cores = spark.sparkContext.defaultParallelism
     est = _estimated_bytes(df)
     if est is None or est >= (1 << 63) - 1:
-        return floor
+        return cores
     split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    return max(floor, -(-est // split))
+    splits = max(1, -(-est // split))
+    return cores * -(-splits // cores)
 
 
 def dim_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:

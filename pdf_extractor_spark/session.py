@@ -30,7 +30,9 @@ def host_defaults(master: str | None = None) -> tuple[str, int, str]:
         master = f"local[{os.environ.get('SPARK_GRAFT_CPUS') or cores}]"
     n = master[master.find("[") + 1: master.find("]")] if "[" in master else "*"
     # match parallelism; on a real cluster this would be 2-3x total
-    # executor cores and AQE coalesces down
+    # executor cores and AQE coalesces down. This floors AQE-coalesced
+    # shuffles only; the extraction job's url exchange has an explicit
+    # count, sized in waves of cores by `ops/layout.exchange_width`.
     shuffle_partitions = max(8, cores if n == "*" else int(n))
     memory = os.environ.get("SPARK_DRIVER_MEMORY")
     if not memory:

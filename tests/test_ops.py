@@ -652,19 +652,31 @@ def test_rebalance_narrow_size_gate(spark, sf_dir):
 
 
 def test_exchange_width_follows_the_input_size(spark, sf_dir):
-    """ops.layout.exchange_width: the shuffle-partitions floor for a
-    small input and for one the optimizer cannot size, and one
-    partition per scan split of estimated bytes above it."""
+    """ops.layout.exchange_width: one wave of the job's cores
+    (``defaultParallelism``) for a small input and for one the
+    optimizer cannot size, and one partition per scan split of
+    estimated bytes rounded up to whole waves above it, whatever
+    ``spark.sql.shuffle.partitions`` says."""
     from pdf_extractor_spark.ops.layout import exchange_width
 
-    floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cores = spark.sparkContext.defaultParallelism
     split = spark._jsparkSession.sessionState().conf() \
         .filesMaxPartitionBytes()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    assert exchange_width(docs) == floor
     # a literal table's estimate is Long.MaxValue: unknown, not huge
     lit = spark.createDataFrame([("u", "x")], "url string, text string")
-    assert exchange_width(lit) == floor
-    big = spark.range(0, 1 << 30)       # range stats: 8 bytes/row
-    assert exchange_width(big) == max(floor, -(-(8 << 30) // split))
-    assert exchange_width(big) > floor
+    # range stats: 8 bytes/row, so one row past `cores` splits
+    wave_and_one = spark.range(0, cores * split // 8 + 1)
+    big = spark.range(0, 1 << 30)
+    splits = -(-(8 << 30) // split)
+    floor = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for shuffle_partitions in (floor, "3", "16"):
+            spark.conf.set("spark.sql.shuffle.partitions", shuffle_partitions)
+            assert exchange_width(docs) == cores
+            assert exchange_width(lit) == cores
+            assert exchange_width(wave_and_one) == 2 * cores
+            n = exchange_width(big)
+            assert n % cores == 0 and n - cores < splits <= n
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", floor)

@@ -282,6 +282,18 @@ def test_curate_gate_filter_not_pushed_below_rebalance(spark, sf_dir):
     assert "regexp_replace" not in below
 
 
+def test_pdf_chain_rebalances_once(spark, sf_dir):
+    """Render → parse over a one-row-group table round-robins once:
+    `extract_pdf_text`'s `rebalance_narrow` sees the rebalance
+    `pdfs_from_documents` put below its render kernel and adds none."""
+    from pdf_extractor_spark.datagen import pdfs_from_documents
+    from pdf_extractor_spark.ops.curate import extract_pdf_text
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    plan = _plan(extract_pdf_text(pdfs_from_documents(docs)))
+    assert plan.count("RoundRobinPartitioning") == 1
+
+
 def _python_nodes(df) -> list[str]:
     """Names of the Python exec nodes in `df`'s initial physical plan.
     A cached input is one InMemoryTableScan leaf there, so a node of an
@@ -306,7 +318,7 @@ def test_pdf_job_runs_one_python_pass(spark, tmp_path, monkeypatch, mode):
     (`--pdf-col`) and from a pages table alike: the document pass
     (front door, both engines and the series writers, one MapInArrow)
     behind one explicit url-hash exchange (`ops.layout.exchange_width`
-    partitions: on this small input, `spark.sql.shuffle.partitions`).
+    partitions: on this small input, one per core).
     Every output table is a projection of the one frame the job
     persists, so its plan holds every Python node of the job."""
     import sys
@@ -343,7 +355,7 @@ def test_pdf_job_runs_one_python_pass(spark, tmp_path, monkeypatch, mode):
     finally:
         spark.catalog.clearCache()
     assert persisted == ["MapInArrow"]
-    n = spark.conf.get("spark.sql.shuffle.partitions")
+    n = spark.sparkContext.defaultParallelism
     exchanges = [ln for ln in plans[0].splitlines() if "Exchange" in ln]
     assert len(exchanges) == 1
     assert "hashpartitioning(url#" in exchanges[0]
