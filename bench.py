@@ -71,6 +71,7 @@ def run_bench(spark, sf_dir: str) -> dict:
     pages_path = ensure_corpus(spark, n_docs)
     pages = spark.read.parquet(pages_path)
 
+    from pdf_extractor_spark import docpass
     from pdf_extractor_spark import queries as Q
     from pdf_extractor_spark.engine1 import pipeline as e1
     from pdf_extractor_spark.engine2 import pipeline as e2
@@ -78,21 +79,30 @@ def run_bench(spark, sf_dir: str) -> dict:
     timings: dict[str, float] = {}
     counters: dict[str, int] = {}
 
-    # JIT/codegen warm-up on a tiny corpus so the measured numbers are
-    # steady-state throughput, not first-run compilation
+    # the extraction job's document pass (both engines and the series
+    # writers in one Python call per url), persisted as the job does;
+    # each leaf counts its engine's tables off it
+    def e1_rows(df):
+        long_df = docpass.extract(df, (2019, 1), (2021, 12)).persist()
+        vals, att, _ = e1.split_long(docpass.e1_long(long_df))
+        n = vals.count() + att.count()
+        long_df.unpersist()
+        return n
+
+    def e2_rows(df):
+        long_df = docpass.extract(df, (2019, 1), (2021, 12)).persist()
+        n = e2.series_table(docpass.series_long(long_df), "3123-Base").count()
+        n += e2.metrics_table(docpass.e2_long(long_df)).count()
+        long_df.unpersist()
+        return n
+
+    # JIT/codegen warm-up of the EXACT measured plans on a tiny corpus
+    # so the measured numbers are steady-state throughput: an unwarmed
+    # plan pays codegen + Python-worker pool growth inside the timed
+    # section, which showed up as ±2-3x snapshot-to-snapshot spread
     warm = spark.read.parquet(ensure_corpus(spark, 100))
-    wv, wa = e1.extract_folha(warm)
-    wv.count()
-    wa.count()
-    # warm the EXACT measured Engine-2 plan set (adjusted long table,
-    # series projection, metrics) — an unwarmed plan pays codegen +
-    # Python-worker pool growth inside the timed section, which showed
-    # up as ±2-3x snapshot-to-snapshot spread on e2_extract
-    wl = e2.extract_ficha(warm, adjust_vacation=True).persist()
-    e2.default_series_table(e2.values_table(wl), "3123-Base",
-                            (2019, 1), (2019, 3)).count()
-    e2.metrics_table(wl).count()
-    wl.unpersist()
+    e1_rows(warm)
+    e2_rows(warm)
     spark.catalog.clearCache()
 
     def timed(name: str, fn):
@@ -102,22 +112,9 @@ def run_bench(spark, sf_dir: str) -> dict:
         return out
 
     # Engine-1: full extraction (values + attention) over the corpus
-    def bench_e1():
-        vals, att = e1.extract_folha(pages)
-        return vals.count() + att.count()
-
-    counters["e1_rows"] = timed("e1_extract", bench_e1)
-
+    counters["e1_rows"] = timed("e1_extract", lambda: e1_rows(pages))
     # Engine-2: layout kernel → adjustment → zero-filled formatted series
-    def bench_e2():
-        long_df = e2.extract_ficha(pages, adjust_vacation=True).persist()
-        adj = e2.values_table(long_df)
-        n = e2.default_series_table(adj, "3123-Base", (2019, 1), (2021, 12)).count()
-        n += e2.metrics_table(long_df).count()
-        long_df.unpersist()
-        return n
-
-    counters["e2_rows"] = timed("e2_extract", bench_e2)
+    counters["e2_rows"] = timed("e2_extract", lambda: e2_rows(pages))
 
     # representative relational + curation operators on the SF tables
     for qname in ("q1_pricing_summary", "w3_last_write_wins", "j7_asof_join",

@@ -1,8 +1,9 @@
 """pdf_extractor_spark — a from-scratch PySpark-native document-extraction
 analytics engine with the query semantics of danielchaves22/pdf-extractor.
 
-The reference (/root/reference) is a single-process desktop tool with two
-extraction engines:
+The reference is a single-process desktop tool with two extraction
+engines (its checkout is not vendored; ``oracle_ref.py`` is the
+executable stand-in for its semantics):
 
 * Engine 1 — line/regex extraction over page *text* ("Recibo Modelo 1"
   payroll sheets), reference ``pdf_processor_core.py``.
@@ -13,8 +14,8 @@ extraction engines:
 This package re-expresses both as idiomatic Spark dataflows over a
 Common-Crawl-style pages table ``(url, warc_ts, html, text, lang)``:
 all relational rules are built-in DataFrame ops (Catalyst-optimized),
-and the only Python kernels are Arrow-batched ``applyInPandas`` /
-``pandas_udf`` parsers (no per-row Python).
+and the Python kernels are Arrow-batched parsers. The extraction job
+runs them in one ``mapInArrow`` document pass (``docpass.py``).
 """
 
 __version__ = "0.1.0"

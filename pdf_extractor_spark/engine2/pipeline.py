@@ -10,8 +10,8 @@
   Python byte-parity functions in ``functions/brnum.py``. The
   extraction job calls it per document in its one document pass
   (``docpass.py``), after picking each url's earliest capture there;
-  ``build_series`` calls it per url group for stand-alone callers
-  (``queries.py``, ``bench.py``). The four output tables are
+  ``build_series`` calls it per url group for the staged callers
+  (``perfbench/compose.py`` and tests). The four output tables are
   projections of its rows (``series_table``).
 
 Values travel as canonical decimal strings ('1234.56') end-to-end:
@@ -48,9 +48,8 @@ def extract_ficha(pages_df: DataFrame,
     shuffle). The input goes through ``ops.layout.rebalance_narrow``,
     the narrow-input policy Engine 1 uses: one round-robin exchange
     only for an input the optimizer proves small, so a tiny local
-    corpus still feeds every core (a streaming input passes through
-    unchanged). An oversized document runs in one task, as in the
-    job's document pass.
+    corpus still feeds every core. An oversized document runs in one
+    task, as in the job's document pass.
 
     `adjust_vacation=True` applies the A6 adjustment in the kernel's
     per-document call (zero extra shuffles; byte-identical to

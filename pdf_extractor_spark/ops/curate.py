@@ -159,8 +159,8 @@ def extract_pdf_text(pages: DataFrame, pdf_col: str = "pdf",
     (``ops.pdfstream.parse_pdf_docs``) into the (doc_id, text) shape
     the curation stack consumes. The input width rule is the HTML front
     door's: a narrow input (one parquet row group) is round-robined to
-    core width first (``ops.layout.rebalance_narrow``), a wide or
-    streaming one keeps its zero-exchange scan → parse plan.
+    core width first (``ops.layout.rebalance_narrow``), a wide one
+    keeps its zero-exchange scan → parse plan.
 
     `with_metrics` adds pages parsed (0 for bytes with no page tree, as
     in the extraction job's `audit_parse`) / line / operator /

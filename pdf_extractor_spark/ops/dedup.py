@@ -40,8 +40,8 @@ def normalize_text(col: Column) -> Column:
 
 def content_hash(text: Column) -> Column:
     """md5 of the normalized text: the one exact-duplicate key (the
-    curation gate, `exact_duplicates`, `textstats.fingerprint` and
-    `streaming.stream_dedup_exact` all read it from here)."""
+    curation gate, `exact_duplicates` and `textstats.fingerprint` all
+    read it from here)."""
     return F.md5(normalize_text(text))
 
 

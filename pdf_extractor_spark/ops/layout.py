@@ -62,14 +62,13 @@ def _repartitioned(df: DataFrame) -> bool:
 def rebalance_narrow(df: DataFrame) -> DataFrame:
     """Round-robin repartition of a provably-small input to full core
     width before an expensive per-row stage; identity for anything the
-    optimizer estimates above cores × `_BYTES_PER_CORE`, for a streaming
-    input (a micro-batch plan takes no round-robin exchange), and for
-    inputs the caller already repartitioned, even below narrow nodes
+    optimizer estimates above cores × `_BYTES_PER_CORE` and for inputs
+    the caller already repartitioned, even below narrow nodes
     (no double exchange when a query rebalances once and feeds several
     ops that each guard themselves, or feeds one kernel's output to
     another's). The rule reads only the input, so callers take no
     switch."""
-    if df.isStreaming or _repartitioned(df):
+    if _repartitioned(df):
         return df
     cores = df.sparkSession.sparkContext.defaultParallelism
     est = _estimated_bytes(df)
@@ -116,7 +115,11 @@ def dim_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     exact row-count stats, so the estimate stays a few hundred bytes.
     `schema` is the same DDL string createDataFrame takes (parsed by
     Spark, so `decimal(10,2)` and nested types work); column order must
-    match the tuples. Empty `rows` give an empty table of that schema."""
+    match the tuples. Values must already match the declared types:
+    `cast` converts what it can (1.5 in an int column reads 1) and
+    raises only when a job runs, where `createDataFrame` rejects any
+    mismatch at once. Empty `rows` give an empty table of that
+    schema."""
     fields = StructType.fromDDL(schema).fields
     idx = (F.col("id") + 1).cast("int")
     cols = [

@@ -881,6 +881,10 @@ def _golden_sql(name: str) -> str:
     return f"SELECT * FROM read_parquet('{GOLDEN_DIR}/{name}.parquet')"
 
 
+# (start, end) months of the extraction goldens' series
+_SERIES_RANGE = ((2019, 1), (2021, 12))
+
+
 def _corpus_docs_for(sf_dir: str) -> int:
     if "0.1" in sf_dir and "0.01" not in sf_dir and "0.001" not in sf_dir:
         return 800
@@ -889,26 +893,33 @@ def _corpus_docs_for(sf_dir: str) -> int:
     return 60
 
 
+def _pages_docpass(spark, sf_dir):
+    """The extraction job's document pass (``docpass.extract``) over the
+    synthetic pages corpus, series over the goldens' month range."""
+    from .datagen import corpus_df
+    from .docpass import extract
+
+    return extract(corpus_df(spark, _corpus_docs_for(sf_dir)), *_SERIES_RANGE)
+
+
 @q("extract_e2_proventos", _golden_sql("extract_e2_proventos"))
 def extract_e2_proventos(spark, sf_dir):
     """Flagship Engine-2 pipeline: synthetic ficha corpus → vacation-
     adjusted, zero-filled, byte-format PROVENTOS series per url."""
-    from .datagen import corpus_df
+    from .docpass import series_long
     from .engine2 import pipeline as e2
 
-    pages = corpus_df(spark, _corpus_docs_for(sf_dir))
-    adj = e2.values_table(e2.extract_ficha(pages, adjust_vacation=True))
-    return e2.default_series_table(adj, "3123-Base", (2019, 1), (2021, 12))
+    return e2.series_table(series_long(_pages_docpass(spark, sf_dir)),
+                           "3123-Base")
 
 
 @q("extract_e1_values", _golden_sql("extract_e1_values"))
 def extract_e1_values(spark, sf_dir):
     """Engine-1 pipeline: synthetic folha corpus → per-period rule values."""
-    from .datagen import corpus_df
+    from .docpass import e1_long
     from .engine1 import pipeline as e1
 
-    pages = corpus_df(spark, _corpus_docs_for(sf_dir))
-    values, _ = e1.extract_folha(pages)
+    values, _, _ = e1.split_long(e1_long(_pages_docpass(spark, sf_dir)))
     return values.select(
         "url", "folha_type", "year", "month", "excel_col",
         F.col("value")["num"].alias("value_num"),
@@ -930,12 +941,12 @@ def extract_e1_person_names(spark, sf_dir):
 @q("extract_audit_metrics", _golden_sql("extract_audit_metrics"))
 def extract_audit_metrics(spark, sf_dir):
     """Per-document lineage metrics (audit-table feed, both engines)."""
-    from .datagen import corpus_df
+    from .docpass import e2_long
     from .engine2 import pipeline as e2
     from .sinks.audit import build_audit
 
-    pages = corpus_df(spark, _corpus_docs_for(sf_dir))
-    met = e2.metrics_table(e2.extract_ficha(pages))
+    # the metrics row does not read A6, which the pass applies
+    met = e2.metrics_table(e2_long(_pages_docpass(spark, sf_dir)))
     # partition_id/audit_ts are lineage columns, legitimately
     # run-dependent — dropped here so the check pins the deterministic
     # metric values (partition_summary keeps the lineage view)
@@ -1543,17 +1554,17 @@ def pdf_extract_e2(spark, sf_dir):
     rendered as positioned-text PDFs (datagen.gen_e2_pdf_bytes,
     shuffled word emission order) → from-scratch parse to word boxes
     (font /Widths + /FontDescriptor metrics → extract_words tuples,
-    ops/pdfstream.parse_pdf_layout) → the full Engine-2 layout kernel
-    → vacation-adjusted zero-filled PROVENTOS series.
+    ops/pdfstream.layout_row inside the job's document pass) → the
+    full Engine-2 layout kernel → vacation-adjusted zero-filled
+    PROVENTOS series.
 
     The oracle is deliberately THE SAME golden parquet as
     `extract_e2_proventos`: the PDF-bytes path must reproduce the
     WBX2 path's output hash byte-for-byte."""
     from .datagen import e2_pdf_corpus_df
+    from .docpass import extract, series_long
     from .engine2 import pipeline as e2
-    from .ops.pdfstream import parse_pdf_layout
 
     pdfs = e2_pdf_corpus_df(spark, _corpus_docs_for(sf_dir))
-    adj = e2.values_table(
-        e2.extract_ficha(parse_pdf_layout(pdfs), adjust_vacation=True))
-    return e2.default_series_table(adj, "3123-Base", (2019, 1), (2021, 12))
+    long_df = extract(pdfs, *_SERIES_RANGE, pdf_col="pdf")
+    return e2.series_table(series_long(long_df), "3123-Base")

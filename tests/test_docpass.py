@@ -3,7 +3,8 @@ staged path it replaces: front door (`parse_pdf_layout`) → Engine 1
 (`e1.extract_long`) and Engine 2 (`e2.extract_ficha(adjust_vacation=
 True)`) → the series pass (`e2.build_series` over the pass's own
 Engine-2 rows), row for row, over PDF bytes and over a pages table,
-hostile rows included."""
+hostile rows included. The driver queries over the engines build on the
+pass, not on the staged path."""
 
 from __future__ import annotations
 
@@ -94,3 +95,22 @@ def test_docpass_from_pages_table_equals_staged_path(spark):
     assert sorted(r[0] for r in docs) == sorted(corpus["url"])
     assert {r[1:] for r in docs} == {(None, None, None)}
 
+
+@pytest.mark.parametrize("name", ["extract_e2_proventos", "pdf_extract_e2",
+                                  "extract_e1_values",
+                                  "extract_audit_metrics"])
+def test_extraction_queries_build_on_the_document_pass(spark, sf_dir,
+                                                       monkeypatch, name):
+    """Every staged entry point raises, and each query still builds its
+    DataFrame: the staged wrappers run at plan-build time, so building
+    is enough to show the query never reaches them."""
+    from pdf_extractor_spark.ops import pdfstream
+    from pdf_extractor_spark.queries import QUERIES
+
+    def staged(*args, **kwargs):
+        raise AssertionError("the staged path was called")
+
+    monkeypatch.setattr(e2, "extract_ficha", staged)
+    monkeypatch.setattr(e1, "extract_long", staged)
+    monkeypatch.setattr(pdfstream, "parse_pdf_layout", staged)
+    assert QUERIES[name](spark, sf_dir).columns
