@@ -314,14 +314,6 @@ def _hash_sets(sh: DataFrame) -> DataFrame:
             .withColumn("n", F.size("hs")))
 
 
-def _jaccard_from_hashed(sh: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact shingle-set Jaccard from a DISTINCT (doc_id, h64) table:
-    per-doc hash sets via one groupBy, then `_jaccard_from_sets`."""
-    sets = sh.groupBy("doc_id").agg(F.collect_list("h64").alias("hs"),
-                                    F.count("*").alias("n"))
-    return _jaccard_from_sets(sets, pairs)
-
-
 def _jaccard_from_sets(sets: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact set Jaccard from a (doc_id, hs array<long>, n) table:
     |A∩B| via array_intersect per candidate pair. The per-pair set
@@ -354,7 +346,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     # same bucket cap as LSH; one exchange builds the inverted index
     # and explodes its co-occurrence pairs
     cand = _bucket_pairs(sh, ["h64"], 100)
-    return _jaccard_from_hashed(sh, cand).filter(
+    return _jaccard_from_sets(_hash_sets(sh), cand).filter(
         F.col("jaccard") >= threshold)
 
 

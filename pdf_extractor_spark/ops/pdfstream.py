@@ -6,18 +6,20 @@ Unicode) and emits per-page extracted text plus line positions.
 Reference analog: `pdf_processor_core.py:318-345` and
 `processors/ficha_financeira_processor.py:387-398` delegate this layer
 to pdfplumber/pypdf; here the whole stack is implemented directly —
-no PDF library — as a pure-Python kernel applied over Arrow batches
-(`mapInPandas`), never per-row Python UDFs.
+no PDF library — as a pure-Python kernel applied over Arrow batches,
+never per-row Python UDFs: `mapInPandas` for the stand-alone tier
+(`parse_pdf_*`), and inside the extraction job's document pass
+(`docpass.py`, one `mapInArrow`), which calls `layout_row` per PDF.
 
 Split of labor (same scale contract as `ops/boilerplate.py`):
 
 * **Python (Arrow batch)**: the byte-level parse only — xref/object
   graph, stream inflation, content tokenization, byte→Unicode decode.
   One linear pass per document, bounded by document size.
-* **Plan shape**: scan → mapInPandas, shuffle-free; per-doc page
-  fan-out happens inside the kernel, so at 10^12 documents the stage
-  is embarrassingly parallel and AQE/salting handles size skew
-  exactly as for the WBX2 kernel.
+* **Plan shape**: scan → mapInPandas (or the document pass's
+  mapInArrow), shuffle-free; per-doc page fan-out happens inside the
+  kernel, so at 10^12 documents the stage is embarrassingly parallel
+  and AQE/salting handles size skew exactly as for the WBX2 kernel.
 
 Grammar coverage (PDF 32000-1): header + classic xref tables AND
 PDF-1.5 cross-reference streams (§7.5.8: /W-packed binary rows,
@@ -31,15 +33,17 @@ streams with direct or indirect /Length and FlateDecode /
 LZWDecode (EarlyChange) / ASCIIHexDecode / ASCII85Decode /
 RunLengthDecode filter chains (applied in array order); the page
 tree (nested /Kids); /Contents as a single stream or an array
-(concatenated before tokenization); text operators BT ET Tf Td TD TL
-Tm T* Tj TJ ' "; font /Encoding as a name or a dictionary with
-/BaseEncoding + /Differences; composite /Type0 fonts with 2-byte
-CID show strings decoded through the /ToUnicode CMap (bfchar +
-bfrange incl. the destination-array form, UTF-16BE); RC4
-standard-security-handler encryption §7.6.3 (V1/V2, R2/R3, empty
-user password, per-object keys). Broken xrefs degrade to a brute-force
-object scan (which also opens /ObjStm containers) rather than
-failing the document.
+(concatenated, then lexed and interpreted in one loop); text
+operators BT ET Tf Td TD TL Tm T* Tj TJ ' "; font /Encoding as a name
+or a dictionary with /BaseEncoding + /Differences; composite /Type0
+fonts with 2-byte CID show strings decoded through the /ToUnicode
+CMap (bfchar + bfrange incl. the destination-array form, UTF-16BE);
+standard-security-handler encryption §7.6.3 with the empty user
+password: RC4 V1/V2 (R2/R3, per-object keys), V4 crypt filters (/V2
+RC4 or /AESV2 AES-128, /StmF and /StrF resolved apart, Identity passed
+through) and V5 AES-256 (R5/R6). Broken xrefs degrade to a
+brute-force object scan (which also opens /ObjStm containers) rather
+than failing the document.
 """
 
 from __future__ import annotations
@@ -555,6 +559,22 @@ def _png_unpredict(data: bytes, columns: int) -> bytes:
     return bytes(out)
 
 
+def _objstm_header(data: bytes, n: int) -> list[int]:
+    """The /N (objnum, offset) integer pairs an /ObjStm's data starts
+    with (§7.5.7): up to 2·n integers, fewer when a non-number comes
+    first."""
+    nums: list[int] = []
+    i = 0
+    for _ in range(2 * n):
+        i = _skip_ws(data, i)
+        m = _NUM_RE.match(data, i)
+        if not m:
+            break
+        nums.append(int(m.group()))
+        i = m.end()
+    return nums
+
+
 # FlateDecode output caps: a few-KB bomb stream can inflate to
 # gigabytes inside a Python worker. A stream over the per-stream cap,
 # or a document whose streams together inflate past the per-document
@@ -718,8 +738,9 @@ class _Doc:
         """startxref → chain of xref sections (classic tables or PDF-1.5
         cross-reference streams, newest first via /Prev); first
         definition of an object number wins, as incremental updates
-        require. Any structural failure degrades to the brute-force
-        object scan."""
+        require. Any failure, structural or not (a malformed section
+        can raise TypeError or AttributeError as well), degrades to the
+        brute-force object scan."""
         buf = self.buf
         try:
             m = None
@@ -749,7 +770,7 @@ class _Doc:
             if not trailer:
                 raise ValueError("no trailer")
             return offsets, trailer
-        except (ValueError, KeyError, OverflowError, zlib.error):
+        except Exception:
             self.compressed = {}
             return self._scan_fallback()
 
@@ -887,15 +908,7 @@ class _Doc:
                 n = self.resolve(d.get("N"))
                 if not isinstance(n, int):
                     continue
-                i = 0
-                nums: list[int] = []
-                for _ in range(2 * n):
-                    i = _skip_ws(data, i)
-                    mh = _NUM_RE.match(data, i)
-                    if not mh:
-                        break
-                    nums.append(int(mh.group()))
-                    i = mh.end()
+                nums = _objstm_header(data, n)
                 for k in range(len(nums) // 2):
                     onum = nums[2 * k]
                     if onum not in offsets:
@@ -976,15 +989,9 @@ class _Doc:
             first = self.resolve(d.get("First"))
             if not isinstance(n, int) or not isinstance(first, int):
                 raise ValueError("bad /N or /First")
-            nums: list[int] = []
-            i = 0
-            for _ in range(2 * n):
-                i = _skip_ws(data, i)
-                m = _NUM_RE.match(data, i)
-                if not m:
-                    raise ValueError("bad objstm header")
-                nums.append(int(m.group()))
-                i = m.end()
+            nums = _objstm_header(data, n)
+            if len(nums) < 2 * n:
+                raise ValueError("bad objstm header")
             objs = {}
             for k in range(n):
                 v, _ = _parse_value(data, first + nums[2 * k + 1])
@@ -1253,15 +1260,14 @@ class _Doc:
         return cmap if cmap else None
 
 
-# --- content-stream tokenizer -------------------------------------------
+# --- content stream ----------------------------------------------------
 
 _INLINE_IMG_END = re.compile(rb"[\x00\t\n\x0c\r ]EI(?=[\x00\t\n\x0c\r ]|$)")
 
-# one-pass content lexer: leading whitespace/comments folded into the
-# token match so the hot loop is a single C-level regex call per token
-# (same dispatch as the per-byte scanner it replaced; differential- and
-# golden-pinned). Group order encodes precedence: number before
-# operator, '<<' before '<'.
+# content-stream token: leading whitespace/comments folded into the
+# match so `_extract_page`'s loop makes one C-level regex call per
+# token. Group order encodes precedence: number before operator, '<<'
+# before '<'.
 _CTOK_RE = re.compile(
     rb"(?:[\x00\t\n\x0c\r ]|%[^\n]*\n?)*"
     rb"(?:(?P<num>[+-]?(?:\d+\.?\d*|\.\d+))"
@@ -1270,79 +1276,6 @@ _CTOK_RE = re.compile(
     rb"|(?P<open>\[)|(?P<close>\])"
     rb"|(?P<dict><<)|(?P<hex><)|(?P<lit>\()"
     rb"|(?P<junk>.))", re.S)
-
-
-def _tokenize_content(buf: bytes):
-    """Yield ('str', bytes) | ('num', float) | ('name', str) |
-    ('arr', list) | ('op', str) in stream order."""
-    i, n = 0, len(buf)
-    arr_stack: list[list] = []
-    match = _CTOK_RE.match
-    while i < n:
-        m = match(buf, i)
-        if m is None:                           # whitespace-only tail
-            break
-        lg = m.lastgroup
-        if lg == "num":
-            v = float(m.group("num"))
-            i = m.end()
-            if arr_stack:
-                arr_stack[-1].append(v)
-            else:
-                yield ("num", v)
-        elif lg == "op":
-            op = m.group("op").decode("latin-1")
-            if op == "BI":                      # inline image (§8.9.7):
-                # binary sample data follows ID and would poison the
-                # lexer; skip through the EI terminator (whitespace-
-                # delimited, the practical heuristic every parser uses
-                # since the data is unframed)
-                me = _INLINE_IMG_END.search(buf, m.end())
-                i = me.end() if me else n
-                continue
-            i = m.end()
-            yield ("op", op)
-        elif lg == "lit":
-            s, i = _parse_literal_string(buf, m.end() - 1)
-            if arr_stack:
-                arr_stack[-1].append(s)
-            else:
-                yield ("str", s)
-        elif lg == "name":
-            raw = m.group("name")
-            i = m.end()
-            if b"#" in raw:                     # rare: #XX escapes
-                nm = str(_parse_name(b"/" + raw, 0)[0])
-            else:
-                nm = raw.decode("latin-1")
-            if arr_stack:
-                arr_stack[-1].append(nm)
-            else:
-                yield ("name", nm)
-        elif lg == "open":
-            arr_stack.append([])
-            i = m.end()
-        elif lg == "close":
-            i = m.end()
-            if arr_stack:
-                arr = arr_stack.pop()
-                if arr_stack:
-                    arr_stack[-1].append(arr)
-                else:
-                    yield ("arr", arr)
-        elif lg == "dict":                      # inline dict (e.g. BDC)
-            try:
-                _, i = _parse_value(buf, m.end() - 2)
-            except ValueError:                  # malformed: skip the '<<'
-                i = m.end()
-        elif lg == "hex":
-            s, i = _parse_hex_string(buf, m.end() - 1)
-            if arr_stack:
-                arr_stack[-1].append(s)
-            else:
-                yield ("str", s)
-        else:                                   # junk byte: skip
-            i = m.end()
 
 
 # A text segment: one show op's glyph clusters with their x-extents.
@@ -1364,7 +1297,8 @@ _X_TOL = 3.0
 
 def _extract_page(content: bytes, fonts: dict[str, _Font], tables: dict
                   ) -> tuple[list[_Seg], int, int]:
-    """Run the text-state machine over one page's content.
+    """Lex one page's content stream and run the text-state machine
+    over it, in one loop.
 
     Tracks the full character-positioning state — current font (Tf),
     size, horizontal scale (Tz), char/word spacing (Tc/Tw), leading
@@ -1470,81 +1404,127 @@ def _extract_page(content: bytes, fonts: dict[str, _Font], tables: dict
                          scale > 0.0 and 0.0 <= tc * scale <= _X_TOL
                          and tw >= 0.0 and font.nonneg))
 
-    for kind, val in _tokenize_content(content):
-        if kind != "op":
-            operands.append((kind, val))
+    # one loop lexes each token and dispatches each operator. An
+    # operand is a bare value — float, str (name), bytes (string) or
+    # list (array) — so its Python type is its kind. Arrays nest on
+    # `arrs`; an operator inside an open array still runs, and the
+    # array stays open for the operator after its ']'.
+    arrs: list[list] = []
+    i, n = 0, len(content)
+    match = _CTOK_RE.match
+    while i < n:
+        m = match(content, i)
+        if m is None:                           # whitespace-only tail
+            break
+        i = m.end()
+        lg = m.lastgroup
+        if lg == "num":
+            v = float(m.group("num"))
+        elif lg == "op":
+            op = m.group("op").decode("latin-1")
+            if op == "BI":                      # inline image (§8.9.7):
+                # binary sample data follows ID and would poison the
+                # lexer; skip through the EI terminator (whitespace-
+                # delimited, the practical heuristic every parser uses
+                # since the data is unframed). Not an operator: the
+                # pending operands carry over.
+                me = _INLINE_IMG_END.search(content, i)
+                i = me.end() if me else n
+                continue
+            n_ops += 1
+            try:
+                if op == "BT":
+                    lx = ly = x = y = 0.0
+                elif op == "Tf" and len(operands) >= 2:
+                    # guard: ficha-style streams re-issue Tf per cell
+                    # with the same state — skip the (memo-hit) rebuild
+                    sz = float(operands[-1])
+                    f2 = font
+                    if isinstance(operands[-2], str):
+                        f2 = fonts.get(operands[-2], first_font)
+                    if sz != size or f2 is not font:
+                        size, font = sz, f2
+                        rebuild()
+                elif op == "Tz" and operands:
+                    v2 = float(operands[-1])
+                    if v2 != tz:
+                        tz = v2
+                        rebuild()
+                elif op == "Tc" and operands:
+                    v2 = float(operands[-1])
+                    if v2 != tc:
+                        tc = v2
+                        rebuild()
+                elif op == "Tw" and operands:
+                    v2 = float(operands[-1])
+                    if v2 != tw:
+                        tw = v2
+                        rebuild()
+                elif op == "Td" and len(operands) >= 2:
+                    lx += operands[-2]
+                    ly += operands[-1]
+                    x, y = lx, ly
+                elif op == "TD" and len(operands) >= 2:
+                    leading = -operands[-1]
+                    lx += operands[-2]
+                    ly += operands[-1]
+                    x, y = lx, ly
+                elif op == "TL" and operands:
+                    leading = operands[-1]
+                elif op == "Tm" and len(operands) >= 6:
+                    lx = operands[-2]
+                    ly = operands[-1]
+                    x, y = lx, ly
+                elif op == "T*":
+                    ly -= leading
+                    x, y = lx, ly
+                elif op in ("Tj", "'", '"') and operands \
+                        and isinstance(operands[-1], bytes):
+                    if op == '"' and len(operands) >= 3:
+                        tw = float(operands[-3])
+                        tc = float(operands[-2])
+                        rebuild()
+                    if op != "Tj":              # ' and " start a line
+                        ly -= leading
+                        x, y = lx, ly
+                    emit(operands[-1])
+                elif op == "TJ" and operands \
+                        and isinstance(operands[-1], list):
+                    for e in operands[-1]:
+                        if isinstance(e, bytes):
+                            emit(e)
+                        elif isinstance(e, (int, float)):
+                            x = x - ((e * size) / 1000.0) * scale
+            except (TypeError, IndexError, ValueError):
+                failures += 1
+            operands.clear()
             continue
-        n_ops += 1
-        op = val
-        try:
-            if op == "BT":
-                lx = ly = x = y = 0.0
-            elif op == "Tf" and len(operands) >= 2:
-                # guard: ficha-style streams re-issue Tf per cell with
-                # the same state — skip the (memo-hit) rebuild then
-                sz = float(operands[-1][1])
-                f2 = font
-                if operands[-2][0] == "name":
-                    f2 = fonts.get(operands[-2][1], first_font)
-                if sz != size or f2 is not font:
-                    size, font = sz, f2
-                    rebuild()
-            elif op == "Tz" and operands:
-                v2 = float(operands[-1][1])
-                if v2 != tz:
-                    tz = v2
-                    rebuild()
-            elif op == "Tc" and operands:
-                v2 = float(operands[-1][1])
-                if v2 != tc:
-                    tc = v2
-                    rebuild()
-            elif op == "Tw" and operands:
-                v2 = float(operands[-1][1])
-                if v2 != tw:
-                    tw = v2
-                    rebuild()
-            elif op == "Td" and len(operands) >= 2:
-                lx += operands[-2][1]
-                ly += operands[-1][1]
-                x, y = lx, ly
-            elif op == "TD" and len(operands) >= 2:
-                leading = -operands[-1][1]
-                lx += operands[-2][1]
-                ly += operands[-1][1]
-                x, y = lx, ly
-            elif op == "TL" and operands:
-                leading = operands[-1][1]
-            elif op == "Tm" and len(operands) >= 6:
-                lx = operands[-2][1]
-                ly = operands[-1][1]
-                x, y = lx, ly
-            elif op == "T*":
-                ly -= leading
-                x, y = lx, ly
-            elif op == "Tj" and operands and operands[-1][0] == "str":
-                emit(operands[-1][1])
-            elif op == "'" and operands and operands[-1][0] == "str":
-                ly -= leading
-                x, y = lx, ly
-                emit(operands[-1][1])
-            elif op == '"' and operands and operands[-1][0] == "str":
-                if len(operands) >= 3:
-                    tw = float(operands[-3][1])
-                    tc = float(operands[-2][1])
-                    rebuild()
-                ly -= leading
-                x, y = lx, ly
-                emit(operands[-1][1])
-            elif op == "TJ" and operands and operands[-1][0] == "arr":
-                for e in operands[-1][1]:
-                    if isinstance(e, bytes):
-                        emit(e)
-                    elif isinstance(e, (int, float)):
-                        x = x - ((e * size) / 1000.0) * scale
-        except (TypeError, IndexError, ValueError):
-            failures += 1
-        operands.clear()
+        elif lg == "lit":
+            v, i = _parse_literal_string(content, i - 1)
+        elif lg == "name":
+            raw = m.group("name")
+            if b"#" in raw:                     # rare: #XX escapes
+                v = str(_parse_name(b"/" + raw, 0)[0])
+            else:
+                v = raw.decode("latin-1")
+        elif lg == "open":
+            arrs.append([])
+            continue
+        elif lg == "close":
+            if not arrs:
+                continue
+            v = arrs.pop()
+        elif lg == "dict":                      # inline dict (e.g. BDC)
+            try:
+                _, i = _parse_value(content, i - 2)
+            except ValueError:                  # malformed: skip the '<<'
+                pass
+            continue
+        elif lg == "hex":
+            v, i = _parse_hex_string(content, i - 1)
+        else:                                   # junk byte: skip
+            continue
+        (arrs[-1] if arrs else operands).append(v)
     return segs, n_ops, failures
 
 

@@ -20,6 +20,7 @@ import zlib
 
 import pytest
 
+from pdf_extractor_spark.datagen import doc_row, gen_pdf_bytes
 from pdf_extractor_spark.ops.pdfstream import (
     _PDF_PAD, _Doc, _rc4, layout_row, parse_pdf_doc, parse_pdf_layout_doc)
 from pdf_extractor_spark.payload import decode_layout
@@ -214,6 +215,23 @@ def test_xref_offsets_past_header_degrade_to_scan():
     assert [pg["text"] for pg in parsed] == ["offset drift"]
     assert parsed[0]["decode_failures"] == 0
     _never_raises(pdf)
+
+
+@pytest.mark.parametrize("doc_id, good, bad", [
+    # xref stream: /Size an array (int() of a list: TypeError)
+    (5, b"/Type /XRef /Size 10", b"/Type /XRef /Size[1]"),
+    # classic trailer: a number where the dict should be
+    (0, b"trailer\n<<", b"trailer\n5 <<"),
+], ids=["xref_stream_size_array", "trailer_not_a_dict"])
+def test_malformed_xref_section_degrades_to_scan(doc_id, good, bad):
+    """An xref section that raises something other than ValueError
+    (TypeError, AttributeError) still degrades to the object scan,
+    which recovers the whole document instead of losing it."""
+    clean = gen_pdf_bytes(doc_id, doc_row(42, doc_id)["text"])
+    assert clean.count(good) == 1
+    want = layout_row(clean)
+    assert want[2] > 0 and want[4] == 0        # pages, no failures
+    assert layout_row(clean.replace(good, bad)) == want
 
 
 def test_stream_length_indirect_into_objstm():

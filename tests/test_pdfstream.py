@@ -19,7 +19,7 @@ from hypothesis import strategies as st
 from pdf_extractor_spark.datagen import (PDF_LINES_PER_PAGE,
                                          PDF_WORDS_PER_LINE, doc_row,
                                          gen_pdf_bytes)
-from pdf_extractor_spark.ops.pdfstream import parse_pdf_doc
+from pdf_extractor_spark.ops.pdfstream import _extract_page, parse_pdf_doc
 
 
 def _expected_pages(text: str) -> list[str]:
@@ -786,14 +786,11 @@ def test_text_fast_path_matches_glyph_walk():
 @example(b"<<\x01")                     # unterminated inline dict
 @example(b"(\\93)Tj")                   # '\9' is no octal escape
 def test_content_lexer_never_raises(blob):
-    """The one-pass content lexer must terminate and never raise on
+    """The content-stream loop must terminate and never raise on
     arbitrary byte soup (content streams of crawled PDFs contain
-    anything); every yielded token is one of the five kinds."""
-    from pdf_extractor_spark.ops.pdfstream import _tokenize_content
-
-    kinds = {"str", "num", "name", "arr", "op"}
-    for kind, val in _tokenize_content(blob):
-        assert kind in kinds
+    anything)."""
+    segs, n_ops, failures = _extract_page(blob, {}, {})
+    assert isinstance(segs, list) and n_ops >= 0 and failures >= 0
 
 
 @settings(max_examples=60, deadline=None)
@@ -803,7 +800,27 @@ def test_content_lexer_never_raises(blob):
      b"<< /K /V >>", b"T*", b"'", b"\xff\x00"]), max_size=40))
 def test_content_lexer_token_soup(parts):
     """Structured token soup (valid tokens in random order, including
-    unbalanced arrays and nested strings) lexes without error."""
-    from pdf_extractor_spark.ops.pdfstream import _tokenize_content
+    unbalanced arrays and nested strings) runs without error."""
+    segs, n_ops, failures = _extract_page(b" ".join(parts), {}, {})
+    assert isinstance(segs, list) and n_ops >= 0 and failures >= 0
 
-    list(_tokenize_content(b" ".join(parts)))
+
+def test_content_stream_operands_arrays_and_skips():
+    """One hand-written stream pins how the loop groups operands:
+    operands before an inline image carry over to the next operator
+    (BI…EI is skipped, not counted); an operator inside an open array
+    runs, and the array stays open for the TJ after its ']'; an inline
+    `<<…>>` dict is skipped whole (its ')' and ']' included); a nested
+    array inside TJ shows nothing."""
+    content = (b"BT /F1 12 Tf 14 TL\n"
+               b"72 700 BI /W 2 /H 1 /BPC 8 ID \x00(ET]\xff EI Td\n"
+               b"(Hi) Tj\n"
+               b"/Span << /MCID 0 /Alt (x]) >> BDC\n"
+               b"[(A) -250 [(skip)] (B)] TJ EMC\n"
+               b"[(C) T* (D)] TJ ET")
+    segs, n_ops, failures = _extract_page(content, {}, {})
+    # BT Tf TL Td Tj BDC TJ EMC T* TJ ET
+    assert (n_ops, failures) == (11, 0)
+    assert [(s[0], "".join(s[1])) for s in segs] == [
+        (700.0, "Hi"), (700.0, "A"), (700.0, "B"),
+        (686.0, "C"), (686.0, "D")]
