@@ -70,7 +70,14 @@ already-processed ids): the job checks that the smallest new id is
 above the largest id in state/manifest and otherwise exits non-zero
 before writing anything. Under that ordering an incremental run keeps
 exactly the docs a batch run over the union would keep
-(pytest-pinned).
+(pytest-pinned). A chain also keeps one --near-dup mode: when a prior
+run of the chain (a run_id in state/manifest) has another
+near_dup_mode in audit/, --resume exits non-zero before writing
+anything.
+
+--langs is a comma list of the stopword vote's labels (pt, en, und);
+each entry is stripped, and any other label, an empty one included, is
+an argparse error (exit 2) before Spark starts.
 
 Cap-drift caveat (near_dup_pairs only): the megabucket cap drops LSH
 buckets larger than max_bucket. If a bucket crosses the cap BETWEEN
@@ -101,8 +108,22 @@ from pdf_extractor_spark.ops.curate import (  # noqa: E402
     curate, extract_main_text, extract_pdf_text)
 from pdf_extractor_spark.ops.dedup import (  # noqa: E402
     minhash_lsh_pairs_with_bands)
+from pdf_extractor_spark.ops.textstats import LANG_LABELS  # noqa: E402
 from pdf_extractor_spark.session import get_spark  # noqa: E402
 from pdf_extractor_spark.sinks.tableio import get_table_io  # noqa: E402
+
+
+def parse_langs(value: str) -> tuple[str, ...]:
+    """`--langs` → its labels, each stripped of spaces; any label the
+    stopword vote never emits (an empty one included) is an argparse
+    error, so a typo cannot silently drop a whole language."""
+    langs = tuple(x.strip() for x in value.split(","))
+    bad = [x for x in langs if x not in LANG_LABELS]
+    if bad:
+        raise argparse.ArgumentTypeError(
+            f"unknown language label(s) {bad}; expected a comma list "
+            f"of {', '.join(LANG_LABELS)}")
+    return langs
 
 
 def main() -> None:
@@ -122,7 +143,7 @@ def main() -> None:
     ap.add_argument("--max-dup-word-frac", type=float, default=None)
     ap.add_argument("--max-top-word-frac", type=float, default=None)
     ap.add_argument("--max-dup-bigram-frac", type=float, default=None)
-    ap.add_argument("--langs", default="pt,en")
+    ap.add_argument("--langs", type=parse_langs, default="pt,en")
     ap.add_argument("--html-col", default=None,
                     help="treat this column as raw HTML: boilerplate-"
                          "strip it first (web tier) and curate the "
@@ -159,6 +180,18 @@ def main() -> None:
 
     old_hashes = old_bands = None
     if resuming:
+        # the chain's prior runs are the run_ids in state/manifest; a
+        # mode switch would pair the increment against missing (none →
+        # minhash) or stale (minhash → none → minhash) band state
+        prior = (io.read(spark, "state/manifest").select("run_id")
+                 .filter(F.col("run_id") != run_id).distinct())
+        modes = {r.near_dup_mode for r in io.read(spark, "audit")
+                 .join(prior, "run_id", "left_semi")
+                 .select("near_dup_mode").distinct().collect()}
+        if modes - {args.near_dup}:
+            sys.exit(f"[{run_id}] --resume with --near-dup "
+                     f"{args.near_dup}, but prior runs of this chain ran "
+                     f"{sorted(modes)}: rerun the chain in one mode")
         raw = raw_all.join(manifest.select("doc_id"), "doc_id",
                            "left_anti").persist()
         first_new = raw.agg(F.min("doc_id")).first()[0]
@@ -235,7 +268,7 @@ def main() -> None:
         min_tokens=args.min_tokens,
         max_digit_ratio=args.max_digit_ratio,
         max_punct_ratio=args.max_punct_ratio,
-        keep_langs=tuple(args.langs.split(",")),
+        keep_langs=args.langs,
         max_dup_word_frac=args.max_dup_word_frac,
         max_top_word_frac=args.max_top_word_frac,
         max_dup_bigram_frac=args.max_dup_bigram_frac)
@@ -262,7 +295,7 @@ def main() -> None:
     audit = spark.createDataFrame(
         [(n_in, n_kept, n_pairs, args.near_dup,
           args.min_tokens, float(args.max_digit_ratio),
-          float(args.max_punct_ratio), args.langs)],
+          float(args.max_punct_ratio), ",".join(args.langs))],
         "input_docs long, kept_docs long, "
         "near_dup_pairs long, near_dup_mode string, min_tokens int, "
         "max_digit_ratio double, max_punct_ratio double, langs string")

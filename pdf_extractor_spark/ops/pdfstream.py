@@ -302,10 +302,12 @@ class _Font:
     (CID, default 1000). Ascent/descent come from /FontDescriptor and
     give the word-box top/bottom the same way pdfplumber derives them
     from pdfminer's font metrics (reference consumes exactly that
-    shape, processors/ficha_financeira_processor.py:424)."""
+    shape, processors/ficha_financeira_processor.py:424). A _Font
+    hashes by identity: the per-document advance-table memo keys on
+    the object itself, which keeps it alive for the document."""
 
     __slots__ = ("cid", "table", "cmap", "widths", "default_width",
-                 "ascent", "descent", "nonneg")
+                 "ascent", "descent")
 
     def __init__(self) -> None:
         self.cid = False
@@ -315,10 +317,6 @@ class _Font:
         self.default_width = 500.0
         self.ascent = 800.0
         self.descent = -200.0
-        # all glyph widths >= 0 (computed once in _font_info): negative
-        # /Widths give negative advances, which break the ascending /
-        # no-overlap invariant the mono fast path assumes
-        self.nonneg = True
 
     def width_of(self, code: int) -> float:
         w = self.widths
@@ -596,7 +594,6 @@ class _Doc:
         self.compressed: dict[int, tuple[int, int]] = {}
         self._objstm_cache: dict[int, dict[int, object]] = {}
         self._font_cache: dict[int, _Font] = {}
-        self._font_keepalive: list[_Font] = []
         self._enc_key: bytes | None = None
         # stream / string ciphers resolve independently (§7.6.5 /StmF
         # vs /StrF); "none" = Identity pass-through
@@ -1142,12 +1139,6 @@ class _Doc:
             f = self._font_info(font)
             if key is not None:
                 self._font_cache[key] = f
-            else:
-                # direct (non-_Ref) font dicts never enter _font_cache;
-                # keep the _Font alive for the document so the
-                # id(font)-keyed advance-table memo can never see a
-                # recycled id serving stale widths
-                self._font_keepalive.append(f)
             out[str(name)] = f
         return out
 
@@ -1213,14 +1204,6 @@ class _Doc:
                             and 0 <= first + k < 256:
                         table_w[first + k] = float(w)
                 f.widths = table_w
-        wv = f.widths
-        if isinstance(wv, dict):
-            f.nonneg = f.default_width >= 0 and all(
-                x >= 0 for x in wv.values())
-        elif isinstance(wv, list):
-            f.nonneg = f.default_width >= 0 and min(wv) >= 0
-        else:
-            f.nonneg = f.default_width >= 0
         return f
 
     def _to_unicode_cmap(self, ref) -> dict[int, str] | None:
@@ -1279,14 +1262,12 @@ _CTOK_RE = re.compile(
 
 
 # A text segment: one show op's glyph clusters with their x-extents.
-# (y_baseline, clusters, x_starts, x_ends, ascent_pts, descent_pts,
-# mono) — clusters align 1:1 with the x arrays (a CID may decode to a
-# multi-codepoint string, so clusters are atomic units, not chars);
-# `mono` is True when the show's char spacing guarantees ascending,
-# gap-free glyph positions (tc ≥ 0 and tc·scale ≤ _X_TOL), which lets
-# line assembly join the whole segment in C instead of per glyph.
-_Seg = tuple[float, list[str], list[float], list[float], float, float,
-             bool]
+# (y_baseline, clusters, x_starts, x_ends, ascent_pts, descent_pts) —
+# clusters align 1:1 with the x arrays (a CID may decode to a
+# multi-codepoint string, so clusters are atomic units, not chars).
+# Positions need not ascend (negative widths, Tc or TJ kerning move x
+# back); line assembly sorts every glyph by its x start.
+_Seg = tuple[float, list[str], list[float], list[float], float, float]
 
 # pdfplumber's default x_tolerance: a horizontal gap wider than this
 # between adjacent glyphs starts a new word (and, when neither side
@@ -1324,7 +1305,10 @@ def _extract_page(content: bytes, fonts: dict[str, _Font], tables: dict
     scale = 1.0
     # per-byte advance tables for the current simple-font state
     # (memoized — Tf/Tz per show is common and the rebuild is 256 ops;
-    # `tables` is one dict per DOCUMENT so repeated pages share it)
+    # `tables` is one dict per DOCUMENT so repeated pages share it).
+    # The key holds the _Font itself, not its id(): the memo keeps
+    # every font it saw alive, so a direct (uncached) font dict's
+    # _Font can never be freed and its id reused by another font.
     gend_cache: list[float] = [0.0] * 256
     adv_cache: list[float] = [0.0] * 256
 
@@ -1333,7 +1317,7 @@ def _extract_page(content: bytes, fonts: dict[str, _Font], tables: dict
         scale = tz / 100.0
         if font.cid:
             return
-        key = (id(font), size, tz, tc, tw)
+        key = (font, size, tz, tc, tw)
         hit = tables.get(key)
         if hit is None:
             # listcomp form of the historical per-code loop — same
@@ -1400,9 +1384,7 @@ def _extract_page(content: bytes, fonts: dict[str, _Font], tables: dict
         if clusters:
             segs.append((y, clusters, xs0, xs1,
                          (font.ascent * size) / 1000.0,
-                         (font.descent * size) / 1000.0,
-                         scale > 0.0 and 0.0 <= tc * scale <= _X_TOL
-                         and tw >= 0.0 and font.nonneg))
+                         (font.descent * size) / 1000.0))
 
     # one loop lexes each token and dispatches each operator. An
     # operand is a bare value — float, str (name), bytes (string) or
@@ -1541,43 +1523,17 @@ def _assemble_page(segs: list[_Seg], height: float, doctop0: float,
     `extract_words` shape the reference's layout engine consumes
     (text, x0, x1, top, bottom, doctop); top/bottom derive from the
     font's ascent/descent exactly as pdfplumber does. NBSP does NOT
-    split a word (it is a glyph, not an inter-word gap)."""
+    split a word (it is a glyph, not an inter-word gap). Every page
+    takes this one glyph walk; `want_words` only gates the word boxes
+    (the text tier leaves them empty)."""
     lines: dict[float, list[_Seg]] = {}
     for seg in segs:
         lines.setdefault(round(seg[0], 1), []).append(seg)
     texts: list[str] = []
     words: list[tuple] = []
     for key in sorted(lines, reverse=True):
-        # fast path (text mode): every segment mono (ascending,
-        # intra-gap-free by construction) and segments chain left to
-        # right without overlap → whole-segment joins in C, same
-        # output as the glyph-level walk below (goldens + fuzz pinned)
-        if not want_words and all(s[6] for s in lines[key]):
-            segs_l = lines[key]
-            if len(segs_l) > 1:
-                segs_l = sorted(segs_l, key=lambda s: s[2][0])
-            parts0: list[str] = []
-            run_max = None
-            ok = True
-            for s in segs_l:
-                cl = s[1]
-                x0f = s[2][0]
-                if run_max is not None:
-                    if x0f < run_max - 1e-9:
-                        ok = False          # overlapping segs: exact
-                        break
-                    if x0f - run_max > _X_TOL \
-                            and not cl[0].startswith(" ") \
-                            and not parts0[-1].endswith(" "):
-                        parts0.append(" ")
-                parts0.append("".join(cl))
-                m = max(s[3])
-                run_max = m if run_max is None else max(run_max, m)
-            if ok:
-                texts.append("".join(parts0))
-                continue
         items: list[tuple[float, float, str, float, float]] = []
-        for y, clusters, xs0, xs1, apts, dpts, _mono in lines[key]:
+        for y, clusters, xs0, xs1, apts, dpts in lines[key]:
             top = height - (y + apts)
             bottom = height - (y + dpts)
             for i, cl in enumerate(clusters):

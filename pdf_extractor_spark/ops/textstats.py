@@ -56,6 +56,10 @@ def _word_hits(col: Column, words: str) -> Column:
         col, F.lit(rf"(?i)\b({words})\b"), F.lit(0)))
 
 
+# every label `lang_cols` can put in lang_pred
+LANG_LABELS = ("pt", "en", "und")
+
+
 def lang_cols(text: Column) -> dict[str, Column]:
     """The stopword language vote: PT and EN hit counts and the label
     ('und' when neither list hits, a tie goes to 'pt'). `lang_id`, the

@@ -37,9 +37,15 @@ def test_bad_argument_exits_before_spark(tmp_path, monkeypatch, bad):
 @pytest.mark.parametrize("bad", [
     ["--near-dup", "simhash"], ["--max-hamming", "3"],
     ["--html-col", "html", "--pdf-col", "pdf"],
+    ["--langs", "pt,fr"], ["--langs", "pt,"],
 ])
 def test_curate_bad_argument_exits_before_spark(tmp_path, monkeypatch, bad):
     out = tmp_path / "out"
     _assert_exits_before_spark(jobs_curate, [
         "jobs_curate.py", "--documents", str(tmp_path / "docs"),
         "--out", str(out), "--run-id", "c1", *bad], out, monkeypatch)
+
+
+def test_curate_langs_strip_spaces():
+    assert jobs_curate.parse_langs("pt, en") == ("pt", "en")
+    assert jobs_curate.parse_langs("und") == ("und",)

@@ -193,6 +193,33 @@ def test_curate_resume_rejects_ids_below_the_manifest(spark, run_job,
     assert not list(out.glob("**/run_id=c2"))
 
 
+@pytest.mark.parametrize("first,then", [("none", "minhash"),
+                                        ("minhash", "none")])
+def test_curate_resume_rejects_a_near_dup_mode_switch(spark, run_job,
+                                                      tmp_path, first,
+                                                      then):
+    """A --resume run whose --near-dup differs from a prior run of the
+    chain (a run_id in state/manifest) would pair the increment
+    against missing or stale band state; it exits non-zero before
+    anything is written."""
+    docs = datagen.documents_df(spark, 300, partitions=2)
+    early, full = str(tmp_path / "docs_early"), str(tmp_path / "docs_full")
+    docs.filter("doc_id < 200").write.parquet(early)
+    docs.write.parquet(full)
+    out = tmp_path / "out"
+
+    def curate(documents, run_id, mode, *flags):
+        run_job(jobs_curate, "--documents", documents, "--out", str(out),
+                "--run-id", run_id, "--near-dup", mode, *flags)
+
+    curate(early, "c1", first)
+    with pytest.raises(SystemExit) as exc:
+        curate(full, "c2", then, "--resume")
+    assert exc.value.code not in (0, None)
+    assert list(out.glob("**/run_id=c1"))
+    assert not list(out.glob("**/run_id=c2"))
+
+
 def _writer_oracle(n_docs, start, end, minutes_mode=False):
     """The four series tables' rows (`SERIES_COLS` order) for the ficha
     documents among datagen ids [0, n_docs): oracle_ref values with A6,

@@ -391,50 +391,70 @@ def test_v4_identity_stmf_streams_pass_through():
     assert info["Title"] == b"secret title"
 
 
-def test_negative_widths_disable_mono_fast_path():
-    """A crafted negative /Widths entry gives negative advances, which
-    violate the ascending/no-overlap invariant the text-mode fast path
-    assumes; the per-font nonneg bit must route such shows through the
-    glyph-sorted slow path (ADVICE item 3), and positive-widths fonts
-    must keep the fast path."""
-    from pdf_extractor_spark.ops.pdfstream import _Doc
+def test_negative_widths_text_matches_layout():
+    """A crafted negative /Widths entry gives negative advances, so a
+    show's glyph positions no longer ascend. The text tier
+    (`parse_pdf_doc`) and the layout tier (`layout_row`) both sort the
+    glyphs by x start and give the same line text."""
     from tests.test_pdf_layout import _one_page_pdf
 
-    body = b"BT /F1 10 Tf 72 700 Td (ab) Tj ET"
-    neg = _one_page_pdf(
-        body, font_extra=b" /FirstChar 97 /Widths [500 -500]")
-    d = _Doc(neg)
-    fonts = d.page_fonts(d.pages()[0])
-    assert fonts and not fonts["F1"].nonneg
-    pos = _one_page_pdf(
-        body, font_extra=b" /FirstChar 97 /Widths [500 500]")
-    d2 = _Doc(pos)
-    fonts2 = d2.page_fonts(d2.pages()[0])
-    assert fonts2 and fonts2["F1"].nonneg
+    for show, widths, want in [
+        (b"(ab)", b"[500 -500]", "ab"),
+        # b's -15 pt advance puts c left of a: glyph order is c, a, b
+        (b"(abc)", b"[500 -1500 500]", "c ab"),
+    ]:
+        pdf = _one_page_pdf(
+            b"BT /F1 10 Tf 72 700 Td " + show + b" Tj ET",
+            font_extra=b" /FirstChar 97 /Widths " + widths)
+        text = parse_pdf_doc(pdf)[0]["text"]
+        assert text == layout_row(pdf)[1] == want
 
 
 def test_direct_font_dicts_kept_alive():
-    """Fonts referenced by direct (non-_Ref) dicts never enter
-    _font_cache; the document must keep them alive so the id(font)-
-    keyed advance-table memo can never serve a recycled id's stale
-    widths (ADVICE item 2)."""
-    from pdf_extractor_spark.ops.pdfstream import _Doc
+    """Fonts given as direct (non-_Ref) dicts never enter _font_cache,
+    so each page builds its own _Font. Two pages with the same
+    Tf/size state but different /Widths must each place their glyphs
+    by their own widths: the document's advance-table memo must never
+    serve one page's widths for the other page's font."""
     from tests.test_pdfstream import _minimal_pdf
 
-    objs = {
+    body = b"BT /F1 10 Tf 72 700 Td (a) Tj ET"
+
+    def page(num: int, width: int) -> bytes:
+        return (b"<< /Type /Page /Parent 2 0 R /Contents %d 0 R"
+                b" /Resources << /Font << /F1 << /Type /Font"
+                b" /Subtype /Type1 /BaseFont /Helvetica /FirstChar 97"
+                b" /Widths [%d] >> >> >> >>" % (num, width))
+
+    stream = b"<< /Length %d >>\nstream\n" % len(body) + body \
+        + b"\nendstream"
+    pdf = _minimal_pdf({
         1: b"<< /Type /Catalog /Pages 2 0 R >>",
-        2: b"<< /Type /Pages /Count 1 /Kids [3 0 R] >>",
-        3: (b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R"
-            b" /Resources << /Font << /F1 << /Type /Font"
-            b" /Subtype /Type1 /BaseFont /Helvetica >> >> >> >>"),
-        4: (b"<< /Length 36 >>\nstream\n"
-            b"BT /F1 11 Tf 72 720 Td (x) Tj ET\n\nendstream"),
-    }
-    pdf = _minimal_pdf(objs)
-    d = _Doc(pdf)
-    f = d.page_fonts(d.pages()[0])
-    assert "F1" in f
-    assert f["F1"] in d._font_keepalive
+        2: b"<< /Type /Pages /Count 2 /Kids [3 0 R 4 0 R] >>",
+        3: page(5, 500),
+        4: page(6, 800),
+        5: stream,
+        6: stream,
+    })
+    pages = parse_pdf_layout_doc(pdf)["pages"]
+    assert [[(w[0], w[1], w[2]) for w in words] for words, _ in pages] \
+        == [[("a", 72.0, 77.0)], [("a", 72.0, 80.0)]]
+
+    # the same hazard at the walk's own level: each _Font is dropped
+    # before the next one is built, so CPython may hand the next font
+    # the freed object's id; one memo shared by the document must
+    # still place each glyph by its own font's widths
+    from pdf_extractor_spark.ops.pdfstream import _Font, _extract_page
+
+    tables: dict = {}
+    ends = []
+    for width in (500, 800, 500, 800):
+        font = _Font()
+        font.widths = [float(width)] * 256
+        segs, _, _ = _extract_page(body, {"F1": font}, tables)
+        del font
+        ends.append(segs[0][3][0])
+    assert ends == [77.0, 80.0, 77.0, 80.0]
 
 
 @pytest.mark.parametrize("cap", ["MAX_INFLATE_STREAM", "MAX_INFLATE_DOC"])

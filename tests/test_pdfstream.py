@@ -765,11 +765,10 @@ def test_aes_known_answer_vectors():
         assert cbc_decrypt(key, iv, cbc_encrypt(key, iv, data)) == data
 
 
-def test_text_fast_path_matches_glyph_walk():
-    """parse_pdf_doc's whole-segment fast path and the layout tier's
-    exact glyph-level walk (want_words=True always takes it) must
-    produce identical line text on the same bytes, across all writer
-    representation variants."""
+def test_text_tier_matches_layout_tier():
+    """parse_pdf_doc (the text tier, no word boxes) and the layout
+    tier's walk (want_words=True) must produce identical line text on
+    the same bytes, across all writer representation variants."""
     from pdf_extractor_spark.ops.pdfstream import parse_pdf_layout_doc
 
     for doc_id in range(60):
